@@ -677,8 +677,7 @@ object QueriesLlm {
     // cross an exchange (r19: the per-batch repartition previously
     // round-tripped the full media payload through a shuffle whose only
     // job was spreading the decode)
-    val perTrigger = math.max(1, new java.io.File(inDir.toString).listFiles()
-      .count(_.getName.startsWith("0_")))
+    val perTrigger = splitWidth(inDir)
     val media0 = ss.readStream.schema(schema).option("maxFilesPerTrigger", perTrigger)
       .parquet(inDir.toString)
     val media =
@@ -721,7 +720,7 @@ object QueriesLlm {
       if (evictBucketAfterMs.isDefined) {
         val q0 = writer
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L)).start()
-        drainAndStop(q0, expectBatches = Some(splitCount(inDir)))
+        drainAndStop(q0, expectBatches = Some(splitCount(inDir, splitWidth(inDir))))
         q0
       } else {
         val q0 = writer
@@ -909,7 +908,7 @@ object QueriesLlm {
       if (evictCellAfterMs.isDefined) {
         val q0 = writer
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L)).start()
-        drainAndStop(q0, expectBatches = Some(splitCount(inDir)))
+        drainAndStop(q0, expectBatches = Some(splitCount(inDir, perTrigger = 1)))
         q0
       } else {
         val q0 = writer
@@ -971,7 +970,7 @@ object QueriesLlm {
         val q0 = writer
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L))
           .start()
-        drainAndStop(q0, expectBatches = Some(splitCount(inDir)))
+        drainAndStop(q0, expectBatches = Some(splitCount(inDir, perTrigger = 1)))
         q0
       } else {
         val q0 = writer
@@ -983,21 +982,29 @@ object QueriesLlm {
     Dedup.spansFromOccurrences(ss.table(sink), w)
   }
 
+  /** Files in one logical split of a writeSplitDir fixture (the `0_`
+    * files): the `maxFilesPerTrigger` of a consumer that takes one whole
+    * split per micro-batch ([[fingerprintPairStream]]). */
+  private[graft] def splitWidth(inDir: java.nio.file.Path): Int =
+    math.max(1, new java.io.File(inDir.toString).listFiles()
+      .count(_.getName.startsWith("0_")))
+
   /** Number of data micro-batches a writeSplitDir fixture yields under
-    * `maxFilesPerTrigger = |files prefixed 0_|` — the `expectBatches`
-    * input for [[drainAndStop]]. Computed from the ACTUAL listing
-    * (ceil(totalFiles / perTrigger)), not the distinct-prefix count: if a
-    * logical split ever shards into fewer files than the `0_` split
-    * (empty partitions at tiny scale), the file source needs an extra
-    * batch for the remainder, and a prefix-count drain rule would stop
-    * early and silently drop that batch's rows (r19 advice, medium). The
-    * file source hands out up to perTrigger files per batch in modTime
-    * order regardless of prefix, so this count is exact by construction. */
-  private[graft] def splitCount(inDir: java.nio.file.Path): Int = {
-    val fs = new java.io.File(inDir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    val perTrigger = math.max(1, fs.count(_.getName.startsWith("0_")))
-    math.max(1, (fs.length + perTrigger - 1) / perTrigger)
+    * the consumer's own `maxFilesPerTrigger` (`perTrigger`) — the
+    * `expectBatches` input for [[drainAndStop]]. Computed from the ACTUAL
+    * listing (ceil(totalFiles / perTrigger)), not the distinct-prefix
+    * count: if a logical split ever shards into fewer files than the `0_`
+    * split (empty partitions at tiny scale), the file source needs an
+    * extra batch for the remainder, and a prefix-count drain rule would
+    * stop early and silently drop that batch's rows. The file source hands
+    * out up to perTrigger files per batch in modTime order regardless of
+    * prefix, so this count is exact by construction — as long as
+    * `perTrigger` is the consumer's real setting, which is why the caller
+    * passes it instead of it being inferred from the listing. */
+  private[graft] def splitCount(inDir: java.nio.file.Path, perTrigger: Int): Int = {
+    val files = new java.io.File(inDir.toString).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    math.max(1, (files + perTrigger - 1) / perTrigger)
   }
 
   /** Stop a continuously-triggered file-stream query once its input is

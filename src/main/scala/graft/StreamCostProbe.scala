@@ -86,7 +86,7 @@ object StreamCostProbe {
         .outputMode("append").option("checkpointLocation", ckpt.getPath)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L)).start()
       QueriesLlm.drainAndStop(q,
-        expectBatches = Some(QueriesLlm.splitCount(inDir)))
+        expectBatches = Some(QueriesLlm.splitCount(inDir, QueriesLlm.splitWidth(inDir))))
       ss.table(s"scp_sink_$si").agg(count(lit(1))).collect()
     }).min
     ss.streams.removeListener(listener)
@@ -110,7 +110,7 @@ object StreamCostProbe {
             .outputMode("append").option("checkpointLocation", ckpt.getPath)
             .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L)).start()
           QueriesLlm.drainAndStop(q,
-            expectBatches = Some(QueriesLlm.splitCount(layoutDir)))
+            expectBatches = Some(QueriesLlm.splitCount(layoutDir, QueriesLlm.splitWidth(layoutDir))))
           val buf = new java.io.ByteArrayOutputStream()
           Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) { q.explain(true) }
           buf.toString("UTF-8")

@@ -1,8 +1,9 @@
 package graft.blob
 
 import Bloblang._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Columns
 import org.apache.spark.sql.types._
 
 /** Bloblang AST → Catalyst Column compiler (SURVEY §3.2: "frontend compiles
@@ -87,11 +88,15 @@ object Compile {
     * the interpreter's sequencing). */
   val MetaPrefix = "__meta_"
 
-  private def metaCols(df: DataFrame): Seq[String] =
-    df.columns.filter(_.startsWith(MetaPrefix)).sorted.toSeq
+  private def metaCols(names: Seq[String]): Seq[String] =
+    names.filter(_.startsWith(MetaPrefix)).sorted
 
-  private def contentCols(df: DataFrame): Seq[String] =
-    df.columns.filterNot(_.startsWith(MetaPrefix)).toSeq
+  private def contentCols(names: Seq[String]): Seq[String] =
+    names.filterNot(_.startsWith(MetaPrefix))
+
+  private def metaCols(df: DataFrame): Seq[String] = metaCols(df.columns.toSeq)
+
+  private def contentCols(df: DataFrame): Seq[String] = contentCols(df.columns.toSeq)
 
   private def metaMapCol(df: DataFrame): Column = {
     val ks = metaCols(df)
@@ -100,7 +105,90 @@ object Compile {
       Seq(lit(k.stripPrefix(MetaPrefix)), col(k))).toIndexedSeq: _*)
   }
 
-  final case class Compiled(transform: DataFrame => DataFrame, ser: Ser)
+  /** A compiled mapping as plan pieces, run in this order: `meta` writes
+    * `__meta_*` columns (None deletes the column); `filters` delete the
+    * rows where one is TRUE (a null keeps the row); `project` gives the
+    * output columns from the column names present after the meta writes
+    * (None: every column passes through). Meta values, filters and output
+    * columns all read the frame as it stands after the meta writes. */
+  final case class Step(meta: Seq[(String, Option[Column])], filters: Seq[Column],
+                        project: Option[Seq[String] => Seq[(String, Column)]]) {
+
+    def apply(df: DataFrame): DataFrame = {
+      val dropped = meta.collect { case (k, None) => k }
+        .foldLeft(df)((d, c) => if (d.columns.contains(c)) d.drop(c) else d)
+      val sets = meta.collect { case (k, Some(c)) => k -> c }
+      val withMeta = if (sets.isEmpty) dropped else dropped.withColumns(sets.toMap)
+      // the `!c || isNull(c)` form (rather than `!coalesce(c, false)`)
+      // keeps the predicate a plain boolean tree that DataSourceStrategy
+      // can translate and push into the parquet scan
+      val filtered = filters.foldLeft(withMeta)((d, c) => d.filter(!c || c.isNull))
+      project.fold(filtered)(p =>
+        filtered.select(p(filtered.columns.toSeq).map { case (n, c) => c.as(n) }: _*))
+    }
+
+    /** The same step over named column expressions instead of a frame:
+      * `in` binds each input column name to a Column over some earlier
+      * frame. Returns the row-deletion predicate (TRUE = deleted) and the
+      * output columns, both rewritten onto that earlier frame. */
+    def over(in: Seq[(String, Column)]): (Option[Column], Seq[(String, Column)]) = {
+      val dropped = in.filterNot { case (n, _) => meta.exists(m => m._1 == n && m._2.isEmpty) }
+      val sets = meta.collect { case (k, Some(c)) => k -> substitute(c, dropped) }.toMap
+      val withMeta = dropped.map { case (n, c) => n -> sets.getOrElse(n, c) } ++
+        sets.filterNot(s => dropped.exists(_._1 == s._1))
+      val deleted = filters.map(c => coalesce(substitute(c, withMeta), lit(false)))
+        .reduceOption(_ || _)
+      val out = project.fold(withMeta)(p =>
+        p(withMeta.map(_._1)).map { case (n, c) => n -> substitute(c, withMeta) })
+      (deleted, out)
+    }
+  }
+
+  /** A compiled stage. `step` holds a compiled mapping's pieces (the
+    * switch merges them across cases), and a mapping's `transform` is
+    * `step.apply`. A stage whose rows take different
+    * paths (the cases of a switch, unmatched rows included) lists each
+    * path's Ser in `branchSers`: one frame has one rendering, so the stage
+    * compiles only where every path, applied to the frame's regime, lands
+    * on the same regime ([[agrees]]). */
+  final case class Compiled(transform: DataFrame => DataFrame, ser: Ser,
+                            step: Option[Step] = None, branchSers: Seq[Ser] = Nil) {
+    def agrees(prev: Ser): Boolean =
+      branchSers.forall(b => combineSer(prev, b) == combineSer(prev, ser))
+  }
+
+  /** Serialization-mode transition when a stage with regime `mode` runs
+    * over a structured frame in regime `prev`. EnvelopeDefault is the
+    * identity, and the fold is associative over every sequence of
+    * regimes compiled stages produce (a `root = this` regime never follows
+    * Scalar: tryCompile bails there), so a chain of stages can be folded
+    * on its own and then applied to the frame's regime. */
+  def combineSer(prev: Ser, mode: Ser): Ser = mode match {
+    case EnvelopeDefault => prev // passthrough mapping (filters only)
+    case SortedDropNull => prev match {
+      // `root = this` re-marshals what the interpreter would have parsed:
+      // over marshal-shaped content the re-marshal is byte-identical
+      case EnvelopeDefault => SortedDropNull
+      case other => other
+    }
+    case FragSortedDropNull(explicit) => prev match {
+      // every field of an explicit-null document is present in the text
+      // the interpreter re-parses, nulls included, so `root = this` keeps
+      // rendering them: the regime stays explicit-null throughout
+      case ExplicitNullSorted | FragExplicitNullSorted => FragExplicitNullSorted
+      case FragSortedDropNull(earlier) => FragSortedDropNull(earlier ++ explicit)
+      case _ => mode
+    }
+    case other => other // FieldsRoot / Scalar replace the content wholesale
+  }
+
+  /** Rewrite `c` so that each plain column reference `col(n)` with `n`
+    * bound in `env` reads the bound Column instead. Bindings that are the
+    * column itself are skipped, so a first step costs nothing. */
+  private def substitute(c: Column, env: Seq[(String, Column)]): Column = {
+    val bound = env.filter { case (n, v) => v != col(n) }.toMap
+    if (bound.isEmpty) c else Columns.substitute(c, bound)
+  }
 
   /** Serialize a structured frame into the Msg envelope per its Ser mode.
     * `__meta_*` columns become the metadata facet, never content. */
@@ -530,50 +618,36 @@ object Compile {
     val metaFinal: Vector[(String, Option[Column])] =
       metaOps.map(_._1).distinct.map(k => k -> metaOps.filter(_._1 == k).last._2)
 
-    val conds = filters // deletion predicates, in order
-    val (ser, project): (Ser, DataFrame => DataFrame) = root match {
+    val (ser, project): (Ser, Option[Seq[String] => Seq[(String, Column)]]) = root match {
       // a scalar-shaped input (raw line input / compiled scalar stage)
       // passes through AS the raw string, never re-marshaled as JSON
-      case RPassthrough if schema.fieldNames.contains(ScalarCol) =>
-        (Scalar, identity[DataFrame] _)
-      case RPassthrough => (EnvelopeDefault, identity[DataFrame] _)
-      case RWholeThis(Vector()) => (wholeThisSer(Vector.empty).get, identity[DataFrame] _)
+      case RPassthrough if schema.fieldNames.contains(ScalarCol) => (Scalar, None)
+      case RPassthrough => (EnvelopeDefault, None)
+      case RWholeThis(Vector()) => (wholeThisSer(Vector.empty).get, None)
       case RWholeThis(ovr) =>
         val deleted = ovr.collect { case (n, None) => n }.toSet
         val setMap = ovr.collect { case (n, Some((c, _))) => n -> c }.toMap
-        (wholeThisSer(ovr).get, (df: DataFrame) => {
-          val inputNames = contentCols(df).filterNot(deleted)
+        (wholeThisSer(ovr).get, Some((in: Seq[String]) => {
+          val inputNames = contentCols(in).filterNot(deleted)
           val names = (inputNames ++ setMap.keys.filterNot(inputNames.contains)).distinct
-          df.select(names.map(n => setMap.getOrElse(n, col(n)).as(n))
-            ++ metaCols(df).map(col): _*)
-        })
+          names.map(n => n -> setMap.getOrElse(n, col(n))) ++ metaCols(in).map(n => n -> col(n))
+        }))
       case RFields(fs) =>
-        val cols = fs.sortBy(_._1).map { case (n, (c, _)) => c.as(n) }
+        val cols = fs.sortBy(_._1).map { case (n, (c, _)) => n -> c }
         // the to_json envelope when every field round-trips exactly; the
         // fragment envelope when doubles/nested need marshal rendering
         val fser = if (fs.forall { case (_, (_, t)) => serializableField(t) })
           ExplicitNullSorted else FragExplicitNullSorted
-        (fser,
-          (df: DataFrame) => df.select(cols ++ metaCols(df).map(col): _*))
+        (fser, Some((in: Seq[String]) => cols ++ metaCols(in).map(n => n -> col(n))))
       case RScalar(c) =>
-        (Scalar, (df: DataFrame) => df.select(
-          (c.as(ScalarCol) +: metaCols(df).map(col)): _*))
+        (Scalar, Some((in: Seq[String]) => (ScalarCol -> c) +: metaCols(in).map(n => n -> col(n))))
     }
-    Some(Compiled(df => {
-      // meta writes evaluate against the INPUT frame (Bloblang `this` is
-      // always the source document), so they run before filters/projection
-      val dropped = metaFinal.collect { case (k, None) => MetaPrefix + k }
-        .foldLeft(df)((d, c) => if (d.columns.contains(c)) d.drop(c) else d)
-      val sets = metaFinal.collect { case (k, Some(c)) => (MetaPrefix + k) -> c }
-      val withMeta = if (sets.isEmpty) dropped else dropped.withColumns(sets.toMap)
-      // delete when cond is TRUE; a null cond keeps the row (SQL 3VL —
-      // the interpreter would error the row and keep it too). The
-      // `!c || isNull(c)` form (rather than `!coalesce(c, false)`) keeps
-      // the predicate a plain boolean tree that DataSourceStrategy can
-      // translate and push into the parquet scan.
-      val filtered = conds.foldLeft(withMeta)((d, c) => d.filter(!c || c.isNull))
-      project(filtered)
-    }, ser))
+    // meta writes evaluate against the INPUT frame (Bloblang `this` is
+    // always the source document), so they run before filters/projection.
+    // A row goes when a filter is TRUE; a null keeps it (SQL 3VL — the
+    // interpreter would error the row and keep it too).
+    val step = Step(metaFinal.map { case (k, v) => (MetaPrefix + k) -> v }, filters, project)
+    Some(Compiled(step.apply, ser, Some(step)))
   }
 
   /** Types that may appear as output fields with exact content parity. */
@@ -1578,6 +1652,61 @@ object Compile {
     }
     if (parts.exists(_.isEmpty)) None
     else Some(if (parts.isEmpty) lit("") else concat(parts.flatten: _*))
+  }
+
+  // ===== switch checks and case chains =======================================
+
+  /** A `check` (a switch case's condition) as a boolean Column, or None
+    * outside the compiled subset. The interpreter counts a check that
+    * errors as false; compiled, an error is a null, and the caller counts
+    * null as false. `&&`, `||` and `!` at the top of the check follow the
+    * interpreter's left-to-right evaluation: an operand that errors makes
+    * the whole check null, where SQL's three-valued logic would absorb it
+    * (`null OR true`). Deeper operands keep the compiler's documented
+    * three-valued deviation. */
+  def tryCompileCheck(e: Expr, schema: StructType): Option[Column] = {
+    val err = lit(null).cast(BooleanType)
+    def strict(x: Expr): Option[Column] = x match {
+      case Bin("&&", l, r) =>
+        for (lc <- strict(l); rc <- strict(r))
+          yield when(lc.isNull, err).when(!lc, lit(false)).otherwise(rc)
+      case Bin("||", l, r) =>
+        for (lc <- strict(l); rc <- strict(r))
+          yield when(lc.isNull, err).when(lc, lit(true)).otherwise(rc)
+      case Not(a) => strict(a).map(!_)
+      case _ => compileExpr(x, schema, Map.empty, Map.empty).collect { case (c, BooleanType) => c }
+    }
+    strict(e)
+  }
+
+  /** A chain of mappings (a switch case's processors) composed into
+    * columns over the chain's input frame: `deleted` is TRUE where a step
+    * deletes the row (`dropsAll`: a step is `root = deleted()`, so no row
+    * survives), `columns` are the output columns (content and
+    * `__meta_*`), `schema` their analyzed types, and `ser` the steps'
+    * regimes folded from EnvelopeDefault (see [[combineSer]]). */
+  final case class Chain(deleted: Option[Column], dropsAll: Boolean,
+                         columns: Seq[(String, Column)], schema: StructType, ser: Ser)
+
+  /** Compile each step against the schema the step before it produces,
+    * as a sequential compiled pipeline would; None when a step does not
+    * compile. The types come from analysing the composed columns over an
+    * empty frame of the input schema. */
+  def tryCompileChain(steps: Seq[Mapping], schema: StructType): Option[Chain] = {
+    lazy val empty = SparkSession.active.createDataFrame(
+      java.util.Collections.emptyList[Row](), schema)
+    steps.foldLeft(Option(Chain(None, dropsAll = false,
+        schema.fieldNames.toSeq.map(n => n -> col(n)), schema, EnvelopeDefault))) { (acc, m) =>
+      for {
+        ch <- acc
+        c <- tryCompile(m, ch.schema)
+        step <- c.step
+        (del, out) = step.over(ch.columns)
+        outSchema <- try Some(empty.select(out.map { case (n, v) => v.as(n) }: _*).schema)
+          catch { case _: org.apache.spark.sql.AnalysisException => None }
+      } yield Chain((ch.deleted ++ del).reduceOption(_ || _),
+        ch.dropsAll || step.filters.contains(lit(true)), out, outSchema, combineSer(ch.ser, c.ser))
+    }
   }
 
   // ===== value-model schema inference ========================================

@@ -1,6 +1,6 @@
 package graft.conn
 
-import graft.blob.{BloblangUdf, Interpolate}
+import graft.blob.{Bloblang, BloblangUdf, Interpolate}
 import graft.core.{Msg, Processor}
 import graft.operators.{Jq, Processors, Subprocess}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,13 +23,37 @@ import scala.jdk.CollectionConverters._
   *    key), bounds_check, select_parts, split, compress, decompress,
   *    subprocess, template (interpolation), noop
   *  - output: `file` (path; lines codec), `parquet` (path), `drop`
+  *
+  * Inputs that yield typed columns (`file` json_documents/csv/lines,
+  * `parquet`) start STRUCTURED: each stage with a compile hook that
+  * compiles keeps the frame in typed columns, and the first stage that
+  * does not seals it into the envelope, where every later stage runs its
+  * envelope Processor (UDFs over the JSON content). Hooks:
+  *  - `mapping` / `bloblang`: when Compile.tryCompile accepts the mapping.
+  *  - `switch`: when every `check` compiles (Compile.tryCompileCheck),
+  *    every case's `processors` is a chain of mapping/bloblang steps
+  *    that each compile against the schema the step before produces, and
+  *    the cases (and, without a default case, the unmatched rows) agree
+  *    on output columns, types and Ser (a case whose chain is `root =
+  *    deleted()` keeps no row, so it need not agree). The cases then
+  *    merge into ONE projection over a first-match case tag
+  *    (Processors.switchCases) — no UDF, no checkpoint, no union. A
+  *    `check` outside the compiled subset, any other processor in a case
+  *    (jq, nested switch, …) or cases that disagree fall back to the
+  *    envelope Processors.switch.
+  *  - `dedupe`: when its key template compiles
+  *    (Compile.tryCompileTemplate); same groupBy + min_by as the envelope
+  *    form, ordered by an id taken where the envelope would assign `seq`.
+  *    The output `seq` is then assigned after the dedupe shuffle instead
+  *    of keeping the winner's input position.
   */
 object PipelineConfig {
 
   import graft.blob.Compile
 
   /** One pipeline step: the envelope-level Processor (always correct) plus
-    * an optional structured-mode compile hook (mapping/bloblang steps). A
+    * an optional structured-mode compile hook (mapping/bloblang, switch
+    * and dedupe steps; see the object doc for the shapes that compile). A
     * step that compiles keeps the frame STRUCTURED — typed columns straight
     * off the scan — so filters/projections reach the parquet reader; the
     * first step that can't compile seals the envelope and the interpreter
@@ -56,8 +80,8 @@ object PipelineConfig {
           // scalar frames included: content() mappings compile against
           // them (tryCompile bails on anything needing a parsed document)
           case (Some((df, ser)), Some(tryC)) =>
-            tryC(df.schema) match {
-              case Some(c) => structured = Some((c.transform(df), combineSer(ser, c.ser)))
+            tryC(df.schema).filter(_.agrees(ser)) match {
+              case Some(c) => structured = Some((c.transform(df), Compile.combineSer(ser, c.ser)))
               case None => seal(); env = st.env(env)
             }
           case _ => seal(); env = st.env(env)
@@ -74,19 +98,6 @@ object PipelineConfig {
     }
   }
 
-  /** Serialization-mode transition when a compiled mapping runs over an
-    * already-structured frame (see Compile.Ser for the modes). */
-  private def combineSer(prev: Compile.Ser, mode: Compile.Ser): Compile.Ser = mode match {
-    case Compile.EnvelopeDefault => prev // passthrough mapping (filters only)
-    case Compile.SortedDropNull => prev match {
-      // `root = this` re-marshals what the interpreter would have parsed:
-      // over marshal-shaped content the re-marshal is byte-identical
-      case Compile.EnvelopeDefault => Compile.SortedDropNull
-      case other => other
-    }
-    case other => other // FieldsRoot / Scalar replace the content wholesale
-  }
-
   def load(yaml: String): Loaded = {
     val doc = new org.yaml.snakeyaml.Yaml().load[java.util.Map[String, Any]](yaml)
     require(doc != null && doc.containsKey("input"), "config: missing input section")
@@ -100,16 +111,78 @@ object PipelineConfig {
   }
 
   /** Wrap a processor spec into a Stage, attaching the structured-mode
-    * compile hook for mapping/bloblang steps. */
+    * compile hook for mapping/bloblang, switch and dedupe steps. */
   private def parseStage(m: java.util.Map[String, Any]): Stage = {
-    val (kind, _) = one(m)
-    kind match {
+    val (kind, conf) = one(m)
+    val hook: Option[StructType => Option[Compile.Compiled]] = kind match {
       case "mapping" | "bloblang" =>
-        val prog = graft.blob.Bloblang.parse(m.get(kind).asInstanceOf[String])
-        Stage(parseProcessor(m), Some(schema => Compile.tryCompile(prog, schema)))
-      case _ => Stage(parseProcessor(m))
+        val prog = Bloblang.parse(m.get(kind).asInstanceOf[String])
+        Some(schema => Compile.tryCompile(prog, schema))
+      case "switch" =>
+        val cases = switchCases(m.get(kind))
+        Some(schema => compileSwitch(cases, schema))
+      case "dedupe" =>
+        val keyTpl = str(conf, "key")
+        Some(schema => Compile.tryCompileTemplate(keyTpl, schema).map(compiledDedupe))
+      case _ => None
+    }
+    Stage(parseProcessor(m), hook)
+  }
+
+  /** `switch` cases: (check, processor specs); no check = default case. */
+  private def switchCases(v: Any): Seq[(Option[String], Seq[java.util.Map[String, Any]])] =
+    v.asInstanceOf[java.util.List[_]].asScala.map(section).toSeq.map { c =>
+      (Option(c.get("check")).map(String.valueOf),
+        c.get("processors").asInstanceOf[java.util.List[_]].asScala.map(section).toSeq)
+    }
+
+  private def sequence[A](xs: Seq[Option[A]]): Option[Seq[A]] =
+    if (xs.forall(_.isDefined)) Some(xs.flatten) else None
+
+  /** Structured-mode `switch` (shapes: see the object doc). As in the
+    * envelope form, checked cases are tried in order and the first
+    * checkless case is the default; without one, unmatched rows pass
+    * through as an empty chain. */
+  private def compileSwitch(cases: Seq[(Option[String], Seq[java.util.Map[String, Any]])],
+                            schema: StructType): Option[Compile.Compiled] = {
+    val checked = cases.collect { case (Some(chk), procs) => (chk, procs) }
+    val default = cases.collectFirst { case (None, procs) => procs }
+    def chain(procs: Seq[java.util.Map[String, Any]]): Option[Compile.Chain] =
+      sequence(procs.map(p => one(p)._1 match {
+        case k @ ("mapping" | "bloblang") => Some(Bloblang.parse(p.get(k).asInstanceOf[String]))
+        case _ => None
+      })).flatMap(Compile.tryCompileChain(_, schema))
+    def types(ch: Compile.Chain) = ch.schema.fields.map(f => f.name -> f.dataType).toMap
+    for {
+      conds <- sequence(checked.map(c => Compile.tryCompileCheck(Bloblang.parseExpr(c._1), schema)))
+      chains <- sequence((checked.map(_._2) :+ default.getOrElse(Nil)).map(chain))
+      // every surviving row lands in one frame: one set of columns and types
+      live = chains.filterNot(_.dropsAll)
+      if live.map(types).distinct.size <= 1
+      shape = live.headOption.getOrElse(chains.head)
+    } yield {
+      // a case that drops every row contributes no values, only its filter
+      val dropped = shape.columns.map { case (n, _) => n -> lit(null).cast(shape.schema(n).dataType) }
+      Compile.Compiled(
+        Processors.switchCases(conds, chains.map(ch => if (ch.dropsAll) dropped else ch.columns),
+          chains.map(_.deleted)),
+        shape.ser, branchSers = live.map(_.ser))
     }
   }
+
+  private val DedupeKey = "__dedupe_key"
+  private val DedupeOrder = "__dedupe_order"
+
+  /** Structured-mode `dedupe` over a compiled key: the envelope form's
+    * groupBy + min_by, ordered by an id taken on the structured frame at
+    * the point where the envelope would have assigned `seq`, so the same
+    * first-seen row wins. */
+  private def compiledDedupe(key: org.apache.spark.sql.Column): Compile.Compiled =
+    Compile.Compiled(df =>
+      Processors.dedupe(Seq(col(DedupeKey)), col(DedupeOrder))(
+        df.withColumn(DedupeKey, key).withColumn(DedupeOrder, monotonically_increasing_id()))
+        .drop(DedupeKey, DedupeOrder),
+      Compile.EnvelopeDefault)
 
   private def section(v: Any): java.util.Map[String, Any] =
     v.asInstanceOf[java.util.Map[String, Any]]
@@ -265,13 +338,9 @@ object PipelineConfig {
       case "switch" =>
         // list of { check: <bloblang expr>, processors: [...] }; a case
         // with no check is the default (processor_switch.go:29)
-        val cases = m.get(kind).asInstanceOf[java.util.List[_]].asScala.map(section).toSeq
-        val built = cases.map { c =>
-          val procs = c.get("processors").asInstanceOf[java.util.List[_]].asScala
-            .map(p => parseProcessor(section(p))).toSeq
-          val child = Processor.chain(procs)
-          Option(c.get("check")).map(chk => (checkColumn(String.valueOf(chk)), child))
-            .toRight(child) // Left = checkless default case
+        val built = switchCases(m.get(kind)).map { case (chk, procs) =>
+          val child = Processor.chain(procs.map(parseProcessor))
+          chk.map(c => (checkColumn(c), child)).toRight(child) // Left = checkless default case
         }
         Processors.switch(
           built.collect { case Right(cp) => cp },

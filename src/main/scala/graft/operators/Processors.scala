@@ -32,48 +32,79 @@ object Processors {
   def boundsCheck(col_ : Column, minLen: Int, maxLen: Int): Processor =
     Processor("bounds_check")(df => df.filter(length(col_).between(minLen, maxLen)))
 
+  /** Index of the first case whose condition is TRUE, else
+    * `conds.size`; a null condition counts as false. One CASE WHEN,
+    * evaluated once per row, that tries each condition at most once. */
+  private def caseTag(conds: Seq[Column]): Column =
+    conds.zipWithIndex.foldLeft(Option.empty[Column]) { case (acc, (c, i)) =>
+      Some(acc.fold(when(c, lit(i)))(_.when(c, lit(i))))
+    }.fold(lit(conds.size))(_.otherwise(lit(conds.size)))
+
+  private val SwitchTag = "__switch_case"
+
   /** Single-pass `switch` for expression-only cases (the common shape):
     * each case assigns columns; first matching case wins, unmatched rows
     * fall through to `default` assignments (or keep their current value).
-    * Collapses to ONE projection of per-column when/otherwise chains —
-    * one scan, no union, fully codegen'd. Use [[switch]] only when a case
-    * genuinely needs an arbitrary sub-plan (aggregation, join, explode).
+    * Collapses to ONE projection over a case tag ([[switchCases]]) — one
+    * scan, no union, fully codegen'd. The compiled config `switch`
+    * (graft.conn.PipelineConfig) merges its cases into the same shape.
+    * Use [[switch]] only when a case genuinely needs an arbitrary
+    * sub-plan (aggregation, join, explode).
     */
   def switchExpr(cases: Seq[(Column, Seq[(String, Column)])],
                  default: Seq[(String, Column)] = Nil): Processor =
     Processor("switch_expr") { df =>
-      val names = (cases.flatMap(_._2.map(_._1)) ++ default.map(_._1)).distinct
-      val updated = names.map { n =>
-        val cur: Column = if (df.columns.contains(n)) col(n) else lit(null)
-        val base = default.collectFirst { case (`n`, v) => v }.getOrElse(cur)
-        n -> cases.foldRight(base) { case ((cond, assigns), acc) =>
-          val v = assigns.collectFirst { case (`n`, x) => x }.getOrElse(cur)
-          when(coalesce(cond, lit(false)), v).otherwise(acc)
-        }
+      val names = (df.columns.toSeq ++ cases.flatMap(_._2.map(_._1)) ++ default.map(_._1)).distinct
+      def outputs(assigns: Seq[(String, Column)]): Seq[(String, Column)] = names.map { n =>
+        n -> assigns.collectFirst { case (`n`, v) => v }
+          .getOrElse(if (df.columns.contains(n)) col(n) else lit(null))
       }
-      df.withColumns(updated.toMap)
+      switchCases(cases.map(_._1), cases.map(c => outputs(c._2)) :+ outputs(default))(df)
+    }
+
+  /** The single-projection switch: a case tag ([[caseTag]] over `conds`)
+    * picks, per row, which entry of `outputs` gives the row's columns;
+    * the last entry serves rows no condition matched. Every entry names
+    * the same output columns (the first entry's order is kept). Where
+    * `deletes(i)` is TRUE for a row of case i, the row is dropped. */
+  def switchCases(conds: Seq[Column], outputs: Seq[Seq[(String, Column)]],
+                  deletes: Seq[Option[Column]] = Nil): Processor =
+    Processor("switch_expr") { df =>
+      val tag = col(SwitchTag)
+      def byTag(vs: Seq[Column]): Column =
+        if (vs.distinct.size == 1) vs.head
+        else vs.init.zipWithIndex.foldLeft(Option.empty[Column]) { case (acc, (v, i)) =>
+          Some(acc.fold(when(tag === i, v))(_.when(tag === i, v)))
+        }.get.otherwise(vs.last)
+      val tagged = df.withColumn(SwitchTag, caseTag(conds))
+      val kept =
+        if (deletes.forall(_.isEmpty)) tagged
+        else tagged.filter(!coalesce(byTag(outputs.indices.map(i =>
+          deletes.lift(i).flatten.getOrElse(lit(false)))), lit(false)))
+      val byName = outputs.map(_.toMap)
+      kept.select(outputs.head.map { case (n, _) => byTag(byName.map(_(n))).as(n) }: _*)
     }
 
   /** `switch` (processor_switch.go:29): (predicate → processors) cases.
-    * Filter-split + unionByName keeps each branch an independent subplan
-    * that Spark schedules in parallel; the predicates are mutually
-    * exclusive by construction (case i = check_i AND NOT any earlier check).
-    * N+1 scans of the input — prefer [[switchExpr]] for expression-only
-    * cases, which is a single pass.
+    * The first-match case tag is computed once per row and the tagged
+    * frame materialized (lazy localCheckpoint); each case and the default
+    * then read the checkpoint filtered on their tag, so N cases cost one
+    * scan and at most N condition evaluations per row. Filter-split +
+    * unionByName keeps each branch an independent subplan that Spark
+    * schedules in parallel. The config `switch` lands here only when it
+    * does not compile (graft.conn.PipelineConfig): a check outside the
+    * compiled Bloblang subset, a case step other than a compiling
+    * mapping (jq, a nested switch, …), cases that disagree on output
+    * columns, types or serialization, or a frame already enveloped by an
+    * earlier stage. Prefer [[switchExpr]] for expression-only cases,
+    * which is a single pass.
     */
   def switch(cases: Seq[(Column, Processor)], default: Processor = Processor.noop): Processor =
     Processor("switch") { df =>
-      // materialize once (lazy localCheckpoint): N cases + default read
-      // the checkpoint instead of re-scanning the input N+1 times
-      val src = df.localCheckpoint(false)
-      val (branches, _) = cases.foldLeft((Vector.empty[DataFrame], lit(false))) {
-        case ((acc, seen), (cond, proc)) =>
-          val c = coalesce(cond, lit(false))
-          (acc :+ proc(src.filter(c && !seen)), seen || c)
-      }
-      val anyCase = cases.map(c => coalesce(c._1, lit(false))).reduceOption(_ || _).getOrElse(lit(false))
-      val rest = default(src.filter(!anyCase))
-      (branches :+ rest).reduce(_.unionByName(_, allowMissingColumns = true))
+      val src = df.withColumn(SwitchTag, caseTag(cases.map(_._1))).localCheckpoint(false)
+      (cases.map(_._2) :+ default).zipWithIndex.map { case (proc, i) =>
+        proc(src.filter(col(SwitchTag) === i).drop(SwitchTag))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
 
   /** `branch` (processor_branch.go:25-44): request_map → child → result_map
@@ -214,13 +245,10 @@ object Processors {
     * by name with nulls for missing columns. */
   def groupByChecks(cases: Seq[(Column, Processor)]): Processor =
     Processor("group_by") { df =>
-      val tag = cases.zipWithIndex.reverse.foldLeft(lit(-1)) {
-        case (acc, ((check, _), i)) => when(check, lit(i)).otherwise(acc)
-      }
       // materialize the tagged frame once (lazy localCheckpoint): each
       // group's sub-plan reads the checkpoint instead of re-scanning the
       // input N times — same single-scan contract as `branch`
-      val tagged = df.withColumn("_gb", tag).localCheckpoint(false)
+      val tagged = df.withColumn("_gb", caseTag(cases.map(_._1))).localCheckpoint(false)
       cases.zipWithIndex.map { case ((_, proc), i) =>
         proc(tagged.filter(col("_gb") === i).drop("_gb"))
       }.reduce(_.unionByName(_, allowMissingColumns = true))

@@ -618,6 +618,37 @@ pipeline:
     assert(got == Seq("low", "mid", "mid", "mid")) // k=5 (n=0) deleted
   }
 
+  test("root = this over a field-built stage keeps its explicit nulls") {
+    // a drop-null `root = this` regime over an explicit-null predecessor:
+    // the interpreter re-parses `"b":null` and marshals it again
+    val dir = java.nio.file.Files.createTempDirectory("blnull").toFile
+    dir.deleteOnExit()
+    val lines = Seq("""{"x":1.5,"y":"q"}""", """{"x":2.5}""")
+    java.nio.file.Files.writeString(new java.io.File(dir, "in.json").toPath, lines.mkString("\n"))
+    val m1 = "root.a = this.x\nroot.b = this.y"
+    val m2 = "root = this\nroot.route = \"r\""
+    val cfg = s"""
+input:
+  file:
+    paths: [ "${dir.getPath}" ]
+    scanner:
+      json_documents: {}
+pipeline:
+  processors:
+    - mapping: |
+        ${m1.replace("\n", "\n        ")}
+    - mapping: |
+        ${m2.replace("\n", "\n        ")}
+"""
+    val frame = graft.conn.PipelineConfig.load(cfg).frame(spark)
+    assert(!frame.queryExecution.executedPlan.toString.contains("UDF"), "chain did not compile")
+    val got = frame.select(Msg.ContentCol).as[String].collect().toSeq.sorted
+    val want = lines.flatMap(Interp.run(Bloblang.parse(m1), _))
+      .flatMap(Interp.run(Bloblang.parse(m2), _)).sorted
+    assert(got == want)
+    assert(got.contains("""{"a":2.5,"b":null,"route":"r"}"""))
+  }
+
   test("per-processor fallback: uncompilable step seals the envelope, result stays correct") {
     val dir = java.nio.file.Files.createTempDirectory("blcomp2").toFile
     dir.deleteOnExit()

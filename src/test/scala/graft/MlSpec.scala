@@ -1279,6 +1279,18 @@ class MlSpec extends SparkSpec {
       s"eviction horizon diverged: NoTimeout ${unbounded.size} pairs, horizon ${horizon.size}")
   }
 
+  test("splitCount counts batches under the consumer's own maxFilesPerTrigger") {
+    val part = spark.range(8).toDF("id")
+    val inDir = QueriesCore.writeSplitDir("split_count",
+      Seq(part -> "0_a.parquet", part -> "1_b.parquet"), filesPerPart = 2)
+    assert(new java.io.File(inDir.toString).listFiles()
+      .count(_.getName.endsWith(".parquet")) == 4)
+    // one file per micro-batch: four batches, where the two-file `0_`
+    // split alone would suggest two and stop the drain halfway
+    assert(QueriesLlm.splitCount(inDir, perTrigger = 1) == 4)
+    assert(QueriesLlm.splitCount(inDir, QueriesLlm.splitWidth(inDir)) == 2)
+  }
+
   test("StreamPhash: cold buckets age out past the horizon; same-batch pairing survives") {
     // Hand-built single-block occurrence stream, one file per micro-batch
     // (the StreamDedup live-eviction design, ported per r14 verdict #2 —
