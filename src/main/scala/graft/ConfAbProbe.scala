@@ -10,8 +10,20 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
   * fold, state cleanup between runs, min-of-reps).
   *
   * Usage: runMain graft.ConfAbProbe <sfDir> <conf> <valueA> <valueB> <q1,q2,...> [reps=3]
+  *
+  * For a join-strategy conf the probe fails before timing when both arms
+  * execute the same joins: the conf did not reach the query's plan (a
+  * conf set on this session does not follow a stream query into the
+  * `newSession()` it opens), and the A/B would time one configuration
+  * against itself.
   */
 object ConfAbProbe {
+  private val joinConfs = Set(
+    "spark.sql.join.preferSortMergeJoin",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, conf, valueA, valueB, names) = args.take(5)
     val reps = args.lift(5).map(_.toInt).getOrElse(3)
@@ -50,10 +62,14 @@ object ConfAbProbe {
         .map(j => s"$j=${p.sliding(j.length).count(_ == j)}").mkString(",")
     }
     val rows = names.split(',').map { name =>
+      val (aJoins, bJoins) = (joins(name, valueA), joins(name, valueB))
+      if (joinConfs(conf) && aJoins == bJoins)
+        throw new IllegalStateException(s"[confab] $name: $conf=$valueA and $conf=$valueB " +
+          s"execute the same joins ($aJoins); the conf does not reach this query's plan")
       runOne(name, valueA); runOne(name, valueB) // codegen warmup both arms
       val (as, bs) = (1 to reps).map(_ => (runOne(name, valueA), runOne(name, valueB))).unzip
       System.err.println(s"[confab] $name a=$as b=$bs")
-      f""""$name":{"a_min":${as.min}%.3f,"b_min":${bs.min}%.3f,"a_joins":"${joins(name, valueA)}","b_joins":"${joins(name, valueB)}"}"""
+      f""""$name":{"a_min":${as.min}%.3f,"b_min":${bs.min}%.3f,"a_joins":"$aJoins","b_joins":"$bJoins"}"""
     }
     println(rows.mkString(
       s"""{"confabprobe":"${ProbeJson.jstr(conf)}","a":"${ProbeJson.jstr(valueA)}","b":"${ProbeJson.jstr(valueB)}",""",

@@ -134,8 +134,9 @@ object StateProbe {
     val wall = (System.nanoTime() - t0) / 1e9
 
     pm.finish(q)
-    println(f"""{"stateprobe":"${ProbeJson.jstr(docsDir)}","splits":$nSplits,"horizon_ms":$horizonMs,"provider":"${ProbeJson.jstr(provider)}","rows_total":${pm.stateRows},"rows_removed":${pm.removed.get()},"state_bytes":${pm.stateBytes},"emitted":${pm.emitted.get()},"wall":$wall%.3f}""")
+    // PROGRESS lines first: the result record is the last stdout line
     progress.forEach(j => println(s"PROGRESS $j"))
+    println(f"""{"stateprobe":"${ProbeJson.jstr(docsDir)}","splits":$nSplits,"horizon_ms":$horizonMs,"provider":"${ProbeJson.jstr(provider)}","rows_total":${pm.stateRows},"rows_removed":${pm.removed.get()},"state_bytes":${pm.stateBytes},"emitted":${pm.emitted.get()},"wall":$wall%.3f}""")
     spark.stop()
   }
 }

@@ -1662,10 +1662,33 @@ object Compile {
     * null as false. `&&`, `||` and `!` at the top of the check follow the
     * interpreter's left-to-right evaluation: an operand that errors makes
     * the whole check null, where SQL's three-valued logic would absorb it
-    * (`null OR true`). Deeper operands keep the compiler's documented
-    * three-valued deviation. */
+    * (`null OR true`). Below that skeleton an error must reach the check
+    * as a null, so shapes that can turn a null into a value return None
+    * (the caller falls back to the interpreter): `if`, `match`, a nested
+    * `&&`/`||`, `.catch` (compiled as the identity), and `==`/`!=` over
+    * anything but literals, variables and field paths.
+    * `(this.a > 1) == false` with `a` absent is an error interpreted but
+    * `null <=> false`, i.e. false, compiled; `this.kind == "x"` cannot
+    * error (an absent field is null in both). */
   def tryCompileCheck(e: Expr, schema: StructType): Option[Column] = {
     val err = lit(null).cast(BooleanType)
+    def plain(x: Expr): Boolean = x match {
+      case Lit(_) | This | MetaRef(_) | VarRef(_) => true
+      case Field(t, _) => plain(t)
+      case _ => false
+    }
+    def subExprs(a: Any): Iterator[Expr] = a match {
+      case x: Expr => Iterator(x)
+      case p: Product => p.productIterator.flatMap(subExprs)
+      case xs: Iterable[_] => xs.iterator.flatMap(subExprs)
+      case _ => Iterator.empty
+    }
+    def absorbsNull(x: Expr): Boolean = x match {
+      case _: If | _: Match | Bin("&&" | "||", _, _) | MethodCall(_, "catch", _) => true
+      case Bin("==" | "!=", l, r) if !(plain(l) && plain(r)) => true
+      case p: Product => p.productIterator.flatMap(subExprs).exists(absorbsNull)
+      case _ => false
+    }
     def strict(x: Expr): Option[Column] = x match {
       case Bin("&&", l, r) =>
         for (lc <- strict(l); rc <- strict(r))
@@ -1674,6 +1697,7 @@ object Compile {
         for (lc <- strict(l); rc <- strict(r))
           yield when(lc.isNull, err).when(lc, lit(true)).otherwise(rc)
       case Not(a) => strict(a).map(!_)
+      case _ if absorbsNull(x) => None
       case _ => compileExpr(x, schema, Map.empty, Map.empty).collect { case (c, BooleanType) => c }
     }
     strict(e)

@@ -119,23 +119,28 @@ object Dedup {
     * row. (The pure-Column form — numHashes separate array_min(transform)
     * terms — blows the 64KB codegen method limit and falls back to
     * per-expression interpretation, ~10× slower; a single fused loop is the
-    * faster executor-side plan and stays partition-local.) */
+    * faster executor-side plan and stays partition-local.) Takes and
+    * returns `Array[Long]`, as [[chainedXxhash]] does: a `Seq[Long]`
+    * signature boxes every shingle hash on the way in and every minimum on
+    * the way out. */
   def minhashSigUdf(numHashes: Int, seed: Long = 42L)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val as = hashParams(numHashes, seed).map(_._1).toArray
     val bs = hashParams(numHashes, seed).map(_._2).toArray
-    udf { (hs: Seq[Long]) =>
+    udf { (hs: Array[Long]) =>
       val out = Array.fill(numHashes)(Long.MaxValue)
-      hs.foreach { h =>
-        val hp = ((h % P) + P) % P
+      var i = 0
+      while (i < hs.length) {
+        val hp = ((hs(i) % P) + P) % P
         var j = 0
         while (j < numHashes) {
           val v = (hp * as(j) + bs(j)) % P
           if (v < out(j)) out(j) = v
           j += 1
         }
+        i += 1
       }
-      out.toSeq
+      out
     }
   }
 

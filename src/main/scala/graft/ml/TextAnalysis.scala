@@ -1,12 +1,19 @@
 package graft.ml
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for training-data pipelines: language ID,
-  * quality scoring, token counting, document fingerprinting. All pure
-  * Column expressions — codegen'd, no UDFs, no shuffles (per-row only).
+  * quality scoring, token counting, document fingerprinting. Per-row
+  * only, no shuffles. The operators are Column expressions, except for a
+  * few fused per-row kernels (`udf`s) where the Column form rebuilds the
+  * same intermediate arrays many times per row: [[qualityScore]] and the
+  * md5-bucket kernels. Each kernel is spec-pinned (MlSpec) against the
+  * Column form it replaces.
   */
 object TextAnalysis {
 
@@ -49,13 +56,106 @@ object TextAnalysis {
   }
 
   /** Composite quality score in [0,1]: length band + punct sanity +
-    * stopword presence + word-length sanity (C4/Gopher-rule flavor). */
+    * stopword presence + word-length sanity (C4/Gopher-rule flavor), each
+    * worth 0.25; null text scores 0.0.
+    *
+    * One fused per-row kernel. It scores exactly what the sum of the
+    * Column rules would: `length(text)` in [50, 20000], [[punctRatio]]
+    * < 0.2, [[stopwordRatio]] > 0.05 and [[meanWordLength]] in [2, 12].
+    * That Column form costs three `regexp_extract_all` scans (`between`
+    * evaluates [[meanWordLength]] twice), seven regex `split`s of
+    * `trim(text)`/`lower(text)` and an interpreted `filter` lambda per
+    * document; the kernel makes two character passes over the text and
+    * one over `lower(text)`, and builds no arrays. The four Column rules
+    * stay public: `llm_quality` projects them, and the MlSpec differential
+    * pins this kernel to their sum. */
   def qualityScore(text: Column): Column = {
-    val lenOk = when(length(text).between(50, 20000), lit(0.25)).otherwise(lit(0.0))
-    val punctOk = when(punctRatio(text) < 0.2, lit(0.25)).otherwise(lit(0.0))
-    val stopOk = when(stopwordRatio(text) > 0.05, lit(0.25)).otherwise(lit(0.0))
-    val wordOk = when(meanWordLength(text).between(2.0, 12.0), lit(0.25)).otherwise(lit(0.0))
-    lenOk + punctOk + stopOk + wordOk
+    // the session's setting, which the Column form's `lower` also follows
+    val icuLower = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+    udf((s: String) => if (s == null) 0.0 else qualityOf(s, icuLower)).apply(text)
+  }
+
+  // The character classes of the Column rules' regexes (java.util.regex
+  // without UNICODE_CHARACTER_CLASS): `\p{Punct}` is ASCII punctuation,
+  // `\s` is [ \t\n\x0B\f\r], and `\p{L}`/`\p{N}` are Unicode general
+  // categories, tested per code point.
+  private val punct: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".foreach(c => t(c) = true)
+    t
+  }
+  private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+  private val wordCategories = Seq(Character.UPPERCASE_LETTER, Character.LOWERCASE_LETTER,
+    Character.TITLECASE_LETTER, Character.MODIFIER_LETTER, Character.OTHER_LETTER,
+    Character.DECIMAL_DIGIT_NUMBER, Character.LETTER_NUMBER, Character.OTHER_NUMBER)
+    .map(1 << _).reduce(_ | _)
+  private val enStopWords = enStop.toArray
+
+  private def isStopword(s: String, at: Int, len: Int): Boolean = {
+    var j = 0
+    while (j < enStopWords.length) {
+      val w = enStopWords(j)
+      if (w.length == len && s.regionMatches(at, w, 0, len)) return true
+      j += 1
+    }
+    false
+  }
+
+  private def band(ok: Boolean): Double = if (ok) 0.25 else 0.0
+
+  private def ratioOf(num: Int, den: Int): Double =
+    if (den == 0) 0.0 else num.toDouble / den.toDouble
+
+  private def qualityOf(s: String, icuLower: Boolean): Double = {
+    val n = s.length
+    // `length` counts characters (code points), not UTF-16 units
+    val len = s.codePointCount(0, n)
+    var puncts = 0
+    var spaces = 0
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c < 128 && punct(c)) puncts += 1
+      else if (isSpace(c)) spaces += 1
+      i += 1
+    }
+    // `split(trim(text), "\\s+")` has one piece more than the whitespace
+    // runs inside `trim(text)`, and `trim` strips only ASCII spaces
+    var from = 0
+    while (from < n && s.charAt(from) == ' ') from += 1
+    var to = n
+    while (to > from && s.charAt(to - 1) == ' ') to -= 1
+    var runs = 0
+    i = from
+    while (i < to) {
+      if (isSpace(s.charAt(i)) && (i == from || !isSpace(s.charAt(i - 1)))) runs += 1
+      i += 1
+    }
+    val meanLen = ratioOf(len - spaces, if (from == to) 0 else runs + 1)
+    // word tokens ([[Dedup.tokens]]): the \p{L}\p{N} runs of Spark's own
+    // UTF8_BINARY `lower`, so a lowering that splits a letter (`İ` → `i`
+    // + U+0307) splits the token the same way
+    val lw = CollationSupport.Lower.exec(UTF8String.fromString(s),
+      CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower).toString
+    val m = lw.length
+    var words = 0
+    var stops = 0
+    var start = -1
+    i = 0
+    while (i <= m) {
+      // a space past the end closes the last token
+      val cp = if (i < m) lw.codePointAt(i) else ' '
+      if (((1 << Character.getType(cp)) & wordCategories) != 0) {
+        if (start < 0) start = i
+      } else if (start >= 0) {
+        words += 1
+        if (isStopword(lw, start, i - start)) stops += 1
+        start = -1
+      }
+      i += Character.charCount(cp)
+    }
+    band(len >= 50 && len <= 20000) + band(ratioOf(puncts, len) < 0.2) +
+      band(ratioOf(stops, words) > 0.05) + band(meanLen >= 2.0 && meanLen <= 12.0)
   }
 
   // ---- language ID: stopword-profile heuristic over 5 languages -----------

@@ -254,6 +254,37 @@ class ConfigCompileSpec extends SparkSpec {
         |""".stripMargin, stringAmounts)
   }
 
+  test("a check that could absorb an erroring operand below &&/||/! falls back") {
+    // amount is absent on a3, a4 and a7: `this.amount > 1` errors there,
+    // so the interpreter counts the check false; compiled, the error is a
+    // null, `null == false` is false and the negation would be true
+    val stages = project +
+      """    - switch:
+        |        - check: '!((this.amount > 1) == false)'
+        |          processors:
+        |            - mapping: |
+        |                root = this
+        |                root.route = "big"
+        |        - processors:
+        |            - mapping: |
+        |                root = this
+        |                root.route = "other"
+        |""".stripMargin
+    assertFellBack(differential(stages))
+    val schema = spark.read.json(events.getPath).schema
+    def compiles(check: String) =
+      graft.blob.Compile.tryCompileCheck(graft.blob.Bloblang.parseExpr(check), schema).isDefined
+    Seq("!((this.amount > 1) == false)", "(this.amount > 1) != true",
+        "!(if this.amount > 1 { true } else { false })",
+        "!match this.amount { this > 1 => true, _ => false }",
+        "this.kind == \"x\" || !((this.amount > 1).catch(false))",
+        "(this.amount > 1 || true) == true")
+      .foreach(c => assert(!compiles(c), s"compiled: $c"))
+    Seq("this.kind == \"purchase\" && this.amount >= 100", "!(this.kind != \"view\")",
+        "this.page.has_prefix(\"/search\") || this.n == 3")
+      .foreach(c => assert(compiles(c), s"did not compile: $c"))
+  }
+
   test("dedupe alone compiles over the structured frame and keeps the first-seen row") {
     assertCompiled(differential(project + dedupe))
     // a key outside the compiled subset falls back

@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Tables
 import graft.ml.{Dedup, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class MlSpec extends SparkSpec {
@@ -72,6 +73,43 @@ class MlSpec extends SparkSpec {
             .cast("long"), lit(b.toLong))).as("ref"))
       .filter(!(col("fused") <=> col("ref"))).count()
     assert(uniDiff == 0L, s"$uniDiff docs differ in unigram buckets")
+  }
+
+  test("fused qualityScore kernel equals the sum of the four Column rules") {
+    // the Column form the kernel replaced: every component rule is still
+    // a public operator, so the reference is their banded sum
+    def band(ok: Column): Column = when(ok, lit(0.25)).otherwise(lit(0.0))
+    def columnScore(t: Column): Column =
+      band(length(t).between(50, 20000)) + band(TextAnalysis.punctRatio(t) < 0.2) +
+        band(TextAnalysis.stopwordRatio(t) > 0.05) +
+        band(TextAnalysis.meanWordLength(t).between(2.0, 12.0))
+    val words = Seq.tabulate(19)(i => s"w$i").mkString(" ")
+    val edge = Seq(
+      null, "", "     ", " \t ", "\tleading tab, then the words of a sentence",
+      "\nleading newline and the rest of it", "\u000B\f\r\n", "trailing spaces of the  ",
+      "İstanbul is the city", "İT İS THE İN THİNG", "ﬁ the ǅemal Ǆ ß ΣΑΣ",
+      "東京は日本の首都です。the 東京", "𝒜𝒷 𝒸𝒹 and the 𝔄𝔅", "𝒜" * 49, "𝒜" * 50, "\tab cd", " ab cd ",
+      "123 4567 89 0 the", "٣٤٥ ½ Ⅻ the 10", "nbsp\u00A0is\u2003not\u3000whitespace the",
+      "a" * 49, "a" * 50, "the " * 12 + "ab", ("the cat " * 2500).take(20000),
+      ("the cat " * 2500).take(20001), "abcd.", "ab cd", "abcdefghijkl mnopqrstuvwx",
+      s"the $words", s"the $words w19", "!!!!", "the, the; the.")
+    val edgeDf = edge.map(Tuple1(_)).toDF("text")
+    val corpus = docs.select("text")
+      .unionByName(QueriesLlm.plantedCorpus(spark, sf).select("text")).unionByName(edgeDf)
+    val both = corpus.select(col("text"),
+      TextAnalysis.qualityScore(col("text")).as("fused"), columnScore(col("text")).as("ref"))
+    val diff = both.filter(!(col("fused") <=> col("ref"))).collect()
+    assert(diff.isEmpty, s"${diff.length} docs differ, e.g. ${diff.take(5).mkString("; ")}")
+    // the edge set reaches every score level, and null text scores 0.0
+    val levels = edgeDf.select(TextAnalysis.qualityScore(col("text")).as("q"))
+      .as[Double].collect().toSet
+    assert(levels == Set(0.0, 0.25, 0.5, 0.75, 1.0), s"edge levels $levels")
+    assert(Seq(Tuple1(null.asInstanceOf[String])).toDF("text")
+      .select(TextAnalysis.qualityScore(col("text"))).as[Double].head() == 0.0)
+    // the executed filter runs the kernel: no regex array building, no lambda
+    val p = docs.filter(TextAnalysis.qualityScore(col("text")) >= 0.75)
+      .queryExecution.executedPlan.toString.toLowerCase
+    assert(!Seq("regexp", "split(", "lambda").exists(p.contains), s"Column form in the plan:\n$p")
   }
 
   test("minhash LSH finds planted near-duplicates with high recall") {
