@@ -1,37 +1,62 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Json
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
 /** Benchmark main: times the headline queries at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract → BENCH_r{N}.json).
   *
-  * Each query is forced to FULL evaluation with
-  * `agg(bit_xor(xxhash64(struct(allCols))))` — a `.count()` would let
-  * Catalyst prune projection-only work and time just the scan (bit_xor, not
-  * sum: ANSI mode overflows on summed hashes). Failures are recorded in a
-  * `failed` list and printed to stderr, never silently swallowed.
+  * Each query is forced to FULL evaluation with [[evalFold]] — a
+  * `.count()` would let Catalyst prune projection-only work and time just
+  * the scan. Failures are recorded in a `failed` list and printed to
+  * stderr, never silently swallowed. The fold and the between-runs
+  * [[cleanState]] are shared with PlanDump and the probe mains.
   */
 object Bench {
+  /** The full-evaluation fold: hash every output column of every row and
+    * xor the hashes (bit_xor, not sum: ANSI mode overflows on summed
+    * hashes). Lazy; `collect()` runs it. */
+  def evalFold(df: DataFrame): DataFrame =
+    df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*))))
+
+  /** Run query `name` at `dir` to completion through [[evalFold]]. The
+    * returned fold has executed: its `executedPlan` is the final
+    * post-AQE plan. */
+  def forceEval(spark: SparkSession, name: String, dir: String): DataFrame = {
+    val agg = evalFold(SparkEntry.queries(name)(spark, dir))
+    agg.collect()
+    agg
+  }
+
+  /** Reclaim lazily-cleaned state between timed runs: localCheckpoint RDDs
+    * and broadcasts are released by the ContextCleaner only when GC
+    * collects their weak refs — without this, back-to-back runs
+    * accumulate block-manager state and later runs measure memory
+    * pressure, not the plan (observed: cosine_topk 0.9 s → 3.6 s). */
+  def cleanState(spark: SparkSession): Unit = {
+    // getPersistentRDDs + blocking unpersist removes checkpoint blocks
+    // SYNCHRONOUSLY — the async cleaner path still left gigabytes of
+    // earlier queries' blocks in flight when the next timing started
+    // (observed: cosine_topk 1.1 s isolated vs 3.4 s after minhash).
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    // streaming runs leave their state-store providers (and their
+    // in-memory version maps) loaded after query.stop(); across
+    // repeated runs that heap pressure bleeds into whatever query
+    // times next (observed: codec_parquet 2.4 s isolated vs 4.4 s
+    // after the stream_win_* triples)
+    org.apache.spark.sql.graftshim.StateStoreReset.unloadAll()
+    spark.catalog.clearCache()
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Udfs.register(spark)
-
-    /** Evaluate every output column of every row: hash each row, sum hashes. */
-    def forceEval(name: String, dir: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, dir)
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
-    }
 
     // JVM+codegen warmup on the smallest SF so timings measure the plan,
     // not first-query classloading.
@@ -39,7 +64,7 @@ object Bench {
     val names = SparkEntry.benchQueries.filter(SparkEntry.queries.contains)
       .filter(n => only.forall(_.contains(n)))
     names.foreach { n =>
-      try forceEval(n, "/root/testdata/sf0.001")
+      try forceEval(spark, n, "/root/testdata/sf0.001")
       catch { case e: Throwable => System.err.println(s"[bench/warmup] $n: ${e.getMessage}") }
     }
 
@@ -52,7 +77,7 @@ object Bench {
     // only ever adds time.
     def calibrationRun(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 1000000000L, 1L, cpus.toInt)
+      spark.range(0L, 1000000000L, 1L, cpus)
         .agg(bit_xor(xxhash64(col("id")))).collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -81,11 +106,10 @@ object Bench {
     // the Spark job measures ~0.5 even idle), and proportionally less
     // when external load steals cores. Returns achieved-CPU / cpus.
     def cpuShareProbe(ms: Long = 800L): Double = osBean.map { b =>
-      val nThreads = cpus.toInt
       val cpu0 = b.getProcessCpuTime
       val t0 = System.nanoTime()
       val sink = new java.util.concurrent.atomic.AtomicLong()
-      val threads = (1 to nThreads).map { _ =>
+      val threads = (1 to cpus).map { _ =>
         new Thread(() => {
           var x = 1234567L
           while (System.nanoTime() - t0 < ms * 1000000L) {
@@ -97,7 +121,7 @@ object Bench {
       }
       threads.foreach(_.start()); threads.foreach(_.join())
       val wall = (System.nanoTime() - t0) / 1e9
-      ((b.getProcessCpuTime - cpu0) / 1e9) / wall / nThreads
+      ((b.getProcessCpuTime - cpu0) / 1e9) / wall / cpus
     }.getOrElse(1.0)
     val calWaitBudgetMs =
       sys.env.getOrElse("SPARK_GRAFT_CAL_WAIT_SECS", "300").toLong * 1000L
@@ -151,31 +175,10 @@ object Bench {
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val runsMap = scala.collection.mutable.LinkedHashMap.empty[
       String, scala.collection.mutable.ArrayBuffer[Double]]
-    def cleanState(): Unit = {
-      // Reclaim lazily-cleaned state between runs: localCheckpoint RDDs
-      // and broadcasts are released by the ContextCleaner only when GC
-      // collects their weak refs — without this, back-to-back runs
-      // accumulate block-manager state and later runs measure memory
-      // pressure, not the plan (observed: cosine_topk 0.9 s → 3.6 s).
-      // getPersistentRDDs + blocking unpersist removes checkpoint blocks
-      // SYNCHRONOUSLY — the async cleaner path still left gigabytes of
-      // earlier queries' blocks in flight when the next timing started
-      // (observed: cosine_topk 1.1 s isolated vs 3.4 s after minhash).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // streaming runs leave their state-store providers (and their
-      // in-memory version maps) loaded after query.stop(); across
-      // repeated runs that heap pressure bleeds into whatever query
-      // times next (observed: codec_parquet 2.4 s isolated vs 4.4 s
-      // after the stream_win_* triples)
-      org.apache.spark.sql.graftshim.StateStoreReset.unloadAll()
-      spark.catalog.clearCache()
-      System.gc()
-    }
     def timeOne(name: String): Double = {
-      cleanState()
+      cleanState(spark)
       val t0 = System.nanoTime()
-      try forceEval(name, sfDir)
+      try forceEval(spark, name, sfDir)
       catch { case e: Throwable =>
         if (!failed.contains(name)) failed += name
         System.err.println(s"[bench] FAILED $name: ${e.getMessage}")
@@ -203,7 +206,7 @@ object Bench {
       // streaming segment reads the JVM's leftover state-store providers
       // and pending GC, not the host (observed at sf0.01: samples 0.25 →
       // 0.37 in a window where the host itself was steady)
-      cleanState()
+      cleanState(spark)
       calSamples += (1 to 2).map(_ => calibrationRun()).min
     }
     val calibrationPost = math.min(calSamples.last, calibrationRun())
@@ -267,7 +270,7 @@ object Bench {
       "sampled pre/post and every segment) — divide totals by it before comparing " +
       "rounds; `cal_segments` are the interleaved samples, `reran_segments` the " +
       "15-row segments re-run once because their window was >15% off the run best"
-    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$mins,"medians":$qsMed,"runs":$allRuns,"min_total":$minTotal%.3f,"calibration":$calibration%.3f,"calibration_pre":$calibrationPre%.3f,"calibration_post":$calibrationPost%.3f,"norm_min_total":${minTotal / calibration}%.2f,"cal_segments":$calSegJson,"reran_segments":$dirtyJson,"cal_gate_waits":$gateWaits,"cal_gate_share":$calShare%.2f,"stat":"min","failed":$fl,"note":"${ProbeJson.jstr(note)}","sf":"${ProbeJson.jstr(sfDir)}"}"""
+    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$mins,"medians":$qsMed,"runs":$allRuns,"min_total":$minTotal%.3f,"calibration":$calibration%.3f,"calibration_pre":$calibrationPre%.3f,"calibration_post":$calibrationPost%.3f,"norm_min_total":${minTotal / calibration}%.2f,"cal_segments":$calSegJson,"reran_segments":$dirtyJson,"cal_gate_waits":$gateWaits,"cal_gate_share":$calShare%.2f,"stat":"min","failed":$fl,"note":${Json.quote(note)},"sf":${Json.quote(sfDir)}}"""
     val fullPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"))
     try {
@@ -278,7 +281,7 @@ object Bench {
     }
     // the COMPACT driver-consumable line: per-query mins + summary scalars
     // only (no runs/medians/note — those live in the full record above)
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$mins,"min_total":$minTotal%.3f,"calibration":$calibration%.3f,"calibration_pre":$calibrationPre%.3f,"calibration_post":$calibrationPost%.3f,"norm_min_total":${minTotal / calibration}%.2f,"cal_segments":$calSegJson,"reran_segments":$dirtyJson,"cal_gate_waits":$gateWaits,"cal_gate_share":$calShare%.2f,"stat":"min","failed":$fl,"sf":"${ProbeJson.jstr(sfDir)}"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$mins,"min_total":$minTotal%.3f,"calibration":$calibration%.3f,"calibration_pre":$calibrationPre%.3f,"calibration_post":$calibrationPost%.3f,"norm_min_total":${minTotal / calibration}%.2f,"cal_segments":$calSegJson,"reran_segments":$dirtyJson,"cal_gate_waits":$gateWaits,"cal_gate_share":$calShare%.2f,"stat":"min","failed":$fl,"sf":${Json.quote(sfDir)}}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
-
 /** Rounds-to-convergence receipt for the resolve family (r19 verdict #5):
   * runs each named query (default: the connectedComponents consumers) and
   * reports how many min-label rounds the LAST CC call inside it actually
@@ -18,26 +15,15 @@ object CcRoundsProbe {
     val sfDir = args(0)
     val names = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq(
       "llm_dedup_resolve", "llm_phash_resolve", "stream_phash_resolve"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Udfs.register(spark)
 
     def runOne(name: String): (Double, Int, Int) = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      org.apache.spark.sql.graftshim.StateStoreReset.unloadAll()
-      System.gc()
+      Bench.cleanState(spark)
       val esc0 = graft.ml.Dedup.lastEscalations
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
+      Bench.forceEval(spark, name, sfDir)
       val wall = (System.nanoTime() - t0) / 1e9
       (wall, graft.ml.Dedup.lastConvergedRounds, graft.ml.Dedup.lastEscalations - esc0)
     }
@@ -48,7 +34,7 @@ object CcRoundsProbe {
       val best = rs.minBy(_._1)
       s""""$n":{"wall":${f"${best._1}%.3f"},"cc_rounds":${best._2},"escalations":${best._3}}"""
     }
-    println(rows.mkString("{\"ccroundsprobe\":{", ",", s"},\"sf\":\"${ProbeJson.jstr(sfDir)}\"}"))
+    println(rows.mkString("{\"ccroundsprobe\":{", ",", s"},\"sf\":${graft.core.Json.quote(sfDir)}}"))
     spark.stop()
   }
 }

@@ -1,38 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 import java.nio.file.{Files, Paths}
 
-/** Plan-audit sweep (r19 optimization round): for each named query, write
-  * `<out>/<name>_<tag>.txt` holding the `explain("formatted")` plan AND the
-  * final post-AQE executed plan (the formatted pre-execution plan lies about
-  * codegen spans and join strategies while AQE is on — ExplainQ's lesson; the
-  * formatted form carries PushedFilters/ReadSchema the executed string
-  * abbreviates). One JVM for the whole list: ExplainQ pays sbt+session
-  * startup per query, which makes a 15-query sweep impractical.
+/** Plan-audit sweep: for each named query, run it to completion through
+  * Bench's full-evaluation fold and write `<out>/<name>_<tag>.txt` holding
+  * the `explain("formatted")` plan AND the final post-AQE executed plan
+  * (the formatted pre-execution plan lies about codegen spans and join
+  * strategies while AQE is on; the formatted form carries
+  * PushedFilters/ReadSchema the executed string abbreviates). One JVM for
+  * the whole list; a single name audits one query.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.Udfs.register(spark)
     Files.createDirectories(Paths.get(outDir))
     names.split(',').foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val agg = df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*))))
+        val agg = Bench.evalFold(SparkEntry.queries(name)(spark, sfDir))
         val formatted = agg.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         agg.collect()
@@ -44,8 +33,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         println(s"[plandump] FAILED $name: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      org.apache.spark.sql.graftshim.StateStoreReset.unloadAll()
+      Bench.cleanState(spark)
     }
     spark.stop()
   }

@@ -13,26 +13,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * instance per measured query: removed/emitted accumulate across
   * batches, stateRows/stateBytes hold the last-seen (terminal) values.
   */
-/** Minimal JSON string escaper for probe receipt lines: receipts are
-  * parsed by close-out tooling, so interpolated paths/args must not
-  * produce invalid JSON — a dir containing a quote or backslash would
-  * (r17 advice). */
-object ProbeJson {
-  def jstr(s: String): String = {
-    val sb = new StringBuilder(s.length + 2)
-    s.foreach {
-      case '"'  => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < 0x20 => sb ++= f"\\u${c.toInt}%04x"
-      case c => sb += c
-    }
-    sb.toString
-  }
-}
-
 final class ProbeMetrics(spark: SparkSession) {
   val removed = new java.util.concurrent.atomic.AtomicLong()
   val emitted = new java.util.concurrent.atomic.AtomicLong()

@@ -4,7 +4,6 @@ import graft.core.Tables
 import graft.functions.Blob
 import graft.ml.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

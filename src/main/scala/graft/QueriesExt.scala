@@ -237,7 +237,6 @@ pipeline:
     // go:13-79): batched per-partition REAL inference — trained LR model,
     // checked-in weights (NlpModel/NlpTrain); oracle generated from them
     "nlp_classify" -> ((s, dir) => {
-      import s.implicits._
       graft.ml.Nlp.classifyText(t(s, dir, "documents")).toDF()
     }),
 

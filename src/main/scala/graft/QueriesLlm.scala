@@ -512,7 +512,7 @@ object QueriesLlm {
     * is radius 3 → 16-bit blocks → 65536 buckets per block — the
     * multi-index-hashing trade (block width must grow with the corpus,
     * paying guaranteed-recall radius). The gate runs radius 7 at gate SF;
-    * PhashProbe measures the radius-3 form at scaled dirs. */
+    * the radius-3 form was measured at scaled dirs (SCALING.md). */
   private[graft] def phashPairs(s: SparkSession, dir: String, maxHamming: Int): DataFrame = {
     val off = twinOffset(s, dir)
     val mk = udf((k: Long) => Multimodal.syntheticImageBmp(k))
@@ -761,8 +761,8 @@ object QueriesLlm {
     * state (alternating versioned dirs keep the read side immutable
     * while the next version writes). Returns the FINAL compacted state,
     * or None if no pair ever arrived. Shared by stream_phash_resolve
-    * and ResolveProbe so the gate and the scale probe measure the same
-    * machinery.
+    * and the MlSpec cadence spec, so the gate and the spec exercise the
+    * same machinery.
     *
     * `compactEvery` is the deploy knob: with N > 1, batches dump their
     * (slim, two-column) pairs to parquet and only every Nth batch pays
@@ -770,7 +770,7 @@ object QueriesLlm {
     * streaming premium becomes one parquet append, and the CC fixed
     * cost amortizes over N batches. Min-label CC is confluent under ANY
     * grouping of the edge folds, so the final state is IDENTICAL for
-    * every N (ResolveProbe asserts it against the one-shot batch form).
+    * every N (MlSpec pins the cadence-invariance).
     * A trailing partial group compacts after the stream drains. */
   private[graft] def runIncrementalResolve(ss: SparkSession, pairs: DataFrame,
                                            compactEvery: Int = 1,
@@ -965,20 +965,15 @@ object QueriesLlm {
     // deployment shape anyway (a continuous stream is never "done";
     // timeouts fire in the no-data batches between arrivals) — and
     // stops on the drained-input signal instead.
-    val q =
-      if (evictSingletonsAfterMs.isDefined) {
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L))
-          .start()
-        drainAndStop(q0, expectBatches = Some(splitCount(inDir, perTrigger = 1)))
-        q0
-      } else {
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      }
+    if (evictSingletonsAfterMs.isDefined) {
+      val q = writer
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L))
+        .start()
+      drainAndStop(q, expectBatches = Some(splitCount(inDir, perTrigger = 1)))
+    } else {
+      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
     Dedup.spansFromOccurrences(ss.table(sink), w)
   }
 

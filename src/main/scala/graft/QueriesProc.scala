@@ -151,7 +151,6 @@ object QueriesProc {
     // file_tail input (tail -f shape): a file-stream text source with
     // maxFilesPerTrigger pacing, drained by AvailableNow into the gate
     "src_file_tail" -> ((s, dir) => {
-      import s.implicits._
       val tmp = java.nio.file.Files.createTempDirectory("ftail").toFile
       tmp.deleteOnExit()
       t(s, dir, "events").select(to_json(struct(col("event_id"), col("event_type"))))
@@ -594,7 +593,6 @@ object QueriesProc {
     // (no wasm toolchain in-sandbox); the oracle replays it as upper().
     // Decode once per JVM, one instance per task thread — no shuffle
     "proc_wasm" -> ((s, dir) => {
-      import s.implicits._
       val raw = t(s, dir, "part").repartition(Tables.fanout(s)).select(
         concat_ws("|", col("p_partkey"), col("p_name")).as(graft.core.Msg.ContentCol),
         map().cast(MapType(StringType, StringType)).as(graft.core.Msg.MetaCol),
@@ -860,7 +858,6 @@ object QueriesProc {
     // source. The kafka partition id crosses the gate and the oracle
     // replays the partitioner arithmetic
     "src_kafka" -> ((s, dir) => {
-      import s.implicits._
       val srv = new graft.conn.Kafka.MiniKafka(numPartitions = 4).start()
       val bootstrap = srv.bootstrap
       val rows = t(s, dir, "lineitem").filter(col("l_linenumber") === 1)
@@ -1155,7 +1152,6 @@ object QueriesProc {
     // and downloads executor-side — at 100 TB only the endpoint string
     // changes, bytes never touch the driver
     "src_aws_s3" -> ((s, dir) => {
-      import s.implicits._
       val srv = new graft.conn.S3.MiniS3().start()
       val endpoint = srv.endpoint
       val rows = t(s, dir, "part").filter(col("p_partkey") % 3 === 0)
@@ -1221,7 +1217,6 @@ object QueriesProc {
     // receive→deleteBatch — the at-least-once contract — and the
     // message-attribute metadata path crosses the gate
     "src_aws_sqs" -> ((s, dir) => {
-      import s.implicits._
       val srv = new graft.conn.Sqs.MiniSqs(defaultVisibilityMs = 30000).start()
       val endpoint = srv.endpoint
       val setup = new graft.conn.Sqs.Client(endpoint)
@@ -1265,7 +1260,6 @@ object QueriesProc {
     // crosses the gate and the oracle REPLAYS the public MD5 hash-range
     // routing contract (shard = top 2 bits of md5(key) for 4 shards)
     "src_aws_kinesis" -> ((s, dir) => {
-      import s.implicits._
       val srv = new graft.conn.Kinesis.MiniKinesis().start()
       val endpoint = srv.endpoint
       val setup = new graft.conn.Kinesis.Client(endpoint)
@@ -1362,7 +1356,6 @@ object QueriesProc {
     // SELECT and drains bounded getQueryResults pages — the single
     // query-job cursor the real warehouse hands back
     "src_gcp_bigquery" -> ((s, dir) => {
-      import s.implicits._
       val (privPem, pubPem) = graft.conn.Gcp.generateKeyPair()
       val sa = graft.conn.Gcp.ServiceAccount("svc@graft.iam.gserviceaccount.com", privPem)
       val srv = new graft.conn.Gcp.MiniGcp(sa, pubPem).start()
@@ -1577,7 +1570,6 @@ object QueriesProc {
     // verification re-scans the STAGE distributed (the firehose
     // pattern — bytes never transit the driver)
     "out_snowflake_put" -> ((s, dir) => {
-      import s.implicits._
       val s3 = new graft.conn.S3.MiniS3().start()
       val (privPem, pubPem) = graft.conn.Gcp.generateKeyPair()
       val sp = new graft.conn.Snowpipe.MiniSnowpipe("GRAFT", "LOADER", pubPem,
@@ -1977,7 +1969,6 @@ object QueriesProc {
     // and the verification path reads them back via the distributed S3
     // input — the full produce→buffer→deliver→scan pipeline
     "out_aws_firehose" -> ((s, dir) => {
-      import s.implicits._
       val s3 = new graft.conn.S3.MiniS3().start()
       val fh = new graft.conn.Firehose.MiniFirehose(s3.endpoint, "delivery", "fh",
         bufferCount = 2000).start()
@@ -2423,7 +2414,6 @@ object QueriesProc {
     }),
 
     "out_elasticsearch" -> ((s, dir) => {
-      import s.implicits._
       val srv = new graft.conn.Elastic.MiniElastic().start()
       val endpoint = srv.endpoint
       val ev = t(s, dir, "events").filter(col("event_type").isNotNull && col("event_id") % 2 === 0)
@@ -2748,7 +2738,6 @@ object QueriesProc {
     // side, and re-reading the result never re-consumes the topic. The
     // partition key rides MessageMetadata and crosses the gate
     "src_pulsar" -> ((s, dir) => {
-      import s.implicits._
       val srv = new graft.conn.Pulsar.MiniPulsar().start()
       val addr = srv.address
       val rows = t(s, dir, "events").filter(col("event_id") % 7 === 0 && col("event_type").isNotNull)

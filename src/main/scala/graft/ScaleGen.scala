@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for the scaling-curve probe
@@ -25,14 +25,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -98,7 +91,7 @@ object ScaleGen {
       .drop("_copy"), "embeddings")
 
     Seq("region", "nation", "supplier", "part").foreach(n => write(src(n), n))
-    println(s"""{"scalegen":"${ProbeJson.jstr(outDir)}","factor":$factor}""")
+    println(s"""{"scalegen":${graft.core.Json.quote(outDir)},"factor":$factor}""")
     spark.stop()
   }
 }

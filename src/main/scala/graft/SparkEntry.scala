@@ -15,6 +15,20 @@ import org.apache.spark.sql.types._
   */
 object SparkEntry {
 
+  /** The local session every main and the test harness runs on:
+    * `local[cpus]` with one shuffle partition per core, UTC session time,
+    * nanosecond parquet timestamps read as longs (see
+    * [[graft.core.Tables]]) and no UI. Log level and UDF registration
+    * stay with the caller. */
+  def localSession(cpus: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** Flagship query (driver smoke, sf0.001): the Flow-DSL pipeline form of
     * the TPC-H Q3-flavor join/agg/top-k. */
   def entry(spark: SparkSession): DataFrame = {

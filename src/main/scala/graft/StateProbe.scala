@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.Json
 import graft.ml.Dedup
 
 /** State-store retention probe for streaming span dedup (SCALING.md).
@@ -36,15 +36,7 @@ object StateProbe {
     val horizonMs = args(2).toLong
     val lingerMs = args.lift(3).map(_.toLong).getOrElse(6000L)
     val provider = args.lift(4).getOrElse("mem")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // timeout-eviction happens in NO-DATA batches, whose progress events
     // are throttled to every 10 s by default — longer than the probe's
@@ -136,7 +128,7 @@ object StateProbe {
     pm.finish(q)
     // PROGRESS lines first: the result record is the last stdout line
     progress.forEach(j => println(s"PROGRESS $j"))
-    println(f"""{"stateprobe":"${ProbeJson.jstr(docsDir)}","splits":$nSplits,"horizon_ms":$horizonMs,"provider":"${ProbeJson.jstr(provider)}","rows_total":${pm.stateRows},"rows_removed":${pm.removed.get()},"state_bytes":${pm.stateBytes},"emitted":${pm.emitted.get()},"wall":$wall%.3f}""")
+    println(f"""{"stateprobe":${Json.quote(docsDir)},"splits":$nSplits,"horizon_ms":$horizonMs,"provider":${Json.quote(provider)},"rows_total":${pm.stateRows},"rows_removed":${pm.removed.get()},"state_bytes":${pm.stateBytes},"emitted":${pm.emitted.get()},"wall":$wall%.3f}""")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.blob
 
-import scala.collection.immutable.VectorMap
 
 /** Bloblang text frontend (SURVEY §7.1 "blob" phase 2; reference grammar:
   * internal/bloblang/parser/mapping_parser.go:19-60, query_parser.go,

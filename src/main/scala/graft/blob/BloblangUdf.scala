@@ -1,7 +1,6 @@
 package graft.blob
 
 import graft.core.{Msg, Processor}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 

@@ -1010,8 +1010,8 @@ object Compile {
   private def compileDeletable(e: Expr, schema: StructType,
       lets: Map[String, (Column, DataType)], env: Map[String, String],
       thisCol: Option[(Column, DataType)],
-      maps: Map[String, Expr] = Map.empty,
-      depth: Int = 0): Option[(Column, DataType, Option[Column])] = e match {
+      maps: Map[String, Expr],
+      depth: Int): Option[(Column, DataType, Option[Column])] = e match {
     case If(c, t, None) =>
       compileExpr(c, schema, lets, env, thisCol, maps, depth).collect {
         case (cc, BooleanType) => cc
@@ -1042,8 +1042,8 @@ object Compile {
   private def compileMatch(tgtOpt: Option[Expr], cases: Vector[(Option[Expr], Expr)],
       schema: StructType, lets: Map[String, (Column, DataType)], env: Map[String, String],
       thisCol: Option[(Column, DataType)],
-      maps: Map[String, Expr] = Map.empty,
-      depth: Int = 0): Option[(Column, DataType, Option[Column])] = {
+      maps: Map[String, Expr],
+      depth: Int): Option[(Column, DataType, Option[Column])] = {
     val tgt = compileExpr(tgtOpt.getOrElse(This), schema, lets, env, thisCol, maps, depth)
       .getOrElse(return None)
     val sub = Some(tgt)
@@ -1141,9 +1141,9 @@ object Compile {
                             ce: Expr => Option[(Column, DataType)],
                             schema: StructType, lets: Map[String, (Column, DataType)],
                             env: Map[String, String],
-                            thisCol: Option[(Column, DataType)] = None,
-                            maps: Map[String, Expr] = Map.empty,
-                            depth: Int = 0): Option[(Column, DataType)] = {
+                            thisCol: Option[(Column, DataType)],
+                            maps: Map[String, Expr],
+                            depth: Int): Option[(Column, DataType)] = {
     lazy val target = ce(t)
     def strTarget: Option[Column] = target.flatMap { case (c, tt) => toStrCol(c, tt) }
     def litStr(i: Int): Option[String] = args.lift(i).collect { case Lit(s: String) => s }

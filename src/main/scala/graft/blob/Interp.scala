@@ -1,6 +1,7 @@
 package graft.blob
 
 import Bloblang._
+import graft.core.Json
 import scala.collection.immutable.VectorMap
 
 /** Tree-walk evaluator for parsed Bloblang mappings (reference execution
@@ -594,22 +595,13 @@ object Interp {
     case l: Long => l.toString
     case i: Int => i.toString
     case d: Double => fmtDouble(d)
-    case s: String => quote(s)
-    case b: VBytes => quote(b.str)
+    case s: String => Json.quote(s)
+    case b: VBytes => Json.quote(b.str)
     case a: Vector[Any @unchecked] => a.map(marshalJson).mkString("[", ",", "]")
     case m: VectorMap[String @unchecked, Any @unchecked] =>
-      m.toSeq.sortBy(_._1).map { case (k, mv) => quote(k) + ":" + marshalJson(mv) }
+      m.toSeq.sortBy(_._1).map { case (k, mv) => Json.quote(k) + ":" + marshalJson(mv) }
         .mkString("{", ",", "}")
     case other => err(s"cannot marshal ${typeName(other)}")
   }
 
-  private def quote(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

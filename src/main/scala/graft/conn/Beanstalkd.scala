@@ -1,6 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}

@@ -1,6 +1,5 @@
 package graft.conn
 
-import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.immutable.VectorMap
 import scala.collection.mutable

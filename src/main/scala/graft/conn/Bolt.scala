@@ -6,7 +6,6 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.immutable.VectorMap
-import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** Neo4j Bolt protocol + PackStream, from the PUBLIC specifications

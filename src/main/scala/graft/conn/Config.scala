@@ -261,15 +261,6 @@ object PipelineConfig {
     u(col(Msg.ContentCol))
   }
 
-  /** Raw-content envelope: the line IS the content (file input contract —
-    * the reference's message body is the raw bytes, not a JSON wrapper). */
-  private def rawEnvelope(lines: DataFrame): DataFrame =
-    lines.select(
-      col(lines.columns.head).cast("string").as(Msg.ContentCol),
-      map().cast("map<string,string>").as(Msg.MetaCol),
-      lit(null).cast("string").as(Msg.ErrorCol),
-      monotonically_increasing_id().as(Msg.SeqCol))
-
   private def parseProcessor(m: java.util.Map[String, Any]): Processor = {
     val (kind, conf) = one(m)
     kind match {

@@ -40,7 +40,6 @@ object Couchbase {
   private val StKeyNotFound = 0x0001
   private val StKeyExists = 0x0002
   private val StAuthError = 0x0020
-  private val StNotMyVbucket = 0x0007
   private val StUnknownCommand = 0x0081
   private val StAccessDenied = 0x0024
 

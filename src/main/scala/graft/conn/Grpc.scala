@@ -1,7 +1,6 @@
 package graft.conn
 
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.conn.Http2.{ClientConn, Conn, Server, StreamIn}
 

@@ -78,6 +78,11 @@ object JetStream {
       nc = new Nats.Client(url)
       nc.subscribe("$JS.API.>")
       nc.subscribe("$JS.ACK.>")
+      // without the round trip, a client connecting right after start()
+      // can publish its first API request before the server has read
+      // these SUBs, and the request is dropped: the caller then waits
+      // for a reply forever
+      nc.flush()
       thread = new Thread(() => {
         try while (running) handle(nc.nextMsg())
         catch { case _: Throwable => () }

@@ -960,15 +960,7 @@ object Lua {
     case LNil => "null"
     case LBool(b) => b.toString
     case LNum(d) => numToString(d)
-    case LStr(s) => "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    case LStr(s) => graft.core.Json.quote(s)
     case t: LTable =>
       val n = t.len
       if (t.m.isEmpty) "{}"

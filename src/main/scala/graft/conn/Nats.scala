@@ -344,6 +344,20 @@ object Nats {
       * idle-wait pattern (the JetStream fetch expiry); 0 = block forever */
     def setReadTimeout(ms: Int): Unit = sock.setSoTimeout(ms)
 
+    /** nats.Flush: PING, then read until the server's PONG. The server
+      * handles one connection's commands in order, so every SUB written
+      * before the PING is registered once this returns. Call it only
+      * while no MSG can arrive (before another connection learns of the
+      * subscriptions): lines other than PING/PONG are skipped. */
+    def flush(): Unit = synchronized {
+      out.write("PING\r\n".getBytes(UTF_8)); out.flush()
+      var line = readLine(in)
+      while (line != "PONG") {
+        if (line == "PING") { out.write("PONG\r\n".getBytes(UTF_8)); out.flush() }
+        line = readLine(in)
+      }
+    }
+
     override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
   }
 }

@@ -1,6 +1,5 @@
 package graft.conn
 
-import java.nio.charset.StandardCharsets.UTF_8
 
 /** NATS key-value buckets (internal/impl/nats/{input,output,cache,
   * processor}_kv.go — the reference wraps nats.go's KeyValue API),

@@ -3,7 +3,6 @@ package graft.conn
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException, OutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.immutable.VectorMap

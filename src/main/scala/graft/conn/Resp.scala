@@ -194,7 +194,6 @@ object Resp {
   final class MiniRedis {
     private val store = mutable.HashMap[String, Stored]()
     private val expiry = mutable.HashMap[String, Long]() // absolute ms
-    private val subscribers = mutable.HashMap[String, mutable.ArrayBuffer[Client => Unit]]()
     private val subs = mutable.ArrayBuffer[(Socket, String)]() // live SUBSCRIBE conns
     private var lastStreamMs = 0L
     private var lastStreamSeq = 0L

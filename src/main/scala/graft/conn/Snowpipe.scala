@@ -4,7 +4,6 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.concurrent.{TrieMap => CTrieMap}
-import scala.collection.immutable.VectorMap
 
 import graft.conn.Aws.{Http, Json}
 

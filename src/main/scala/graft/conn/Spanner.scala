@@ -3,7 +3,6 @@ package graft.conn
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.immutable.VectorMap
-import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import graft.conn.Aws.Json

@@ -1,6 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, IOException, InputStream, OutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, IOException}
 import java.math.BigInteger
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8

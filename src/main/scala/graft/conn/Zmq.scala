@@ -1,6 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8

@@ -20,9 +20,9 @@ object Tables {
       // because the ns epoch exceeds double's 2^53 mantissa) and plain
       // TIMESTAMP(MICROS) (directly readable). Branch on the actual file
       // schema so either generation of the driver's testdata loads.
-      // The nanosAsLong conf belongs in the SparkSession builder (Verify,
-      // Bench, test harnesses all set it); the guard below only covers
-      // ad-hoc sessions and never overwrites an existing setting.
+      // The nanosAsLong conf belongs in the session (SparkEntry.localSession
+      // sets it); the guard below only covers ad-hoc sessions and never
+      // overwrites an existing setting.
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalizeEventsTs(spark.read.parquet(s"$dir/$name.parquet"))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.udf
 
 /** Format codecs (SURVEY §2.3 encoding/compression + binary formats).
@@ -249,15 +249,7 @@ object Codecs {
     case l: Long => l.toString
     case i: Int => i.toString
     case d: Double => if (d == d.toLong && math.abs(d) < 1e15) s"${d.toLong}.0" else d.toString
-    case s: String => "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    case s: String => graft.core.Json.quote(s)
     case a: Seq[_] => a.map(jsonEmit).mkString("[", ",", "]")
     case m: Map[_, _] => m.map { case (k, mv) => jsonEmit(k.toString) + ":" + jsonEmit(mv) }.mkString("{", ",", "}")
     case other => throw new IllegalArgumentException(s"json emit: ${other.getClass}")

@@ -72,7 +72,6 @@ object ProtoSchema {
     k == "int32" || k == "int64" || k == "uint32" || k == "uint64" ||
       k == "sint32" || k == "sint64" || k == "bool"
   private def isFixed64Kind(k: String) = k == "fixed64" || k == "sfixed64" || k == "double"
-  private def isFixed32Kind(k: String) = k == "fixed32" || k == "sfixed32" || k == "float"
 
   /** protojson name mapping: `first_name` → `firstName`. */
   def lowerCamel(s: String): String = {

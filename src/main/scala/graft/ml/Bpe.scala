@@ -722,22 +722,9 @@ object Bpe {
     * @return (idCol, bpe array<string>) — the doc's subword sequence,
     *         word boundaries carried by the `</w>`-suffixed symbols
     */
-  /** @param cacheLimit per-partition word-cache bound (probe knob; the
-    *   default is the production size)
-    * @param cacheStats optional (hits, misses) accumulators — the
-    *   EncodeCacheProbe receipt plumbing; None (default) adds zero work
-    *   on the hot path
-    * @param clearOnOverflow probe-only comparison arm: overflow clears
-    *   the whole cache instead of evicting half (the policy evict-half
-    *   replaced — kept solely so the probe can measure both on the same
-    *   corpus) */
   def encodeDocs(df: DataFrame, idCol: String, textCol: String,
                  merges: Seq[(String, String)],
-                 byteLevel: Boolean = false, gpt2: Boolean = false,
-                 cacheLimit: Int = 1 << 20,
-                 cacheStats: Option[(org.apache.spark.util.LongAccumulator,
-                                     org.apache.spark.util.LongAccumulator)] = None,
-                 clearOnOverflow: Boolean = false): DataFrame = {
+                 byteLevel: Boolean = false, gpt2: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val mergeAt = merges.toArray
@@ -745,10 +732,7 @@ object Bpe {
       if (byteLevel || gpt2) symbolizeBytes else symbolize
     val pretok: Column =
       if (gpt2) gpt2Pretokens(col(textCol)) else Dedup.tokens(col(textCol))
-    val (hitAcc, missAcc) = cacheStats match {
-      case Some((h, m)) => (h, m)
-      case None => (null, null)
-    }
+    val cacheLimit = 1 << 20
     df.select(col(idCol).cast(LongType), pretok)
       .toDF("_1", "_2").as[(Long, Seq[String])]
       .mapPartitions { it =>
@@ -766,7 +750,7 @@ object Bpe {
         // clear(): a full reset re-encodes the entire Zipf head, while
         // keeping a random half keeps ~half the head resident through
         // the overflow (r15 verdict #4). MEASURED on the driver corpus
-        // (EncodeCacheProbe, SCALING round-17, 2.7M occurrences at 10×):
+        // (SCALING.md round 17, 2.7M occurrences at 10×):
         // at the production cache size eviction never fires (31-word
         // vocab ≪ 2^20 cap — hit rate 99.96%, misses == vocab × one
         // per partition); with the cap FORCED under the vocab the
@@ -783,16 +767,11 @@ object Bpe {
           while (drop > 0 && ksIt.hasNext) { ksIt.next(); ksIt.remove(); drop -= 1 }
         }
         it.map { case (id, toks) =>
-          if (cache.size >= cacheLimit) {
-            if (clearOnOverflow) cache.clear() else evictHalf()
-          }
+          if (cache.size >= cacheLimit) evictHalf()
           (id, toks.flatMap { w =>
             val got = cache.get(w)
-            if (got != null) {
-              if (hitAcc != null) hitAcc.add(1L)
-              got
-            } else {
-              if (missAcc != null) missAcc.add(1L)
+            if (got != null) got
+            else {
               val enc = encodeWord(w, rank, mergeAt, sym)
               cache.put(w, enc)
               enc

@@ -61,9 +61,9 @@ object Dedup {
     * dominant per-row CPU (r20 probe receipt). Digest values are
     * BIT-IDENTICAL to the Column form: the loop replays XxHash64's
     * two-arg chaining — `xxhash64(x, y) = hashLong(y, hashLong(x, 42))` —
-    * through the same catalyst XXH64 kernel; equality with
-    * [[chainedXxhashCols]] is spec-pinned (MlSpec) so the rule cannot
-    * drift. */
+    * through the same catalyst XXH64 kernel; equality with the Column
+    * form (chained `zip_with(xxhash64)`, kept in MlSpec) is spec-pinned
+    * so the rule cannot drift. */
   private def chainedXxhash(th: Column, w: Int): Column = {
     val f = (hs: Array[Long]) => {
       if (hs == null) null
@@ -90,18 +90,6 @@ object Dedup {
       }
     }
     udf(f).apply(th)
-  }
-
-  /** The pure-Column form of [[chainedXxhash]], kept ONLY as the
-    * reference the MlSpec equality gate pins the fused loop against. */
-  private[graft] def chainedXxhashCols(th: Column, w: Int): Column = {
-    // n shifted windows combined pairwise with zip_with: lambda variables
-    // are BOUND per element, so nothing re-evaluates the token array per
-    // shingle (an element_at(th, i+k) lambda would go O(tokens²) — the
-    // outer array expression is re-evaluated for every element).
-    val m = size(th) - (w - 1)
-    val windows = (1 to w).map(k => slice(th, lit(k), greatest(m, lit(0))))
-    windows.reduce((a, b) => zip_with(a, b, (x, y) => xxhash64(x, y)))
   }
 
   // Mersenne prime 2^31-1: universal-hash family h_j(x) = (a_j*x' + b_j) mod p
@@ -598,8 +586,9 @@ object Dedup {
     * @param edges columns `id_a`,`id_b` (undirected pairs, either order)
     * @return (node, label) where label = min node id in the component
     */
-  // probe-only diagnostics: how many rounds/escalations the LAST
-  // connectedComponents call took to converge (CcChainProbe)
+  // diagnostics: how many rounds/escalations the LAST
+  // connectedComponents call took to converge (read by CcRoundsProbe
+  // and, through graft.BenchAccess, by perfbench's corpus_dedup layer)
   @volatile private[graft] var lastConvergedRounds: Int = 0
   @volatile private[graft] var lastEscalations: Int = 0
 
@@ -647,7 +636,7 @@ object Dedup {
       // LENGTH per round (each round multiplies the previous round's
       // stats at its joins), and a slow-converging graph reaches
       // BigInteger overflow inside Catalyst planning around round 30
-      // (measured: CcChainProbe chainrandom). Clamping (not dropping)
+      // (measured on a random long-chain graph). Clamping (not dropping)
       // keeps small sizes exact, so broadcast decisions are unchanged.
       labels = FlatCheckpoint.capStats(
         withHop.groupBy("node").agg(min("label").as("label"))
@@ -689,8 +678,6 @@ object Dedup {
       ch = changed()
     }
     while (ch > 0 && i < maxRounds) {
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] escalating: rounds=$i changed=$ch")
       (1 to math.min(3, maxRounds - i)).foreach(_ => runRound())
       ch = changed()
       lastEscalations += 1

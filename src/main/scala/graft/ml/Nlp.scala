@@ -62,10 +62,6 @@ object Nlp {
     if (t == null) Array.empty
     else t.toLowerCase.replaceAll("[^a-z0-9 ]", " ").split(" ").filter(_.nonEmpty)
 
-  /** Raw whitespace tokens (NER path — casing matters). */
-  private def rawTokenize(t: String): Array[String] =
-    if (t == null) Array.empty else t.split("\\s+").filter(_.nonEmpty)
-
   /** `nlp_classify_text`: (doc_id, label, score) per document. */
   def classifyText(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                    batchSize: Int = DefaultBatchSize): Dataset[TextLabel] = {

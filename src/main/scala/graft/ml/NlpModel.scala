@@ -19,8 +19,6 @@ package graft.ml
 object NlpModel {
 
   final case class Model(bias: Double, vocab: Vector[(String, Double)]) {
-    private val index: Map[String, Double] = vocab.toMap
-
     def logit(text: String): Double = {
       val toks: Set[String] =
         if (text == null) Set.empty

@@ -512,12 +512,9 @@ object TextAnalysis {
                      biBf: org.apache.spark.sql.DataFrame,
                      uTot: Long, buckets: Int)
 
-  private def lmBucketOf(g: Column, buckets: Int): Column =
-    pmod(conv(substring(md5(g.cast(StringType).cast(BinaryType)), 1, 8), 16, 10)
-      .cast(LongType), lit(buckets.toLong))
-
-  /** md5 bucket of one feature string — the EXACT arithmetic of
-    * [[lmBucketOf]] (pmod of the first 4 md5 bytes over the UTF-8 text):
+  /** md5 bucket of one feature string — the EXACT arithmetic of the
+    * Column rule the fused kernels replaced (`lmBucketOf` in MlSpec: pmod
+    * of the first 4 md5 bytes over the UTF-8 text):
     * `conv(substring(md5hex, 1, 8), 16, 10)` is the first 32 md5 bits as
     * an unsigned int, always in [0, 2^32), so `% buckets` == pmod. One
     * MessageDigest call replaces the md5 + substring + conv + two-cast
@@ -539,7 +536,7 @@ object TextAnalysis {
     * occurrence MULTISET are identical by construction — including the
     * short-doc shingle rule (< 2 tokens → ONE shingle, the space-joined
     * token list, so an empty doc still emits bucket(md5(""))); pinned
-    * against [[dsirFeatBucketsCols]] in MlSpec. */
+    * against the Column form in MlSpec. */
   private[graft] def dsirFeatBuckets(buckets: Int)
       : org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((toks: Seq[String]) => {
@@ -561,12 +558,6 @@ object TextAnalysis {
         out
       }
     })
-
-  /** Column reference for [[dsirFeatBuckets]] — kept ONLY for the MlSpec
-    * equality gate (the pre-r20 explode shape, verbatim). */
-  private[graft] def dsirFeatBucketsCols(text: Column, buckets: Int): Column =
-    transform(concat(Dedup.tokens(text), Dedup.shingles(text, 2)),
-      g => lmBucketOf(g, buckets))
 
   /** Fused unigram-bucket kernel: tokens → md5 buckets, one digest pass
     * per doc (the [[dsirFeatBuckets]] trick for the LM's unigram table). */
@@ -619,18 +610,6 @@ object TextAnalysis {
         explode(lmBigramTriples(buckets)(Dedup.tokens(col(textCol)))).as("_t"))
       .select(col(idCol), col("_t._1").as("_bb"), col("_t._2").as("_b1"),
         col("_t._3").as("_b2"))
-
-  /** Column reference for [[lmBigramTriples]] — kept ONLY for the MlSpec
-    * equality gate (the pre-r20 explode shape, verbatim). */
-  private[graft] def lmBigramBucketsCols(df: org.apache.spark.sql.DataFrame,
-                                         idCol: String, textCol: String,
-                                         buckets: Int)
-      : org.apache.spark.sql.DataFrame =
-    df.filter(size(Dedup.tokens(col(textCol))) >= 2)
-      .select(col(idCol), explode(Dedup.shingles(col(textCol), 2)).as("_g"))
-      .select(col(idCol), lmBucketOf(col("_g"), buckets).as("_bb"),
-        lmBucketOf(substring_index(col("_g"), " ", 1), buckets).as("_b1"),
-        lmBucketOf(substring_index(col("_g"), " ", -1), buckets).as("_b2"))
 
   def lmModelHashed(corpus: org.apache.spark.sql.DataFrame, textCol: String,
                     buckets: Int = 10000): LmModel = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Processor
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

@@ -34,12 +34,16 @@ object Buffers {
   }
 
   /** Append a batch: every row of `contentCol` becomes one buffered
-    * message. JDBC append write — the DB assigns sequence numbers. */
+    * message. JDBC append write — the DB assigns sequence numbers.
+    * One writing connection (`numPartitions` 1), the single writer
+    * `create` assumes: concurrent inserters contend on Derby's identity
+    * generator and a task can fail with a lock timeout. */
   def append(df: DataFrame, contentCol: String, url: String,
              table: String = "graft_buffer"): Unit =
     df.selectExpr(s"$contentCol AS content")
       .write.format("jdbc")
       .option("url", url).option("dbtable", table).option("driver", Driver)
+      .option("numPartitions", 1)
       .mode("append").save()
 
   /** Drain: read buffered messages in sequence order (partitioned JDBC

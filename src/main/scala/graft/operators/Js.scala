@@ -108,7 +108,7 @@ object Js {
     val out = Vector.newBuilder[Tok]
     var i = 0
     val n = src.length
-    def peek(k: Int = 0): Char = if (i + k < n) src.charAt(i + k) else '\u0000'
+    def peek(k: Int): Char = if (i + k < n) src.charAt(i + k) else '\u0000'
     while (i < n) {
       val c = src.charAt(i)
       if (c.isWhitespace) i += 1

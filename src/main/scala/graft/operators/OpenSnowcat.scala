@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.core.{Msg, Processor}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import scala.collection.immutable.VectorMap
 import scala.collection.mutable
@@ -420,7 +419,7 @@ object OpenSnowcat {
     * because the three JSON columns pass through the TSV rebuild
     * untouched whenever no transform targets them (guarded at the call
     * site). */
-  private def propsAndShredsUdf(paths: Seq[String], enriched: Boolean = false) =
+  private def propsAndShredsUdf(paths: Seq[String], enriched: Boolean) =
     udf((line: String) => {
       val fields = line.split("\t", -1)
       val t = jsonTriple(fields)
@@ -468,9 +467,6 @@ object OpenSnowcat {
       val t = jsonTriple(line.split("\t", -1))
       discoverSchemas(t(0), t(1), t(2))
     })
-
-  private def fieldCol(cols: Column, name: String): Column =
-    element_at(cols, colIndex(name) + 1)
 
   /** Mask the last n IPv4 octets / n non-empty IPv6 segments with "x"
     * (reference anonymizeIPv4/IPv6, processor_opensnowcat.go:790-827).

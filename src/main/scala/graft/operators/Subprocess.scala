@@ -36,8 +36,6 @@ object Subprocess {
     * stdout→content; non-zero exit → stderr into the error facet, content
     * unchanged. One ProcessBuilder template per partition. */
   def command(df: DataFrame, cmd: Seq[String], contentCol: String = Msg.ContentCol): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val hasError = df.columns.contains(Msg.ErrorCol)
     val run = udf { (content: String) =>
       if (content == null) Array[String](null, null)

@@ -17,10 +17,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 object CheckpointRelease {
   def unpersist(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD =>
-        if (sys.props.contains("graft.debug.ckptrelease"))
-          System.err.println(s"[ckptrelease] unpersist rdd_${lr.rdd.id}")
-        lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ =>
     }
 }

@@ -4,12 +4,48 @@ import graft.core.Tables
 import graft.ml.{Dedup, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 class MlSpec extends SparkSpec {
   import spark.implicits._
 
   lazy val docs = Tables(spark, sf, "documents")
   lazy val emb = Tables(spark, sf, "embeddings")
+
+  // Column reference forms the fused kernels are pinned against below.
+
+  /** The pure-Column form of Dedup's chained-xxhash window digests. */
+  private def chainedXxhashCols(th: Column, w: Int): Column = {
+    // n shifted windows combined pairwise with zip_with: lambda variables
+    // are BOUND per element, so nothing re-evaluates the token array per
+    // shingle (an element_at(th, i+k) lambda would go O(tokens²) — the
+    // outer array expression is re-evaluated for every element).
+    val m = size(th) - (w - 1)
+    val windows = (1 to w).map(k => slice(th, lit(k), greatest(m, lit(0))))
+    windows.reduce((a, b) => zip_with(a, b, (x, y) => xxhash64(x, y)))
+  }
+
+  private def lmBucketOf(g: Column, buckets: Int): Column =
+    pmod(conv(substring(md5(g.cast(StringType).cast(BinaryType)), 1, 8), 16, 10)
+      .cast(LongType), lit(buckets.toLong))
+
+  /** Column reference for TextAnalysis.dsirFeatBuckets (the pre-r20
+    * explode shape, verbatim). */
+  private def dsirFeatBucketsCols(text: Column, buckets: Int): Column =
+    transform(concat(Dedup.tokens(text), Dedup.shingles(text, 2)),
+      g => lmBucketOf(g, buckets))
+
+  /** Column reference for TextAnalysis.lmBigramTriples (the pre-r20
+    * explode shape, verbatim). */
+  private def lmBigramBucketsCols(df: org.apache.spark.sql.DataFrame,
+                                  idCol: String, textCol: String,
+                                  buckets: Int)
+      : org.apache.spark.sql.DataFrame =
+    df.filter(size(Dedup.tokens(col(textCol))) >= 2)
+      .select(col(idCol), explode(Dedup.shingles(col(textCol), 2)).as("_g"))
+      .select(col(idCol), lmBucketOf(col("_g"), buckets).as("_bb"),
+        lmBucketOf(substring_index(col("_g"), " ", 1), buckets).as("_b1"),
+        lmBucketOf(substring_index(col("_g"), " ", -1), buckets).as("_b2"))
 
   test("fused chained-xxhash window digests are bit-identical to the Column form") {
     // the r20 fused loop (one UDF pass) must replay the w-1 chained
@@ -23,7 +59,7 @@ class MlSpec extends SparkSpec {
       val th = Dedup.tokens(col("text"))
       val both = corpus.select(
         Dedup.windowDigests(th, w).as("fused"),
-        Dedup.chainedXxhashCols(transform(th, x => xxhash64(x)), w).as("ref"))
+        chainedXxhashCols(transform(th, x => xxhash64(x)), w).as("ref"))
       val diff = both.filter(
         !(col("fused") <=> col("ref"))).count()
       assert(diff == 0L, s"w=$w: $diff rows differ between fused and Column digests")
@@ -58,11 +94,11 @@ class MlSpec extends SparkSpec {
     val b = 10000
     val dsirDiff = corpus.select(
         TextAnalysis.dsirFeatBuckets(b)(Dedup.tokens(col("text"))).as("fused"),
-        TextAnalysis.dsirFeatBucketsCols(col("text"), b).as("ref"))
+        dsirFeatBucketsCols(col("text"), b).as("ref"))
       .filter(!(col("fused") <=> col("ref"))).count()
     assert(dsirDiff == 0L, s"$dsirDiff docs differ in dsir feature buckets")
     val triplesNew = TextAnalysis.lmBigramBuckets(corpus, "doc_id", "text", b)
-    val triplesRef = TextAnalysis.lmBigramBucketsCols(corpus, "doc_id", "text", b)
+    val triplesRef = lmBigramBucketsCols(corpus, "doc_id", "text", b)
     assert(triplesNew.exceptAll(triplesRef).isEmpty &&
       triplesRef.exceptAll(triplesNew).isEmpty,
       "lm bigram triple multisets differ between fused and Column forms")
