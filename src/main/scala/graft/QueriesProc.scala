@@ -183,22 +183,15 @@ object QueriesProc {
       val lines = t(s, dir, "nation")
         .select(concat_ws("|", col("n_nationkey"), col("n_name")))
         .as[String].collect().sorted
-      val server = new java.net.ServerSocket(0, 8,
-        java.net.InetAddress.getLoopbackAddress)
-      val t0 = new Thread(() => {
-        try {
-          val sock = server.accept()
-          val w = new java.io.PrintWriter(sock.getOutputStream)
-          lines.foreach(w.println)
-          w.flush()
-          Thread.sleep(120000) // keep the connection open until query stop
-        } catch { case _: Throwable => () }
-      })
-      t0.setDaemon(true)
-      t0.start()
+      val server = graft.conn.Wire.listen("src-socket") { sock =>
+        val w = new java.io.PrintWriter(sock.getOutputStream)
+        lines.foreach(w.println)
+        w.flush()
+        Thread.sleep(120000) // keep the connection open until query stop
+      }
       val stream = s.readStream.format("socket")
-        .option("host", server.getInetAddress.getHostAddress)
-        .option("port", server.getLocalPort).load()
+        .option("host", java.net.InetAddress.getLoopbackAddress.getHostAddress)
+        .option("port", server.port).load()
       val q = stream.writeStream.format("memory").queryName("src_socket_sink")
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
@@ -2186,11 +2179,11 @@ object QueriesProc {
       val expected = rows.count().toInt
       rows.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
         if (it.nonEmpty) {
-          val sock = new java.net.Socket(java.net.InetAddress.getLoopbackAddress, port)
-          val w = new java.io.PrintWriter(
-            new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8"))
+          val conn = graft.conn.Wire.connect("socket",
+            java.net.InetAddress.getLoopbackAddress.getHostAddress, port)
+          val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(conn.out, "UTF-8"))
           try { it.foreach(r => w.println(s"${r.getLong(0)}|${r.getString(1)}")); w.flush() }
-          finally sock.close()
+          finally conn.close()
         }
       }
       input.awaitCount(expected)

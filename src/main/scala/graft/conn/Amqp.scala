@@ -1,9 +1,8 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, InputStream, OutputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
@@ -95,9 +94,7 @@ object Amqp {
     val d = new DataInputStream(in)
     val t = d.readUnsignedByte()
     val ch = d.readUnsignedShort()
-    val n = d.readInt()
-    val p = new Array[Byte](n)
-    d.readFully(p)
+    val p = Wire.readSized(d, d.readInt(), "amqp")
     if (d.readUnsignedByte() != FrameEnd)
       throw new java.io.IOException("AMQP frame missing end octet 0xCE")
     Frame(t, ch, p)
@@ -126,31 +123,13 @@ object Amqp {
     // delivery-tag → (consumer, message) for at-least-once requeue
     private val unacked = mutable.HashMap[(Socket, Long), (String, QMsg)]()
     private var deliveryTag = 0L
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
-    def start(): MiniAmqp = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-amqp-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniAmqp = { listener = Wire.listen("mini-amqp")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def url: String = s"amqp://127.0.0.1:$port"
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-      lock.synchronized { consumers.foreach(c => try c.sock.close() catch { case _: Throwable => () }) }
-    }
+    def stop(): Unit = listener.close()
 
     /** Route: default exchange → queue named by the routing key. Then try
       * to hand pending messages to a consumer. Caller need not hold lock. */
@@ -216,7 +195,6 @@ object Amqp {
     }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = new BufferedOutputStream(sock.getOutputStream)
       // per-channel in-flight publish state: routing key → awaiting body
@@ -322,13 +300,7 @@ object Amqp {
             case other => throw new java.io.IOException(s"unexpected frame type $other")
           }
         }
-      } catch {
-        case _: EOFException => dropConsumerConn(sock)
-        case _: java.net.SocketException => dropConsumerConn(sock)
-      } finally {
-        dropConsumerConn(sock)
-        try sock.close() catch { case _: Throwable => () }
-      }
+      } finally dropConsumerConn(sock)
     }
   }
 
@@ -342,10 +314,9 @@ object Amqp {
     * explicit acks (input.go). One per partition in the operator layer. */
   final class Client(url: String) extends AutoCloseable {
     private val u = java.net.URI.create(url)
-    private val sock = new Socket(u.getHost, u.getPort)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("amqp", u.getHost, u.getPort)
+    private val in = conn.in
+    private val out = conn.out
 
     private def expectMethod(classId: Int, methodId: Int): R = {
       while (true) {
@@ -444,7 +415,7 @@ object Amqp {
         writeFrame(out, Frame(FrameMethod, 0, method(10, 50,
           _.short(200).shortstr("bye").short(0).short(0))))
       } catch { case _: Throwable => () }
-      try sock.close() catch { case _: Throwable => () }
+      conn.close()
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -173,7 +173,7 @@ object Amqp1 {
     val channel = in.readShort() & 0xffff
     require(tpe == 0, s"amqp1: frame type $tpe unsupported")
     in.skipBytes(doff * 4 - 8)
-    val body = new Array[Byte](size - doff * 4); in.readFully(body)
+    val body = Wire.readSized(in, size.toLong - doff * 4, "amqp1")
     val dec = new Decoder(body)
     val perf = dec.read() match {
       case d: VDescribed => d
@@ -234,8 +234,8 @@ object Amqp1 {
   final class MiniAmqp1 {
     private val queues = new mutable.HashMap[String, ArrayBuffer[QMsg]]()
     private val qLock = new Object
-    @volatile private var server: ServerSocket = _
-    def address: String = s"127.0.0.1:${server.getLocalPort}"
+    @volatile private var listener: Wire.Listener = _
+    def address: String = s"127.0.0.1:${listener.port}"
     def depth(q: String): Int = qLock.synchronized(
       queues.get(q).map(_.count(m => !m.settled)).getOrElse(0))
 
@@ -431,38 +431,23 @@ object Amqp1 {
             case other => throw new IllegalArgumentException(f"amqp1: performative 0x$other%02x")
           }
         }
-      } catch { case _: EOFException | _: java.net.SocketException => () }
-      finally {
+      } finally {
         closed = true
         qLock.synchronized {
           outstanding.values.foreach(_._2.acquired = false)
           qLock.notifyAll() // release the dispatcher
         }
-        sock.close()
       }
     }
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val th = new Thread(() => serve(sock)); th.setDaemon(true); th.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
-    def stop(): Unit = if (server != null) server.close()
+    def start(): this.type = { listener = Wire.listen("mini-amqp1")(serve); this }
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   // -------------------------------------------------------------- client
-  private def openConn(address: String): (Socket, DataInputStream, BufferedOutputStream) = {
-    val Array(host, port) = address.split(':')
-    val sock = new Socket(host, port.toInt)
-    sock.setTcpNoDelay(true)
-    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    val out = new BufferedOutputStream(sock.getOutputStream)
+  private def openConn(address: String): Wire.Conn = {
+    val conn = Wire.connect("amqp1", address)
+    val (in, out) = (conn.in, conn.out)
     out.write(ProtoHeader); out.flush()
     val hdr = new Array[Byte](8); in.readFully(hdr)
     require(java.util.Arrays.equals(hdr, ProtoHeader), "amqp1: bad server header")
@@ -471,13 +456,14 @@ object Amqp1 {
     writeFrame(out, 0, VDescribed(VULong(Code.Begin),
       VList(Vector(VNull, VUInt(0), VUInt(65535), VUInt(65535)))))
     require(descCode(readAmqpFrame(in).performative) == Code.Begin, "expected begin")
-    (sock, in, out)
+    conn
   }
 
   /** sender link (output.go): attach to a target queue, transfer under
     * the broker's credit */
   final class Sender(address: String, target: String) extends AutoCloseable {
-    private val (sock, in, out) = openConn(address)
+    private val conn = openConn(address)
+    private val (in, out) = (conn.in, conn.out)
     private var nextDelivery = 0L
     locally {
       writeFrame(out, 0, VDescribed(VULong(Code.Attach), VList(Vector(
@@ -501,7 +487,7 @@ object Amqp1 {
         writeFrame(out, 0, VDescribed(VULong(Code.Close), VList(Vector.empty)))
         readAmqpFrame(in)
       } catch { case _: Throwable => () }
-      sock.close()
+      conn.close()
     }
   }
 
@@ -510,7 +496,8 @@ object Amqp1 {
   /** receiver link (input.go): attach to a source queue, grant credit,
     * settle with accepted dispositions */
   final class Receiver(address: String, source: String) extends AutoCloseable {
-    private val (sock, in, out) = openConn(address)
+    private val conn = openConn(address)
+    private val (in, out) = (conn.in, conn.out)
     locally {
       writeFrame(out, 0, VDescribed(VULong(Code.Attach), VList(Vector(
         VStr(s"graft-recv-$source"), VUInt(0), VBool(true) /* we are receiver */,
@@ -524,18 +511,14 @@ object Amqp1 {
         VNull, VUInt(65535), VUInt(0), VUInt(65535), VUInt(0), VUInt(0),
         VUInt(credit.toLong)))))
 
-    def receive(timeoutMs: Int = 5000): Option[Delivery] = {
-      sock.setSoTimeout(timeoutMs)
-      try {
-        val f = readAmqpFrame(in)
+    def receive(timeoutMs: Int = Wire.TimeoutMs): Option[Delivery] =
+      conn.await(timeoutMs)(Some(readAmqpFrame(in))).map { f =>
         require(descCode(f.performative) == Code.Transfer, "expected transfer")
         val fs = fields(f.performative)
         val id = fs(1) match { case VUInt(x) => x; case VULong(x) => x; case _ => 0L }
         val (count, body) = messageSections(f.payload)
-        Some(Delivery(id, body, count))
-      } catch { case _: java.net.SocketTimeoutException => None }
-      finally sock.setSoTimeout(0)
-    }
+        Delivery(id, body, count)
+      }
 
     /** accepted disposition — the input's ack (input.go) */
     def accept(d: Delivery): Unit =
@@ -555,6 +538,6 @@ object Amqp1 {
       writeFrame(out, 0, VDescribed(VULong(Code.Detach), VList(Vector(VUInt(0), VBool(true)))))
       readAmqpFrame(in); ()
     }
-    override def close(): Unit = sock.close()
+    override def close(): Unit = conn.close()
   }
 }

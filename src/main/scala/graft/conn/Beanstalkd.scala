@@ -1,9 +1,9 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, InputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
@@ -26,28 +26,6 @@ import scala.collection.mutable
   * path), DEADLINE_SOON safety margin.
   */
 object Beanstalkd {
-
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"beanstalkd stream closed at $off/$n bytes")
-      off += r
-    }
-    buf
-  }
-
-  private def readLine(in: InputStream): String = {
-    val sb = new java.lang.StringBuilder
-    var c = in.read()
-    while (c != '\n') {
-      if (c < 0) throw new EOFException("beanstalkd stream closed mid-line")
-      if (c != '\r') sb.append(c.toChar)
-      c = in.read()
-    }
-    sb.toString
-  }
 
   private def expectCrlf(in: InputStream): Unit = {
     val (cr, lf) = (in.read(), in.read())
@@ -78,30 +56,13 @@ object Beanstalkd {
     private val reserved = mutable.HashMap[Long, (Job, Long, Socket)]()
     private val idGen = new AtomicLong(0)
     private val seqGen = new AtomicLong(0)
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
-    def start(): MiniBeanstalkd = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-beanstalkd-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniBeanstalkd = { listener = Wire.listen("mini-beanstalkd")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def address: String = s"127.0.0.1:$port"
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-    }
+    def stop(): Unit = listener.close()
 
     private def tube(name: String): Tube =
       tubes.getOrElseUpdate(name, new Tube)
@@ -139,7 +100,6 @@ object Beanstalkd {
     }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = new BufferedOutputStream(sock.getOutputStream)
       var used = "default"
@@ -147,7 +107,7 @@ object Beanstalkd {
       def reply(s: String): Unit = { out.write((s + "\r\n").getBytes(UTF_8)); out.flush() }
       try {
         while (true) {
-          val parts = readLine(in).split(" ")
+          val parts = Wire.readLineLf(in, "beanstalkd", dropCr = true).split(" ")
           parts(0) match {
             case "use" =>
               used = parts(1); reply(s"USING $used")
@@ -159,7 +119,7 @@ object Beanstalkd {
             case "put" =>
               val (pri, delaySec, ttrSec, n) =
                 (parts(1).toLong, parts(2).toLong, parts(3).toLong, parts(4).toInt)
-              val body = readExact(in, n)
+              val body = Wire.readExact(in, n, "beanstalkd")
               expectCrlf(in)
               val id = idGen.incrementAndGet()
               // ttr floor of 1s per the protocol doc
@@ -269,13 +229,7 @@ object Beanstalkd {
               reply("UNKNOWN_COMMAND")
           }
         }
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-      } finally {
-        releaseAllOf(sock)
-        try sock.close() catch { case _: Throwable => () }
-      }
+      } finally releaseAllOf(sock)
     }
   }
 
@@ -284,16 +238,14 @@ object Beanstalkd {
   /** Blocking client — one per partition in operators (the reference holds
     * one go-beanstalk Conn per component, output.go:40). */
   final class Client(address: String) extends AutoCloseable {
-    private val Array(h, p) = address.split(":")
-    private val sock = new Socket(h, p.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("beanstalkd", address)
+    private val in = conn.in
+    private val out = conn.out
 
     private def send(line: String): Unit = {
       out.write((line + "\r\n").getBytes(UTF_8)); out.flush()
     }
-    private def replyLine(): Array[String] = readLine(in).split(" ")
+    private def replyLine(): Array[String] = Wire.readLineLf(in, "beanstalkd", dropCr = true).split(" ")
 
     def use(tube: String): Unit = synchronized {
       send(s"use $tube")
@@ -333,7 +285,7 @@ object Beanstalkd {
       val r = replyLine()
       r(0) match {
         case "RESERVED" =>
-          val body = readExact(in, r(2).toInt)
+          val body = Wire.readExact(in, r(2).toInt, "beanstalkd")
           expectCrlf(in)
           Some(Reserved(r(1).toLong, body))
         case "TIMED_OUT" | "DEADLINE_SOON" => None
@@ -365,6 +317,6 @@ object Beanstalkd {
       send(s"touch $id"); replyLine()(0) == "TOUCHED"
     }
 
-    override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    override def close(): Unit = conn.close()
   }
 }

@@ -1,7 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -202,9 +202,9 @@ object Bolt {
     private val lock = new Object
     private val nodes = new ArrayBuffer[GNode]()
     private var idGen = 0L
-    @volatile private var server: ServerSocket = _
+    @volatile private var listener: Wire.Listener = _
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def address: String = s"127.0.0.1:$port"
     def nodeCount(label: String): Int = lock.synchronized(nodes.count(_.label == label))
 
@@ -321,89 +321,75 @@ object Bolt {
         PMap(n.props.map { case (k, v) => k -> toP(v) })))
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
       val out = new BufferedOutputStream(sock.getOutputStream)
-      try {
-        val magic = new Array[Byte](4); in.readFully(magic)
-        require(java.util.Arrays.equals(magic, Magic), "bolt: bad magic")
-        val proposals = new Array[Byte](16); in.readFully(proposals)
-        out.write(Version44); out.flush() // pick 4.4
-        var authed = false
-        var pending: Option[(Vector[String], Vector[Vector[PVal]])] = None
-        var cursor = 0
-        var failed = false
-        while (true) {
-          val msg = readMsg(in)
-          def success(meta: (String, PVal)*): Unit =
-            writeMsg(out, PStruct(Msg.Success, Vector(PMap(VectorMap(meta: _*)))))
-          def failure(code: String, text: String): Unit = {
-            failed = true
-            writeMsg(out, PStruct(Msg.Failure, Vector(PMap(VectorMap(
-              "code" -> PStr(code), "message" -> PStr(text))))))
-          }
-          msg.tag match {
-            case _ if failed && msg.tag != Msg.Reset && msg.tag != Msg.Goodbye =>
-              writeMsg(out, PStruct(Msg.Ignored, Vector.empty))
-            case Msg.Hello =>
-              val meta = msg.fields.head.asInstanceOf[PMap].items
-              val ok = meta.get("scheme").contains(PStr("basic")) &&
-                meta.get("principal").contains(PStr(user)) &&
-                meta.get("credentials").contains(PStr(password))
-              if (ok) { authed = true; success("server" -> PStr("Neo4j/4.4-mini"),
-                "connection_id" -> PStr("bolt-mini")) }
-              else failure("Neo.ClientError.Security.Unauthorized",
-                "The client is unauthorized due to authentication failure.")
-            case Msg.Run if !authed =>
-              failure("Neo.ClientError.Security.Unauthorized", "not authenticated")
-            case Msg.Run =>
-              val PStr(q) = msg.fields(0): @unchecked
-              val params = msg.fields(1).asInstanceOf[PMap].items
-                .map { case (k, v) => k -> fromP(v) }
-              try {
-                val (cols, rows) = run(q, VectorMap(params.toSeq: _*))
-                pending = Some((cols, rows)); cursor = 0
-                success("fields" -> PList(cols.map(PStr(_))), "t_first" -> PInt(1))
-              } catch { case e: IllegalArgumentException =>
-                failure("Neo.ClientError.Statement.SyntaxError", String.valueOf(e.getMessage))
-              }
-            case Msg.Pull =>
-              pending match {
-                case None => failure("Neo.ClientError.Request.Invalid", "no pending result")
-                case Some((_, rows)) =>
-                  val n = msg.fields.headOption.collect {
-                    case PMap(m) => m.get("n").collect { case PInt(x) => x }.getOrElse(-1L)
-                  }.getOrElse(-1L)
-                  val end = if (n < 0) rows.size else math.min(rows.size, cursor + n.toInt)
-                  while (cursor < end) {
-                    writeMsg(out, PStruct(Msg.Record, Vector(PList(rows(cursor)))))
-                    cursor += 1
-                  }
-                  if (cursor >= rows.size) { pending = None; success("t_last" -> PInt(1)) }
-                  else success("has_more" -> PBool(true))
-              }
-            case Msg.Reset => failed = false; pending = None; success()
-            case Msg.Discard => pending = None; success("t_last" -> PInt(1))
-            case Msg.Goodbye => return
-            case other => failure("Neo.ClientError.Request.Invalid", f"unexpected tag 0x$other%02x")
-          }
+      val magic = new Array[Byte](4); in.readFully(magic)
+      require(java.util.Arrays.equals(magic, Magic), "bolt: bad magic")
+      val proposals = new Array[Byte](16); in.readFully(proposals)
+      out.write(Version44); out.flush() // pick 4.4
+      var authed = false
+      var pending: Option[(Vector[String], Vector[Vector[PVal]])] = None
+      var cursor = 0
+      var failed = false
+      while (true) {
+        val msg = readMsg(in)
+        def success(meta: (String, PVal)*): Unit =
+          writeMsg(out, PStruct(Msg.Success, Vector(PMap(VectorMap(meta: _*)))))
+        def failure(code: String, text: String): Unit = {
+          failed = true
+          writeMsg(out, PStruct(Msg.Failure, Vector(PMap(VectorMap(
+            "code" -> PStr(code), "message" -> PStr(text))))))
         }
-      } catch { case _: EOFException | _: java.net.SocketException => () }
-      finally (try sock.close() catch { case _: Throwable => () })
+        msg.tag match {
+          case _ if failed && msg.tag != Msg.Reset && msg.tag != Msg.Goodbye =>
+            writeMsg(out, PStruct(Msg.Ignored, Vector.empty))
+          case Msg.Hello =>
+            val meta = msg.fields.head.asInstanceOf[PMap].items
+            val ok = meta.get("scheme").contains(PStr("basic")) &&
+              meta.get("principal").contains(PStr(user)) &&
+              meta.get("credentials").contains(PStr(password))
+            if (ok) { authed = true; success("server" -> PStr("Neo4j/4.4-mini"),
+              "connection_id" -> PStr("bolt-mini")) }
+            else failure("Neo.ClientError.Security.Unauthorized",
+              "The client is unauthorized due to authentication failure.")
+          case Msg.Run if !authed =>
+            failure("Neo.ClientError.Security.Unauthorized", "not authenticated")
+          case Msg.Run =>
+            val PStr(q) = msg.fields(0): @unchecked
+            val params = msg.fields(1).asInstanceOf[PMap].items
+              .map { case (k, v) => k -> fromP(v) }
+            try {
+              val (cols, rows) = run(q, VectorMap(params.toSeq: _*))
+              pending = Some((cols, rows)); cursor = 0
+              success("fields" -> PList(cols.map(PStr(_))), "t_first" -> PInt(1))
+            } catch { case e: IllegalArgumentException =>
+              failure("Neo.ClientError.Statement.SyntaxError", String.valueOf(e.getMessage))
+            }
+          case Msg.Pull =>
+            pending match {
+              case None => failure("Neo.ClientError.Request.Invalid", "no pending result")
+              case Some((_, rows)) =>
+                val n = msg.fields.headOption.collect {
+                  case PMap(m) => m.get("n").collect { case PInt(x) => x }.getOrElse(-1L)
+                }.getOrElse(-1L)
+                val end = if (n < 0) rows.size else math.min(rows.size, cursor + n.toInt)
+                while (cursor < end) {
+                  writeMsg(out, PStruct(Msg.Record, Vector(PList(rows(cursor)))))
+                  cursor += 1
+                }
+                if (cursor >= rows.size) { pending = None; success("t_last" -> PInt(1)) }
+                else success("has_more" -> PBool(true))
+            }
+          case Msg.Reset => failed = false; pending = None; success()
+          case Msg.Discard => pending = None; success("t_last" -> PInt(1))
+          case Msg.Goodbye => return
+          case other => failure("Neo.ClientError.Request.Invalid", f"unexpected tag 0x$other%02x")
+        }
+      }
     }
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val s = server.accept()
-          val t = new Thread(() => serve(s)); t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
-    def stop(): Unit = if (server != null) server.close()
+    def start(): this.type = { listener = Wire.listen("mini-bolt")(serve); this }
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   // -------------------------------------------------------------- client
@@ -413,11 +399,9 @@ object Bolt {
   /** one bolt connection: handshake, HELLO auth, run+pull */
   final class Client(address: String, user: String = "neo4j",
                      password: String = "graft-pass") extends AutoCloseable {
-    private val Array(host, portS) = address.split(':')
-    private val sock = new Socket(host, portS.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("bolt", address)
+    private val in = conn.in
+    private val out = conn.out
     locally {
       out.write(Magic)
       out.write(Version44); out.write(Array[Byte](0, 0, 0, 0))
@@ -477,7 +461,7 @@ object Bolt {
 
     override def close(): Unit = {
       try { writeMsg(out, PStruct(Msg.Goodbye, Vector.empty)) } catch { case _: Throwable => () }
-      try sock.close() catch { case _: Throwable => () }
+      conn.close()
     }
   }
 }

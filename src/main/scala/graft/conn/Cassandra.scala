@@ -1,7 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicInteger
@@ -134,8 +134,8 @@ object Cassandra {
     private val tables = new CTrieMap[String, Table]()
     private val prepared = new CTrieMap[String, Prepared]() // hex id -> prepared
     private val prepSeq = new AtomicInteger(0)
-    @volatile private var server: ServerSocket = _
-    def address: String = s"127.0.0.1:${server.getLocalPort}"
+    @volatile private var listener: Wire.Listener = _
+    def address: String = s"127.0.0.1:${listener.port}"
     def rowCount(table: String): Int = tables.get(table).map(t => t.synchronized(t.rows.size)).getOrElse(0)
 
     private def errorBody(msg: String): Array[Byte] = {
@@ -253,40 +253,25 @@ object Cassandra {
       case other => (OpError, errorBody(s"unsupported opcode $other"))
     }
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val t = new Thread(() => serve(sock)); t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
+    def start(): this.type = { listener = Wire.listen("mini-cassandra")(serve); this }
     private def serve(sock: Socket): Unit = {
-      try {
-        val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-        val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-        while (true) {
-          val (_, stream, opcode, body) = readFrame(in)
-          val (respOp, respBody) = try handle(opcode, body)
-          catch { case e: Throwable => (OpError, errorBody(String.valueOf(e.getMessage))) }
-          out.write(frame(0x84.toByte, stream, respOp, respBody)); out.flush()
-        }
-      } catch { case _: EOFException | _: java.net.SocketException => () }
-      finally sock.close()
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      while (true) {
+        val (_, stream, opcode, body) = readFrame(in)
+        val (respOp, respBody) = try handle(opcode, body)
+        catch { case e: Throwable => (OpError, errorBody(String.valueOf(e.getMessage))) }
+        out.write(frame(0x84.toByte, stream, respOp, respBody)); out.flush()
+      }
     }
-    def stop(): Unit = if (server != null) server.close()
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   // -------------------------------------------------------------- client
   final class Client(address: String) extends AutoCloseable {
-    private val Array(host, port) = address.split(':')
-    private val sock = new Socket(host, port.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+    private val conn = Wire.connect("cassandra", address)
+    private val in = conn.in
+    private val out = new DataOutputStream(conn.out)
     private val streamIds = new AtomicInteger(0)
 
     // STARTUP handshake (§3: CQL_VERSION is required)
@@ -358,6 +343,6 @@ object Cassandra {
       (cols, rows)
     }
 
-    override def close(): Unit = { try out.flush() catch { case _: Throwable => () }; sock.close() }
+    override def close(): Unit = { try out.flush() catch { case _: Throwable => () }; conn.close() }
   }
 }

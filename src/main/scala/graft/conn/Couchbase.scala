@@ -1,7 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -83,8 +83,8 @@ object Couchbase {
   final class MiniCouchbase(username: String, password: String, bucket: String) {
     private val docs = new CTrieMap[String, Doc]()
     private val casGen = new java.util.concurrent.atomic.AtomicLong(1)
-    @volatile private var server: ServerSocket = _
-    def address: String = s"127.0.0.1:${server.getLocalPort}"
+    @volatile private var listener: Wire.Listener = _
+    def address: String = s"127.0.0.1:${listener.port}"
     def docCount: Int = docs.size
 
     private def serve(sock: Socket): Unit = {
@@ -95,7 +95,7 @@ object Couchbase {
       def reply(req: Packet, status: Int, extras: Array[Byte] = Array.emptyByteArray,
                 value: Array[Byte] = Array.emptyByteArray, cas: Long = 0): Unit =
         writePacket(out, 0x81, req.opcode, status, Array.emptyByteArray, extras, value, req.opaque, cas)
-      try while (true) {
+      while (true) {
         val p = readPacket(in)
         require(p.magic == 0x80, "expected request magic 0x80")
         p.opcode match {
@@ -146,32 +146,19 @@ object Couchbase {
             reply(p, StOk, value = ByteBuffer.allocate(8).putLong(next).array(), cas = cas)
           case _ => reply(p, StUnknownCommand)
         }
-      } catch { case _: EOFException | _: java.net.SocketException => () }
-      finally sock.close()
+      }
     }
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val t = new Thread(() => serve(sock)); t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
-    def stop(): Unit = if (server != null) server.close()
+    def start(): this.type = { listener = Wire.listen("mini-couchbase")(serve); this }
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   // -------------------------------------------------------------- client
   final class Client(address: String, username: String, password: String,
                      bucket: String) extends AutoCloseable {
-    private val Array(host, port) = address.split(':')
-    private val sock = new Socket(host, port.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("couchbase", address)
+    private val in = conn.in
+    private val out = conn.out
 
     private def roundTrip(opcode: Int, key: Array[Byte], extras: Array[Byte],
                           value: Array[Byte]): Packet = synchronized {
@@ -223,7 +210,7 @@ object Couchbase {
       require(r.status == StOk, s"counter: status ${r.status}")
       ByteBuffer.wrap(r.value).getLong
     }
-    override def close(): Unit = sock.close()
+    override def close(): Unit = conn.close()
   }
 
   /** cache.go: bucket as KV — upsert set, insert add (KEY_EXISTS → false) */

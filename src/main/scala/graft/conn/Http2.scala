@@ -1,7 +1,7 @@
 package graft.conn
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.LinkedBlockingQueue
@@ -165,10 +165,8 @@ object Http2 {
 
   // -------------------------------------------------------------- client
   final class ClientConn(host: String, port: Int) extends AutoCloseable {
-    private val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
     private val streamIds = new AtomicInteger(-1)
-    val conn: Conn = new Conn(sock, (_, _) => ())
+    val conn: Conn = new Conn(Wire.connect("h2", host, port).sock, (_, _) => ())
 
     locally {
       conn.out.write(Preface)
@@ -193,40 +191,27 @@ object Http2 {
   /** handler runs on its own thread per stream: (request headers,
     * stream id, inbound stream, connection for writing) */
   final class Server(handler: (Seq[(String, String)], Int, StreamIn, Conn) => Unit) {
-    @volatile private var server: ServerSocket = _
-    def port: Int = server.getLocalPort
+    @volatile private var listener: Wire.Listener = _
+    def port: Int = listener.port
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val th = new Thread(() => serve(sock)); th.setDaemon(true); th.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
+    def start(): this.type = { listener = Wire.listen("h2")(serve); this }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
-      try {
-        val conn: Conn = new Conn(sock, (sid, c) => {
-          val st = c.streams(sid)
-          val th = new Thread(() => {
-            try handler(st.awaitHeaders(0), sid, st, c)
-            catch { case _: Throwable => () }
-          })
-          th.setDaemon(true); th.start()
+      val conn: Conn = new Conn(sock, (sid, c) => {
+        val st = c.streams(sid)
+        val th = new Thread(() => {
+          try handler(st.awaitHeaders(0), sid, st, c)
+          catch { case _: Throwable => () }
         })
-        // server preface check
-        val got = new Array[Byte](Preface.length)
-        conn.in.readFully(got)
-        require(java.util.Arrays.equals(got, Preface), "h2: bad client preface")
-        conn.sendSettings(ack = false)
-        conn.pump()
-      } catch { case _: Throwable => () } finally sock.close()
+        th.setDaemon(true); th.start()
+      })
+      // server preface check
+      val got = new Array[Byte](Preface.length)
+      conn.in.readFully(got)
+      require(java.util.Arrays.equals(got, Preface), "h2: bad client preface")
+      conn.sendSettings(ack = false)
+      conn.pump()
     }
-    def stop(): Unit = if (server != null) server.close()
+    def stop(): Unit = if (listener != null) listener.close()
   }
 }

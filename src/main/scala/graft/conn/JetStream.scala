@@ -297,10 +297,9 @@ object JetStream {
         Json.render(Json.obj("batch" -> batch.toLong)).getBytes(UTF_8), reply = fetchInbox)
       val out = Vector.newBuilder[JsMsg]
       var n = 0
-      pull.setReadTimeout(maxWaitMs)
-      try {
-        while (n < batch) {
-          val m = pull.nextMsg()
+      var idle = false
+      while (n < batch && !idle) pull.nextMsg(maxWaitMs) match {
+        case Some(m) =>
           val ackParts = m.reply.stripPrefix("$JS.ACK.").split('.')
           // the true stream subject rides the Graft-Stream-Subject header
           // (delivery arrives on the inbox subject over core framing)
@@ -308,9 +307,8 @@ object JetStream {
           out += JsMsg(subj, m.payload, m.reply, ackParts(3).toLong, ackParts(2).toLong,
             m.headers - "Graft-Stream-Subject")
           n += 1
-        }
-      } catch { case _: java.net.SocketTimeoutException => () }
-      finally pull.setReadTimeout(0)
+        case None => idle = true
+      }
       out.result()
     }
 

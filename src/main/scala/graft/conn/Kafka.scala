@@ -1,9 +1,8 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicBoolean
 import java.util.zip.CRC32
 
 import scala.collection.mutable
@@ -48,17 +47,6 @@ object Kafka {
 
   // ---------------------------------------------------------- primitives
 
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"kafka stream closed at $off/$n bytes")
-      off += r
-    }
-    buf
-  }
-
   final class W {
     private val bo = new java.io.ByteArrayOutputStream()
     private val d = new DataOutputStream(bo)
@@ -95,13 +83,13 @@ object Kafka {
     def i64(): Long = d.readLong()
     def str(): String = {
       val n = d.readShort()
-      if (n < 0) null else new String(readExact(d, n), UTF_8)
+      if (n < 0) null else new String(Wire.readExact(d, n, "kafka"), UTF_8)
     }
     def bytes(): Array[Byte] = {
       val n = d.readInt()
-      if (n < 0) null else readExact(d, n)
+      if (n < 0) null else Wire.readExact(d, n, "kafka")
     }
-    def raw(n: Int): Array[Byte] = readExact(d, n)
+    def raw(n: Int): Array[Byte] = Wire.readExact(d, n, "kafka")
     def varint(): Long = {
       var z = 0L
       var shift = 0
@@ -286,8 +274,7 @@ object Kafka {
     private val lock = new Object
     private val logs = mutable.LinkedHashMap[(String, Int), mutable.ArrayBuffer[Msg]]()
     private val topics = mutable.LinkedHashSet[String]()
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
     // ---- consumer-group coordination state (the group-membership
     // protocol real brokers run: JoinGroup collects a generation's
@@ -310,27 +297,11 @@ object Kafka {
     private def group(name: String): Group =
       groups.getOrElseUpdate(name, new Group)
 
-    def start(): MiniKafka = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-kafka-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniKafka = { listener = Wire.listen("mini-kafka")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def bootstrap: String = s"127.0.0.1:$port"
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-    }
+    def stop(): Unit = listener.close()
 
     private def logOf(topic: String, partition: Int): mutable.ArrayBuffer[Msg] = {
       topics.add(topic)
@@ -592,27 +563,21 @@ object Kafka {
     }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = new BufferedOutputStream(sock.getOutputStream)
-      try {
-        while (true) {
-          val len = new DataInputStream(in).readInt()
-          val req = new R(readExact(in, len))
-          val apiKey = req.i16(); val apiVersion = req.i16()
-          val corr = req.i32(); req.str() // client id
-          val resp = handle(apiKey, apiVersion, req)
-          val framed = new W().i32(corr).raw(resp).result
-          out.synchronized {
-            new DataOutputStream(out).writeInt(framed.length)
-            out.write(framed)
-            out.flush()
-          }
+      while (true) {
+        val len = new DataInputStream(in).readInt()
+        val req = new R(Wire.readExact(in, len, "kafka"))
+        val apiKey = req.i16(); val apiVersion = req.i16()
+        val corr = req.i32(); req.str() // client id
+        val resp = handle(apiKey, apiVersion, req)
+        val framed = new W().i32(corr).raw(resp).result
+        out.synchronized {
+          new DataOutputStream(out).writeInt(framed.length)
+          out.write(framed)
+          out.flush()
         }
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-      } finally { try sock.close() catch { case _: Throwable => () } }
+      }
     }
   }
 
@@ -624,11 +589,9 @@ object Kafka {
   /** Blocking client: one socket, correlated request/response. One per
     * Spark partition in the operator layer. */
   final class Client(bootstrap: String, clientId: String = "graft") extends AutoCloseable {
-    private val Array(h, p) = bootstrap.split(":")
-    private val sock = new Socket(h, p.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("kafka", bootstrap)
+    private val in = conn.in
+    private val out = conn.out
     private var corr = 0
 
     private def call(apiKey: Int, body: Array[Byte], apiVersion: Int = 0): R = synchronized {
@@ -638,7 +601,7 @@ object Kafka {
       out.write(req)
       out.flush()
       val len = new DataInputStream(in).readInt()
-      val r = new R(readExact(in, len))
+      val r = new R(Wire.readExact(in, len, "kafka"))
       val got = r.i32()
       require(got == corr, s"correlation id $got != $corr")
       r
@@ -797,7 +760,7 @@ object Kafka {
       }.toMap
     }
 
-    override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    override def close(): Unit = conn.close()
   }
 
   // ---------------------------------------------- consumer-group protocol

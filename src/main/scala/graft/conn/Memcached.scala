@@ -1,9 +1,8 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
@@ -23,58 +22,18 @@ import scala.collection.mutable
   */
 object Memcached {
 
-  private def readLine(in: InputStream): String = {
-    val sb = new java.lang.StringBuilder
-    var c = in.read()
-    while (c != '\r') {
-      if (c < 0) throw new EOFException("memcached stream closed mid-line")
-      sb.append(c.toChar)
-      c = in.read()
-    }
-    if (in.read() != '\n') throw new java.io.IOException("memcached line missing \\n")
-    sb.toString
-  }
-
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"memcached stream closed at $off/$n data bytes")
-      off += r
-    }
-    buf
-  }
-
   // ------------------------------------------------------------- server
 
   /** Minimal memcached server: get/set/add/delete/incr + lazy expiry. */
   final class MiniMemcached {
     private val store = mutable.HashMap[String, (Array[Byte], Long)]() // value, expireAtMs (0 = never)
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
-    def start(): MiniMemcached = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-memcached-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniMemcached = { listener = Wire.listen("mini-memcached")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def address: String = s"127.0.0.1:$port"
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-    }
+    def stop(): Unit = listener.close()
 
     private def now() = System.currentTimeMillis()
     private def liveValue(key: String): Option[Array[Byte]] = store.get(key) match {
@@ -90,56 +49,50 @@ object Memcached {
       else exptime * 1000
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = new BufferedOutputStream(sock.getOutputStream)
       def reply(s: String): Unit = { out.write((s + "\r\n").getBytes(UTF_8)); out.flush() }
-      try {
-        while (true) {
-          val parts = readLine(in).split(" ")
-          parts(0) match {
-            case "get" | "gets" =>
-              store.synchronized {
-                parts.drop(1).foreach { key =>
-                  liveValue(key).foreach { v =>
-                    out.write(s"VALUE $key 0 ${v.length}\r\n".getBytes(UTF_8))
-                    out.write(v); out.write('\r'); out.write('\n')
-                  }
+      while (true) {
+        val parts = Wire.readLineCrlf(in, "memcached").split(" ")
+        parts(0) match {
+          case "get" | "gets" =>
+            store.synchronized {
+              parts.drop(1).foreach { key =>
+                liveValue(key).foreach { v =>
+                  out.write(s"VALUE $key 0 ${v.length}\r\n".getBytes(UTF_8))
+                  out.write(v); out.write('\r'); out.write('\n')
                 }
               }
-              reply("END")
-            case "set" | "add" | "replace" =>
-              // <cmd> <key> <flags> <exptime> <bytes>
-              val key = parts(1); val exptime = parts(3).toLong; val n = parts(4).toInt
-              val data = readExact(in, n)
-              if (in.read() != '\r' || in.read() != '\n')
-                throw new java.io.IOException("data block missing CRLF")
-              val stored = store.synchronized {
-                val present = liveValue(key).isDefined
-                val ok = parts(0) match {
-                  case "add" => !present
-                  case "replace" => present
-                  case _ => true
-                }
-                if (ok) store(key) = (data, expireAt(exptime))
-                ok
+            }
+            reply("END")
+          case "set" | "add" | "replace" =>
+            // <cmd> <key> <flags> <exptime> <bytes>
+            val key = parts(1); val exptime = parts(3).toLong; val n = parts(4).toInt
+            val data = Wire.readExact(in, n, "memcached")
+            if (in.read() != '\r' || in.read() != '\n')
+              throw new java.io.IOException("data block missing CRLF")
+            val stored = store.synchronized {
+              val present = liveValue(key).isDefined
+              val ok = parts(0) match {
+                case "add" => !present
+                case "replace" => present
+                case _ => true
               }
-              reply(if (stored) "STORED" else "NOT_STORED")
-            case "delete" =>
-              val had = store.synchronized {
-                val h = liveValue(parts(1)).isDefined
-                store.remove(parts(1)); h
-              }
-              reply(if (had) "DELETED" else "NOT_FOUND")
-            case "version" => reply("VERSION mini-0.1")
-            case "quit" => sock.close(); return
-            case other => reply("ERROR")
-          }
+              if (ok) store(key) = (data, expireAt(exptime))
+              ok
+            }
+            reply(if (stored) "STORED" else "NOT_STORED")
+          case "delete" =>
+            val had = store.synchronized {
+              val h = liveValue(parts(1)).isDefined
+              store.remove(parts(1)); h
+            }
+            reply(if (had) "DELETED" else "NOT_FOUND")
+          case "version" => reply("VERSION mini-0.1")
+          case "quit" => sock.close(); return
+          case other => reply("ERROR")
         }
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-      } finally { try sock.close() catch { case _: Throwable => () } }
+      }
     }
   }
 
@@ -148,11 +101,9 @@ object Memcached {
   /** Client implementing the cache-resource verbs over the text protocol. */
   final class Cache(address: String, prefix: String = "", defaultTtlMs: Long = 0)
       extends graft.operators.CacheBackends.KvBackend {
-    private val Array(h, p) = address.split(":")
-    private val sock = new Socket(h, p.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("memcached", address)
+    private val in = conn.in
+    private val out = conn.out
     private def pk(key: String): String = {
       val k = prefix + key
       require(!k.contains(' ') && !k.contains('\n') && k.length <= 250,
@@ -169,7 +120,7 @@ object Memcached {
         out.write(s"$cmd ${pk(key)} 0 ${exptime(ttlMs)} ${value.length}\r\n".getBytes(UTF_8))
         out.write(value); out.write('\r'); out.write('\n')
         out.flush()
-        readLine(in) match {
+        Wire.readLineCrlf(in, "memcached") match {
           case "STORED" => true
           case "NOT_STORED" => false
           case other => throw new java.io.IOException(s"$cmd: $other")
@@ -182,11 +133,11 @@ object Memcached {
       var result: Option[Array[Byte]] = None
       var done = false
       while (!done) {
-        val line = readLine(in)
+        val line = Wire.readLineCrlf(in, "memcached")
         if (line == "END") done = true
         else if (line.startsWith("VALUE ")) {
           val n = line.split(" ")(3).toInt
-          val data = readExact(in, n)
+          val data = Wire.readExact(in, n, "memcached")
           if (in.read() != '\r' || in.read() != '\n')
             throw new java.io.IOException("VALUE data missing CRLF")
           result = Some(data)
@@ -202,11 +153,11 @@ object Memcached {
     def delete(key: String): Unit = synchronized {
       out.write(s"delete ${pk(key)}\r\n".getBytes(UTF_8))
       out.flush()
-      readLine(in) match {
+      Wire.readLineCrlf(in, "memcached") match {
         case "DELETED" | "NOT_FOUND" => ()
         case other => throw new java.io.IOException(s"delete: $other")
       }
     }
-    override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    override def close(): Unit = conn.close()
   }
 }

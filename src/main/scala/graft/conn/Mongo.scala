@@ -1,7 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.concurrent.atomic.AtomicInteger
@@ -159,8 +159,8 @@ object Mongo {
       case d: Double if d == math.rint(d) => d.toLong
       case other => other
     }
-    @volatile private var server: ServerSocket = _
-    def address: String = s"127.0.0.1:${server.getLocalPort}"
+    @volatile private var listener: Wire.Listener = _
+    def address: String = s"127.0.0.1:${listener.port}"
     def count(db: String, coll: String): Int =
       collections.get((db, coll)).map(c => c.synchronized(c.size)).getOrElse(0)
 
@@ -325,45 +325,29 @@ object Mongo {
       }
     }
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val t = new Thread(() => serve(sock))
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
+    def start(): this.type = { listener = Wire.listen("mini-mongo")(serve); this }
 
     private def serve(sock: Socket): Unit = {
-      try {
-        val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-        val out = new BufferedOutputStream(sock.getOutputStream)
-        var replyId = 1000
-        while (true) {
-          val (reqId, body) = readFrame(in)
-          val resp = try handle(body) catch {
-            case e: Throwable => VectorMap[String, Any]("ok" -> 0.0, "errmsg" -> String.valueOf(e.getMessage))
-          }
-          replyId += 1
-          out.write(frame(replyId, reqId, resp)); out.flush()
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      val out = new BufferedOutputStream(sock.getOutputStream)
+      var replyId = 1000
+      while (true) {
+        val (reqId, body) = readFrame(in)
+        val resp = try handle(body) catch {
+          case e: Throwable => VectorMap[String, Any]("ok" -> 0.0, "errmsg" -> String.valueOf(e.getMessage))
         }
-      } catch { case _: EOFException | _: java.net.SocketException => () }
-      finally sock.close()
+        replyId += 1
+        out.write(frame(replyId, reqId, resp)); out.flush()
+      }
     }
-    def stop(): Unit = if (server != null) server.close()
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   // -------------------------------------------------------------- client
   final class Client(address: String, db: String = "test") extends AutoCloseable {
-    private val Array(host, port) = address.split(':')
-    private val sock = new Socket(host, port.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("mongo", address)
+    private val in = conn.in
+    private val out = conn.out
     private val reqId = new AtomicInteger(1)
 
     def command(body: VectorMap[String, Any]): VectorMap[String, Any] = synchronized {
@@ -406,7 +390,7 @@ object Mongo {
       ok(command(VectorMap("delete" -> coll,
         "deletes" -> Vector[Any](VectorMap[String, Any]("q" -> q, "limit" -> 1)))), "delete")("n").asInstanceOf[Long]
 
-    override def close(): Unit = { try out.flush() catch { case _: Throwable => () }; sock.close() }
+    override def close(): Unit = { try out.flush() catch { case _: Throwable => () }; conn.close() }
   }
 
   // ------------------------------------------------------- cache backend

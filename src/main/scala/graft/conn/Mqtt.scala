@@ -1,9 +1,8 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, EOFException, InputStream, OutputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
@@ -54,17 +53,6 @@ object Mqtt {
     value
   }
 
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"MQTT stream closed at $off/$n bytes")
-      off += r
-    }
-    buf
-  }
-
   /** One control packet: (type, flags, body). */
   final case class Packet(ptype: Int, flags: Int, body: Array[Byte])
 
@@ -72,7 +60,7 @@ object Mqtt {
     val h = in.read()
     if (h < 0) throw new EOFException("MQTT stream closed")
     val n = readRemainingLength(in)
-    Packet(h >> 4, h & 0x0f, readExact(in, n))
+    Packet(h >> 4, h & 0x0f, Wire.readExact(in, n, "MQTT"))
   }
 
   def writePacket(out: OutputStream, ptype: Int, flags: Int, body: Array[Byte]): Unit = {
@@ -126,32 +114,14 @@ object Mqtt {
     private val lock = new Object
     private val subs = mutable.ArrayBuffer[Sub]()
     private val retained = mutable.LinkedHashMap[String, Array[Byte]]()
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
-    def start(): MiniMqtt = {
-      server = new ServerSocket(0, 128, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-mqtt-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniMqtt = { listener = Wire.listen("mini-mqtt")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def url: String = s"tcp://127.0.0.1:$port"
 
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-      lock.synchronized { subs.foreach(s => try s.sock.close() catch { case _: Throwable => () }) }
-    }
+    def stop(): Unit = listener.close()
 
     private def sendPublish(sock: Socket, topic: String, payload: Array[Byte],
                             qos: Int, retain: Boolean, pid: Int): Unit = {
@@ -180,7 +150,6 @@ object Mqtt {
     }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = sock.getOutputStream
       try {
@@ -245,13 +214,7 @@ object Mqtt {
             case other => throw new java.io.IOException(s"unexpected packet type $other")
           }
         }
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-      } finally {
-        lock.synchronized { subs.filterInPlace(s => s.sock ne sock) }
-        try sock.close() catch { case _: Throwable => () }
-      }
+      } finally lock.synchronized { subs.filterInPlace(s => s.sock ne sock) }
     }
   }
 
@@ -262,10 +225,9 @@ object Mqtt {
     * are buffered for [[nextPublish]]. */
   final class Client(url: String, clientId: String) extends AutoCloseable {
     private val u = java.net.URI.create(url)
-    private val sock = new Socket(u.getHost, u.getPort)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("MQTT", u.getHost, u.getPort)
+    private val in = conn.in
+    private val out = conn.out
     private val inbound = new java.util.ArrayDeque[Publish]()
     private var nextPid = 1
 
@@ -351,6 +313,6 @@ object Mqtt {
       try writePacket(out, 14, 0, Array.emptyByteArray) catch { case _: Throwable => () }
       close()
     }
-    override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    override def close(): Unit = conn.close()
   }
 }

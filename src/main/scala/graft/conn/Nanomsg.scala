@@ -1,7 +1,7 @@
 package graft.conn
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -28,89 +28,77 @@ object Nanomsg {
     Array[Byte](0x00, 'S'.toByte, 'P'.toByte, 0x00,
       ((protocol >> 8) & 0xff).toByte, (protocol & 0xff).toByte, 0x00, 0x00)
 
-  private def handshake(sock: Socket, myProtocol: Int): (DataInputStream, java.io.OutputStream) = {
-    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    val out = new BufferedOutputStream(sock.getOutputStream)
+  private def handshake(in: DataInputStream, out: java.io.OutputStream, myProtocol: Int): Unit = {
     out.write(header(myProtocol)); out.flush()
     val h = new Array[Byte](8); in.readFully(h)
     require(h(0) == 0 && h(1) == 'S' && h(2) == 'P' && h(3) == 0, "sp: bad connection header")
     val peer = ((h(4) & 0xff) << 8) | (h(5) & 0xff)
     require(peerOf.get(myProtocol).contains(peer),
       s"sp: protocol $myProtocol incompatible with peer $peer")
+  }
+
+  /** a fixture connection's streams, after the SP handshake */
+  private def accepted(sock: Socket, myProtocol: Int): (DataInputStream, java.io.OutputStream) = {
+    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+    val out = new BufferedOutputStream(sock.getOutputStream)
+    handshake(in, out, myProtocol)
     (in, out)
+  }
+
+  /** a client connection, after the SP handshake */
+  private def dial(host: String, port: Int, myProtocol: Int): Wire.Conn = {
+    val conn = Wire.connect("nanomsg", host, port)
+    handshake(conn.in, conn.out, myProtocol)
+    conn
   }
 
   private def writeMsg(out: java.io.OutputStream, body: Array[Byte]): Unit = {
     out.write(ByteBuffer.allocate(8).putLong(body.length.toLong).array())
     out.write(body)
   }
-  private def readMsg(in: DataInputStream): Array[Byte] = {
-    val lb = new Array[Byte](8); in.readFully(lb)
-    val len = ByteBuffer.wrap(lb).getLong.toInt
-    val body = new Array[Byte](len); in.readFully(body)
-    body
-  }
+  private def readMsg(in: DataInputStream): Array[Byte] =
+    Wire.readSized(in, in.readLong(), "nanomsg")
 
   /** bound PULL fair-queuing messages from all connected PUSH peers —
     * the input's bind-side default (input.go). */
   final class PullServer {
     private val msgQueue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]]()
-    @volatile private var server: ServerSocket = _
-    def port: Int = server.getLocalPort
+    @volatile private var listener: Wire.Listener = _
+    def port: Int = listener.port
     def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val t = new Thread(() => {
-            try {
-              val (in, _) = handshake(sock, Pull)
-              while (true) msgQueue.put(readMsg(in))
-            } catch { case _: Throwable => () } finally sock.close()
-          })
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
+      listener = Wire.listen("nanomsg-pull") { sock =>
+        val (in, _) = accepted(sock, Pull)
+        while (true) msgQueue.put(readMsg(in))
+      }
       this
     }
-    def receive(timeoutMs: Long = 5000): Option[Array[Byte]] =
+    def receive(timeoutMs: Long = Wire.TimeoutMs): Option[Array[Byte]] =
       Option(msgQueue.poll(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-    def stop(): Unit = if (server != null) server.close()
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   final class PushClient(host: String, port: Int) extends AutoCloseable {
-    private val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
-    private val (_, out) = handshake(sock, Push)
+    private val conn = dial(host, port, Push)
+    private val out = conn.out
     def send(body: Array[Byte]): Unit = synchronized { writeMsg(out, body); out.flush() }
-    override def close(): Unit = { out.flush(); sock.close() }
+    override def close(): Unit = { out.flush(); conn.close() }
   }
 
   /** bound PUB broadcasting every message to every connected SUB (the
     * SP pub/sub contract: filtering is the receiver's job) */
   final class PubServer {
     private val peers = new scala.collection.mutable.ArrayBuffer[(Socket, java.io.OutputStream)]()
-    @volatile private var server: ServerSocket = _
-    def port: Int = server.getLocalPort
+    @volatile private var listener: Wire.Listener = _
+    def port: Int = listener.port
     def subscriberCount: Int = peers.synchronized(peers.size)
     def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val t = new Thread(() => {
-            try {
-              val (in, out) = handshake(sock, Pub)
-              peers.synchronized(peers += ((sock, out)))
-              while (in.read() >= 0) () // drain until close
-            } catch { case _: Throwable => () }
-            finally { peers.synchronized(peers.filterInPlace(_._1 ne sock)); sock.close() }
-          })
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
+      listener = Wire.listen("nanomsg-pub") { sock =>
+        try {
+          val (in, out) = accepted(sock, Pub)
+          peers.synchronized(peers += ((sock, out)))
+          while (in.read() >= 0) () // drain until close
+        } finally peers.synchronized(peers.filterInPlace(_._1 ne sock))
+      }
       this
     }
     def publish(body: Array[Byte]): Unit = peers.synchronized {
@@ -118,31 +106,21 @@ object Nanomsg {
         try { writeMsg(out, body); out.flush() } catch { case _: Throwable => () }
       }
     }
-    def stop(): Unit = if (server != null) server.close()
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   /** connecting SUB with receiver-side prefix filters (input.go:46
     * sub_filters; `""` subscribes to everything) */
   final class SubClient(host: String, port: Int, filters: Seq[String]) extends AutoCloseable {
-    private val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
-    private val (in, _) = handshake(sock, Sub)
+    private val conn = dial(host, port, Sub)
     private val filterBytes = filters.map(_.getBytes(UTF_8))
 
-    /** next message passing a filter, or None on timeout */
-    def receive(timeoutMs: Int = 5000): Option[Array[Byte]] = {
-      sock.setSoTimeout(timeoutMs)
-      try {
-        while (true) {
-          val m = readMsg(in)
-          val pass = filterBytes.isEmpty || filterBytes.exists(f =>
-            f.length <= m.length && java.util.Arrays.equals(f, m.take(f.length)))
-          if (pass) return Some(m)
-        }
-        None
-      } catch { case _: java.net.SocketTimeoutException => None }
-      finally sock.setSoTimeout(0)
-    }
-    override def close(): Unit = sock.close()
+    /** next message passing a filter, or None if none starts within
+      * `timeoutMs` */
+    def receive(timeoutMs: Int = Wire.TimeoutMs): Option[Array[Byte]] =
+      conn.await(timeoutMs)(Some(readMsg(conn.in)).filter(m =>
+        filterBytes.isEmpty || filterBytes.exists(f =>
+          f.length <= m.length && java.util.Arrays.equals(f, m.take(f.length)))))
+    override def close(): Unit = conn.close()
   }
 }

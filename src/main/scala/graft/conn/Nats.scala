@@ -1,9 +1,9 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.BufferedInputStream
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
@@ -27,29 +27,6 @@ import scala.collection.mutable
 object Nats {
 
   // --------------------------------------------------------------- wire
-
-  private def readLine(in: InputStream): String = {
-    val sb = new java.lang.StringBuilder
-    var c = in.read()
-    while (c != '\r') {
-      if (c < 0) throw new EOFException("NATS stream closed mid-line")
-      sb.append(c.toChar)
-      c = in.read()
-    }
-    if (in.read() != '\n') throw new java.io.IOException("NATS line missing \\n")
-    sb.toString
-  }
-
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"NATS stream closed at $off/$n payload bytes")
-      off += r
-    }
-    buf
-  }
 
   /** Subject filter match per the spec: tokens split on '.', `*` matches
     * exactly one token, `>` matches one-or-more trailing tokens. */
@@ -96,34 +73,14 @@ object Nats {
     private val subsLock = new Object
     private val subs = mutable.ArrayBuffer[Sub]()
     private val rr = mutable.HashMap[String, Int]() // queue-group round-robin
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
-    def start(): MiniNats = {
-      server = new ServerSocket(0, 128, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-nats-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniNats = { listener = Wire.listen("mini-nats")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def url: String = s"nats://127.0.0.1:$port"
 
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-      subsLock.synchronized {
-        subs.foreach(s => try s.sock.close() catch { case _: Throwable => () })
-      }
-    }
+    def stop(): Unit = listener.close()
 
     private def deliver(subject: String, reply: String, payload: Array[Byte],
                         headers: Map[String, String] = Map.empty): Unit = {
@@ -160,7 +117,6 @@ object Nats {
     }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = sock.getOutputStream
       // +OK acks are verbose-mode ONLY (nats protocol: the server confirms
@@ -178,7 +134,7 @@ object Nats {
           out.flush()
         }
         while (true) {
-          val line = readLine(in)
+          val line = Wire.readLineCrlf(in, "NATS")
           val sp = line.indexOf(' ')
           val op = (if (sp < 0) line else line.substring(0, sp)).toUpperCase
           op match {
@@ -205,7 +161,7 @@ object Nats {
               val a = line.substring(4).trim.split("\\s+")
               val (subject, reply, n) =
                 if (a.length == 3) (a(0), a(1), a(2).toInt) else (a(0), "", a(1).toInt)
-              val payload = readExact(in, n)
+              val payload = Wire.readExact(in, n, "NATS")
               if (in.read() != '\r' || in.read() != '\n')
                 throw new java.io.IOException("PUB payload missing CRLF")
               deliver(subject, reply, payload)
@@ -215,8 +171,8 @@ object Nats {
               val (subject, reply, hn, tn) =
                 if (a.length == 4) (a(0), a(1), a(2).toInt, a(3).toInt)
                 else (a(0), "", a(1).toInt, a(2).toInt)
-              val hdrBytes = readExact(in, hn)
-              val payload = readExact(in, tn - hn)
+              val hdrBytes = Wire.readExact(in, hn, "NATS")
+              val payload = Wire.readExact(in, tn - hn, "NATS")
               if (in.read() != '\r' || in.read() != '\n')
                 throw new java.io.IOException("HPUB payload missing CRLF")
               deliver(subject, reply, payload, parseHeaders(hdrBytes))
@@ -227,13 +183,7 @@ object Nats {
               }
           }
         }
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-      } finally {
-        subsLock.synchronized { subs.filterInPlace(s => s.sock ne sock) }
-        try sock.close() catch { case _: Throwable => () }
-      }
+      } finally subsLock.synchronized { subs.filterInPlace(s => s.sock ne sock) }
     }
   }
 
@@ -246,12 +196,11 @@ object Nats {
     * One per partition in the operator layer, like [[Resp.Client]]. */
   final class Client(url: String) extends AutoCloseable {
     private val u = java.net.URI.create(url)
-    private val sock = new Socket(u.getHost, u.getPort)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("NATS", u.getHost, u.getPort)
+    private val in = conn.in
+    private val out = conn.out
     locally {
-      val info = readLine(in)
+      val info = Wire.readLineCrlf(in, "NATS")
       require(info.startsWith("INFO "), s"expected INFO greeting, got: $info")
       out.write(("CONNECT {\"verbose\":false,\"pedantic\":false," +
         "\"name\":\"graft\",\"lang\":\"scala\",\"version\":\"0.1\"}\r\n").getBytes(UTF_8))
@@ -286,63 +235,77 @@ object Nats {
       sid
     }
 
-    /** Read protocol lines until the next MSG; answers server PINGs. */
+    /** Read protocol lines until the next MSG; answers server PINGs.
+      * Blocks with no deadline: the subscription read (see [[Wire]]). */
     def nextMsg(): Msg = synchronized {
-      while (true) {
-        val line = readLine(in)
-        if (line.startsWith("MSG ")) {
-          val a = line.substring(4).trim.split("\\s+")
-          val (subject, reply, n) =
-            if (a.length == 4) (a(0), a(2), a(3).toInt) else (a(0), "", a(2).toInt)
-          val payload = readExact(in, n)
-          if (in.read() != '\r' || in.read() != '\n')
-            throw new java.io.IOException("MSG payload missing CRLF")
-          return Msg(subject, reply, payload)
-        } else if (line.startsWith("HMSG ")) {
-          // HMSG <subject> <sid> [reply] <#hdr> <#total>
-          val a = line.substring(5).trim.split("\\s+")
-          val (subject, reply, hn, tn) =
-            if (a.length == 5) (a(0), a(2), a(3).toInt, a(4).toInt)
-            else (a(0), "", a(2).toInt, a(3).toInt)
-          val hdrBytes = readExact(in, hn)
-          val payload = readExact(in, tn - hn)
-          if (in.read() != '\r' || in.read() != '\n')
-            throw new java.io.IOException("HMSG payload missing CRLF")
-          return Msg(subject, reply, payload, parseHeaders(hdrBytes))
-        } else if (line == "PING") {
-          out.write("PONG\r\n".getBytes(UTF_8)); out.flush()
-        } else if (line.startsWith("-ERR")) {
-          throw new java.io.IOException(s"NATS error: $line")
-        } // +OK / INFO updates: skip
-      }
-      null // unreachable
+      var m: Option[Msg] = None
+      while (m.isEmpty) m = readFrame()
+      m.get
     }
 
-    /** nats.Request: publish with this client's inbox as the reply
-      * subject, await the single response (processor_request_reply.go's
-      * verb). ONE inbox subscription per client — requests on a client
-      * are serialized, so responses can't interleave, and the server's
-      * sub table stays O(clients), not O(requests). */
+    /** The next MSG within `ms`, None if none starts in time: the
+      * pull-consume idle wait (the JetStream fetch expiry). */
+    def nextMsg(ms: Int): Option[Msg] = synchronized(conn.await(ms)(readFrame()))
+
+    /** One protocol frame: the message it carries, or None after a
+      * PING (answered), +OK or INFO. */
+    private def readFrame(): Option[Msg] = {
+      val line = Wire.readLineCrlf(in, "NATS")
+      if (line.startsWith("MSG ")) {
+        val a = line.substring(4).trim.split("\\s+")
+        val (subject, reply, n) =
+          if (a.length == 4) (a(0), a(2), a(3).toInt) else (a(0), "", a(2).toInt)
+        val payload = Wire.readExact(in, n, "NATS")
+        if (in.read() != '\r' || in.read() != '\n')
+          throw new java.io.IOException("MSG payload missing CRLF")
+        Some(Msg(subject, reply, payload))
+      } else if (line.startsWith("HMSG ")) {
+        // HMSG <subject> <sid> [reply] <#hdr> <#total>
+        val a = line.substring(5).trim.split("\\s+")
+        val (subject, reply, hn, tn) =
+          if (a.length == 5) (a(0), a(2), a(3).toInt, a(4).toInt)
+          else (a(0), "", a(2).toInt, a(3).toInt)
+        val hdrBytes = Wire.readExact(in, hn, "NATS")
+        val payload = Wire.readExact(in, tn - hn, "NATS")
+        if (in.read() != '\r' || in.read() != '\n')
+          throw new java.io.IOException("HMSG payload missing CRLF")
+        Some(Msg(subject, reply, payload, parseHeaders(hdrBytes)))
+      } else if (line == "PING") {
+        out.write("PONG\r\n".getBytes(UTF_8)); out.flush()
+        None
+      } else if (line.startsWith("-ERR")) {
+        throw new java.io.IOException(s"NATS error: $line")
+      } else None // +OK / INFO updates
+    }
+
+    /** nats.Request: publish with a fresh reply subject, await that
+      * reply for at most [[Wire.TimeoutMs]] (processor_request_reply.go's
+      * verb). ONE wildcard inbox subscription per client keeps the
+      * server's sub table O(clients); each request's reply subject ends
+      * in its own token, so a reply that arrives after its request timed
+      * out is dropped, never handed to a later request. Requests on a
+      * client are serialized; any other message read meanwhile is
+      * dropped too, so a requesting client does not also consume. */
     private lazy val inbox: String = {
       val ib = s"_INBOX.graft.${inboxGen.incrementAndGet()}"
-      subscribe(ib)
+      subscribe(s"$ib.*")
       ib
     }
-    def request(subject: String, payload: Array[Byte]): Array[Byte] = {
-      publish(subject, payload, reply = inbox)
-      nextMsg().payload
-    }
+    private var token = 0L
+
+    def request(subject: String, payload: Array[Byte]): Array[Byte] =
+      requestH(subject, payload, Map.empty)
 
     /** request with headers on the outbound message */
-    def requestH(subject: String, payload: Array[Byte], headers: Map[String, String]): Array[Byte] = {
-      publishH(subject, payload, headers, reply = inbox)
-      nextMsg().payload
-    }
-
-    /** socket read deadline for nextMsg() — a timed-out read throws
-      * SocketTimeoutException at a FRAME BOUNDARY in the pull-consume
-      * idle-wait pattern (the JetStream fetch expiry); 0 = block forever */
-    def setReadTimeout(ms: Int): Unit = sock.setSoTimeout(ms)
+    def requestH(subject: String, payload: Array[Byte], headers: Map[String, String]): Array[Byte] =
+      synchronized {
+        token += 1
+        val reply = s"$inbox.$token"
+        publishH(subject, payload, headers, reply)
+        conn.await(Wire.TimeoutMs)(readFrame().filter(_.subject == reply)).getOrElse(
+          throw new java.io.IOException(
+            s"NATS request to '$subject' got no reply within ${Wire.TimeoutMs} ms")).payload
+      }
 
     /** nats.Flush: PING, then read until the server's PONG. The server
       * handles one connection's commands in order, so every SUB written
@@ -351,13 +314,13 @@ object Nats {
       * subscriptions): lines other than PING/PONG are skipped. */
     def flush(): Unit = synchronized {
       out.write("PING\r\n".getBytes(UTF_8)); out.flush()
-      var line = readLine(in)
+      var line = Wire.readLineCrlf(in, "NATS")
       while (line != "PONG") {
         if (line == "PING") { out.write("PONG\r\n".getBytes(UTF_8)); out.flush() }
-        line = readLine(in)
+        line = Wire.readLineCrlf(in, "NATS")
       }
     }
 
-    override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    override def close(): Unit = conn.close()
   }
 }

@@ -1,9 +1,9 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, OutputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
@@ -24,28 +24,6 @@ import scala.collection.mutable
   * deflate/snappy negotiation, delayed REQ timers (requeue is immediate).
   */
 object Nsq {
-
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"nsq stream closed at $off/$n bytes")
-      off += r
-    }
-    buf
-  }
-
-  private def readLine(in: InputStream): String = {
-    val sb = new java.lang.StringBuilder
-    var c = in.read()
-    while (c != '\n') {
-      if (c < 0) throw new EOFException("nsq stream closed mid-line")
-      sb.append(c.toChar)
-      c = in.read()
-    }
-    sb.toString
-  }
 
   final val FrameResponse = 0
   final val FrameError = 1
@@ -79,31 +57,13 @@ object Nsq {
     private val consumers = mutable.ArrayBuffer[Consumer]()
     private val inflight = mutable.HashMap[(Socket, String), (String, String, PendingMsg)]()
     private val idGen = new AtomicLong(0)
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
-    def start(): MiniNsq = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-nsq-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniNsq = { listener = Wire.listen("mini-nsq")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def address: String = s"127.0.0.1:$port"
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-      lock.synchronized { consumers.foreach(c => try c.sock.close() catch { case _: Throwable => () }) }
-    }
+    def stop(): Unit = listener.close()
 
     private def publish(topic: String, body: Array[Byte]): Unit = {
       val dests = lock.synchronized {
@@ -163,20 +123,19 @@ object Nsq {
     }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = new BufferedOutputStream(sock.getOutputStream)
       try {
-        val magic = readExact(in, 4)
+        val magic = Wire.readExact(in, 4, "nsq")
         if (!java.util.Arrays.equals(magic, "  V2".getBytes(UTF_8)))
           throw new java.io.IOException("bad NSQ magic")
         while (true) {
-          val line = readLine(in)
+          val line = Wire.readLineLf(in, "nsq", dropCr = false)
           val parts = line.split(" ")
           parts(0) match {
             case "IDENTIFY" =>
               val n = new DataInputStream(in).readInt()
-              readExact(in, n) // feature negotiation body ignored
+              Wire.readExact(in, n, "nsq") // feature negotiation body ignored
               out.synchronized { writeFrame(out, FrameResponse, "OK".getBytes(UTF_8)) }
             case "SUB" =>
               val (topic, channel) = (parts(1), parts(2))
@@ -197,7 +156,7 @@ object Nsq {
               mine.foreach { case (t, ch) => pump(t, ch) }
             case "PUB" =>
               val n = new DataInputStream(in).readInt()
-              val body = readExact(in, n)
+              val body = Wire.readExact(in, n, "nsq")
               publish(parts(1), body)
               out.synchronized { writeFrame(out, FrameResponse, "OK".getBytes(UTF_8)) }
             case "FIN" =>
@@ -221,13 +180,7 @@ object Nsq {
               }
           }
         }
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-      } finally {
-        dropConsumer(sock)
-        try sock.close() catch { case _: Throwable => () }
-      }
+      } finally dropConsumer(sock)
     }
   }
 
@@ -236,11 +189,9 @@ object Nsq {
   /** Blocking client: magic + IDENTIFY handshake, then publish or
     * subscribe/consume with FIN acks. One per partition in operators. */
   final class Client(address: String) extends AutoCloseable {
-    private val Array(h, p) = address.split(":")
-    private val sock = new Socket(h, p.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("nsq", address)
+    private val in = conn.in
+    private val out = conn.out
 
     locally {
       out.write("  V2".getBytes(UTF_8))
@@ -257,7 +208,7 @@ object Nsq {
       val d = new DataInputStream(in)
       val size = d.readInt()
       val ftype = d.readInt()
-      (ftype, readExact(in, size - 4))
+      (ftype, Wire.readExact(in, size - 4, "nsq"))
     }
 
     private def expectOk(): Unit = {
@@ -297,8 +248,8 @@ object Nsq {
             val r = new DataInputStream(new java.io.ByteArrayInputStream(data))
             r.readLong() // timestamp
             val attempts = r.readUnsignedShort()
-            val id = new String(readExact(r, 16), UTF_8)
-            val body = readExact(r, data.length - 26)
+            val id = new String(Wire.readExact(r, 16, "nsq"), UTF_8)
+            val body = Wire.readExact(r, data.length - 26, "nsq")
             return Delivery(id, attempts, body)
           case FrameResponse if new String(data, UTF_8) == "_heartbeat_" =>
             out.write("NOP\n".getBytes(UTF_8)); out.flush()
@@ -325,6 +276,6 @@ object Nsq {
     def requeue(id: String): Unit = synchronized {
       out.write(s"REQ $id 0\n".getBytes(UTF_8)); out.flush()
     }
-    override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    override def close(): Unit = conn.close()
   }
 }

@@ -1,6 +1,6 @@
 package graft.conn
 
-import java.net.{DatagramPacket, DatagramSocket, InetAddress, InetSocketAddress, ServerSocket, Socket}
+import java.net.{DatagramPacket, DatagramSocket, InetAddress, InetSocketAddress}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.concurrent.{TrieMap => CTrieMap}
@@ -184,44 +184,33 @@ object Observability {
     /** TCP ILP collector (the QuestDB ingest socket shape) */
     final class MiniIlp {
       private val pointBuf = new java.util.concurrent.ConcurrentLinkedQueue[Point]()
-      @volatile private var server: ServerSocket = _
-      def port: Int = server.getLocalPort
+      @volatile private var listener: Wire.Listener = _
+      def port: Int = listener.port
       def points: Vector[Point] = {
         import scala.jdk.CollectionConverters._
         pointBuf.iterator().asScala.toVector
       }
       def start(): this.type = {
-        server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-        val acceptor = new Thread(() => {
-          try while (true) {
-            val sock = server.accept()
-            val t = new Thread(() => {
-              try {
-                val br = new java.io.BufferedReader(
-                  new java.io.InputStreamReader(sock.getInputStream, UTF_8))
-                var line = br.readLine()
-                while (line != null) {
-                  if (line.nonEmpty) pointBuf.add(parse(line))
-                  line = br.readLine()
-                }
-              } catch { case _: Throwable => () } finally sock.close()
-            })
-            t.setDaemon(true); t.start()
-          } catch { case _: Throwable => () }
-        })
-        acceptor.setDaemon(true); acceptor.start()
+        listener = Wire.listen("mini-ilp") { sock =>
+          val br = new java.io.BufferedReader(
+            new java.io.InputStreamReader(sock.getInputStream, UTF_8))
+          var line = br.readLine()
+          while (line != null) {
+            if (line.nonEmpty) pointBuf.add(parse(line))
+            line = br.readLine()
+          }
+        }
         this
       }
-      def stop(): Unit = if (server != null) server.close()
+      def stop(): Unit = if (listener != null) listener.close()
     }
 
     final class Client(host: String, port: Int) extends AutoCloseable {
-      private val sock = new Socket(host, port)
-      sock.setTcpNoDelay(true)
-      private val out = new java.io.BufferedOutputStream(sock.getOutputStream)
+      private val conn = Wire.connect("ilp", host, port)
+      private val out = conn.out
       def write(p: Point): Unit = { out.write((render(p) + "\n").getBytes(UTF_8)) }
       def flush(): Unit = out.flush()
-      override def close(): Unit = { out.flush(); sock.close() }
+      override def close(): Unit = { out.flush(); conn.close() }
     }
   }
 

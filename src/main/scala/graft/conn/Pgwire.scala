@@ -1,7 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
@@ -49,9 +49,7 @@ object Pgwire {
 
   private def readMsg(in: DataInputStream): (Char, Array[Byte]) = {
     val tpe = in.readByte().toChar
-    val len = in.readInt()
-    val body = new Array[Byte](len - 4); in.readFully(body)
-    (tpe, body)
+    (tpe, Wire.readSized(in, in.readInt() - 4L, "pgwire"))
   }
 
   private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
@@ -63,8 +61,8 @@ object Pgwire {
     private val changes = new ArrayBuffer[Change]()
     private val hlcGen = new AtomicLong(1700000000000000000L)
     @volatile private var rangefeedEnabled = false
-    @volatile private var server: ServerSocket = _
-    def address: String = s"127.0.0.1:${server.getLocalPort}"
+    @volatile private var listener: Wire.Listener = _
+    def address: String = s"127.0.0.1:${listener.port}"
     def changeCount: Int = changes.synchronized(changes.size)
 
     private def nextHlc(): String = f"${hlcGen.addAndGet(1000)}%d.0000000000"
@@ -113,87 +111,74 @@ object Pgwire {
     private def serve(sock: Socket): Unit = {
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
       val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-      try {
-        // startup: untyped message (len + proto + params)
-        val len = in.readInt()
-        val startup = new Array[Byte](len - 4); in.readFully(startup)
-        require(((startup(0) & 0xff) << 8 | (startup(1) & 0xff)) == 3, "pgwire: protocol != 3")
-        val params = new String(startup.drop(4), UTF_8).split(0.toChar).filter(_.nonEmpty)
-        val claimedUser = params.sliding(2, 2).collectFirst {
-          case Array("user", u) => u }.getOrElse("")
-        // cleartext password auth (AuthenticationCleartextPassword = 3)
-        writeMsg(out, 'R', Array[Byte](0, 0, 0, 3))
-        val (pt, pbody) = readMsg(in)
-        require(pt == 'p', "pgwire: expected PasswordMessage")
-        val pw = new String(pbody, UTF_8).takeWhile(_ != 0)
-        if (claimedUser != user || pw != password) {
-          writeMsg(out, 'E', errorResponse("password authentication failed")); return
-        }
-        writeMsg(out, 'R', Array[Byte](0, 0, 0, 0)) // AuthenticationOk
-        writeMsg(out, 'S', cstr("server_version") ++ cstr("13.0 (mini-crdb)"))
-        writeMsg(out, 'K', Array[Byte](0, 0, 0, 1, 0, 0, 0, 1)) // BackendKeyData
-        writeMsg(out, 'Z', Array[Byte]('I'.toByte)) // ReadyForQuery idle
+      // startup: untyped message (len + proto + params)
+      val len = in.readInt()
+      val startup = new Array[Byte](len - 4); in.readFully(startup)
+      require(((startup(0) & 0xff) << 8 | (startup(1) & 0xff)) == 3, "pgwire: protocol != 3")
+      val params = new String(startup.drop(4), UTF_8).split(0.toChar).filter(_.nonEmpty)
+      val claimedUser = params.sliding(2, 2).collectFirst {
+        case Array("user", u) => u }.getOrElse("")
+      // cleartext password auth (AuthenticationCleartextPassword = 3)
+      writeMsg(out, 'R', Array[Byte](0, 0, 0, 3))
+      val (pt, pbody) = readMsg(in)
+      require(pt == 'p', "pgwire: expected PasswordMessage")
+      val pw = new String(pbody, UTF_8).takeWhile(_ != 0)
+      if (claimedUser != user || pw != password) {
+        writeMsg(out, 'E', errorResponse("password authentication failed")); return
+      }
+      writeMsg(out, 'R', Array[Byte](0, 0, 0, 0)) // AuthenticationOk
+      writeMsg(out, 'S', cstr("server_version") ++ cstr("13.0 (mini-crdb)"))
+      writeMsg(out, 'K', Array[Byte](0, 0, 0, 1, 0, 0, 0, 1)) // BackendKeyData
+      writeMsg(out, 'Z', Array[Byte]('I'.toByte)) // ReadyForQuery idle
 
-        while (true) {
-          val (t, body) = readMsg(in)
-          t match {
-            case 'Q' =>
-              val sql = new String(body, UTF_8).takeWhile(_ != 0)
-              sql match {
-                case setRe() =>
-                  rangefeedEnabled = true
-                  writeMsg(out, 'C', cstr("SET CLUSTER SETTING"))
+      while (true) {
+        val (t, body) = readMsg(in)
+        t match {
+          case 'Q' =>
+            val sql = new String(body, UTF_8).takeWhile(_ != 0)
+            sql match {
+              case setRe() =>
+                rangefeedEnabled = true
+                writeMsg(out, 'C', cstr("SET CLUSTER SETTING"))
+                writeMsg(out, 'Z', Array[Byte]('I'.toByte))
+              case insertRe(table, key, after) =>
+                putDirect(table, key.replace("''", "'"), after.replace("''", "'"))
+                writeMsg(out, 'C', cstr("INSERT 0 1"))
+                writeMsg(out, 'Z', Array[Byte]('I'.toByte))
+              case changefeedRe(tablesCsv, cursor) =>
+                if (!rangefeedEnabled) {
+                  writeMsg(out, 'E', errorResponse("rangefeeds require kv.rangefeed.enabled"))
                   writeMsg(out, 'Z', Array[Byte]('I'.toByte))
-                case insertRe(table, key, after) =>
-                  putDirect(table, key.replace("''", "'"), after.replace("''", "'"))
-                  writeMsg(out, 'C', cstr("INSERT 0 1"))
-                  writeMsg(out, 'Z', Array[Byte]('I'.toByte))
-                case changefeedRe(tablesCsv, cursor) =>
-                  if (!rangefeedEnabled) {
-                    writeMsg(out, 'E', errorResponse("rangefeeds require kv.rangefeed.enabled"))
-                    writeMsg(out, 'Z', Array[Byte]('I'.toByte))
-                  } else {
-                    val tables = tablesCsv.split(',').map(_.trim).toSet
-                    writeMsg(out, 'T', rowDescription(Seq("table", "key", "value")))
-                    // never-ending stream: backfill after the cursor, then live
-                    var idx = 0
-                    val minHlc = Option(cursor).getOrElse("")
-                    while (true) {
-                      val next = changes.synchronized {
-                        while (idx >= changes.size) changes.wait(1000)
-                        val c = changes(idx); idx += 1; c
-                      }
-                      if (tables.contains(next.table) &&
-                          (minHlc.isEmpty || next.hlc > minHlc)) {
-                        val value = s"""{"after": ${next.after}, "updated": "${next.hlc}"}"""
-                        writeMsg(out, 'D', dataRow(Seq(next.table, next.key, value)))
-                      }
+                } else {
+                  val tables = tablesCsv.split(',').map(_.trim).toSet
+                  writeMsg(out, 'T', rowDescription(Seq("table", "key", "value")))
+                  // never-ending stream: backfill after the cursor, then live
+                  var idx = 0
+                  val minHlc = Option(cursor).getOrElse("")
+                  while (true) {
+                    val next = changes.synchronized {
+                      while (idx >= changes.size) changes.wait(1000)
+                      val c = changes(idx); idx += 1; c
+                    }
+                    if (tables.contains(next.table) &&
+                        (minHlc.isEmpty || next.hlc > minHlc)) {
+                      val value = s"""{"after": ${next.after}, "updated": "${next.hlc}"}"""
+                      writeMsg(out, 'D', dataRow(Seq(next.table, next.key, value)))
                     }
                   }
-                case other =>
-                  writeMsg(out, 'E', errorResponse(s"unsupported statement: $other"))
-                  writeMsg(out, 'Z', Array[Byte]('I'.toByte))
-              }
-            case 'X' => return // Terminate
-            case _ => ()
-          }
+                }
+              case other =>
+                writeMsg(out, 'E', errorResponse(s"unsupported statement: $other"))
+                writeMsg(out, 'Z', Array[Byte]('I'.toByte))
+            }
+          case 'X' => return // Terminate
+          case _ => ()
         }
-      } catch { case _: EOFException | _: java.net.SocketException => () }
-      finally sock.close()
+      }
     }
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val th = new Thread(() => serve(sock)); th.setDaemon(true); th.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
-    def stop(): Unit = if (server != null) server.close()
+    def start(): this.type = { listener = Wire.listen("mini-pgwire")(serve); this }
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   // -------------------------------------------------------------- client
@@ -208,11 +193,9 @@ object Pgwire {
 
   final class Client(address: String, user: String, password: String,
                      database: String = "defaultdb") extends AutoCloseable {
-    private val Array(host, port) = address.split(':')
-    private val sock = new Socket(host, port.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+    private val conn = Wire.connect("pgwire", address)
+    private val in = conn.in
+    private val out = new DataOutputStream(conn.out)
 
     locally {
       writeMsg(out, 0.toChar, startupPayload(Map("user" -> user, "database" -> database)))
@@ -268,46 +251,27 @@ object Pgwire {
       }
     }
 
-    private var dead = false
-
-    /** next changefeed row, or None after `timeoutMs` idle. A timeout is
-      * only a clean "no row yet" BEFORE the first byte of a message; one
-      * that fires mid-frame (after the type byte, or inside the body)
-      * leaves the stream desynced — the connection is marked dead and
-      * every later call fails instead of silently misparsing. */
-    def nextRow(timeoutMs: Int = 5000): Option[FeedRow] = synchronized {
-      require(!dead, "connection desynced by a mid-frame timeout; reconnect and resume from the cursor")
-      sock.setSoTimeout(timeoutMs)
-      var midFrame = false
-      try {
-        val tpe = in.readByte().toChar // timeout here = idle, clean None
-        midFrame = true
-        val len = in.readInt()
-        val body = new Array[Byte](len - 4); in.readFully(body)
-        midFrame = false
-        (tpe, body) match {
-          case ('D', bodyBytes) =>
-            val b = java.nio.ByteBuffer.wrap(bodyBytes)
-            val n = b.getShort()
-            require(n == 3, s"changefeed row with $n columns")
-            def col(): String = {
-              val l = b.getInt(); val v = new Array[Byte](l); b.get(v); new String(v, UTF_8)
-            }
-            Some(FeedRow(col(), col(), col()))
-          case ('E', b) => throw new IllegalArgumentException(parseError(b))
-          case _ => None
-        }
-      } catch {
-        case e: java.net.SocketTimeoutException =>
-          if (midFrame) { dead = true; throw new IllegalStateException("timeout mid-frame: connection desynced", e) }
-          None
+    /** next changefeed row, or None after `timeoutMs` idle. A timeout
+      * inside a message kills the connection (see [[Wire]]): reconnect
+      * and resume from the cursor. */
+    def nextRow(timeoutMs: Int = Wire.TimeoutMs): Option[FeedRow] = synchronized {
+      conn.await(timeoutMs)(Some(readMsg(in))).flatMap {
+        case ('D', bodyBytes) =>
+          val b = java.nio.ByteBuffer.wrap(bodyBytes)
+          val n = b.getShort()
+          require(n == 3, s"changefeed row with $n columns")
+          def col(): String = {
+            val l = b.getInt(); val v = new Array[Byte](l); b.get(v); new String(v, UTF_8)
+          }
+          Some(FeedRow(col(), col(), col()))
+        case ('E', b) => throw new IllegalArgumentException(parseError(b))
+        case _ => None
       }
-      finally sock.setSoTimeout(0)
     }
 
     override def close(): Unit = {
       try writeMsg(out, 'X', Array.emptyByteArray) catch { case _: Throwable => () }
-      sock.close()
+      conn.close()
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, OutputStream}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.util.concurrent.atomic.AtomicLong
 
@@ -130,8 +130,7 @@ object Pulsar {
                          payload: Array[Byte])
 
   def readPulsarFrame(in: DataInputStream): Frame = {
-    val total = in.readInt()
-    val body = new Array[Byte](total); in.readFully(body)
+    val body = Wire.readSized(in, in.readInt(), "pulsar")
     val b = ByteBuffer.wrap(body)
     val cmdLen = b.getInt()
     val cmdB = new Array[Byte](cmdLen); b.get(cmdB)
@@ -177,8 +176,8 @@ object Pulsar {
     private val lock = new Object
     private val topics = mutable.Map[String, Topic]()
     private val subs = mutable.Map[(String, String), SubState]()
-    @volatile private var server: ServerSocket = _
-    def address: String = s"127.0.0.1:${server.getLocalPort}"
+    @volatile private var listener: Wire.Listener = _
+    def address: String = s"127.0.0.1:${listener.port}"
     def topicLen(t: String): Int = lock.synchronized(topics.get(t).map(_.msgs.size).getOrElse(0))
 
     private def topic(name: String): Topic = topics.getOrElseUpdate(name, new Topic)
@@ -281,12 +280,8 @@ object Pulsar {
         // quiet (end of a pipelined send window) — near-free when the
         // buffer is already empty
         if (in.available() == 0) out.synchronized(out.flush())
-      } catch { case _: EOFException | _: java.net.SocketException => () }
-      finally {
-        lock.synchronized {
-          subs.values.foreach(st => st.consumers.filterInPlace(_._1 ne out))
-        }
-        sock.close()
+      } finally lock.synchronized {
+        subs.values.foreach(st => st.consumers.filterInPlace(_._1 ne out))
       }
     }
 
@@ -299,33 +294,17 @@ object Pulsar {
       subs.keys.filter(_._1 == name).foreach { case (tn, sn) => pump(tn, sn) }
     }
 
-    def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          // per-message delivery frames are small; without this the
-          // round-robin fan-out across N sparse consumer connections
-          // hits Nagle + delayed-ACK stalls
-          sock.setTcpNoDelay(true)
-          val th = new Thread(() => serve(sock)); th.setDaemon(true); th.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
-      this
-    }
-    def stop(): Unit = if (server != null) server.close()
+    def start(): this.type = { listener = Wire.listen("mini-pulsar")(serve); this }
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   // -------------------------------------------------------------- client
   private val ids = new AtomicLong(0)
 
   final class Producer(address: String, topicName: String) extends AutoCloseable {
-    private val Array(host, port) = address.split(':')
-    private val sock = new Socket(host, port.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("pulsar", address)
+    private val in = conn.in
+    private val out = conn.out
     private val producerId = ids.incrementAndGet()
     private var seqGen = 0L
 
@@ -377,18 +356,16 @@ object Pulsar {
       sendAsync(payload, key, properties)
       flush()
     }
-    override def close(): Unit = sock.close()
+    override def close(): Unit = conn.close()
   }
 
   final case class Received(entryId: Long, payload: Array[Byte], partitionKey: String,
                             properties: Map[String, String])
 
   final class Consumer(address: String, topicName: String, subscription: String) extends AutoCloseable {
-    private val Array(host, port) = address.split(':')
-    private val sock = new Socket(host, port.toInt)
-    sock.setTcpNoDelay(true)
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("pulsar", address)
+    private val in = conn.in
+    private val out = conn.out
     private val consumerId = ids.incrementAndGet()
 
     locally {
@@ -411,11 +388,9 @@ object Pulsar {
     /** true once the broker signalled REACHED_END_OF_TOPIC */
     @volatile var endOfTopic: Boolean = false
 
-    def receive(timeoutMs: Int = 5000): Option[Received] = synchronized {
+    def receive(timeoutMs: Int = Wire.TimeoutMs): Option[Received] = synchronized {
       if (endOfTopic) return None
-      sock.setSoTimeout(timeoutMs)
-      try {
-        val f = readPulsarFrame(in)
+      conn.await(timeoutMs)(Some(readPulsarFrame(in))).flatMap { f =>
         num(f.cmd, "type") match {
           case t if t == T.Message =>
             val meta = f.meta.get
@@ -427,8 +402,7 @@ object Pulsar {
           case t if t == T.ReachedEndOfTopic => endOfTopic = true; None
           case other => sys.error(s"expected MESSAGE, got type $other")
         }
-      } catch { case _: java.net.SocketTimeoutException => None }
-      finally sock.setSoTimeout(0)
+      }
     }
 
     /** Buffered: acks ride the BufferedOutputStream and reach the wire
@@ -442,7 +416,7 @@ object Pulsar {
     }
     override def close(): Unit = {
       try synchronized(out.flush()) catch { case _: java.io.IOException => () }
-      sock.close()
+      conn.close()
     }
   }
 }

@@ -1,9 +1,8 @@
 package graft.conn
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
@@ -66,48 +65,25 @@ object Resp {
       out.write(s"*${xs.length}\r\n".getBytes(UTF_8)); xs.foreach(encode(out, _))
   }
 
-  private def readLine(in: InputStream): String = {
-    val sb = new java.lang.StringBuilder
-    var c = in.read()
-    while (c != '\r') {
-      if (c < 0) throw new EOFException("RESP stream closed mid-line")
-      sb.append(c.toChar)
-      c = in.read()
-    }
-    if (in.read() != '\n') throw new java.io.IOException("RESP line missing \\n after \\r")
-    sb.toString
-  }
-
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException(s"RESP stream closed at $off/$n bulk bytes")
-      off += r
-    }
-    buf
-  }
-
   /** Parse one RESP value (blocking). */
   def decode(in: InputStream): Value = {
     val t = in.read()
     if (t < 0) throw new EOFException("RESP stream closed")
     t.toChar match {
-      case '+' => Simple(readLine(in))
-      case '-' => Err(readLine(in))
-      case ':' => Int64(readLine(in).toLong)
+      case '+' => Simple(Wire.readLineCrlf(in, "RESP"))
+      case '-' => Err(Wire.readLineCrlf(in, "RESP"))
+      case ':' => Int64(Wire.readLineCrlf(in, "RESP").toLong)
       case '$' =>
-        val n = readLine(in).toInt
+        val n = Wire.readLineCrlf(in, "RESP").toInt
         if (n < 0) NullBulk
         else {
-          val d = readExact(in, n)
+          val d = Wire.readExact(in, n, "RESP")
           if (in.read() != '\r' || in.read() != '\n')
             throw new java.io.IOException("RESP bulk missing CRLF terminator")
           Bulk(d)
         }
       case '*' =>
-        val n = readLine(in).toInt
+        val n = Wire.readLineCrlf(in, "RESP").toInt
         if (n < 0) NullArr else Arr(Vector.fill(n)(decode(in)))
       case other => throw new java.io.IOException(s"unknown RESP type byte '$other'")
     }
@@ -118,10 +94,9 @@ object Resp {
   /** Blocking single-connection client (the per-partition unit in the
     * operator layer — ONE of these per partition, never per row). */
   final class Client(host: String, port: Int) extends AutoCloseable {
-    private val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
+    private val conn = Wire.connect("RESP", host, port)
+    private val in = conn.in
+    private val out = conn.out
 
     private def toBytes(a: Any): Array[Byte] = a match {
       case b: Array[Byte] => b
@@ -171,7 +146,7 @@ object Resp {
       encodeCommand(out, args.map(toBytes)); out.flush()
     }
 
-    override def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    override def close(): Unit = conn.close()
   }
 
   final class RedisErrorException(msg: String) extends RuntimeException(msg)
@@ -197,39 +172,16 @@ object Resp {
     private val subs = mutable.ArrayBuffer[(Socket, String)]() // live SUBSCRIBE conns
     private var lastStreamMs = 0L
     private var lastStreamSeq = 0L
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
     /** EVAL script cache: sha1-hex → compiled chunk (SCRIPT LOAD / EVALSHA). */
     private val scripts = mutable.HashMap[String, Lua.Chunk]()
 
-    def start(): MiniRedis = {
-      server = new ServerSocket(0, 128, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s))
-            th.setDaemon(true)
-            th.start()
-          } catch { case _: Throwable => () } // closed
-        }
-      }, "mini-redis-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): MiniRedis = { listener = Wire.listen("mini-redis")(serve); this }
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def url: String = s"redis://127.0.0.1:$port"
 
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-      // snapshot under the SUBS lock (the one connection-close mutates
-      // under) — iterating under store raced filterInPlace (observed CME)
-      val live = subs.synchronized(subs.toVector)
-      live.foreach { case (s, _) => try s.close() catch { case _: Throwable => () } }
-    }
+    def stop(): Unit = listener.close()
 
     private def k(b: Array[Byte]): String = new String(b, ISO_8859_1)
     private def kb(s: String): Array[Byte] = s.getBytes(ISO_8859_1)
@@ -675,7 +627,6 @@ object Resp {
     }
 
     private def serve(sock: Socket): Unit = {
-      sock.setTcpNoDelay(true)
       val in = new BufferedInputStream(sock.getInputStream)
       val out = new BufferedOutputStream(sock.getOutputStream)
       try {
@@ -704,13 +655,7 @@ object Resp {
             case other => throw new java.io.IOException(s"bad command frame: $other")
           }
         }
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-      } finally {
-        subs.synchronized { subs.filterInPlace(_._1 ne sock) }
-        try sock.close() catch { case _: Throwable => () }
-      }
+      } finally subs.synchronized { subs.filterInPlace(_._1 ne sock) }
     }
   }
 }

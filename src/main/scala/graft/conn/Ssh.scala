@@ -2,13 +2,12 @@ package graft.conn
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, IOException}
 import java.math.BigInteger
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardOpenOption}
 import java.security.{KeyFactory, KeyPair, KeyPairGenerator, MessageDigest, PrivateKey, PublicKey, SecureRandom, Signature}
 import java.security.interfaces.{EdECPublicKey, XECPublicKey}
 import java.security.spec.{EdECPoint, EdECPublicKeySpec, NamedParameterSpec, XECPublicKeySpec}
-import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
@@ -226,7 +225,6 @@ object Ssh {
   final class Transport(sock: Socket, isServer: Boolean,
                         hostKey: Option[KeyPair] = None,
                         expectedHostPub: Option[Array[Byte]] = None) {
-    sock.setTcpNoDelay(true)
     private val in = new BufferedInputStream(sock.getInputStream, 1 << 16)
     private val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
     private val rnd = new SecureRandom()
@@ -264,16 +262,7 @@ object Ssh {
       sendSeq = (sendSeq + 1) & 0xffffffffL
     }
 
-    private def readExact(n: Int): Array[Byte] = {
-      val buf = new Array[Byte](n)
-      var off = 0
-      while (off < n) {
-        val r = in.read(buf, off, n - off)
-        if (r < 0) throw new EOFException(s"ssh stream closed at $off/$n bytes")
-        off += r
-      }
-      buf
-    }
+    private def readExact(n: Int): Array[Byte] = Wire.readExact(in, n, "ssh")
 
     def readPacket(): Array[Byte] = synchronized {
       val payload =
@@ -390,16 +379,7 @@ object Ssh {
       // version exchange: one CR-LF line each way; a server may precede
       // its version with banner lines (RFC 4253 §4.2) — skip non-SSH lines
       out.write((Version + "\r\n").getBytes(UTF_8)); out.flush()
-      def readLine(): String = {
-        val sb = new java.lang.StringBuilder
-        var c = in.read()
-        while (c != '\n') {
-          if (c < 0) throw new EOFException("ssh stream closed during version exchange")
-          if (c != '\r') sb.append(c.toChar)
-          c = in.read()
-        }
-        sb.toString
-      }
+      def readLine(): String = Wire.readLineLf(in, "ssh", dropCr = true)
       var peerVersion = readLine()
       while (!peerVersion.startsWith("SSH-")) peerVersion = readLine()
       if (!peerVersion.startsWith("SSH-2.0-"))
@@ -789,8 +769,8 @@ object Ssh {
 
   /** Dial + handshake + auth + open the sftp subsystem. */
   def connect(address: String, creds: Creds, pinnedHostPub: Option[Array[Byte]] = None): SftpClient = {
-    val Array(h, p) = address.split(":")
-    val tr = new Transport(new Socket(h, p.toInt), isServer = false, expectedHostPub = pinnedHostPub)
+    val tr = new Transport(Wire.connect("ssh", address).sock, isServer = false,
+      expectedHostPub = pinnedHostPub)
     // userauth (RFC 4252)
     tr.sendPacket(new WireOut().putByte(MsgServiceRequest).putString("ssh-userauth").result())
     val acc = new WireIn(tr.readMsg())
@@ -849,102 +829,77 @@ object Ssh {
   final class MiniSshd(root: Path, user: String, password: String,
                        authorizedKey: Option[Array[Byte]] = None) {
     private val hostKeyPair = Curve.genEd25519()
-    private val running = new AtomicBoolean(true)
-    private var server: ServerSocket = _
+    private var listener: Wire.Listener = _
 
     def hostPubRaw: Array[Byte] = Curve.edPubRaw(hostKeyPair.getPublic)
 
-    def start(): MiniSshd = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        while (running.get()) {
-          try {
-            val s = server.accept()
-            val th = new Thread(() => serve(s)); th.setDaemon(true); th.start()
-          } catch { case _: Throwable => () }
-        }
-      }, "mini-sshd-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
-    def port: Int = server.getLocalPort
+    def start(): MiniSshd = { listener = Wire.listen("mini-sshd")(serve); this }
+    def port: Int = listener.port
     def address: String = s"127.0.0.1:$port"
-    def stop(): Unit = {
-      running.set(false)
-      try server.close() catch { case _: Throwable => () }
-    }
+    def stop(): Unit = listener.close()
 
     private def serve(sock: Socket): Unit = {
-      try {
-        val tr = new Transport(sock, isServer = true, hostKey = Some(hostKeyPair))
-        // userauth
-        val sreq = new WireIn(tr.readMsg())
-        if (sreq.getByte() != MsgServiceRequest || sreq.getString() != "ssh-userauth")
-          throw new IOException("expected ssh-userauth service request")
-        tr.sendPacket(new WireOut().putByte(MsgServiceAccept).putString("ssh-userauth").result())
-        var authed = false
-        while (!authed) {
-          val req = new WireIn(tr.readMsg())
-          if (req.getByte() != MsgUserauthRequest) throw new IOException("expected USERAUTH_REQUEST")
-          val u = req.getString(); req.getString() // service
-          val ok = req.getString() match {
-            case "password" =>
-              req.getBool()
-              val pw = req.getString()
-              u == user && pw == password
-            case "publickey" =>
-              val hasSig = req.getBool()
-              val alg = req.getString()
-              val blob = req.getStringBytes()
-              val keyOk = alg == HostKeyAlg && u == user &&
-                authorizedKey.exists(java.util.Arrays.equals(_, hostKeyFromBlob(blob)))
-              if (!hasSig) {
-                if (keyOk) {
-                  tr.sendPacket(new WireOut().putByte(MsgUserauthPkOk)
-                    .putString(alg).putString(blob).result())
-                }
-                false // either PK_OK sent (client re-requests with sig) or fall to failure
-              } else {
-                val sig = sigFromBlob(req.getStringBytes())
-                val signedOver = new WireOut().putString(tr.sessionId)
-                  .putByte(MsgUserauthRequest).putString(u).putString("ssh-connection")
-                  .putString("publickey").putBool(true).putString(alg).putString(blob).result()
-                keyOk && Curve.edVerify(Curve.edPubFromRaw(hostKeyFromBlob(blob)), signedOver, sig)
+      val tr = new Transport(sock, isServer = true, hostKey = Some(hostKeyPair))
+      // userauth
+      val sreq = new WireIn(tr.readMsg())
+      if (sreq.getByte() != MsgServiceRequest || sreq.getString() != "ssh-userauth")
+        throw new IOException("expected ssh-userauth service request")
+      tr.sendPacket(new WireOut().putByte(MsgServiceAccept).putString("ssh-userauth").result())
+      var authed = false
+      while (!authed) {
+        val req = new WireIn(tr.readMsg())
+        if (req.getByte() != MsgUserauthRequest) throw new IOException("expected USERAUTH_REQUEST")
+        val u = req.getString(); req.getString() // service
+        val ok = req.getString() match {
+          case "password" =>
+            req.getBool()
+            val pw = req.getString()
+            u == user && pw == password
+          case "publickey" =>
+            val hasSig = req.getBool()
+            val alg = req.getString()
+            val blob = req.getStringBytes()
+            val keyOk = alg == HostKeyAlg && u == user &&
+              authorizedKey.exists(java.util.Arrays.equals(_, hostKeyFromBlob(blob)))
+            if (!hasSig) {
+              if (keyOk) {
+                tr.sendPacket(new WireOut().putByte(MsgUserauthPkOk)
+                  .putString(alg).putString(blob).result())
               }
-            case _ => false
-          }
-          if (ok) { tr.sendPacket(Array(MsgUserauthSuccess.toByte)); authed = true }
-          else tr.sendPacket(new WireOut().putByte(MsgUserauthFailure)
-            .putNameList(Seq("password", "publickey")).putBool(false).result())
+              false // either PK_OK sent (client re-requests with sig) or fall to failure
+            } else {
+              val sig = sigFromBlob(req.getStringBytes())
+              val signedOver = new WireOut().putString(tr.sessionId)
+                .putByte(MsgUserauthRequest).putString(u).putString("ssh-connection")
+                .putString("publickey").putBool(true).putString(alg).putString(blob).result()
+              keyOk && Curve.edVerify(Curve.edPubFromRaw(hostKeyFromBlob(blob)), signedOver, sig)
+            }
+          case _ => false
         }
-        // session channel
-        val open = new WireIn(tr.readMsg())
-        if (open.getByte() != MsgChannelOpen || open.getString() != "session")
-          throw new IOException("expected session CHANNEL_OPEN")
-        val clientId = open.getU32()
-        val clientWindow = open.getU32()
-        val clientMax = open.getU32()
-        tr.sendPacket(new WireOut().putByte(MsgChannelOpenConfirmation)
-          .putU32(clientId).putU32(0L).putU32(ChannelWindow.toLong).putU32(ChannelMaxPacket.toLong).result())
-        val creq = new WireIn(tr.readMsg())
-        if (creq.getByte() != MsgChannelRequest) throw new IOException("expected CHANNEL_REQUEST")
-        creq.getU32()
-        val isSftp = creq.getString() == "subsystem" && { creq.getBool(); creq.getString() == "sftp" }
-        if (!isSftp) {
-          tr.sendPacket(new WireOut().putByte(MsgChannelFailure).putU32(clientId).result())
-          throw new IOException("only the sftp subsystem is served")
-        }
-        tr.sendPacket(new WireOut().putByte(MsgChannelSuccess).putU32(clientId).result())
-        val chan = new ChannelPipe(tr, 0, clientId, clientWindow, clientMax)
-        sftpServe(chan)
-      } catch {
-        case _: EOFException => ()
-        case _: java.net.SocketException => ()
-        case _: IOException => ()
-      } finally {
-        try sock.close() catch { case _: Throwable => () }
+        if (ok) { tr.sendPacket(Array(MsgUserauthSuccess.toByte)); authed = true }
+        else tr.sendPacket(new WireOut().putByte(MsgUserauthFailure)
+          .putNameList(Seq("password", "publickey")).putBool(false).result())
       }
+      // session channel
+      val open = new WireIn(tr.readMsg())
+      if (open.getByte() != MsgChannelOpen || open.getString() != "session")
+        throw new IOException("expected session CHANNEL_OPEN")
+      val clientId = open.getU32()
+      val clientWindow = open.getU32()
+      val clientMax = open.getU32()
+      tr.sendPacket(new WireOut().putByte(MsgChannelOpenConfirmation)
+        .putU32(clientId).putU32(0L).putU32(ChannelWindow.toLong).putU32(ChannelMaxPacket.toLong).result())
+      val creq = new WireIn(tr.readMsg())
+      if (creq.getByte() != MsgChannelRequest) throw new IOException("expected CHANNEL_REQUEST")
+      creq.getU32()
+      val isSftp = creq.getString() == "subsystem" && { creq.getBool(); creq.getString() == "sftp" }
+      if (!isSftp) {
+        tr.sendPacket(new WireOut().putByte(MsgChannelFailure).putU32(clientId).result())
+        throw new IOException("only the sftp subsystem is served")
+      }
+      tr.sendPacket(new WireOut().putByte(MsgChannelSuccess).putU32(clientId).result())
+      val chan = new ChannelPipe(tr, 0, clientId, clientWindow, clientMax)
+      sftpServe(chan)
     }
 
     // ---- SFTP v3 server

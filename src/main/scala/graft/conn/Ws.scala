@@ -1,7 +1,7 @@
 package graft.conn
 
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.Base64
@@ -54,17 +54,6 @@ object Ws {
   /** One parsed frame. */
   final case class Frame(opcode: Int, payload: Array[Byte], fin: Boolean)
 
-  private def readExact(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new java.io.EOFException(s"ws frame truncated at $off/$n")
-      off += r
-    }
-    buf
-  }
-
   /** Read one frame, unmasking if the mask bit is set (client→server
     * frames MUST be masked, RFC 6455 §5.3). Returns None on clean EOF
     * before a frame starts. */
@@ -77,11 +66,10 @@ object Ws {
     val opcode = b0 & 0x0f
     val masked = (b1 & 0x80) != 0
     var len: Long = b1 & 0x7f
-    if (len == 126) len = readExact(in, 2).foldLeft(0L)((a, b) => (a << 8) | (b & 0xff))
-    else if (len == 127) len = readExact(in, 8).foldLeft(0L)((a, b) => (a << 8) | (b & 0xff))
-    if (len > Int.MaxValue) throw new java.io.IOException(s"ws frame too large: $len")
-    val mask = if (masked) readExact(in, 4) else null
-    val payload = readExact(in, len.toInt)
+    if (len == 126) len = Wire.readExact(in, 2, "ws").foldLeft(0L)((a, b) => (a << 8) | (b & 0xff))
+    else if (len == 127) len = Wire.readExact(in, 8, "ws").foldLeft(0L)((a, b) => (a << 8) | (b & 0xff))
+    val mask = if (masked) Wire.readExact(in, 4, "ws") else null
+    val payload = Wire.readSized(in, len, "ws")
     if (masked) payload.indices.foreach(i => payload(i) = (payload(i) ^ mask(i % 4)).toByte)
     Some(Frame(opcode, payload, fin))
   }
@@ -93,10 +81,10 @@ object Ws {
     */
   final class Server(lines: Seq[String], expectOpen: Seq[String] = Nil,
                      collectFrom: Boolean = false) {
-    private val server = new ServerSocket(0, 16, InetAddress.getLoopbackAddress)
     val received = new LinkedBlockingQueue[String]()
+    private var listener: Wire.Listener = _
 
-    def port: Int = server.getLocalPort
+    def port: Int = listener.port
     def url: String = s"ws://127.0.0.1:$port/stream"
 
     private def handshake(in: InputStream, out: OutputStream): Unit = {
@@ -169,25 +157,11 @@ object Ws {
           case Some(_)                     => ()
         }
       }
-      sock.close()
     }
 
-    /** Accept loop on a daemon thread; one handler thread per client. */
-    def start(): this.type = {
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val h = new Thread(() => try serveOne(sock) catch { case _: Throwable => () })
-          h.setDaemon(true)
-          h.start()
-        } catch { case _: Throwable => () } // server closed
-      })
-      acceptor.setDaemon(true)
-      acceptor.start()
-      this
-    }
+    def start(): this.type = { listener = Wire.listen("ws")(serveOne); this }
 
-    def stop(): Unit = server.close()
+    def stop(): Unit = listener.close()
   }
 
   /** The `websocket` INPUT operator: JDK RFC 6455 client. Connects to

@@ -1,7 +1,7 @@
 package graft.conn
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -59,12 +59,8 @@ object Zmq {
 
   private def readFrame(in: DataInputStream): (Int, Array[Byte]) = {
     val flags = in.readByte() & 0xff
-    val size =
-      if ((flags & 0x02) != 0) {
-        val b = new Array[Byte](8); in.readFully(b); ByteBuffer.wrap(b).getLong.toInt
-      } else in.readByte() & 0xff
-    val body = new Array[Byte](size); in.readFully(body)
-    (flags, body)
+    val size = if ((flags & 0x02) != 0) in.readLong() else (in.readByte() & 0xff).toLong
+    (flags, Wire.readSized(in, size, "zmq"))
   }
 
   /** READY command: "READY" + (1-byte-len name, 4-byte-BE-len value)* */
@@ -98,10 +94,8 @@ object Zmq {
     "PUSH" -> "PULL", "PULL" -> "PUSH", "PUB" -> "SUB", "SUB" -> "PUB",
     "XPUB" -> "SUB", "XSUB" -> "PUB", "PAIR" -> "PAIR")
 
-  private def handshake(sock: Socket, myType: String, asServer: Boolean)
-      : (DataInputStream, java.io.OutputStream) = {
-    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    val out = new BufferedOutputStream(sock.getOutputStream)
+  private def handshake(in: DataInputStream, out: java.io.OutputStream, myType: String,
+                        asServer: Boolean): Unit = {
     out.write(greeting(asServer)); out.flush()
     readGreeting(in)
     writeFrame(out, readyCommand(myType), command = true); out.flush()
@@ -110,7 +104,21 @@ object Zmq {
     val peer = parseReady(body).getOrElse("Socket-Type", "")
     require(compatible.get(myType).contains(peer),
       s"zmtp: socket type $myType incompatible with peer $peer")
+  }
+
+  /** a fixture connection's streams, after the ZMTP handshake */
+  private def accepted(sock: Socket, myType: String): (DataInputStream, java.io.OutputStream) = {
+    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+    val out = new BufferedOutputStream(sock.getOutputStream)
+    handshake(in, out, myType, asServer = true)
     (in, out)
+  }
+
+  /** a client connection, after the ZMTP handshake */
+  private def dial(host: String, port: Int, myType: String): Wire.Conn = {
+    val conn = Wire.connect("zmq", host, port)
+    handshake(conn.in, conn.out, myType, asServer = false)
+    conn
   }
 
   // ------------------------------------------------------------- PULL/PUSH
@@ -118,50 +126,39 @@ object Zmq {
     * pushers into one collection queue */
   final class PullServer {
     private val msgQueue = new java.util.concurrent.LinkedBlockingQueue[Vector[Array[Byte]]]()
-    @volatile private var server: ServerSocket = _
-    def port: Int = server.getLocalPort
+    @volatile private var listener: Wire.Listener = _
+    def port: Int = listener.port
 
     def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val t = new Thread(() => {
-            try {
-              val (in, _) = handshake(sock, "PULL", asServer = true)
-              while (true) {
-                val parts = Vector.newBuilder[Array[Byte]]
-                var more = true
-                while (more) {
-                  val (flags, body) = readFrame(in)
-                  if ((flags & 0x04) == 0) { parts += body; more = (flags & 0x01) != 0 }
-                }
-                msgQueue.put(parts.result())
-              }
-            } catch { case _: Throwable => () } finally sock.close()
-          })
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
+      listener = Wire.listen("zmq-pull") { sock =>
+        val (in, _) = accepted(sock, "PULL")
+        while (true) {
+          val parts = Vector.newBuilder[Array[Byte]]
+          var more = true
+          while (more) {
+            val (flags, body) = readFrame(in)
+            if ((flags & 0x04) == 0) { parts += body; more = (flags & 0x01) != 0 }
+          }
+          msgQueue.put(parts.result())
+        }
+      }
       this
     }
-    def receive(timeoutMs: Long = 5000): Option[Vector[Array[Byte]]] =
+    def receive(timeoutMs: Long = Wire.TimeoutMs): Option[Vector[Array[Byte]]] =
       Option(msgQueue.poll(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-    def stop(): Unit = if (server != null) server.close()
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   final class PushClient(host: String, port: Int) extends AutoCloseable {
-    private val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
-    private val (_, out) = handshake(sock, "PUSH", asServer = false)
+    private val conn = dial(host, port, "PUSH")
+    private val out = conn.out
     def send(parts: Array[Byte]*): Unit = synchronized {
       parts.zipWithIndex.foreach { case (p, i) =>
         writeFrame(out, p, more = i < parts.size - 1)
       }
       out.flush()
     }
-    override def close(): Unit = { out.flush(); sock.close() }
+    override def close(): Unit = { out.flush(); conn.close() }
   }
 
   // -------------------------------------------------------------- PUB/SUB
@@ -173,8 +170,8 @@ object Zmq {
       val topics = ArrayBuffer[Array[Byte]]()
     }
     private val peers = ArrayBuffer[Peer]()
-    @volatile private var server: ServerSocket = _
-    def port: Int = server.getLocalPort
+    @volatile private var listener: Wire.Listener = _
+    def port: Int = listener.port
     def subscriberCount: Int = peers.synchronized(peers.size)
 
     /** Registered topic subscriptions across peers. A peer appears in
@@ -185,32 +182,23 @@ object Zmq {
     def subscriptionCount: Int = peers.synchronized(peers.map(_.topics.size).sum)
 
     def start(): this.type = {
-      server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (true) {
-          val sock = server.accept()
-          val t = new Thread(() => {
-            try {
-              val (in, out) = handshake(sock, "PUB", asServer = true)
-              val peer = new Peer(sock, out)
-              peers.synchronized(peers += peer)
-              while (true) { // subscription control messages
-                val (flags, body) = readFrame(in)
-                if ((flags & 0x04) == 0 && body.nonEmpty) peers.synchronized {
-                  if (body(0) == 1) peer.topics += body.drop(1)
-                  else if (body(0) == 0) {
-                    val topic = body.drop(1)
-                    peer.topics.filterInPlace(!_.sameElements(topic))
-                  }
-                }
+      listener = Wire.listen("zmq-pub") { sock =>
+        try {
+          val (in, out) = accepted(sock, "PUB")
+          val peer = new Peer(sock, out)
+          peers.synchronized(peers += peer)
+          while (true) { // subscription control messages
+            val (flags, body) = readFrame(in)
+            if ((flags & 0x04) == 0 && body.nonEmpty) peers.synchronized {
+              if (body(0) == 1) peer.topics += body.drop(1)
+              else if (body(0) == 0) {
+                val topic = body.drop(1)
+                peer.topics.filterInPlace(!_.sameElements(topic))
               }
-            } catch { case _: Throwable => () }
-            finally { peers.synchronized(peers.filterInPlace(_.sock ne sock)); sock.close() }
-          })
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable => () }
-      })
-      acceptor.setDaemon(true); acceptor.start()
+            }
+          }
+        } finally peers.synchronized(peers.filterInPlace(_.sock ne sock))
+      }
       this
     }
 
@@ -227,29 +215,28 @@ object Zmq {
         }
       }
     }
-    def stop(): Unit = if (server != null) server.close()
+    def stop(): Unit = if (listener != null) listener.close()
   }
 
   final class SubClient(host: String, port: Int, topics: Seq[String]) extends AutoCloseable {
-    private val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
-    private val (in, out) = handshake(sock, "SUB", asServer = false)
+    private val conn = dial(host, port, "SUB")
+    private val (in, out) = (conn.in, conn.out)
     locally {
       topics.foreach { t =>
         writeFrame(out, Array[Byte](1) ++ t.getBytes(UTF_8))
       }
       out.flush()
     }
-    def receive(timeoutMs: Int = 5000): Option[(String, Array[Byte])] = {
-      sock.setSoTimeout(timeoutMs)
-      try {
+    /** next (topic, payload), or None if none starts within `timeoutMs`;
+      * the two frames are one message, so a timeout between them kills
+      * the connection (see [[Wire]]) */
+    def receive(timeoutMs: Int = Wire.TimeoutMs): Option[(String, Array[Byte])] =
+      conn.await(timeoutMs) {
         val (f1, topic) = readFrame(in)
         require((f1 & 0x01) != 0, "zmtp sub: expected multipart topic frame")
         val (_, payload) = readFrame(in)
         Some((new String(topic, UTF_8), payload))
-      } catch { case _: java.net.SocketTimeoutException => None }
-      finally sock.setSoTimeout(0)
-    }
-    override def close(): Unit = sock.close()
+      }
+    override def close(): Unit = conn.close()
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.net.{DatagramPacket, DatagramSocket, InetAddress, ServerSocket, Socket}
+import java.net.{DatagramPacket, DatagramSocket, InetAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -32,26 +32,15 @@ final class SocketServerInput(network: String = "tcp") {
   require(network == "tcp" || network == "udp", s"socket network '$network' unsupported")
 
   private val queue = new ConcurrentLinkedQueue[String]()
-  @volatile private var tcpServer: ServerSocket = _
+  @volatile private var tcpServer: graft.conn.Wire.Listener = _
   @volatile private var udpServer: DatagramSocket = _
   @volatile private var running = true
 
-  def port: Int = if (network == "tcp") tcpServer.getLocalPort else udpServer.getLocalPort
+  def port: Int = if (network == "tcp") tcpServer.port else udpServer.getLocalPort
 
   def start(): this.type = {
-    if (network == "tcp") {
-      tcpServer = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
-      val acceptor = new Thread(() => {
-        try while (running) {
-          val sock = tcpServer.accept()
-          val reader = new Thread(() => readLines(sock))
-          reader.setDaemon(true)
-          reader.start()
-        } catch { case _: Throwable => () } // closed
-      })
-      acceptor.setDaemon(true)
-      acceptor.start()
-    } else {
+    if (network == "tcp") tcpServer = graft.conn.Wire.listen("socket-server")(readLines)
+    else {
       udpServer = new DatagramSocket(0, InetAddress.getLoopbackAddress)
       val pump = new Thread(() => {
         val buf = new Array[Byte](65536)
@@ -69,16 +58,13 @@ final class SocketServerInput(network: String = "tcp") {
   }
 
   private def readLines(sock: Socket): Unit = {
-    try {
-      val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(sock.getInputStream, UTF_8))
-      var line = in.readLine()
-      while (line != null) {
-        if (line.nonEmpty) queue.add(line)
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => () }
-    finally sock.close()
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(sock.getInputStream, UTF_8))
+    var line = in.readLine()
+    while (line != null) {
+      if (line.nonEmpty) queue.add(line)
+      line = in.readLine()
+    }
   }
 
   /** block until `n` messages arrived (the gates' barrier between the

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import graft.conn.Nats
+import graft.conn.{Nats, Wire}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** NATS core protocol: subject matching per the public spec, pub/sub
@@ -116,6 +116,40 @@ class NatsSpec extends AnyFunSuite {
           assert(new String(rep, UTF_8) == (i * 2).toString)
         }
       } finally client.close()
+    }
+  }
+
+  test("a request with no responder fails with a named timeout within the deadline") {
+    withServer { srv =>
+      val client = new Nats.Client(srv.url)
+      try {
+        val t0 = System.nanoTime()
+        val e = intercept[java.io.IOException](client.request("nobody.home", "x".getBytes(UTF_8)))
+        val ms = (System.nanoTime() - t0) / 1000000
+        assert(ms >= Wire.TimeoutMs - 100 && ms < Wire.TimeoutMs + 2000, s"gave up after $ms ms")
+        assert(e.getMessage.contains("'nobody.home'") && e.getMessage.contains(s"${Wire.TimeoutMs} ms"))
+      } finally client.close()
+    }
+  }
+
+  test("a reply that arrives after its request timed out is never handed to a later request") {
+    withServer { srv =>
+      val responder = new Nats.Client(srv.url)
+      val client = new Nats.Client(srv.url)
+      try {
+        responder.subscribe("svc.slow"); responder.subscribe("svc.fast"); responder.flush()
+        intercept[java.io.IOException](client.request("svc.slow", "1".getBytes(UTF_8)))
+        // answer the timed-out request now; the flush round trip puts the
+        // late reply on the client's socket ahead of the next request's
+        val slow = responder.nextMsg()
+        responder.publish(slow.reply, "late".getBytes(UTF_8)); responder.flush()
+        val fast = new Thread(() => {
+          val m = responder.nextMsg()
+          responder.publish(m.reply, "fast".getBytes(UTF_8))
+        })
+        fast.setDaemon(true); fast.start()
+        assert(new String(client.request("svc.fast", "2".getBytes(UTF_8)), UTF_8) == "fast")
+      } finally { client.close(); responder.close() }
     }
   }
 }
