@@ -183,8 +183,8 @@ object QueriesProc {
       val lines = t(s, dir, "nation")
         .select(concat_ws("|", col("n_nationkey"), col("n_name")))
         .as[String].collect().sorted
-      val server = graft.conn.Wire.listen("src-socket") { sock =>
-        val w = new java.io.PrintWriter(sock.getOutputStream)
+      val server = graft.conn.Wire.listen("src-socket") { c =>
+        val w = new java.io.PrintWriter(c.out)
         lines.foreach(w.println)
         w.flush()
         Thread.sleep(120000) // keep the connection open until query stop

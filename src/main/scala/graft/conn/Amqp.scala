@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, InputStream, OutputStream}
-import java.net.Socket
+import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
@@ -94,7 +93,7 @@ object Amqp {
     val d = new DataInputStream(in)
     val t = d.readUnsignedByte()
     val ch = d.readUnsignedShort()
-    val p = Wire.readSized(d, d.readInt(), "amqp")
+    val p = Wire.readExact(d, d.readInt(), "amqp")
     if (d.readUnsignedByte() != FrameEnd)
       throw new java.io.IOException("AMQP frame missing end octet 0xCE")
     Frame(t, ch, p)
@@ -115,13 +114,13 @@ object Amqp {
   /** Minimal AMQP 0-9-1 broker: default exchange, named queues, one
     * consumer per delivery, unacked-requeue on consumer death. */
   final class MiniAmqp {
-    private final case class Consumer(sock: Socket, out: OutputStream, channel: Int,
+    private final case class Consumer(conn: Wire.Conn, channel: Int,
                                       tag: String, queue: String)
     private val lock = new Object
     private val queues = mutable.LinkedHashMap[String, mutable.ArrayDeque[QMsg]]()
     private val consumers = mutable.ArrayBuffer[Consumer]()
     // delivery-tag → (consumer, message) for at-least-once requeue
-    private val unacked = mutable.HashMap[(Socket, Long), (String, QMsg)]()
+    private val unacked = mutable.HashMap[(Wire.Conn, Long), (String, QMsg)]()
     private var deliveryTag = 0L
     private var listener: Wire.Listener = _
 
@@ -151,7 +150,7 @@ object Amqp {
           else {
             val msg = q.get.removeHead()
             deliveryTag += 1
-            unacked((c.get.sock, deliveryTag)) = (queue, msg)
+            unacked((c.get.conn, deliveryTag)) = (queue, msg)
             Some((c.get, deliveryTag, msg))
           }
         }
@@ -162,7 +161,7 @@ object Amqp {
               // write through the SAME buffered stream (and lock) the
               // connection's serve thread uses for method replies —
               // deliveries and Consume-Ok/Declare-Ok must never interleave
-              val o = c.out
+              val o = c.conn.out
               o.synchronized {
                 // Basic.Deliver(60,60): tag, delivery-tag, redelivered,
                 // exchange, routing-key — then header + body frames
@@ -173,16 +172,16 @@ object Amqp {
                 writeFrame(o, Frame(FrameBody, c.channel, msg.body))
               }
             } catch {
-              case _: Throwable => dropConsumerConn(c.sock) // requeues
+              case _: Throwable => dropConsumerConn(c.conn) // requeues
             }
         }
       }
     }
 
-    private def dropConsumerConn(sock: Socket): Unit = {
+    private def dropConsumerConn(conn: Wire.Conn): Unit = {
       val requeue = lock.synchronized {
-        consumers.filterInPlace(_.sock ne sock)
-        val mine = unacked.keys.filter(_._1 eq sock).toVector
+        consumers.filterInPlace(_.conn ne conn)
+        val mine = unacked.keys.filter(_._1 eq conn).toVector
         val msgs = mine.map(unacked(_))
         mine.foreach(unacked.remove)
         // requeue at the FRONT in tag order (redelivery before new work)
@@ -194,9 +193,8 @@ object Amqp {
       requeue.foreach(pump)
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       // per-channel in-flight publish state: routing key → awaiting body
       val pendingPublish = mutable.HashMap[Int, (String, Long, java.io.ByteArrayOutputStream)]()
       try {
@@ -232,7 +230,7 @@ object Amqp {
                   out.synchronized {
                     writeFrame(out, Frame(FrameMethod, 0, method(10, 51, identity)))
                   }
-                  sock.close(); return
+                  return
                 case (20, 10) => // Channel.Open
                   out.synchronized {
                     writeFrame(out, Frame(FrameMethod, f.channel,
@@ -260,13 +258,13 @@ object Amqp {
                   r.short()
                   val qname = r.shortstr()
                   val tag0 = r.shortstr()
-                  val tag = if (tag0.isEmpty) s"ctag-${System.identityHashCode(sock)}" else tag0
+                  val tag = if (tag0.isEmpty) s"ctag-${System.identityHashCode(c)}" else tag0
                   out.synchronized {
                     writeFrame(out, Frame(FrameMethod, f.channel,
                       method(60, 21, _.shortstr(tag))))
                   }
                   lock.synchronized {
-                    consumers.append(Consumer(sock, out, f.channel, tag, qname))
+                    consumers.append(Consumer(c, f.channel, tag, qname))
                   }
                   pump(qname)
                 case (60, 80) => // Basic.Ack: delivery-tag, multiple
@@ -274,9 +272,9 @@ object Amqp {
                   val multiple = (r.octet() & 1) != 0
                   lock.synchronized {
                     if (multiple)
-                      unacked.keys.filter(k => (k._1 eq sock) && k._2 <= tag)
+                      unacked.keys.filter(k => (k._1 eq c) && k._2 <= tag)
                         .toVector.foreach(unacked.remove)
-                    else unacked.remove((sock, tag))
+                    else unacked.remove((c, tag))
                   }
                 case other =>
                   throw new java.io.IOException(s"unhandled AMQP method $other")
@@ -300,7 +298,7 @@ object Amqp {
             case other => throw new java.io.IOException(s"unexpected frame type $other")
           }
         }
-      } finally dropConsumerConn(sock)
+      } finally dropConsumerConn(c)
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.Socket
+import java.io.DataInputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -173,7 +172,7 @@ object Amqp1 {
     val channel = in.readShort() & 0xffff
     require(tpe == 0, s"amqp1: frame type $tpe unsupported")
     in.skipBytes(doff * 4 - 8)
-    val body = Wire.readSized(in, size.toLong - doff * 4, "amqp1")
+    val body = Wire.readExact(in, size.toLong - doff * 4, "amqp1")
     val dec = new Decoder(body)
     val perf = dec.read() match {
       case d: VDescribed => d
@@ -241,9 +240,8 @@ object Amqp1 {
 
     private def queue(n: String) = qLock.synchronized(queues.getOrElseUpdate(n, new ArrayBuffer[QMsg]()))
 
-    private def serve(sock: Socket): Unit = {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       val outLock = new Object // serve thread + dispatcher both write frames
       // per-link state on this connection (shared with the dispatcher
       // thread — guarded by qLock)

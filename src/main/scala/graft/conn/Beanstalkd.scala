@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream}
-import java.net.Socket
+import java.io.InputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
@@ -52,8 +51,8 @@ object Beanstalkd {
     }
     private val lock = new Object
     private val tubes = mutable.HashMap[String, Tube]()
-    // id → (job, deadlineMillis, owning socket)
-    private val reserved = mutable.HashMap[Long, (Job, Long, Socket)]()
+    // id → (job, deadlineMillis, owning connection)
+    private val reserved = mutable.HashMap[Long, (Job, Long, Wire.Conn)]()
     private val idGen = new AtomicLong(0)
     private val seqGen = new AtomicLong(0)
     private var listener: Wire.Listener = _
@@ -90,8 +89,8 @@ object Beanstalkd {
       woke
     }
 
-    private def releaseAllOf(sock: Socket): Unit = lock.synchronized {
-      val mine = reserved.collect { case (id, (j, _, s)) if s eq sock => (id, j) }
+    private def releaseAllOf(c: Wire.Conn): Unit = lock.synchronized {
+      val mine = reserved.collect { case (id, (j, _, s)) if s eq c => (id, j) }
       mine.foreach { case (id, j) =>
         reserved.remove(id)
         tube(j.tube).ready.add(j)
@@ -99,15 +98,14 @@ object Beanstalkd {
       if (mine.nonEmpty) lock.notifyAll()
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       var used = "default"
       val watched = mutable.LinkedHashSet("default")
       def reply(s: String): Unit = { out.write((s + "\r\n").getBytes(UTF_8)); out.flush() }
       try {
         while (true) {
-          val parts = Wire.readLineLf(in, "beanstalkd", dropCr = true).split(" ")
+          val parts = Wire.readLineLf(in, "beanstalkd").split(" ")
           parts(0) match {
             case "use" =>
               used = parts(1); reply(s"USING $used")
@@ -145,7 +143,7 @@ object Beanstalkd {
                   else {
                     val j = candidates.min(readyOrder)
                     tube(j.tube).ready.remove(j)
-                    reserved(j.id) = (j, System.currentTimeMillis() + j.ttrMillis, sock)
+                    reserved(j.id) = (j, System.currentTimeMillis() + j.ttrMillis, c)
                     Some(j)
                   }
                 }
@@ -215,7 +213,7 @@ object Beanstalkd {
               val id = parts(1).toLong
               val ok = lock.synchronized {
                 reserved.get(id) match {
-                  case Some((j, _, s)) if s eq sock =>
+                  case Some((j, _, s)) if s eq c =>
                     // touch grants a full TTR from now (beanstalkd protocol: "allow a worker
                     // to request more time to work on a job"), not a fixed window.
                     reserved(id) = (j, System.currentTimeMillis() + j.ttrMillis, s); true
@@ -224,12 +222,12 @@ object Beanstalkd {
               }
               reply(if (ok) "TOUCHED" else "NOT_FOUND")
             case "quit" =>
-              sock.close(); return
+              return
             case _ =>
               reply("UNKNOWN_COMMAND")
           }
         }
-      } finally releaseAllOf(sock)
+      } finally releaseAllOf(c)
     }
   }
 
@@ -245,7 +243,7 @@ object Beanstalkd {
     private def send(line: String): Unit = {
       out.write((line + "\r\n").getBytes(UTF_8)); out.flush()
     }
-    private def replyLine(): Array[String] = Wire.readLineLf(in, "beanstalkd", dropCr = true).split(" ")
+    private def replyLine(): Array[String] = Wire.readLineLf(in, "beanstalkd").split(" ")
 
     def use(tube: String): Unit = synchronized {
       send(s"use $tube")

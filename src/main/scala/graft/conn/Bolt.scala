@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.Socket
+import java.io.DataInputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -320,9 +319,8 @@ object Bolt {
       PStruct(Msg.Node, Vector(PInt(n.id), PList(Vector(PStr(n.label))),
         PMap(n.props.map { case (k, v) => k -> toP(v) })))
 
-    private def serve(sock: Socket): Unit = {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       val magic = new Array[Byte](4); in.readFully(magic)
       require(java.util.Arrays.equals(magic, Magic), "bolt: bad magic")
       val proposals = new Array[Byte](16); in.readFully(proposals)

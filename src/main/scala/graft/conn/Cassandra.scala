@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import java.net.Socket
+import java.io.{DataInputStream, DataOutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicInteger
@@ -254,9 +253,9 @@ object Cassandra {
     }
 
     def start(): this.type = { listener = Wire.listen("mini-cassandra")(serve); this }
-    private def serve(sock: Socket): Unit = {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+    private def serve(c: Wire.Conn): Unit = {
+      val in = c.in
+      val out = new DataOutputStream(c.out)
       while (true) {
         val (_, stream, opcode, body) = readFrame(in)
         val (respOp, respBody) = try handle(opcode, body)

@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.Socket
+import java.io.DataInputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -87,9 +86,8 @@ object Couchbase {
     def address: String = s"127.0.0.1:${listener.port}"
     def docCount: Int = docs.size
 
-    private def serve(sock: Socket): Unit = {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       var authed = false
       var bucketSelected = false
       def reply(req: Packet, status: Int, extras: Array[Byte] = Array.emptyByteArray,

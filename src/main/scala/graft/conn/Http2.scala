@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
-import java.net.Socket
+import java.io.{DataInputStream, EOFException}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.LinkedBlockingQueue
@@ -77,9 +76,8 @@ object Http2 {
   }
 
   /** shared connection half: frame pump + HPACK tables + stream registry */
-  sealed class Conn(sock: Socket, onNewStream: (Int, Conn) => Unit) {
-    private[Http2] val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    private[Http2] val out = new BufferedOutputStream(sock.getOutputStream)
+  sealed class Conn(wire: Wire.Conn, onNewStream: (Int, Conn) => Unit) {
+    private[Http2] val (in, out) = (wire.in, wire.out)
     private val encTable = new Hpack.DynamicTable()
     private val decTable = new Hpack.DynamicTable()
     private[Http2] val streams = new CTrieMap[Int, StreamIn]()
@@ -160,13 +158,13 @@ object Http2 {
         }
       } catch { case _: EOFException | _: java.net.SocketException => closed = true }
     }
-    def close(): Unit = { closed = true; try sock.close() catch { case _: Throwable => () } }
+    def close(): Unit = { closed = true; wire.close() }
   }
 
   // -------------------------------------------------------------- client
   final class ClientConn(host: String, port: Int) extends AutoCloseable {
     private val streamIds = new AtomicInteger(-1)
-    val conn: Conn = new Conn(Wire.connect("h2", host, port).sock, (_, _) => ())
+    val conn: Conn = new Conn(Wire.connect("h2", host, port), (_, _) => ())
 
     locally {
       conn.out.write(Preface)
@@ -196,8 +194,8 @@ object Http2 {
 
     def start(): this.type = { listener = Wire.listen("h2")(serve); this }
 
-    private def serve(sock: Socket): Unit = {
-      val conn: Conn = new Conn(sock, (sid, c) => {
+    private def serve(wire: Wire.Conn): Unit = {
+      val conn: Conn = new Conn(wire, (sid, c) => {
         val st = c.streams(sid)
         val th = new Thread(() => {
           try handler(st.awaitHeaders(0), sid, st, c)

@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import java.net.Socket
+import java.io.{DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.CRC32
 
@@ -562,11 +561,10 @@ object Kafka {
         throw new java.io.IOException(s"unhandled kafka api key $other")
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       while (true) {
-        val len = new DataInputStream(in).readInt()
+        val len = in.readInt()
         val req = new R(Wire.readExact(in, len, "kafka"))
         val apiKey = req.i16(); val apiVersion = req.i16()
         val corr = req.i32(); req.str() // client id
@@ -600,7 +598,7 @@ object Kafka {
       new DataOutputStream(out).writeInt(req.length)
       out.write(req)
       out.flush()
-      val len = new DataInputStream(in).readInt()
+      val len = in.readInt()
       val r = new R(Wire.readExact(in, len, "kafka"))
       val got = r.i32()
       require(got == corr, s"correlation id $got != $corr")

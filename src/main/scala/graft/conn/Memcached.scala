@@ -1,7 +1,5 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream}
-import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
@@ -48,9 +46,8 @@ object Memcached {
       else if (exptime <= 60L * 60 * 24 * 30) now() + exptime * 1000
       else exptime * 1000
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       def reply(s: String): Unit = { out.write((s + "\r\n").getBytes(UTF_8)); out.flush() }
       while (true) {
         val parts = Wire.readLineCrlf(in, "memcached").split(" ")
@@ -89,7 +86,7 @@ object Memcached {
             }
             reply(if (had) "DELETED" else "NOT_FOUND")
           case "version" => reply("VERSION mini-0.1")
-          case "quit" => sock.close(); return
+          case "quit" => return
           case other => reply("ERROR")
         }
       }

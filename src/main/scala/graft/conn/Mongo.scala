@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.Socket
+import java.io.DataInputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.concurrent.atomic.AtomicInteger
@@ -327,9 +326,8 @@ object Mongo {
 
     def start(): this.type = { listener = Wire.listen("mini-mongo")(serve); this }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       var replyId = 1000
       while (true) {
         val (reqId, body) = readFrame(in)

@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, EOFException, InputStream, OutputStream}
-import java.net.Socket
+import java.io.{EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
@@ -110,7 +109,7 @@ object Mqtt {
     * wildcards, PUBLISH QoS 0/1 (+PUBACK), retained messages,
     * PINGREQ/PINGRESP. Thread-per-connection, all daemon. */
   final class MiniMqtt {
-    private final case class Sub(sock: Socket, filter: String, qos: Int)
+    private final case class Sub(conn: Wire.Conn, filter: String, qos: Int)
     private val lock = new Object
     private val subs = mutable.ArrayBuffer[Sub]()
     private val retained = mutable.LinkedHashMap[String, Array[Byte]]()
@@ -123,9 +122,9 @@ object Mqtt {
 
     def stop(): Unit = listener.close()
 
-    private def sendPublish(sock: Socket, topic: String, payload: Array[Byte],
+    private def sendPublish(conn: Wire.Conn, topic: String, payload: Array[Byte],
                             qos: Int, retain: Boolean, pid: Int): Unit = {
-      val o = sock.getOutputStream
+      val o = conn.out
       o.synchronized {
         val bo = new java.io.ByteArrayOutputStream()
         bo.write(mqttString(topic))
@@ -143,15 +142,14 @@ object Mqtt {
       var pid = 1
       targets.foreach { s =>
         try {
-          sendPublish(s.sock, topic, payload, math.min(qos, s.qos), retain = false, pid)
+          sendPublish(s.conn, topic, payload, math.min(qos, s.qos), retain = false, pid)
           pid += 1
         } catch { case _: Throwable => () }
       }
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = sock.getOutputStream
+    private def serve(conn: Wire.Conn): Unit = {
+      val (in, out) = (conn.in, conn.out)
       try {
         // first packet MUST be CONNECT (spec §3.1)
         val c = readPacket(in)
@@ -192,7 +190,7 @@ object Mqtt {
                 granted.append(q.toByte)
               }
               lock.synchronized {
-                newSubs.foreach { case (f, q) => subs.append(Sub(sock, f, q)) }
+                newSubs.foreach { case (f, q) => subs.append(Sub(conn, f, q)) }
               }
               out.synchronized {
                 writePacket(out, 9, 0,
@@ -205,16 +203,16 @@ object Mqtt {
                 }
               }
               replay.foreach { case (t, v, q) =>
-                sendPublish(sock, t, v, q, retain = true, pid = 1)
+                sendPublish(conn, t, v, q, retain = true, pid = 1)
               }
             case 12 => // PINGREQ
               out.synchronized { writePacket(out, 13, 0, Array.emptyByteArray) }
-            case 14 => sock.close(); return // DISCONNECT
+            case 14 => return // DISCONNECT
             case 4 => () // PUBACK from a QoS-1 delivery to this subscriber
             case other => throw new java.io.IOException(s"unexpected packet type $other")
           }
         }
-      } finally lock.synchronized { subs.filterInPlace(s => s.sock ne sock) }
+      } finally lock.synchronized { subs.filterInPlace(s => s.conn ne conn) }
     }
   }
 

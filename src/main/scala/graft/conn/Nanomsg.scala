@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.Socket
+import java.io.DataInputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -28,27 +27,14 @@ object Nanomsg {
     Array[Byte](0x00, 'S'.toByte, 'P'.toByte, 0x00,
       ((protocol >> 8) & 0xff).toByte, (protocol & 0xff).toByte, 0x00, 0x00)
 
-  private def handshake(in: DataInputStream, out: java.io.OutputStream, myProtocol: Int): Unit = {
-    out.write(header(myProtocol)); out.flush()
-    val h = new Array[Byte](8); in.readFully(h)
+  /** `conn` (dialed or accepted) after the SP handshake */
+  private def handshake(conn: Wire.Conn, myProtocol: Int): Wire.Conn = {
+    conn.out.write(header(myProtocol)); conn.out.flush()
+    val h = new Array[Byte](8); conn.in.readFully(h)
     require(h(0) == 0 && h(1) == 'S' && h(2) == 'P' && h(3) == 0, "sp: bad connection header")
     val peer = ((h(4) & 0xff) << 8) | (h(5) & 0xff)
     require(peerOf.get(myProtocol).contains(peer),
       s"sp: protocol $myProtocol incompatible with peer $peer")
-  }
-
-  /** a fixture connection's streams, after the SP handshake */
-  private def accepted(sock: Socket, myProtocol: Int): (DataInputStream, java.io.OutputStream) = {
-    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    val out = new BufferedOutputStream(sock.getOutputStream)
-    handshake(in, out, myProtocol)
-    (in, out)
-  }
-
-  /** a client connection, after the SP handshake */
-  private def dial(host: String, port: Int, myProtocol: Int): Wire.Conn = {
-    val conn = Wire.connect("nanomsg", host, port)
-    handshake(conn.in, conn.out, myProtocol)
     conn
   }
 
@@ -57,7 +43,7 @@ object Nanomsg {
     out.write(body)
   }
   private def readMsg(in: DataInputStream): Array[Byte] =
-    Wire.readSized(in, in.readLong(), "nanomsg")
+    Wire.readExact(in, in.readLong(), "nanomsg")
 
   /** bound PULL fair-queuing messages from all connected PUSH peers —
     * the input's bind-side default (input.go). */
@@ -66,9 +52,9 @@ object Nanomsg {
     @volatile private var listener: Wire.Listener = _
     def port: Int = listener.port
     def start(): this.type = {
-      listener = Wire.listen("nanomsg-pull") { sock =>
-        val (in, _) = accepted(sock, Pull)
-        while (true) msgQueue.put(readMsg(in))
+      listener = Wire.listen("nanomsg-pull") { c =>
+        handshake(c, Pull)
+        while (true) msgQueue.put(readMsg(c.in))
       }
       this
     }
@@ -78,7 +64,7 @@ object Nanomsg {
   }
 
   final class PushClient(host: String, port: Int) extends AutoCloseable {
-    private val conn = dial(host, port, Push)
+    private val conn = handshake(Wire.connect("nanomsg", host, port), Push)
     private val out = conn.out
     def send(body: Array[Byte]): Unit = synchronized { writeMsg(out, body); out.flush() }
     override def close(): Unit = { out.flush(); conn.close() }
@@ -87,23 +73,23 @@ object Nanomsg {
   /** bound PUB broadcasting every message to every connected SUB (the
     * SP pub/sub contract: filtering is the receiver's job) */
   final class PubServer {
-    private val peers = new scala.collection.mutable.ArrayBuffer[(Socket, java.io.OutputStream)]()
+    private val peers = new scala.collection.mutable.ArrayBuffer[Wire.Conn]()
     @volatile private var listener: Wire.Listener = _
     def port: Int = listener.port
     def subscriberCount: Int = peers.synchronized(peers.size)
     def start(): this.type = {
-      listener = Wire.listen("nanomsg-pub") { sock =>
+      listener = Wire.listen("nanomsg-pub") { c =>
         try {
-          val (in, out) = accepted(sock, Pub)
-          peers.synchronized(peers += ((sock, out)))
-          while (in.read() >= 0) () // drain until close
-        } finally peers.synchronized(peers.filterInPlace(_._1 ne sock))
+          handshake(c, Pub)
+          peers.synchronized(peers += c)
+          while (c.in.read() >= 0) () // drain until close
+        } finally peers.synchronized(peers -= c)
       }
       this
     }
     def publish(body: Array[Byte]): Unit = peers.synchronized {
-      peers.foreach { case (_, out) =>
-        try { writeMsg(out, body); out.flush() } catch { case _: Throwable => () }
+      peers.foreach { c =>
+        try { writeMsg(c.out, body); c.out.flush() } catch { case _: Throwable => () }
       }
     }
     def stop(): Unit = if (listener != null) listener.close()
@@ -112,7 +98,7 @@ object Nanomsg {
   /** connecting SUB with receiver-side prefix filters (input.go:46
     * sub_filters; `""` subscribes to everything) */
   final class SubClient(host: String, port: Int, filters: Seq[String]) extends AutoCloseable {
-    private val conn = dial(host, port, Sub)
+    private val conn = handshake(Wire.connect("nanomsg", host, port), Sub)
     private val filterBytes = filters.map(_.getBytes(UTF_8))
 
     /** next message passing a filter, or None if none starts within

@@ -1,7 +1,5 @@
 package graft.conn
 
-import java.io.BufferedInputStream
-import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
@@ -69,7 +67,7 @@ object Nats {
   /** Minimal NATS server: CONNECT/PING/SUB/UNSUB/PUB with wildcard and
     * queue-group routing. Thread-per-connection, all daemon. */
   final class MiniNats {
-    private final case class Sub(sock: Socket, sid: String, filter: String, queue: String)
+    private final case class Sub(conn: Wire.Conn, sid: String, filter: String, queue: String)
     private val subsLock = new Object
     private val subs = mutable.ArrayBuffer[Sub]()
     private val rr = mutable.HashMap[String, Int]() // queue-group round-robin
@@ -98,7 +96,7 @@ object Nats {
       }
       targets.foreach { s =>
         try {
-          val o = s.sock.getOutputStream
+          val o = s.conn.out
           o.synchronized {
             val rp = if (reply.isEmpty) "" else s" $reply"
             if (headers.isEmpty) {
@@ -116,9 +114,8 @@ object Nats {
       }
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = sock.getOutputStream
+    private def serve(conn: Wire.Conn): Unit = {
+      val (in, out) = (conn.in, conn.out)
       // +OK acks are verbose-mode ONLY (nats protocol: the server confirms
       // operations only when the client CONNECTs with "verbose":true). Our
       // clients connect verbose:false and never read acks — an unsolicited
@@ -149,13 +146,13 @@ object Nats {
               val a = line.substring(4).trim.split("\\s+")
               val (filter, queue, sid) =
                 if (a.length == 3) (a(0), a(1), a(2)) else (a(0), "", a(1))
-              subsLock.synchronized { subs.append(Sub(sock, sid, filter, queue)) }
+              subsLock.synchronized { subs.append(Sub(conn, sid, filter, queue)) }
               if (verbose)
                 out.synchronized { out.write("+OK\r\n".getBytes(UTF_8)); out.flush() }
             case "UNSUB" =>
               val sid = line.substring(6).trim.split("\\s+")(0)
               subsLock.synchronized {
-                subs.filterInPlace(s => !(s.sock.eq(sock) && s.sid == sid))
+                subs.filterInPlace(s => !(s.conn.eq(conn) && s.sid == sid))
               }
             case "PUB" =>
               val a = line.substring(4).trim.split("\\s+")
@@ -183,7 +180,7 @@ object Nats {
               }
           }
         }
-      } finally subsLock.synchronized { subs.filterInPlace(s => s.sock ne sock) }
+      } finally subsLock.synchronized { subs.filterInPlace(s => s.conn ne conn) }
     }
   }
 

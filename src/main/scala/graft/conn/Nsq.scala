@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, OutputStream}
-import java.net.Socket
+import java.io.{DataInputStream, DataOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
@@ -45,7 +44,7 @@ object Nsq {
   /** Minimal nsqd: topics fan out to channels, channels split across
     * consumers, RDY flow control, FIN/REQ, requeue-on-death. */
   final class MiniNsq {
-    private final case class Consumer(sock: Socket, out: OutputStream,
+    private final case class Consumer(conn: Wire.Conn,
                                       topic: String, channel: String) {
       var rdy: Long = 0
     }
@@ -55,7 +54,7 @@ object Nsq {
     private val queues = mutable.LinkedHashMap[(String, String), mutable.ArrayDeque[PendingMsg]]()
     private val channelsOf = mutable.HashMap[String, mutable.LinkedHashSet[String]]()
     private val consumers = mutable.ArrayBuffer[Consumer]()
-    private val inflight = mutable.HashMap[(Socket, String), (String, String, PendingMsg)]()
+    private val inflight = mutable.HashMap[(Wire.Conn, String), (String, String, PendingMsg)]()
     private val idGen = new AtomicLong(0)
     private var listener: Wire.Listener = _
 
@@ -87,7 +86,7 @@ object Nsq {
           else {
             val m = q.get.removeHead()
             c.get.rdy -= 1
-            inflight((c.get.sock, m.id)) = (topic, channel, m)
+            inflight((c.get.conn, m.id)) = (topic, channel, m)
             Some((c.get, m))
           }
         }
@@ -101,16 +100,16 @@ object Nsq {
               d.writeShort(m.attempts)
               d.write(m.id.getBytes(UTF_8)) // 16 ascii-hex bytes
               d.write(m.body)
-              c.out.synchronized { writeFrame(c.out, FrameMessage, payload.toByteArray) }
-            } catch { case _: Throwable => dropConsumer(c.sock) }
+              c.conn.out.synchronized { writeFrame(c.conn.out, FrameMessage, payload.toByteArray) }
+            } catch { case _: Throwable => dropConsumer(c.conn) }
         }
       }
     }
 
-    private def dropConsumer(sock: Socket): Unit = {
+    private def dropConsumer(conn: Wire.Conn): Unit = {
       val requeued = lock.synchronized {
-        consumers.filterInPlace(_.sock ne sock)
-        val mine = inflight.keys.filter(_._1 eq sock).toVector
+        consumers.filterInPlace(_.conn ne conn)
+        val mine = inflight.keys.filter(_._1 eq conn).toVector
         val items = mine.map(inflight(_))
         mine.foreach(inflight.remove)
         items.foreach { case (t, ch, m) =>
@@ -122,19 +121,18 @@ object Nsq {
       requeued.foreach { case (t, ch) => pump(t, ch) }
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(conn: Wire.Conn): Unit = {
+      val (in, out) = (conn.in, conn.out)
       try {
         val magic = Wire.readExact(in, 4, "nsq")
         if (!java.util.Arrays.equals(magic, "  V2".getBytes(UTF_8)))
           throw new java.io.IOException("bad NSQ magic")
         while (true) {
-          val line = Wire.readLineLf(in, "nsq", dropCr = false)
+          val line = Wire.readLineLf(in, "nsq")
           val parts = line.split(" ")
           parts(0) match {
             case "IDENTIFY" =>
-              val n = new DataInputStream(in).readInt()
+              val n = in.readInt()
               Wire.readExact(in, n, "nsq") // feature negotiation body ignored
               out.synchronized { writeFrame(out, FrameResponse, "OK".getBytes(UTF_8)) }
             case "SUB" =>
@@ -142,28 +140,28 @@ object Nsq {
               lock.synchronized {
                 channelsOf.getOrElseUpdate(topic, mutable.LinkedHashSet[String]()).add(channel)
                 queues.getOrElseUpdate((topic, channel), mutable.ArrayDeque[PendingMsg]())
-                consumers.append(Consumer(sock, out, topic, channel))
+                consumers.append(Consumer(conn, topic, channel))
               }
               out.synchronized { writeFrame(out, FrameResponse, "OK".getBytes(UTF_8)) }
             case "RDY" =>
               val n = parts(1).toLong
               lock.synchronized {
-                consumers.find(_.sock eq sock).foreach(_.rdy = n)
+                consumers.find(_.conn eq conn).foreach(_.rdy = n)
               }
               val mine = lock.synchronized {
-                consumers.find(_.sock eq sock).map(c => (c.topic, c.channel))
+                consumers.find(_.conn eq conn).map(c => (c.topic, c.channel))
               }
               mine.foreach { case (t, ch) => pump(t, ch) }
             case "PUB" =>
-              val n = new DataInputStream(in).readInt()
+              val n = in.readInt()
               val body = Wire.readExact(in, n, "nsq")
               publish(parts(1), body)
               out.synchronized { writeFrame(out, FrameResponse, "OK".getBytes(UTF_8)) }
             case "FIN" =>
-              lock.synchronized { inflight.remove((sock, parts(1))); () }
+              lock.synchronized { inflight.remove((conn, parts(1))); () }
             case "REQ" =>
               val re = lock.synchronized {
-                inflight.remove((sock, parts(1))).map { case (t, ch, m) =>
+                inflight.remove((conn, parts(1))).map { case (t, ch, m) =>
                   queues.getOrElseUpdate((t, ch), mutable.ArrayDeque[PendingMsg]())
                     .prepend(m.copy(attempts = m.attempts + 1))
                   (t, ch)
@@ -173,14 +171,14 @@ object Nsq {
             case "NOP" => ()
             case "CLS" =>
               out.synchronized { writeFrame(out, FrameResponse, "CLOSE_WAIT".getBytes(UTF_8)) }
-              dropConsumer(sock); sock.close(); return
+              return
             case other =>
               out.synchronized {
                 writeFrame(out, FrameError, s"E_INVALID unknown command $other".getBytes(UTF_8))
               }
           }
         }
-      } finally dropConsumer(sock)
+      } finally dropConsumer(conn)
     }
   }
 
@@ -205,9 +203,8 @@ object Nsq {
     }
 
     private def readFrame(): (Int, Array[Byte]) = {
-      val d = new DataInputStream(in)
-      val size = d.readInt()
-      val ftype = d.readInt()
+      val size = in.readInt()
+      val ftype = in.readInt()
       (ftype, Wire.readExact(in, size - 4, "nsq"))
     }
 

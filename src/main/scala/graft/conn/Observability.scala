@@ -191,9 +191,8 @@ object Observability {
         pointBuf.iterator().asScala.toVector
       }
       def start(): this.type = {
-        listener = Wire.listen("mini-ilp") { sock =>
-          val br = new java.io.BufferedReader(
-            new java.io.InputStreamReader(sock.getInputStream, UTF_8))
+        listener = Wire.listen("mini-ilp") { c =>
+          val br = new java.io.BufferedReader(new java.io.InputStreamReader(c.in, UTF_8))
           var line = br.readLine()
           while (line != null) {
             if (line.nonEmpty) pointBuf.add(parse(line))

@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import java.net.Socket
+import java.io.{DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
@@ -49,7 +48,7 @@ object Pgwire {
 
   private def readMsg(in: DataInputStream): (Char, Array[Byte]) = {
     val tpe = in.readByte().toChar
-    (tpe, Wire.readSized(in, in.readInt() - 4L, "pgwire"))
+    (tpe, Wire.readExact(in, in.readInt() - 4L, "pgwire"))
   }
 
   private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
@@ -108,9 +107,9 @@ object Pgwire {
       b.toByteArray
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+    private def serve(c: Wire.Conn): Unit = {
+      val in = c.in
+      val out = new DataOutputStream(c.out)
       // startup: untyped message (len + proto + params)
       val len = in.readInt()
       val startup = new Array[Byte](len - 4); in.readFully(startup)

@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, OutputStream}
-import java.net.Socket
+import java.io.{BufferedOutputStream, DataInputStream, OutputStream}
 import java.nio.ByteBuffer
 import java.util.concurrent.atomic.AtomicLong
 
@@ -130,7 +129,7 @@ object Pulsar {
                          payload: Array[Byte])
 
   def readPulsarFrame(in: DataInputStream): Frame = {
-    val body = Wire.readSized(in, in.readInt(), "pulsar")
+    val body = Wire.readExact(in, in.readInt(), "pulsar")
     val b = ByteBuffer.wrap(body)
     val cmdLen = b.getInt()
     val cmdB = new Array[Byte](cmdLen); b.get(cmdB)
@@ -221,9 +220,8 @@ object Pulsar {
       }
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       val producers = mutable.Map[Long, String]() // producer_id -> topic
       val consumers = mutable.Map[Long, (String, String)]() // consumer_id -> (topic, sub)
       try while (true) {

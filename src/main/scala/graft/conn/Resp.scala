@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.Socket
+import java.io.{EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
 import scala.collection.mutable
@@ -169,7 +168,7 @@ object Resp {
   final class MiniRedis {
     private val store = mutable.HashMap[String, Stored]()
     private val expiry = mutable.HashMap[String, Long]() // absolute ms
-    private val subs = mutable.ArrayBuffer[(Socket, String)]() // live SUBSCRIBE conns
+    private val subs = mutable.ArrayBuffer[(Wire.Conn, String)]() // live SUBSCRIBE conns
     private var lastStreamMs = 0L
     private var lastStreamSeq = 0L
     private var listener: Wire.Listener = _
@@ -210,7 +209,7 @@ object Resp {
 
     private def wrongType() = Err("WRONGTYPE Operation against a key holding the wrong kind of value")
 
-    private def handle(cmd: String, a: Vector[Array[Byte]], sock: Socket, out: OutputStream): Value =
+    private def handle(cmd: String, a: Vector[Array[Byte]], out: OutputStream): Value =
       store.synchronized {
         cmd match {
           case "PING" => if (a.isEmpty) Simple("PONG") else Bulk(a(0))
@@ -480,7 +479,7 @@ object Resp {
               val targets = subs.filter(_._2 == chan)
               targets.foreach { case (s, _) =>
                 try {
-                  val o = s.getOutputStream
+                  val o = s.out
                   o.synchronized {
                     encode(o, Arr(Vector(bulk("message"), Bulk(kb(chan)), Bulk(a(1)))))
                     o.flush()
@@ -506,7 +505,7 @@ object Resp {
             val numKeys = k(a(1)).toInt
             if (numKeys < 0 || 2 + numKeys > a.length)
               return Err("ERR Number of keys can't be negative")
-            evalScript(chunk, a.slice(2, 2 + numKeys), a.drop(2 + numKeys), sock, out)
+            evalScript(chunk, a.slice(2, 2 + numKeys), a.drop(2 + numKeys), out)
           case "SCRIPT" =>
             k(a(0)).toUpperCase match {
               case "LOAD" =>
@@ -537,7 +536,7 @@ object Resp {
       * (truncated), string→bulk, false→null bulk, true→:1, table with
       * err/ok→error/status, table→array up to the first nil. */
     private def evalScript(chunk: Lua.Chunk, keys: Vector[Array[Byte]],
-                           argv: Vector[Array[Byte]], sock: Socket, out: OutputStream): Value = {
+                           argv: Vector[Array[Byte]], out: OutputStream): Value = {
       import Lua._
       def lstr(b: Array[Byte]): V = LStr(new String(b, ISO_8859_1))
       def respToLua(v: Value): V = v match {
@@ -580,7 +579,7 @@ object Resp {
           case other => throw new LuaError(LStr(
             s"Lua redis() command arguments must be strings or integers, got ${typeName(other)}"))
         }
-        handle(new String(cargs.head, ISO_8859_1).toUpperCase, cargs.drop(1), sock, out)
+        handle(new String(cargs.head, ISO_8859_1).toUpperCase, cargs.drop(1), out)
       }
       val redisT = new LTable
       redisT.set(LStr("call"), LBuiltin("redis.call", { args =>
@@ -626,9 +625,8 @@ object Resp {
       }
     }
 
-    private def serve(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serve(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       try {
         while (true) {
           decode(in) match {
@@ -640,22 +638,22 @@ object Resp {
                 // connection enters push mode: confirm each channel, then
                 // only PUBLISH traffic flows server→client
                 argv.drop(1).zipWithIndex.foreach { case (ch, i) =>
-                  subs.synchronized { subs.append((sock, new String(ch, ISO_8859_1))) }
+                  subs.synchronized { subs.append((c, new String(ch, ISO_8859_1))) }
                   out.synchronized {
                     encode(out, Arr(Vector(bulk("subscribe"), Bulk(ch), Int64(i + 1L))))
                     out.flush()
                   }
                 }
               } else {
-                val reply = handle(cmd, argv.drop(1), sock, out)
+                val reply = handle(cmd, argv.drop(1), out)
                 encode(out, reply)
                 out.flush()
-                if (cmd == "QUIT") { sock.close(); return }
+                if (cmd == "QUIT") return
               }
             case other => throw new java.io.IOException(s"bad command frame: $other")
           }
         }
-      } finally subs.synchronized { subs.filterInPlace(_._1 ne sock) }
+      } finally subs.synchronized { subs.filterInPlace(_._1 ne c) }
     }
   }
 }

@@ -1,8 +1,7 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, IOException}
+import java.io.{EOFException, IOException}
 import java.math.BigInteger
-import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardOpenOption}
 import java.security.{KeyFactory, KeyPair, KeyPairGenerator, MessageDigest, PrivateKey, PublicKey, SecureRandom, Signature}
@@ -212,7 +211,7 @@ object Ssh {
 
   // ----------------------------------------------------------- transport
 
-  /** RFC 4253 binary packet transport over a socket. Constructing it runs
+  /** RFC 4253 binary packet transport over a connection. Constructing it runs
     * the version exchange, KEXINIT negotiation (fixed single-algorithm
     * lists), the curve25519-sha256 exchange, and NEWKEYS; afterwards all
     * packets ride aes128-ctr + hmac-sha2-256 (encrypt-and-MAC over the
@@ -222,11 +221,10 @@ object Ssh {
     * @param expectedHostPub client role: pinned raw host public key
     *                        (None = accept, still signature-verified)
     */
-  final class Transport(sock: Socket, isServer: Boolean,
+  final class Transport(conn: Wire.Conn, isServer: Boolean,
                         hostKey: Option[KeyPair] = None,
                         expectedHostPub: Option[Array[Byte]] = None) {
-    private val in = new BufferedInputStream(sock.getInputStream, 1 << 16)
-    private val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
+    private val (in, out) = (conn.in, conn.out)
     private val rnd = new SecureRandom()
     private var sendSeq = 0L
     private var recvSeq = 0L
@@ -379,7 +377,7 @@ object Ssh {
       // version exchange: one CR-LF line each way; a server may precede
       // its version with banner lines (RFC 4253 §4.2) — skip non-SSH lines
       out.write((Version + "\r\n").getBytes(UTF_8)); out.flush()
-      def readLine(): String = Wire.readLineLf(in, "ssh", dropCr = true)
+      def readLine(): String = Wire.readLineLf(in, "ssh")
       var peerVersion = readLine()
       while (!peerVersion.startsWith("SSH-")) peerVersion = readLine()
       if (!peerVersion.startsWith("SSH-2.0-"))
@@ -433,7 +431,7 @@ object Ssh {
       }
     }
 
-    def close(): Unit = { try sock.close() catch { case _: Throwable => () } }
+    def close(): Unit = conn.close()
   }
 
   // -------------------------------------------------------- channel pipe
@@ -769,7 +767,7 @@ object Ssh {
 
   /** Dial + handshake + auth + open the sftp subsystem. */
   def connect(address: String, creds: Creds, pinnedHostPub: Option[Array[Byte]] = None): SftpClient = {
-    val tr = new Transport(Wire.connect("ssh", address).sock, isServer = false,
+    val tr = new Transport(Wire.connect("ssh", address), isServer = false,
       expectedHostPub = pinnedHostPub)
     // userauth (RFC 4252)
     tr.sendPacket(new WireOut().putByte(MsgServiceRequest).putString("ssh-userauth").result())
@@ -838,8 +836,13 @@ object Ssh {
     def address: String = s"127.0.0.1:$port"
     def stop(): Unit = listener.close()
 
-    private def serve(sock: Socket): Unit = {
-      val tr = new Transport(sock, isServer = true, hostKey = Some(hostKeyPair))
+    /** A refused client (wrong service, no sftp subsystem, bad packet)
+      * ends here with an IOException: the fixture hanging up, not a
+      * fault of its own. */
+    private def serve(c: Wire.Conn): Unit = try serveSession(c) catch { case _: IOException => () }
+
+    private def serveSession(c: Wire.Conn): Unit = {
+      val tr = new Transport(c, isServer = true, hostKey = Some(hostKeyPair))
       // userauth
       val sreq = new WireIn(tr.readMsg())
       if (sreq.getByte() != MsgServiceRequest || sreq.getString() != "ssh-userauth")

@@ -1,7 +1,7 @@
 package graft.conn
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException, FilterInputStream, IOException, InputStream}
-import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
+import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket, SocketException, SocketTimeoutException}
 import java.util.concurrent.ConcurrentHashMap
 
 /** The socket layer under every connector client and `Mini*` fixture:
@@ -23,9 +23,10 @@ import java.util.concurrent.ConcurrentHashMap
   *    `nextMsg` outside `request`) block with no deadline by design: a
   *    subscriber idles until the broker pushes, and a dead broker shows
   *    as a closed socket, not as a quiet one.
-  *  - A length read off the wire passes [[readSized]] before anything is
-  *    allocated: a negative length, or one above `Int.MaxValue`, is an
-  *    IOException rather than a wrapped size.
+  *  - Every length read off the wire reaches [[readExact]], which checks
+  *    it before allocating: a negative length, or one above
+  *    `Int.MaxValue`, is an IOException naming the connector rather than
+  *    a `NegativeArraySizeException` or a wrapped size.
   */
 object Wire {
 
@@ -44,20 +45,23 @@ object Wire {
     * every connection still open, so a stopped fixture drops its
     * clients the way a stopped broker would. */
   final class Listener private[Wire] (server: ServerSocket) extends AutoCloseable {
-    private[Wire] val open = ConcurrentHashMap.newKeySet[Socket]()
+    private[Wire] val open = ConcurrentHashMap.newKeySet[Conn]()
     def port: Int = server.getLocalPort
     override def close(): Unit = {
       quietly(server.close())
-      open.forEach(s => quietly(s.close()))
+      open.forEach(_.close())
     }
   }
 
   /** Listen on an ephemeral loopback port. A daemon thread accepts, and
     * each connection runs `serve` on its own daemon thread with
     * `TCP_NODELAY` set (small frames otherwise stall on Nagle plus
-    * delayed ACKs); the socket is closed when `serve` returns or throws.
-    * The port is bound when this returns. */
-  def listen(name: String)(serve: Socket => Unit): Listener = {
+    * delayed ACKs); the connection is closed when `serve` returns or
+    * throws. A peer that leaves (EOF, reset, closed socket) ends `serve`
+    * quietly; any other error reaches the thread's uncaught-exception
+    * handler, so a fixture bug is not mistaken for a hang-up. The port
+    * is bound when this returns. */
+  def listen(name: String)(serve: Conn => Unit): Listener = {
     val server = new ServerSocket(0, 128, InetAddress.getLoopbackAddress)
     val l = new Listener(server)
     daemon(s"$name-accept") {
@@ -65,10 +69,11 @@ object Wire {
         try {
           val sock = server.accept()
           sock.setTcpNoDelay(true)
-          l.open.add(sock)
+          val c = new Conn(name, sock)
+          l.open.add(c)
           daemon(s"$name-conn") {
-            try serve(sock) catch { case _: Throwable => () }
-            finally { l.open.remove(sock); quietly(sock.close()) }
+            try serve(c) catch { case _: EOFException | _: SocketException => () }
+            finally { l.open.remove(c); c.close() }
           }
         } catch { case _: IOException => () }
       }
@@ -97,9 +102,9 @@ object Wire {
     connect(who, address.substring(0, i), address.substring(i + 1).toInt)
   }
 
-  /** One client connection: buffered streams over the socket, and the
-    * frame-boundary wait. */
-  final class Conn private[Wire] (val who: String, val sock: Socket) extends AutoCloseable {
+  /** One connection, dialed or accepted: buffered streams over the
+    * socket, and the frame-boundary wait. */
+  final class Conn private[Wire] (val who: String, sock: Socket) extends AutoCloseable {
     @volatile private var dead: IOException = _
     private def checkAlive(): Unit =
       if (dead != null) throw new IOException(s"$who: connection is dead: ${dead.getMessage}", dead)
@@ -152,23 +157,19 @@ object Wire {
 
   // ------------------------------------------------------------- reads
 
-  /** Exactly `n` bytes, or EOFException naming `who`. */
-  def readExact(in: InputStream, n: Int, who: String): Array[Byte] = {
-    val buf = new Array[Byte](n)
+  /** Exactly `n` bytes, or EOFException naming `who`. `n` is usually a
+    * length read off the wire, so one below 0 or above `Int.MaxValue` is
+    * an IOException naming `who`, raised before allocating. */
+  def readExact(in: InputStream, n: Long, who: String): Array[Byte] = {
+    if (n < 0 || n > Int.MaxValue) throw new IOException(s"$who: frame length $n out of range")
+    val buf = new Array[Byte](n.toInt)
     var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
+    while (off < buf.length) {
+      val r = in.read(buf, off, buf.length - off)
       if (r < 0) throw new EOFException(s"$who stream closed at $off/$n bytes")
       off += r
     }
     buf
-  }
-
-  /** A body whose length `len` was read off the wire: a negative length
-    * or one above `Int.MaxValue` is rejected before allocating. */
-  def readSized(in: InputStream, len: Long, who: String): Array[Byte] = {
-    if (len < 0 || len > Int.MaxValue) throw new IOException(s"$who: frame length $len out of range")
-    readExact(in, len.toInt, who)
   }
 
   /** A `\r\n`-terminated line (NATS, RESP, memcached); a `\r` not
@@ -185,14 +186,14 @@ object Wire {
     sb.toString
   }
 
-  /** A `\n`-terminated line. `dropCr` removes every `\r` (beanstalkd, SSH
-    * version lines); without it a `\r` stays in the line (NSQ). */
-  def readLineLf(in: InputStream, who: String, dropCr: Boolean): String = {
+  /** A `\n`-terminated line with every `\r` dropped (beanstalkd, NSQ,
+    * SSH version lines). */
+  def readLineLf(in: InputStream, who: String): String = {
     val sb = new java.lang.StringBuilder
     var c = in.read()
     while (c != '\n') {
       if (c < 0) throw new EOFException(s"$who stream closed mid-line")
-      if (!dropCr || c != '\r') sb.append(c.toChar)
+      if (c != '\r') sb.append(c.toChar)
       c = in.read()
     }
     sb.toString

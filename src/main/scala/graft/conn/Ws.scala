@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import java.net.Socket
+import java.io.{InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.Base64
@@ -69,7 +68,7 @@ object Ws {
     if (len == 126) len = Wire.readExact(in, 2, "ws").foldLeft(0L)((a, b) => (a << 8) | (b & 0xff))
     else if (len == 127) len = Wire.readExact(in, 8, "ws").foldLeft(0L)((a, b) => (a << 8) | (b & 0xff))
     val mask = if (masked) Wire.readExact(in, 4, "ws") else null
-    val payload = Wire.readSized(in, len, "ws")
+    val payload = Wire.readExact(in, len, "ws")
     if (masked) payload.indices.foreach(i => payload(i) = (payload(i) ^ mask(i % 4)).toByte)
     Some(Frame(opcode, payload, fin))
   }
@@ -114,9 +113,8 @@ object Ws {
       out.flush()
     }
 
-    private def serveOne(sock: Socket): Unit = {
-      val in = new BufferedInputStream(sock.getInputStream)
-      val out = new BufferedOutputStream(sock.getOutputStream)
+    private def serveOne(c: Wire.Conn): Unit = {
+      val (in, out) = (c.in, c.out)
       handshake(in, out)
       // open messages arrive as masked client text frames
       val seenOpen = ArrayBuffer.empty[String]

@@ -1,7 +1,6 @@
 package graft.conn
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.Socket
+import java.io.DataInputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -60,7 +59,7 @@ object Zmq {
   private def readFrame(in: DataInputStream): (Int, Array[Byte]) = {
     val flags = in.readByte() & 0xff
     val size = if ((flags & 0x02) != 0) in.readLong() else (in.readByte() & 0xff).toLong
-    (flags, Wire.readSized(in, size, "zmq"))
+    (flags, Wire.readExact(in, size, "zmq"))
   }
 
   /** READY command: "READY" + (1-byte-len name, 4-byte-BE-len value)* */
@@ -94,8 +93,9 @@ object Zmq {
     "PUSH" -> "PULL", "PULL" -> "PUSH", "PUB" -> "SUB", "SUB" -> "PUB",
     "XPUB" -> "SUB", "XSUB" -> "PUB", "PAIR" -> "PAIR")
 
-  private def handshake(in: DataInputStream, out: java.io.OutputStream, myType: String,
-                        asServer: Boolean): Unit = {
+  /** `conn` (dialed or accepted) after the ZMTP handshake */
+  private def handshake(conn: Wire.Conn, myType: String, asServer: Boolean): Wire.Conn = {
+    val (in, out) = (conn.in, conn.out)
     out.write(greeting(asServer)); out.flush()
     readGreeting(in)
     writeFrame(out, readyCommand(myType), command = true); out.flush()
@@ -104,20 +104,6 @@ object Zmq {
     val peer = parseReady(body).getOrElse("Socket-Type", "")
     require(compatible.get(myType).contains(peer),
       s"zmtp: socket type $myType incompatible with peer $peer")
-  }
-
-  /** a fixture connection's streams, after the ZMTP handshake */
-  private def accepted(sock: Socket, myType: String): (DataInputStream, java.io.OutputStream) = {
-    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    val out = new BufferedOutputStream(sock.getOutputStream)
-    handshake(in, out, myType, asServer = true)
-    (in, out)
-  }
-
-  /** a client connection, after the ZMTP handshake */
-  private def dial(host: String, port: Int, myType: String): Wire.Conn = {
-    val conn = Wire.connect("zmq", host, port)
-    handshake(conn.in, conn.out, myType, asServer = false)
     conn
   }
 
@@ -130,8 +116,8 @@ object Zmq {
     def port: Int = listener.port
 
     def start(): this.type = {
-      listener = Wire.listen("zmq-pull") { sock =>
-        val (in, _) = accepted(sock, "PULL")
+      listener = Wire.listen("zmq-pull") { c =>
+        val in = handshake(c, "PULL", asServer = true).in
         while (true) {
           val parts = Vector.newBuilder[Array[Byte]]
           var more = true
@@ -150,7 +136,7 @@ object Zmq {
   }
 
   final class PushClient(host: String, port: Int) extends AutoCloseable {
-    private val conn = dial(host, port, "PUSH")
+    private val conn = handshake(Wire.connect("zmq", host, port), "PUSH", asServer = false)
     private val out = conn.out
     def send(parts: Array[Byte]*): Unit = synchronized {
       parts.zipWithIndex.foreach { case (p, i) =>
@@ -166,7 +152,7 @@ object Zmq {
     * 0x00+topic) with publisher-side prefix filtering — the XPUB
     * contract the NULL-mechanism SUB speaks */
   final class PubServer {
-    private final class Peer(val sock: Socket, val out: java.io.OutputStream) {
+    private final class Peer(val conn: Wire.Conn) {
       val topics = ArrayBuffer[Array[Byte]]()
     }
     private val peers = ArrayBuffer[Peer]()
@@ -182,10 +168,10 @@ object Zmq {
     def subscriptionCount: Int = peers.synchronized(peers.map(_.topics.size).sum)
 
     def start(): this.type = {
-      listener = Wire.listen("zmq-pub") { sock =>
+      listener = Wire.listen("zmq-pub") { c =>
+        val peer = new Peer(c)
         try {
-          val (in, out) = accepted(sock, "PUB")
-          val peer = new Peer(sock, out)
+          val in = handshake(c, "PUB", asServer = true).in
           peers.synchronized(peers += peer)
           while (true) { // subscription control messages
             val (flags, body) = readFrame(in)
@@ -197,7 +183,7 @@ object Zmq {
               }
             }
           }
-        } finally peers.synchronized(peers.filterInPlace(_.sock ne sock))
+        } finally peers.synchronized(peers -= peer)
       }
       this
     }
@@ -208,9 +194,9 @@ object Zmq {
           java.util.Arrays.equals(t, topic.take(t.length)))
         if (matches) {
           try {
-            writeFrame(p.out, topic, more = true)
-            writeFrame(p.out, payload)
-            p.out.flush()
+            writeFrame(p.conn.out, topic, more = true)
+            writeFrame(p.conn.out, payload)
+            p.conn.out.flush()
           } catch { case _: Throwable => () }
         }
       }
@@ -219,7 +205,7 @@ object Zmq {
   }
 
   final class SubClient(host: String, port: Int, topics: Seq[String]) extends AutoCloseable {
-    private val conn = dial(host, port, "SUB")
+    private val conn = handshake(Wire.connect("zmq", host, port), "SUB", asServer = false)
     private val (in, out) = (conn.in, conn.out)
     locally {
       topics.foreach { t =>

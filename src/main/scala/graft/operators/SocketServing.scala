@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.net.{DatagramPacket, DatagramSocket, InetAddress, Socket}
+import java.net.{DatagramPacket, DatagramSocket, InetAddress}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -57,9 +57,8 @@ final class SocketServerInput(network: String = "tcp") {
     this
   }
 
-  private def readLines(sock: Socket): Unit = {
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(sock.getInputStream, UTF_8))
+  private def readLines(c: graft.conn.Wire.Conn): Unit = {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(c.in, UTF_8))
     var line = in.readLine()
     while (line != null) {
       if (line.nonEmpty) queue.add(line)

@@ -23,10 +23,14 @@ class WireSpec extends AnyFunSuite {
     assert(Wire.readLineCrlf(in("PING\r\nnext"), "NATS") == "PING")
     val bare = intercept[IOException](Wire.readLineCrlf(in("PI\rNG\r\n"), "RESP"))
     assert(bare.getMessage.contains("RESP"))
-    assert(Wire.readLineLf(in("USING a\r\n"), "beanstalkd", dropCr = true) == "USING a")
-    assert(Wire.readLineLf(in("SUB t c\r\n"), "nsq", dropCr = false) == "SUB t c\r")
+    assert(Wire.readLineLf(in("USING a\r\n"), "beanstalkd") == "USING a")
+    assert(Wire.readLineLf(in("SUB t c\n"), "nsq") == "SUB t c")
     val eof = intercept[java.io.EOFException](Wire.readExact(in("abc"), 5, "kafka"))
     assert(eof.getMessage.contains("kafka") && eof.getMessage.contains("3/5"))
+    for (n <- Seq(-1L, Int.MaxValue + 1L)) {
+      val bad = intercept[IOException](Wire.readExact(in("abc"), n, "nsq"))
+      assert(bad.getMessage.contains("nsq") && bad.getMessage.contains("out of range"), bad.getMessage)
+    }
   }
 
   /** A loopback relay in front of a fixture. [[cutNext]] makes it forward
