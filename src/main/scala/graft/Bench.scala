@@ -4,8 +4,9 @@ import graft.core.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
-/** Benchmark main: times the headline queries at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line (driver contract → BENCH_r{N}.json).
+/** Benchmark main: times the headline queries at SPARK_GRAFT_SF_DIR,
+  * writes the full record to BENCH_FULL.json and prints ONE summary JSON
+  * line (driver contract → BENCH_r{N}.json; see [[records]]).
   *
   * Each query is forced to FULL evaluation with [[evalFold]] — a
   * `.count()` would let Catalyst prune projection-only work and time just
@@ -49,6 +50,39 @@ object Bench {
     org.apache.spark.sql.graftshim.StateStoreReset.unloadAll()
     spark.catalog.clearCache()
     System.gc()
+  }
+
+  /** The two records of one bench run, built from the same results:
+    * the stdout summary (the driver keeps only the tail of stdout, so it
+    * holds scalars alone and stays a few hundred bytes however many rows
+    * run) and the BENCH_FULL.json record (the summary, `detail`, and the
+    * per-query maps under keys that name their statistic: `mins`,
+    * `medians`, `runs`). `value` is the sum of per-query medians (`stat`),
+    * `min_total` the sum of per-query mins — the noise-floor cost of each
+    * plan, since host contention only ever adds time; `failed` counts the
+    * failed rows and `failed_rows` names them. */
+  private[graft] def records(runs: Seq[(String, Seq[Double])], failed: Seq[String],
+                             calibration: Double, sf: String,
+                             detail: Seq[(String, String)]): (String, String) = {
+    def obj(kv: Seq[(String, String)]) =
+      kv.map { case (k, v) => Json.quote(k) + ":" + v }.mkString("{", ",", "}")
+    def num(x: Double) = f"$x%.3f"
+    val sorted = runs.map { case (k, rs) => k -> rs.sorted }
+    val medians = sorted.map { case (k, rs) => k -> rs(rs.length / 2) }
+    val mins = sorted.map { case (k, rs) => k -> rs.head }
+    val minTotal = mins.map(_._2).sum
+    val summary = Seq(
+      "metric" -> Json.quote("total"), "value" -> num(medians.map(_._2).sum),
+      "unit" -> Json.quote("sec"), "stat" -> Json.quote("median"),
+      "min_total" -> num(minTotal), "calibration" -> num(calibration),
+      "norm_min_total" -> f"${minTotal / calibration}%.2f",
+      "failed" -> failed.size.toString, "sf" -> Json.quote(sf))
+    val full = summary ++ detail ++ Seq(
+      "failed_rows" -> failed.map(Json.quote).mkString("[", ",", "]"),
+      "mins" -> obj(mins.map { case (k, v) => k -> num(v) }),
+      "medians" -> obj(medians.map { case (k, v) => k -> num(v) }),
+      "runs" -> obj(sorted.map { case (k, rs) => k -> rs.map(num).mkString("[", ",", "]") }))
+    (obj(summary), obj(full))
   }
 
   def main(args: Array[String]): Unit = {
@@ -164,13 +198,10 @@ object Bench {
       calibrationPre = math.min(calibrationPre, calibrationRun())
     }
 
-    // Min-of-3 per query on stdout, median + all runs in the FULL record
-    // (round-4 verdict: a single shot let one contention spike misbrand
-    // agg_q1 as a 5x regression; r19 verdict #1: the stdout line with 98×3
-    // `runs` arrays overflowed the driver's capture, leaving PERF with no
-    // per-query ground truth two rounds running — the driver-consumable
-    // line now carries ONLY the per-query mins + summary scalars, and the
-    // full record (runs, medians, note) goes to BENCH_FULL.json on disk).
+    // 3 runs per query (round-4 verdict: a single shot let one contention
+    // spike misbrand agg_q1 as a 5x regression). Per-query numbers go to
+    // BENCH_FULL.json only: even the 98 per-query mins alone overflowed
+    // the driver's stdout capture ([[records]]).
     val runsPer = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val runsMap = scala.collection.mutable.LinkedHashMap.empty[
@@ -236,41 +267,26 @@ object Bench {
     }
     val calibration = math.min(calBest, calSamples.min)
 
-    val results = names.map { name =>
-      val rs = runsMap(name).sorted
-      name -> (rs(rs.length / 2), rs.toVector)
-    }
-    val qsMed = results.map { case (k, (med, _)) => "\"" + k + "\":" + f"$med%.3f" }
-      .mkString("{", ",", "}")
-    val allRuns = results.map { case (k, (_, rs)) =>
-      "\"" + k + "\":" + rs.map(r => f"$r%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // Sandbox contention windows can outlast all runsPer runs of one query
-    // (observed: the same plan timed 2 s and 19 s minutes apart with zero
-    // code change) — the per-query MIN is the noise-floor-robust cost of
-    // the plan, since contention only ever adds time. The stdout `queries`
-    // map carries the mins (the basis every round-over-round comparison
-    // has actually used); medians stay in the full record.
-    val mins = results.map { case (k, (_, rs)) =>
-      "\"" + k + "\":" + f"${rs.min}%.3f"
-    }.mkString("{", ",", "}")
-    val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2._1).sum
-    val minTotal = results.map(_._2._2.min).sum
     // update the host-best record for the next run's gate
     try {
       val newBest = math.min(calibration, histBest.getOrElse(Double.MaxValue))
       java.nio.file.Files.write(calFile, f"$newBest%.4f".getBytes("UTF-8")): Unit
     } catch { case _: Throwable => () }
-    val calSegJson = calSamples.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val dirtyJson = dirtySegs.mkString("[", ",", "]")
-    val note = "full-eval bit_xor(xxhash64(struct(*))) per query; stdout `queries` " +
-      s"is the per-query MIN of $runsPer+ runs (medians in `medians`, all runs in " +
-      "`runs`); `calibration` = min xxhash64-over-range(1e9) wall (CPU-only, " +
-      "sampled pre/post and every segment) — divide totals by it before comparing " +
-      "rounds; `cal_segments` are the interleaved samples, `reran_segments` the " +
-      "15-row segments re-run once because their window was >15% off the run best"
-    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$mins,"medians":$qsMed,"runs":$allRuns,"min_total":$minTotal%.3f,"calibration":$calibration%.3f,"calibration_pre":$calibrationPre%.3f,"calibration_post":$calibrationPost%.3f,"norm_min_total":${minTotal / calibration}%.2f,"cal_segments":$calSegJson,"reran_segments":$dirtyJson,"cal_gate_waits":$gateWaits,"cal_gate_share":$calShare%.2f,"stat":"min","failed":$fl,"note":${Json.quote(note)},"sf":${Json.quote(sfDir)}}"""
+    val (summary, fullJson) = records(names.map(n => n -> runsMap(n).toSeq), failed.toSeq,
+      calibration, sfDir, Seq(
+        "calibration_pre" -> f"$calibrationPre%.3f",
+        "calibration_post" -> f"$calibrationPost%.3f",
+        "cal_segments" -> calSamples.map(c => f"$c%.3f").mkString("[", ",", "]"),
+        "reran_segments" -> dirtySegs.mkString("[", ",", "]"),
+        "cal_gate_waits" -> gateWaits.toString,
+        "cal_gate_share" -> f"$calShare%.2f",
+        "note" -> Json.quote(s"full-eval bit_xor(xxhash64(struct(*))) per query, " +
+          s"$runsPer+ runs each; `value` is the sum of per-query medians, `min_total` " +
+          "the sum of per-query mins (`mins`, `medians`, all runs in `runs`); " +
+          "`calibration` = min xxhash64-over-range(1e9) wall (CPU-only, sampled " +
+          "pre/post and every segment) — divide totals by it before comparing " +
+          "rounds; `cal_segments` are the interleaved samples, `reran_segments` the " +
+          "15-row segments re-run once because their window was >15% off the run best")))
     val fullPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"))
     try {
@@ -279,9 +295,8 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
-    // the COMPACT driver-consumable line: per-query mins + summary scalars
-    // only (no runs/medians/note — those live in the full record above)
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$mins,"min_total":$minTotal%.3f,"calibration":$calibration%.3f,"calibration_pre":$calibrationPre%.3f,"calibration_post":$calibrationPost%.3f,"norm_min_total":${minTotal / calibration}%.2f,"cal_segments":$calSegJson,"reran_segments":$dirtyJson,"cal_gate_waits":$gateWaits,"cal_gate_share":$calShare%.2f,"stat":"min","failed":$fl,"sf":${Json.quote(sfDir)}}""")
+    // the driver reads the last stdout line: the summary only
+    println(summary)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

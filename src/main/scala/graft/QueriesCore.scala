@@ -3,7 +3,7 @@ package graft
 import graft.core.{Flow, Msg, Processor, Tables}
 import graft.functions.Blob
 import graft.operators.Processors
-import graft.streaming.Windows
+import graft.streaming.{Run, Windows}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,47 +33,6 @@ object QueriesCore {
   private val streamSplitInputs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  /** Write each (df, name) as `filesPerPart` parquet files in a fresh dir
-    * with strictly increasing modTimes — the file source orders by
-    * modTime, so the Seq order IS the micro-batch order (the stream side
-    * takes files-per-part per trigger). The single shared copy of this
-    * fragile ordering logic (used by every file-stream gate).
-    *
-    * filesPerPart > 1 is the scan-parallelism lever for heavy-payload
-    * fixtures: one file per micro-batch means ONE scan split, so the
-    * whole batch's parquet decode runs on a single core and the payload
-    * bytes must then be repartition-shuffled just to spread the per-row
-    * decode work (guide §8's anti-pattern: heavy bytes crossing an
-    * exchange whose only job is parallelism). Sharding the part lets the
-    * scan itself fan out and the payload never shuffles. */
-  private[graft] def writeSplitDir(prefix: String,
-                                   parts: Seq[(DataFrame, String)],
-                                   filesPerPart: Int = 1): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    parts.zipWithIndex.foreach { case ((part, name), i) =>
-      val staging = java.nio.file.Files.createTempDirectory(s"${prefix}_stage")
-      (if (filesPerPart == 1) part.coalesce(1) else part.repartition(filesPerPart))
-        .write.mode("overwrite").parquet(staging.toString)
-      val fs = new java.io.File(staging.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      require(fs.nonEmpty, "no parquet part written")
-      fs.zipWithIndex.foreach { case (f, j) =>
-        val destName =
-          if (filesPerPart == 1) name
-          else name.stripSuffix(".parquet") + f"_p$j%03d.parquet"
-        val dest = d.resolve(destName).toFile
-        java.nio.file.Files.move(f.toPath, dest.toPath)
-        // file source orders by modTime — this IS the micro-batch order, so
-        // a silently-failed setLastModified (fs-dependent) would reorder
-        // batches and produce wrong-but-plausible streaming results; files
-        // of one part get distinct ascending stamps so listings stay stable
-        require(dest.setLastModified((i + 1) * 1000000000L + j * 1000L),
-          s"setLastModified failed for $destName — micro-batch ordering would break")
-      }
-    }
-    d
-  }
-
   private[graft] def timeSplitEventsDir(s: SparkSession, dir: String): java.nio.file.Path =
     streamSplitInputs.computeIfAbsent(dir, { _ =>
       import org.apache.spark.sql.Row
@@ -82,7 +41,7 @@ object QueriesCore {
       val Row(tmin: java.sql.Timestamp, tmax: java.sql.Timestamp) =
         ev.agg(min("ts"), max("ts")).head()
       val splitTs = new java.sql.Timestamp((tmin.getTime + tmax.getTime) / 2)
-      writeSplitDir("swa_in", Seq(
+      Run.writeSplitDir("swa_in", Seq(
         (ev.filter(col("ts") < lit(splitTs)), "0_events.parquet"),
         (ev.filter(col("ts") >= lit(splitTs)), "1_events.parquet")))
     })
@@ -321,13 +280,18 @@ object QueriesCore {
     // back forever. At scale the same plan runs append+watermark on an
     // unbounded source (StreamingSpec covers late-drop semantics).
     "stream_win_tumbling" -> ((s, dir) => {
-      if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      // State-exchange width is a per-query knob: this agg's state is tiny
+      // (event_type x windows), so 32 state partitions pay 32 task+commit
+      // overheads per micro-batch for grams of state. Size the stateful
+      // shuffle to the STATE volume (and at real scale, size it UP the
+      // same way).
+      val ss = Run.session(s, 8)
+      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // ns-stamped events (see Tables)
+      val rawSchema = ss.read.parquet(s"$dir/events.parquet").schema
       // the file stream source wants a DIRECTORY: stream the sf dir with a
       // glob filter selecting the events file(s)
       val stream = graft.core.Tables.normalizeEventsTs(
-        s.readStream.schema(rawSchema)
+        ss.readStream.schema(rawSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir))
       val agg = Windows.windowedAgg(
           stream, "ts", "1 hour", Seq(col("event_type")),
@@ -335,23 +299,7 @@ object QueriesCore {
         .select(
           unix_timestamp(col("win.start")).as("window_start"),
           col("event_type"), col("n"), col("total"))
-      val ckpt = java.nio.file.Files.createTempDirectory("swt_ckpt").toFile
-      ckpt.deleteOnExit()
-      // State-exchange width is a per-query knob: this agg's state is tiny
-      // (event_type x windows), so 32 state partitions pay 32 task+commit
-      // overheads per micro-batch for grams of state. Size the stateful
-      // shuffle to the STATE volume (and at real scale, size it UP the
-      // same way); restore the session default after query start.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = try agg.writeStream.format("memory").queryName("stream_win_tumbling_sink")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.awaitTermination()
-      s.table("stream_win_tumbling_sink")
+      ss.table(Run.run("stream_win_tumbling", agg, Run.Sink.Memory("complete")).name)
     }),
 
     // The append-mode + watermark twin of stream_win_tumbling — the
@@ -364,10 +312,8 @@ object QueriesCore {
     // Late-data drop semantics for this plan are covered in StreamingSpec;
     // reference late handling: buffer_system_window.go:333.
     "stream_win_append" -> ((s, dir) => {
-      val inDir = timeSplitEventsDir(s, dir)
-      val schema = s.read.parquet(inDir.resolve("0_events.parquet").toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+      val ss = Run.session(s, 8) // state sized to state volume (see stream_win_tumbling)
+      val stream = Run.readSplits(ss, timeSplitEventsDir(s, dir), spread = false)
         .withWatermark("ts", "30 minutes")
       val agg = Windows.windowedAgg(
           stream, "ts", "1 hour", Seq(col("event_type")),
@@ -375,19 +321,7 @@ object QueriesCore {
         .select(
           unix_timestamp(col("win.start")).as("window_start"),
           col("event_type"), col("n"), col("total"))
-      val ckpt = java.nio.file.Files.createTempDirectory("swa_ckpt").toFile
-      ckpt.deleteOnExit()
-      // state exchange sized to state volume (see stream_win_tumbling)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = try agg.writeStream.format("memory").queryName("stream_win_append_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.awaitTermination()
-      s.table("stream_win_append_sink")
+      ss.table(Run.run("stream_win_append", agg, Run.Sink.Memory()).name)
     }),
 
     // STREAMING dedupe (the reference's dedupe processor with a cache
@@ -399,26 +333,12 @@ object QueriesCore {
     // unbounded-stream variant bounds state with
     // dropDuplicatesWithinWatermark; AvailableNow drain here.
     "stream_dedupe" -> ((s, dir) => {
-      val inDir = timeSplitEventsDir(s, dir)
-      val schema = s.read.parquet(inDir.resolve("0_events.parquet").toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+      val ss = Run.session(s, 8) // state sized to state volume (see stream_win_tumbling)
+      val stream = Run.readSplits(ss, timeSplitEventsDir(s, dir), spread = false)
         .select(col("event_type"),
           pmod(floor(col("value")).cast(LongType), lit(20)).as("vb"))
         .dropDuplicates("event_type", "vb")
-      val ckpt = java.nio.file.Files.createTempDirectory("sdd_ckpt").toFile
-      ckpt.deleteOnExit()
-      // state exchange sized to state volume (see stream_win_tumbling)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = try stream.writeStream.format("memory").queryName("stream_dedupe_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.awaitTermination()
-      s.table("stream_dedupe_sink")
+      ss.table(Run.run("stream_dedupe", stream, Run.Sink.Memory()).name)
     }),
 
     // session windows (SURVEY §2.8 parity-plus)

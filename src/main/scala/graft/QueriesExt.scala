@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Flow, Tables}
+import graft.core.{Flow, Tables, TempDir}
 import graft.functions.Blob
 import graft.operators.Archives
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -509,8 +509,7 @@ pipeline:
     // with import_paths, the reference's YAML surface): schema files written
     // to a temp dir, loaded through ProtoSchema.registryFor's dir walk
     "proc_protobuf" -> ((s, dir) => {
-      val pdir = java.nio.file.Files.createTempDirectory("graft-protos")
-      pdir.toFile.deleteOnExit()
+      val pdir = TempDir("graft-protos")
       java.nio.file.Files.write(pdir.resolve("slim.proto"),
         """syntax = "proto3";
           |package gate;
@@ -762,7 +761,7 @@ pipeline:
     // survive as rows until acked; the gate round-trips the events table
     // through append -> ordered drain. Ack/replay semantics in BufferSpec.
     "buffer_jdbc" -> ((s, dir) => {
-      val dbDir = java.nio.file.Files.createTempDirectory("graft_buf")
+      val dbDir = TempDir("graft_buf")
       System.setProperty("derby.stream.error.file",
         dbDir.resolve("derby.log").toString)
       val url = s"jdbc:derby:${dbDir.resolve("db")};create=true"
@@ -782,7 +781,7 @@ pipeline:
     // plan-time file functions; hostname() gates dispatch (any host has a
     // nonempty name). Oracle replays the loaded config as constants.
     "blob_file_cfg" -> ((s, dir) => {
-      val cfgDir = java.nio.file.Files.createTempDirectory("graft_filefn")
+      val cfgDir = TempDir("graft_filefn")
       val sfx = cfgDir.resolve("suffix.txt")
       java.nio.file.Files.write(sfx, "-tier".getBytes("UTF-8"))
       val cfg = cfgDir.resolve("cfg.json")
@@ -875,7 +874,7 @@ pipeline:
     // tagged; the oracle is the same projection twice. fan_out persists
     // the batch once, so sinks don't recompute the upstream plan.
     "out_broker_fanout" -> ((s, dir) => {
-      val outDir = java.nio.file.Files.createTempDirectory("graft_fanout")
+      val outDir = TempDir("graft_fanout")
       val (p1, p2) = (outDir.resolve("s1").toString, outDir.resolve("s2").toString)
       val batch = t(s, dir, "region").select("r_regionkey", "r_name")
       graft.conn.Outputs.fanOut(Seq(
@@ -892,7 +891,7 @@ pipeline:
     // join-back lookup (region key -> nations) against embedded Derby and
     // explodes the returned array; oracle is the equivalent SQL join.
     "proc_sql_raw" -> ((s, dir) => {
-      val dbDir = java.nio.file.Files.createTempDirectory("graft_sqlraw")
+      val dbDir = TempDir("graft_sqlraw")
       System.setProperty("derby.stream.error.file",
         dbDir.resolve("derby.log").toString)
       val url = s"jdbc:derby:${dbDir.resolve("db")};create=true"
@@ -934,7 +933,7 @@ pipeline:
     // over n_suppkey ranges — the 1000-executor shape; embedded Derby
     // shares the local JVM, a networked DB is config-only).
     "sql_roundtrip" -> ((s, dir) => {
-      val dbDir = java.nio.file.Files.createTempDirectory("graft_derby")
+      val dbDir = TempDir("graft_derby")
       System.setProperty("derby.stream.error.file",
         dbDir.resolve("derby.log").toString)
       val url = s"jdbc:derby:${dbDir.resolve("db")};create=true"

@@ -1,8 +1,9 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{Tables, TempDir}
 import graft.functions.Blob
 import graft.ml.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.streaming.Run
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -182,7 +183,7 @@ object QueriesLlm {
     embDeconSplitCache.computeIfAbsent(dir, { _ =>
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      QueriesCore.writeSplitDir("sed_in", Seq(
+      Run.writeSplitDir("sed_in", Seq(
         (emb.filter(col("vec_id") % 2 === 0), "0_emb2.parquet"),
         (emb.filter(col("vec_id") % 2 =!= 0), "1_emb2.parquet")))
     })
@@ -209,7 +210,7 @@ object QueriesLlm {
           Window.orderBy(col("_ccos").desc, col("vec_id"))))
       val n = ranked.count()
       val half = (n + 1) / 2
-      QueriesCore.writeSplitDir("ssd_in", Seq(
+      Run.writeSplitDir("ssd_in", Seq(
         (ranked.filter(col("_rk") <= half).select("vec_id", "embedding"), "0_emb.parquet"),
         (ranked.filter(col("_rk") > half).select("vec_id", "embedding"), "1_emb.parquet")))
     })
@@ -240,20 +241,6 @@ object QueriesLlm {
         nCells = 64, iters = 4, trainMod = 2)
     })
 
-  /** A temp dir REMOVED at JVM exit (recursive) — the index caches
-    * below write corpus-sized parquet copies; before r19 every gate
-    * invocation leaked a fresh copy under /tmp (r18 advice). */
-  private def tempDirDeletedOnExit(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
-    p.toString
-  }
-
   /** Materialized QUANTIZED IVF index per (dir, nCells) — built ONCE
     * per JVM (the semCentroids*Cache convention, r18 advice: the idx
     * gates previously rewrote the full partitioned corpus copy on
@@ -267,7 +254,7 @@ object QueriesLlm {
   private[graft] def ivfIndexDirQ(s: SparkSession, dir: String, nCells: Int): String =
     ivfIdxQCache.computeIfAbsent((dir, nCells), { _ =>
       val emb = t(s, dir, "embeddings").repartition(Tables.fanout(s))
-      val idx = tempDirDeletedOnExit(s"graft_ivfq$nCells")
+      val idx = TempDir(s"graft_ivfq$nCells").toString
       Similarity.ivfWriteIndexQ(emb, "vec_id", "embedding", 64, idx,
         nCells = nCells, iters = 4, trainMod = 2)
       idx
@@ -280,7 +267,7 @@ object QueriesLlm {
   private[graft] def ivfIndexDirF(s: SparkSession, dir: String): String =
     ivfIdxFCache.computeIfAbsent(dir, { _ =>
       val emb = t(s, dir, "embeddings")
-      val idx = tempDirDeletedOnExit("graft_ivf")
+      val idx = TempDir("graft_ivf").toString
       Similarity.ivfWriteIndex(emb, "vec_id", "embedding", 64, idx,
         nCells = 16, iters = 4, trainMod = 2)
       idx
@@ -316,31 +303,19 @@ object QueriesLlm {
     streamIvfIdxCache.computeIfAbsent(dir, { _ =>
       val cents = annCentroidsQ(s, dir)
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val inDir = QueriesCore.writeSplitDir("sivfidx_in", Seq(
+      val inDir = Run.writeSplitDir("sivfidx_in", Seq(
         (emb.filter(pmod(col("vec_id"), lit(2)) === 0), "0_emb.parquet"),
         (emb.filter(pmod(col("vec_id"), lit(2)) === 1), "1_emb.parquet")))
-      val idx = tempDirDeletedOnExit("graft_sivfidx")
-      val ss = s.newSession()
-      val schema = ss.read.parquet(inDir.resolve("0_emb.parquet").toString).schema
+      val idx = TempDir("graft_sivfidx").toString
       // the same seam rule as every consumer: path from the model's size
       val assign = if (cents.length >= Similarity.hierAssignThreshold)
                      Similarity.assignCellHierQ(cents)
                    else Similarity.assignCellQ(cents)
-      val ckpt = java.nio.file.Files.createTempDirectory("sivfidx_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        .repartition(Tables.fanout(ss))
+      val tagged = Run.readSplits(s.newSession(), inDir)
         .select(col("vec_id"), col("embedding"),
           assign(Similarity.quantizeVec(col("embedding"), 1048576.0)).as("_cell"))
-        .writeStream.format("parquet")
-        .option("path", s"$idx/vectors")
-        .partitionBy("_cell")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Run.run("stream_ivf_index", tagged,
+        Run.Sink.Files("parquet", Some(s"$idx/vectors"), Seq("_cell")))
       Similarity.writeCentroidSidecarQ(idx, cents)
       idx
     })
@@ -352,7 +327,7 @@ object QueriesLlm {
   private[graft] def compactIvfIndexDirQ(s: SparkSession, dir: String): String =
     compactIvfIdxCache.computeIfAbsent(dir, { _ =>
       val src = streamIvfIndexDirQ(s, dir)
-      val dst = tempDirDeletedOnExit("graft_sivfidx_c")
+      val dst = TempDir("graft_sivfidx_c").toString
       Similarity.ivfCompactIndex(s, src, dst)
       dst
     })
@@ -376,7 +351,7 @@ object QueriesLlm {
           Window.orderBy(col("_prio").desc, col("vec_id"))))
       val n = ranked.count()
       val half = (n + 1) / 2
-      QueriesCore.writeSplitDir("ssdq_in", Seq(
+      Run.writeSplitDir("ssdq_in", Seq(
         (ranked.filter(col("_rk") <= half).select("vec_id", "embedding"), "0_emb.parquet"),
         (ranked.filter(col("_rk") > half).select("vec_id", "embedding"), "1_emb.parquet")))
     })
@@ -401,7 +376,7 @@ object QueriesLlm {
           Window.orderBy(col("_prio").desc, col("vec_id"))))
       val n = ranked.count()
       val half = (n + 1) / 2
-      QueriesCore.writeSplitDir("ssdhq_in", Seq(
+      Run.writeSplitDir("ssdhq_in", Seq(
         (ranked.filter(col("_rk") <= half).select("vec_id", "embedding"), "0_emb.parquet"),
         (ranked.filter(col("_rk") > half).select("vec_id", "embedding"), "1_emb.parquet")))
     })
@@ -417,19 +392,15 @@ object QueriesLlm {
     * previously ~50 duplicated topology lines). */
   private def streamSemDedupQRun(s: SparkSession, cents: Array[Array[Long]],
                                  inDir: java.nio.file.Path,
-                                 shufflePartitions: String,
-                                 sinkPrefix: String): DataFrame = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+                                 stateWidth: Int,
+                                 name: String): DataFrame = {
+    val ss = Run.session(s, stateWidth)
     import ss.implicits._
-    val schema = ss.read.parquet(inDir.resolve("0_emb.parquet").toString).schema
     val assign = if (cents.length >= Similarity.hierAssignThreshold)
                    Similarity.assignCellHierQ(cents)
                  else Similarity.assignCellQ(cents)
     val prio = Similarity.cellPriorityQ(cents)
-    val stream = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-      .repartition(Tables.fanout(ss)) // one-file input: distribute the per-row math
+    val stream = Run.readSplits(ss, inDir)
       .select(col("vec_id"), Similarity.quantizeVec(col("embedding"), 1048576.0).as("_qv"))
       .withColumn("_cell", assign(col("_qv")))
       .withColumn("_prio", prio(col("_cell"), col("_qv")))
@@ -437,18 +408,9 @@ object QueriesLlm {
       .as[(Long, Int, Long, Seq[Long])]
     val decided = graft.streaming.StreamSemDedup.keepDecisionsQ(
       stream, threshold = 4000000000L)
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${sinkPrefix}_ckpt").toFile
-    ckpt.deleteOnExit()
-    val sink = s"${sinkPrefix}_${sinkIds.incrementAndGet()}"
-    val q = decided.writeStream.format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.getPath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(sink).select(col("vec_id"), col("cell").cast(LongType).as("cell"),
-      col("priority"), col("keep"))
+    ss.table(Run.run(name, decided, Run.Sink.Memory()).name)
+      .select(col("vec_id"), col("cell").cast(LongType).as("cell"),
+        col("priority"), col("keep"))
   }
 
   /** The RAW documents table as two parquet files (doc_id parity split)
@@ -457,7 +419,7 @@ object QueriesLlm {
   private[graft] def documentsSplitDir(s: SparkSession, dir: String): java.nio.file.Path =
     documentsSplitCache.computeIfAbsent(dir, { _ =>
       val docs = t(s, dir, "documents").select("doc_id", "text")
-      QueriesCore.writeSplitDir("sdc_in", Seq(
+      Run.writeSplitDir("sdc_in", Seq(
         (docs.filter(col("doc_id") % 2 === 0), "0_docs.parquet"),
         (docs.filter(col("doc_id") % 2 =!= 0), "1_docs.parquet")))
     })
@@ -469,40 +431,10 @@ object QueriesLlm {
     docsSplitCache.computeIfAbsent(dir, { _ =>
       val corpus = plantedCorpus(s, dir)
       val off = twinOffset(s, dir) // originals/twins boundary, never assumed
-      QueriesCore.writeSplitDir("scs_in", Seq(
+      Run.writeSplitDir("scs_in", Seq(
         (corpus.filter(col("doc_id") < off), "0_docs.parquet"),
         (corpus.filter(col("doc_id") >= off), "1_docs.parquet")))
     })
-
-  private val sinkIds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Register a directory tree for recursive deletion at JVM exit.
-    * File.deleteOnExit only removes EMPTY directories, so parquet output
-    * dirs written by foreachBatch would otherwise accumulate for the
-    * life of the host temp dir across repeated runs (r15 advice).
-    * ONE shared shutdown hook drains a queue of registered paths —
-    * a hook Thread per directory would pile up live threads across a
-    * long test session (review finding r16). */
-  private val exitDeleteQueue =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val exitDeleteHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = exitDeleteQueue.poll()
-      while (p != null) {
-        try {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { val _ = java.nio.file.Files.deleteIfExists(f) })
-          finally walk.close()
-        } catch { case _: Throwable => () } // best-effort: exit-time cleanup
-        p = exitDeleteQueue.poll()
-      }
-    }))
-  private[graft] def deleteTreeOnExit(p: java.nio.file.Path): java.nio.file.Path = {
-    exitDeleteHook // register the single hook on first use
-    exitDeleteQueue.add(p)
-    p
-  }
 
   /** llm_phash_pairs body, parameterized on the Hamming radius — the
     * operator's SCALE KNOB: blocks = smallest power of two > maxHamming
@@ -541,7 +473,7 @@ object QueriesLlm {
       val mk = udf((k: Long) => Multimodal.syntheticImageBmp(k))
       val mkTwin = udf((k: Long) => Multimodal.syntheticImageBmp(k, brighten = 3))
       val ids = t(s, dir, "documents").select("doc_id").repartition(Tables.fanout(s))
-      QueriesCore.writeSplitDir("sph_in", Seq(
+      Run.writeSplitDir("sph_in", Seq(
         (ids.select(col("doc_id").as("media_id"), mk(col("doc_id")).as("data")),
           "0_media.parquet"),
         (ids.select((col("doc_id") + off).as("media_id"), mkTwin(col("doc_id")).as("data")),
@@ -561,7 +493,7 @@ object QueriesLlm {
       val mk = udf((k: Long) => Multimodal.syntheticWav(k))
       val mkTwin = udf((k: Long) => Multimodal.syntheticWav(k, gainPct = 80))
       val ids = t(s, dir, "documents").select("doc_id").repartition(Tables.fanout(s))
-      QueriesCore.writeSplitDir("sah_in", Seq(
+      Run.writeSplitDir("sah_in", Seq(
         (ids.select(col("doc_id").as("media_id"), mk(col("doc_id")).as("data")),
           "0_media.parquet"),
         (ids.select((col("doc_id") + off).as("media_id"), mkTwin(col("doc_id")).as("data")),
@@ -582,7 +514,7 @@ object QueriesLlm {
       val mk = udf((k: Long) => Multimodal.syntheticVideoAvi(k))
       val mkTwin = udf((k: Long) => Multimodal.syntheticVideoAvi(k, brighten = 3))
       val ids = t(s, dir, "documents").select("doc_id").repartition(Tables.fanout(s))
-      QueriesCore.writeSplitDir("svh_in", Seq(
+      Run.writeSplitDir("svh_in", Seq(
         (ids.select(col("doc_id").as("media_id"), mk(col("doc_id")).as("data")),
           "0_media.parquet"),
         (ids.select((col("doc_id") + off).as("media_id"), mkTwin(col("doc_id")).as("data")),
@@ -642,7 +574,7 @@ object QueriesLlm {
   private[graft] def bandSplitDir(s: SparkSession, dir: String): java.nio.file.Path =
     bandSplitCache.computeIfAbsent(dir, { _ =>
       val (base, twins) = bandSigParts(s, dir)
-      QueriesCore.writeSplitDir("sbp_in", Seq(
+      Run.writeSplitDir("sbp_in", Seq(
         (base.select(col("id").as("media_id"), col("fp").as("data")), "0_media.parquet"),
         (twins.select(col("id").as("media_id"), col("fp").as("data")), "1_media.parquet")))
     })
@@ -669,22 +601,11 @@ object QueriesLlm {
     // sizes from its ingest meter instead via candidatePairsAuto /
     // autoBlocks — same explode (blockOccurrences), one number in
     val blocks = 8
-    val schema = ss.read.parquet(inDir.toString).schema
-    // files-per-logical-split drives the trigger size: each micro-batch is
-    // one LOGICAL split (originals, then twins) however many files it was
-    // sharded into — sharded fixtures make the scan parallel, so the heavy
-    // payload bytes are decoded in place and ONLY the 8-byte fingerprints
-    // cross an exchange (r19: the per-batch repartition previously
-    // round-tripped the full media payload through a shuffle whose only
-    // job was spreading the decode)
-    val perTrigger = splitWidth(inDir)
-    val media0 = ss.readStream.schema(schema).option("maxFilesPerTrigger", perTrigger)
-      .parquet(inDir.toString)
-    val media =
-      if (perTrigger > 1) media0
-      // one file per micro-batch = one scan split; distribute the
-      // per-row decode+hash (the one-file-input lesson)
-      else media0.repartition(Tables.fanout(ss))
+    // each micro-batch is one LOGICAL split (originals, then twins)
+    // however many files it was sharded into — sharded fixtures make the
+    // scan parallel, so the heavy payload bytes are decoded in place and
+    // ONLY the 8-byte fingerprints cross an exchange
+    val media = Run.readSplits(ss, inDir)
     val occ = graft.streaming.StreamPhash.blockOccurrences(
       fingerprint(media, "media_id", "data"), "media_id", sigCol, blocks)
     graft.streaming.StreamPhash.candidatePairs(
@@ -695,41 +616,12 @@ object QueriesLlm {
       s: SparkSession, inDir: java.nio.file.Path,
       fingerprint: (DataFrame, String, String) => DataFrame, sigCol: String,
       evictBucketAfterMs: Option[Long]): DataFrame = {
-    val ss = s.newSession()
     // bucket-keyed state (one key per (block, 8-bit key) bucket seen):
     // full scheduler width, the stream_dup_spans sizing
-    ss.conf.set("spark.sql.shuffle.partitions", Tables.fanout(ss).toString)
+    val ss = Run.session(s, Tables.fanout(s))
     val pairs = fingerprintPairStream(ss, inDir, fingerprint, sigCol, evictBucketAfterMs)
-    val ckpt = java.nio.file.Files.createTempDirectory("sfp_ckpt").toFile
-    ckpt.deleteOnExit()
-    val sink = s"stream_fp_pairs_${sinkIds.incrementAndGet()}"
-    val writer = pairs.writeStream.format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.getPath)
-    // ProcessingTimeTimeout disables AvailableNow termination (see
-    // streamDupSpans): the eviction-capable path needs the paced trigger
-    // + drained-input stop; NoTimeout drains under AvailableNow.
-    // 250 ms (not 10 ms): after the drain-confirming no-data batch the
-    // interval leaves drainAndStop's 25 ms poll a window to stop the
-    // query BEFORE a second no-data batch launches — each one replays
-    // the whole plan against the state store (~0.6-1 s measured at
-    // sf0.1, StreamCostProbe r19) for zero new information. Data
-    // batches run longer than the interval, so pacing adds no latency.
-    val q =
-      if (evictBucketAfterMs.isDefined) {
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L)).start()
-        drainAndStop(q0, expectBatches = Some(splitCount(inDir, splitWidth(inDir))))
-        q0
-      } else {
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q0.awaitTermination()
-        q0
-      }
-    val _ = q
-    ss.table(sink)
+    ss.table(Run.run("stream_fp_pairs", pairs, Run.Sink.Memory(),
+      paced = evictBucketAfterMs.map(_ => inDir)).name)
   }
 
   /** STREAMING dedup RESOLUTION (r15 verdict #3 — the missing topology):
@@ -776,7 +668,7 @@ object QueriesLlm {
                                            compactEvery: Int = 1,
                                            localEdgeLimit: Long = 2000000L)
       : Option[DataFrame] = {
-    val stateRoot = deleteTreeOnExit(java.nio.file.Files.createTempDirectory("spr_state"))
+    val stateRoot = TempDir("spr_state")
     // driver-side pointers (foreachBatch bodies run on the driver,
     // serially per query)
     val current = new java.util.concurrent.atomic.AtomicReference[String](null)
@@ -819,30 +711,22 @@ object QueriesLlm {
       // (r16 advice; the CheckpointRelease discipline)
       edges.unpersist()
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("spr_ckpt").toFile
-    ckpt.deleteOnExit()
-    val q = pairs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val b = batch.select("id_a", "id_b")
-        if (compactEvery <= 1) {
-          if (!b.isEmpty) compact(b, bid.toString)
-        } else {
-          if (!b.isEmpty) {
-            val d = stateRoot.resolve(s"p$bid").toString
-            b.write.mode("overwrite").parquet(d)
-            pending += d
-          }
-          if (pending.nonEmpty && (bid + 1) % compactEvery == 0) {
-            compact(ss.read.parquet(pending.toSeq: _*), bid.toString)
-            pending.clear()
-          }
+    Run.run("stream_resolve", pairs, Run.Sink.Batches { (batch, bid) =>
+      val b = batch.select("id_a", "id_b")
+      if (compactEvery <= 1) {
+        if (!b.isEmpty) compact(b, bid.toString)
+      } else {
+        if (!b.isEmpty) {
+          val d = stateRoot.resolve(s"p$bid").toString
+          b.write.mode("overwrite").parquet(d)
+          pending += d
         }
-        ()
+        if (pending.nonEmpty && (bid + 1) % compactEvery == 0) {
+          compact(ss.read.parquet(pending.toSeq: _*), bid.toString)
+          pending.clear()
+        }
       }
-      .option("checkpointLocation", ckpt.getPath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    })
     if (pending.nonEmpty) { // trailing partial group
       compact(ss.read.parquet(pending.toSeq: _*), "final")
       pending.clear()
@@ -851,8 +735,7 @@ object QueriesLlm {
   }
 
   private[graft] def streamPhashResolve(s: SparkSession, dir: String): DataFrame = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", Tables.fanout(ss).toString)
+    val ss = Run.session(s, Tables.fanout(s))
     val pairs = fingerprintPairStream(ss, phashSplitDir(s, dir),
       (df, idc, dc) => Multimodal.dhashBmp(df, idc, dc), "dhash",
       evictBucketAfterMs = None)
@@ -875,21 +758,15 @@ object QueriesLlm {
     * runs it both ways and pins NoTimeout == not-yet-reached-horizon). */
   private[graft] def streamSemDedupRun(s: SparkSession, dir: String,
                                        evictCellAfterMs: Option[Long]): DataFrame = {
-    val ss = s.newSession()
     // state keys = 16 cells: size the state exchange to state volume
     // (the stream_corpus_select small-state convention)
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
+    val ss = Run.session(s, 8)
     import ss.implicits._
     val cents = semCentroids(s, dir) // frozen: trained once, cached per dir
     val inDir = embSplitDir(s, dir)
-    val schema = ss.read.parquet(inDir.resolve("0_emb.parquet").toString).schema
     val assign = Similarity.assignCell(cents)
     val ccos = Similarity.centroidCos(cents)
-    val stream = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-      // one file per micro-batch = one scan split; distribute the
-      // per-row normalize/assign math (the one-file-input lesson)
-      .repartition(Tables.fanout(ss))
+    val stream = Run.readSplits(ss, inDir)
       .select(col("vec_id"), Similarity.normalized(col("embedding")).as("_nv"))
       .withColumn("_cell", assign(col("_nv")))
       .withColumn("_ccos", ccos(col("_cell"), col("_nv")))
@@ -897,27 +774,9 @@ object QueriesLlm {
       .as[(Long, Int, Double, Seq[Double])]
     val decided = graft.streaming.StreamSemDedup.keepDecisions(
       stream, threshold = 0.95, evictCellAfterMs = evictCellAfterMs)
-    val ckpt = java.nio.file.Files.createTempDirectory("ssd_ckpt").toFile
-    ckpt.deleteOnExit()
-    val sink = s"stream_semdedup_${sinkIds.incrementAndGet()}"
-    val writer = decided.writeStream.format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.getPath)
-    val q =
-      if (evictCellAfterMs.isDefined) {
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L)).start()
-        drainAndStop(q0, expectBatches = Some(splitCount(inDir, perTrigger = 1)))
-        q0
-      } else {
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q0.awaitTermination()
-        q0
-      }
-    val _ = q
-    ss.table(sink).select(col("vec_id"), col("cell").cast(LongType).as("cell"),
+    val q = Run.run("stream_semdedup", decided, Run.Sink.Memory(),
+      paced = evictCellAfterMs.map(_ => inDir))
+    ss.table(q.name).select(col("vec_id"), col("cell").cast(LongType).as("cell"),
       round(col("centroid_cos"), 6).as("centroid_cos"), col("keep"))
   }
 
@@ -927,130 +786,24 @@ object QueriesLlm {
     * Unique memory-sink name per invocation: the two runs share a JVM. */
   private[graft] def streamDupSpans(s: SparkSession, dir: String,
                                     evictSingletonsAfterMs: Option[Long]): DataFrame = {
-    val ss = s.newSession()
     // state exchange sized to STATE VOLUME: span-dedup state is one
     // entry per distinct window digest (~two orders of magnitude more
     // keys than corpus-select's per-document digests), so it gets the
     // full scheduler width, not the small-state 8 (30x probe: the
     // 8-partition cap was the one super-linear step in the curve)
-    ss.conf.set("spark.sql.shuffle.partitions", Tables.fanout(ss).toString)
+    val ss = Run.session(s, Tables.fanout(s))
     import ss.implicits._
     val w = 15
     val inDir = docsSplitDir(s, dir)
-    val schema = ss.read.parquet(inDir.resolve("0_docs.parquet").toString).schema
-    val occStream = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-      // each micro-batch is ONE parquet file = one scan split, and the
-      // scan+tokenize+window-explode pipeline into the pre-shuffle
-      // stage — without this fanout the batch's heaviest work runs on
-      // a single task (the one-file-input lesson, applied to streams)
-      .repartition(Tables.fanout(ss))
+    val occStream = Run.readSplits(ss, inDir)
       .select(col("doc_id"), Dedup.tokens(col("text")).as("_t"))
       .filter(size(col("_t")) >= w)
       .select(col("doc_id"), posexplode(Dedup.windowDigests(col("_t"), w)).as(Seq("pos", "h")))
       .toDF("_1", "_2", "_3").as[(Long, Int, Long)]
     val dupOcc = graft.streaming.StreamDedup.dupOccurrences(occStream, evictSingletonsAfterMs)
-    val ckpt = java.nio.file.Files.createTempDirectory("sds_ckpt").toFile
-    ckpt.deleteOnExit()
-    val sink = s"stream_dup_spans_occ_${sinkIds.incrementAndGet()}"
-    val writer = dupOcc.writeStream.format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.getPath)
-    // Under ProcessingTimeTimeout the engine schedules no-data batches
-    // FOREVER (FlatMapGroupsWithStateExec.shouldRunAnotherBatch is
-    // unconditionally true, so `noNewData` is never set): AvailableNow
-    // never terminates and processAllAvailable never returns. The
-    // eviction path therefore runs a paced continuous trigger — the
-    // deployment shape anyway (a continuous stream is never "done";
-    // timeouts fire in the no-data batches between arrivals) — and
-    // stops on the drained-input signal instead.
-    if (evictSingletonsAfterMs.isDefined) {
-      val q = writer
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L))
-        .start()
-      drainAndStop(q, expectBatches = Some(splitCount(inDir, perTrigger = 1)))
-    } else {
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-    }
-    Dedup.spansFromOccurrences(ss.table(sink), w)
-  }
-
-  /** Files in one logical split of a writeSplitDir fixture (the `0_`
-    * files): the `maxFilesPerTrigger` of a consumer that takes one whole
-    * split per micro-batch ([[fingerprintPairStream]]). */
-  private[graft] def splitWidth(inDir: java.nio.file.Path): Int =
-    math.max(1, new java.io.File(inDir.toString).listFiles()
-      .count(_.getName.startsWith("0_")))
-
-  /** Number of data micro-batches a writeSplitDir fixture yields under
-    * the consumer's own `maxFilesPerTrigger` (`perTrigger`) — the
-    * `expectBatches` input for [[drainAndStop]]. Computed from the ACTUAL
-    * listing (ceil(totalFiles / perTrigger)), not the distinct-prefix
-    * count: if a logical split ever shards into fewer files than the `0_`
-    * split (empty partitions at tiny scale), the file source needs an
-    * extra batch for the remainder, and a prefix-count drain rule would
-    * stop early and silently drop that batch's rows. The file source hands
-    * out up to perTrigger files per batch in modTime order regardless of
-    * prefix, so this count is exact by construction — as long as
-    * `perTrigger` is the consumer's real setting, which is why the caller
-    * passes it instead of it being inferred from the listing. */
-  private[graft] def splitCount(inDir: java.nio.file.Path, perTrigger: Int): Int = {
-    val files = new java.io.File(inDir.toString).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    math.max(1, (files + perTrigger - 1) / perTrigger)
-  }
-
-  /** Stop a continuously-triggered file-stream query once its input is
-    * drained. A file source hands out every available file before ever
-    * running an empty batch, so "a no-data micro-batch ran after at
-    * least one data batch" == "all input processed". Needed because
-    * ProcessingTimeTimeout disables both AvailableNow termination and
-    * processAllAvailable (see streamDupSpans). */
-  private[graft] def drainAndStop(q: org.apache.spark.sql.streaming.StreamingQuery,
-                                  timeoutMs: Long = 300000L,
-                                  stopAfterDrain: Boolean = true,
-                                  expectBatches: Option[Int] = None): Unit = {
-    val t0 = System.nanoTime()
-    // With `expectBatches` the caller knows how many micro-batches the
-    // file fixture yields (logical splits), so the drain is detectable the
-    // moment the last DATA batch commits (its endOffset logOffset ==
-    // n-1) — no trailing no-data batch needs to run or be waited for.
-    // Every hasTimedOut branch in the repo's stateful ops emits nothing
-    // (eviction only removes state), so stopping here is output-identical;
-    // each skipped no-data batch replays the whole plan against the state
-    // store for ~0.6-1 s at sf0.1 (StreamCostProbe r19). Specs that need
-    // a timeout to actually FIRE keep the default progress-based rule.
-    def lastLogOffset: Option[Long] = for {
-      p <- q.recentProgress.lastOption
-      s <- p.sources.headOption
-      e <- Option(s.endOffset)
-    } yield "\"?logOffset\"?\\s*:\\s*(\\d+)".r.findFirstMatchIn(e) match {
-      case Some(m) => m.group(1).toLong
-      // fail fast (r19 advice): an endOffset whose format the regex can't
-      // read (non-file source, serialization change) would otherwise leave
-      // the drain rule spinning to a silent 300 s timeout failure
-      case None => q.stop(); throw new IllegalStateException(
-        s"drainAndStop: cannot parse logOffset from endOffset '$e' of query " +
-          s"${q.name} — expectBatches only supports the file source's offset format")
-    }
-    def drained: Boolean = expectBatches match {
-      case Some(n) => lastLogOffset.exists(_ >= n - 1L)
-      case None =>
-        val ps = q.recentProgress
-        ps.exists(_.numInputRows > 0) && ps.nonEmpty && ps.last.numInputRows == 0
-    }
-    while (!drained) {
-      if (q.exception.isDefined) { q.stop(); throw q.exception.get }
-      require((System.nanoTime() - t0) / 1e6 < timeoutMs,
-        s"drainAndStop: query ${q.name} not drained after $timeoutMs ms")
-      Thread.sleep(25)
-    }
-    if (stopAfterDrain) {
-      q.stop()
-      q.awaitTermination()
-    }
+    val q = Run.run("stream_dup_spans_occ", dupOcc, Run.Sink.Memory(),
+      paced = evictSingletonsAfterMs.map(_ => inDir))
+    Dedup.spansFromOccurrences(ss.table(q.name), w)
   }
 
   /** (doc_id, cluster_id) near-dup component resolution over the planted
@@ -1434,12 +1187,9 @@ object QueriesLlm {
       // small shuffle-partition count (sized to state volume), and a
       // session-global conf.set would leak into any query planned
       // concurrently on the caller's session (round-11 advice).
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = Run.session(s, 8)
       import ss.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      val inDir = docsSplitDir(s, dir)
-      val schema = ss.read.parquet(inDir.resolve("0_docs.parquet").toString).schema
       val evalSet = t(ss, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(substring_index(col("text"), " ", 20).as("text"))
       // localCheckpoint: the stream-static join re-executes the static
@@ -1450,15 +1200,10 @@ object QueriesLlm {
           plantedCorpus(ss, dir).repartition(Tables.fanout(ss)), evalSet, "doc_id", "text", n = 5)
         .select(col("doc_id"), lit(1).as("_c"))
         .localCheckpoint(false)
-      val stream = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        // one file per micro-batch = one scan split; distribute the
-        // per-row digest/token/quality math instead of fusing it into a
-        // single pre-shuffle task (same fanout as stream_dup_spans).
-        // Keep-first depends on batch MEMBERSHIP, not intra-batch order
-        // (the state fn takes minBy over each batch's rows), so the
-        // round-robin exchange cannot change the result.
-        .repartition(Tables.fanout(ss))
+      // Keep-first depends on batch MEMBERSHIP, not intra-batch order
+      // (the state fn takes minBy over each batch's rows), so the reader's
+      // round-robin exchange cannot change the result.
+      val stream = Run.readSplits(ss, docsSplitDir(s, dir))
         .select(col("doc_id"), md5(col("text").cast(BinaryType)).as("_d"),
           TextAnalysis.tokenCount(col("text")).cast(LongType).as("n_tokens"),
           TextAnalysis.qualityScore(col("text")).as("quality"))
@@ -1475,16 +1220,7 @@ object QueriesLlm {
         .join(contaminated, Seq("doc_id"), "left_outer")
         .filter(col("_c").isNull)
         .select("doc_id", "n_tokens", "quality")
-      val ckpt = java.nio.file.Files.createTempDirectory("scs_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = selected.writeStream.format("memory")
-        .queryName("stream_corpus_select_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("stream_corpus_select_sink")
+      ss.table(Run.run("stream_corpus_select", selected, Run.Sink.Memory()).name)
     }),
 
     // STREAMING twin of llm_dup_spans — the shape a continuous-ingestion
@@ -1525,8 +1261,6 @@ object QueriesLlm {
       val ss = s.newSession()
       import ss.implicits._
       val n = 5
-      val inDir = documentsSplitDir(s, dir)
-      val schema = ss.read.parquet(inDir.resolve("0_docs.parquet").toString).schema
       // bounded by construction (an eval/benchmark set): collect + broadcast
       val evalTok = t(ss, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(Dedup.tokens(substring_index(col("text"), " ", 20)).as("_t"))
@@ -1535,9 +1269,7 @@ object QueriesLlm {
           i => array_join(slice(col("_t"), i + 1, lit(n)), " "))).as("g"))
         .distinct().as[String].collect().toSet
       val grams = ss.sparkContext.broadcast(evalTok)
-      val cutDone = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        .repartition(Tables.fanout(ss)) // one file per batch = one scan split
+      val cutDone = Run.readSplits(ss, documentsSplitDir(s, dir))
         .select(col("doc_id"), Dedup.tokens(col("text")).as("_t"))
         .as[(Long, Seq[String])]
         .map { case (id, toks) =>
@@ -1555,16 +1287,7 @@ object QueriesLlm {
           }
         }
         .toDF("doc_id", "clean_text", "n_cut")
-      val ckpt = java.nio.file.Files.createTempDirectory("sdc_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = cutDone.writeStream.format("memory")
-        .queryName("stream_decontaminate_cut_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("stream_decontaminate_cut_sink")
+      ss.table(Run.run("stream_decontaminate_cut", cutDone, Run.Sink.Memory()).name)
     }),
 
     // STREAMING twin of llm_embed_decontaminate — the deployment shape
@@ -1581,26 +1304,11 @@ object QueriesLlm {
     "stream_embed_decontaminate" -> ((s, dir) => {
       val ss = s.newSession()
       val evalSet = embEvalSet(ss, dir)
-      val inDir = embDeconSplitDir(s, dir)
-      val schema = ss.read.parquet(inDir.resolve("0_emb2.parquet").toString).schema
-      val outDir = deleteTreeOnExit(java.nio.file.Files.createTempDirectory("sed_out"))
-      val stream = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        // one file per micro-batch = one scan split; distribute the
-        // per-row cosine math (the one-file-input lesson)
-        .repartition(Tables.fanout(ss))
-      val ckpt = java.nio.file.Files.createTempDirectory("sed_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          embedDeconWith(batch, evalSet)
-            .write.mode("append").parquet(outDir.toString)
-          ()
-        }
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val outDir = TempDir("sed_out")
+      Run.run("stream_embed_decontaminate", Run.readSplits(ss, embDeconSplitDir(s, dir)),
+        Run.Sink.Batches { (batch, _) =>
+          embedDeconWith(batch, evalSet).write.mode("append").parquet(outDir.toString)
+        })
       ss.read.parquet(outDir.toString)
     }),
 
@@ -1619,27 +1327,11 @@ object QueriesLlm {
     "stream_bpe_encode" -> ((s, dir) => {
       val ss = s.newSession()
       val merges = bpeMergeTable(s, dir) // frozen: trained once, cached per dir
-      val inDir = documentsSplitDir(s, dir)
-      val schema = ss.read.parquet(inDir.resolve("0_docs.parquet").toString).schema
-      val docs = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        // one file per micro-batch = one scan split; distribute the
-        // per-row encode (the one-file-input lesson)
-        .repartition(Tables.fanout(ss))
+      val docs = Run.readSplits(ss, documentsSplitDir(s, dir))
       val enc = graft.ml.Bpe.encodeDocs(docs, "doc_id", "text", merges)
         .select(col("doc_id"), array_join(col("bpe"), " ").as("bpe_text"),
           size(col("bpe")).cast(LongType).as("n_bpe"))
-      val ckpt = java.nio.file.Files.createTempDirectory("sbe_ckpt").toFile
-      ckpt.deleteOnExit()
-      val sink = s"stream_bpe_encode_${sinkIds.incrementAndGet()}"
-      val q = enc.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(sink)
+      ss.table(Run.run("stream_bpe_encode", enc, Run.Sink.Memory()).name)
     }),
 
     // GPT-2-mode streaming twin (stream_bpe_encode's shape with the
@@ -1649,25 +1341,11 @@ object QueriesLlm {
     "stream_bpe_encode_gpt2" -> ((s, dir) => {
       val ss = s.newSession()
       val merges = bpeMergeTableGpt2(s, dir) // frozen: trained once, cached per dir
-      val inDir = documentsSplitDir(s, dir)
-      val schema = ss.read.parquet(inDir.resolve("0_docs.parquet").toString).schema
-      val docs = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        .repartition(Tables.fanout(ss))
+      val docs = Run.readSplits(ss, documentsSplitDir(s, dir))
       val enc = graft.ml.Bpe.encodeDocs(docs, "doc_id", "text", merges, gpt2 = true)
         .select(col("doc_id"), array_join(col("bpe"), " ").as("bpe_text"),
           size(col("bpe")).cast(LongType).as("n_bpe"))
-      val ckpt = java.nio.file.Files.createTempDirectory("sbeg_ckpt").toFile
-      ckpt.deleteOnExit()
-      val sink = s"stream_bpe_encode_gpt2_${sinkIds.incrementAndGet()}"
-      val q = enc.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(sink)
+      ss.table(Run.run("stream_bpe_encode_gpt2", enc, Run.Sink.Memory()).name)
     }),
 
     // STREAMING twin of llm_lm_score — the deployment shape: score a
@@ -1683,8 +1361,6 @@ object QueriesLlm {
     // oracle verbatim.
     "stream_lm_score" -> ((s, dir) => {
       val ss = s.newSession()
-      val inDir = documentsSplitDir(s, dir)
-      val schema = ss.read.parquet(inDir.resolve("0_docs.parquet").toString).schema
       // the frozen model is a STATIC artifact of the training corpus —
       // cached across invocations as collected bounded tables (≤10k rows
       // each by construction; the documentsSplitDir fixture-cache
@@ -1701,26 +1377,14 @@ object QueriesLlm {
         TextAnalysis.LmModel(uni.toSeq.toDF("_b", "_uc"),
           bi.toSeq.toDF("_b", "_bc"), uTot, 10000)
       }
-      val outDir = java.nio.file.Files.createTempDirectory("slm_out")
-      val stream = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        // one file per micro-batch = one scan split; distribute the
-        // per-row shingle/bucket math (the one-file-input lesson)
-        .repartition(Tables.fanout(ss))
-      val ckpt = java.nio.file.Files.createTempDirectory("slm_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      val outDir = TempDir("slm_out")
+      Run.run("stream_lm_score", Run.readSplits(ss, documentsSplitDir(s, dir)),
+        Run.Sink.Batches { (batch, _) =>
           TextAnalysis.lmScoreWith(model, batch, "doc_id", "text")
             .select(col("doc_id"), round(col("lm_score"), 6).as("lm_score"),
               col("n_bigrams"))
             .write.mode("append").parquet(outDir.toString)
-          ()
-        }
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        })
       ss.read.parquet(outDir.toString)
     }),
 
@@ -2058,7 +1722,7 @@ object QueriesLlm {
     // first-seen keep == the batch loser rule.
     "stream_semdedup_q" -> ((s, dir) =>
       streamSemDedupQRun(s, semCentroidsQ(s, dir), embSplitDirQ(s, dir),
-        shufflePartitions = "8", sinkPrefix = "stream_semdedup_q")),
+        stateWidth = 8, name = "stream_semdedup_q")),
 
     // STREAMING twin of llm_semdedup_hq — semantic dedup in the deploy
     // topology ON the production assignment path: the frozen 64-cell
@@ -2070,7 +1734,7 @@ object QueriesLlm {
     // counts under an engine-level check.
     "stream_semdedup_hq" -> ((s, dir) =>
       streamSemDedupQRun(s, semCentroidsHQ(s, dir), embSplitDirHQ(s, dir),
-        shufflePartitions = "32", sinkPrefix = "stream_semdedup_hq")),
+        stateWidth = 32, name = "stream_semdedup_hq")),
 
     // STREAMING twin of llm_semdedup — the deployment topology semantic
     // dedup actually runs (the stream_lm_score pattern applied to the
@@ -2253,27 +1917,17 @@ object QueriesLlm {
       val idx = streamIvfIndexDirQ(s, dir)
       val qs = t(s, dir, "embeddings").filter(col("vec_id") < 5)
         .select("vec_id", "embedding")
-      val inDir = QueriesCore.writeSplitDir("sannserve_in", Seq(
+      val inDir = Run.writeSplitDir("sannserve_in", Seq(
         (qs.filter(col("vec_id") < 2), "0_q.parquet"),
         (qs.filter(col("vec_id") >= 2), "1_q.parquet")))
-      val ss = s.newSession()
-      val schema = ss.read.parquet(inDir.resolve("0_q.parquet").toString).schema
       val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-      val ckpt = java.nio.file.Files.createTempDirectory("sannserve_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      // a few query rows per batch: nothing to spread
+      Run.run("stream_ann_serve", Run.readSplits(s.newSession(), inDir, spread = false),
+        Run.Sink.Batches { (batch, _) =>
           Similarity.ivfTopKIndexedQ(batch.sparkSession, idx, batch,
             "vec_id", "embedding", k = 5, nProbe = 4)
             .collect().foreach(buf.add)
-          (): Unit
-        }
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        })
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),

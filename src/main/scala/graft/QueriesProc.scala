@@ -1,6 +1,7 @@
 package graft
 
-import graft.core.{Flow, Msg, Processor, Tables}
+import graft.core.{Flow, Msg, Processor, Tables, TempDir}
+import graft.streaming.Run
 import graft.operators.{Caches, Grok, Processors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -151,23 +152,15 @@ object QueriesProc {
     // file_tail input (tail -f shape): a file-stream text source with
     // maxFilesPerTrigger pacing, drained by AvailableNow into the gate
     "src_file_tail" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("ftail").toFile
-      tmp.deleteOnExit()
+      val tmp = TempDir("ftail").toString
       t(s, dir, "events").select(to_json(struct(col("event_id"), col("event_type"))))
-        .coalesce(4).write.mode("overwrite").text(tmp.getPath)
-      val ckpt = java.nio.file.Files.createTempDirectory("ftail_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = graft.conn.Sources.fileTail(s, tmp.getPath)
+        .coalesce(4).write.mode("overwrite").text(tmp)
+      val ss = s.newSession()
+      val lines = graft.conn.Sources.fileTail(ss, tmp)
         .select(
           get_json_object(col("content"), "$.event_id").cast(LongType).as("event_id"),
           get_json_object(col("content"), "$.event_type").as("event_type"))
-        .writeStream.format("memory").queryName("src_file_tail_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("src_file_tail_sink")
+      ss.table(Run.run("src_file_tail", lines, Run.Sink.Memory()).name)
     }),
 
     // socket input (impl/io/input_socket.go — TCP line stream): a REAL
@@ -739,7 +732,7 @@ object QueriesProc {
     // one-process semantics)
     "cache_file" -> ((s, dir) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fcache").toString
+      val tmp = TempDir("graft_fcache").toString
       val regions = t(s, dir, "region")
         .select(col("r_regionkey").cast(LongType), col("r_name"))
       graft.operators.External.perPartitionLookup[
@@ -1099,7 +1092,7 @@ object QueriesProc {
     // reference input's path-provider order
     "src_sftp" -> ((s, dir) => {
       import s.implicits._
-      val root = java.nio.file.Files.createTempDirectory("graft-sftp")
+      val root = TempDir("graft-sftp")
       val srv = new graft.conn.Ssh.MiniSshd(root, "graft", "gate-pw").start()
       val addr = srv.address
       val hostPub = srv.hostPubRaw
@@ -1228,7 +1221,7 @@ object QueriesProc {
       // cursor drains into durable parquet chunks — messages deleted
       // only AFTER their chunk is on disk — and the result is the
       // DISTRIBUTED scan over the spool, not a driver-side collection
-      val spoolDir = java.nio.file.Files.createTempDirectory("graft-sqs-spool").toString
+      val spoolDir = TempDir("graft-sqs-spool").toString
       val spooled = graft.operators.SpooledSource.run(s, spoolDir, chunkRows = 2000)(
         () => setup.receive(url, max = 10, waitTimeSec = 2))(
         m => graft.operators.SpooledSource.SpoolMsg(m.body, m.attributes, m.receiveCount))(
@@ -1382,7 +1375,7 @@ object QueriesProc {
         "SELECT okey, priority, total FROM `graft.ds.orders` WHERE total > ?",
         Seq(1000.0), pageSize = 1000)
       val cursor = res.rows
-      val spoolDir = java.nio.file.Files.createTempDirectory("graft-bq-spool").toString
+      val spoolDir = TempDir("graft-bq-spool").toString
       val spooled = graft.operators.SpooledSource.run(s, spoolDir, chunkRows = 2000)(
         () => {
           val buf = Vector.newBuilder[Vector[String]]
@@ -1654,7 +1647,7 @@ object QueriesProc {
     // cross the gate and the oracle replays them
     "src_fsevent" -> ((s, dir) => {
       import s.implicits._
-      val watchDir = java.nio.file.Files.createTempDirectory("graft-fsev").toString
+      val watchDir = TempDir("graft-fsev").toString
       val w = new graft.operators.Fsevent.Watcher(Seq(watchDir))
       // the consumer drains CONCURRENTLY with the writers — the
       // WatchService buffers at most 512 events per key between polls,
@@ -2237,29 +2230,19 @@ object QueriesProc {
     "stream_out_s3" -> ((s, dir) => {
       val srv = new graft.conn.S3.MiniS3().start()
       val endpoint = srv.endpoint
-      val inDir = QueriesCore.timeSplitEventsDir(s, dir)
-      val schema = s.read.parquet(inDir.resolve("0_events.parquet").toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+      // streamOutput repartitions by the object key itself
+      val stream = Run.readSplits(s, QueriesCore.timeSplitEventsDir(s, dir), spread = false)
         .filter(col("event_type").isNotNull && col("value").isNotNull &&
           col("event_id") % 5 === 0)
         .select(col("event_id"), col("event_type"), col("value"))
-      val ckpt = java.nio.file.Files.createTempDirectory("sos_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         batchId: Long) =>
-          graft.conn.S3.streamOutput(batch.toDF(), endpoint, "lake",
-            partitionExpr = col("event_type"),
-            partitionKeyOf = r => r.getString(1),
-            pathOf = r => s"ev/batch=$batchId/type=${r.getString(1)}.psv",
-            bodyOf = r => s"${r.getLong(0)}|${r.getDouble(2)}\n".getBytes("UTF-8"),
-            maxBufferBytes = 8 * 1024, minPartBytes = 0)
-        }
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Run.run("stream_out_s3", stream, Run.Sink.Batches { (batch, batchId) =>
+        graft.conn.S3.streamOutput(batch, endpoint, "lake",
+          partitionExpr = col("event_type"),
+          partitionKeyOf = r => r.getString(1),
+          pathOf = r => s"ev/batch=$batchId/type=${r.getString(1)}.psv",
+          bodyOf = r => s"${r.getLong(0)}|${r.getDouble(2)}\n".getBytes("UTF-8"),
+          maxBufferBytes = 8 * 1024, minPartBytes = 0)
+      })
       val back = graft.conn.S3.input(s, endpoint, "lake", "ev/")
         .toDF("s3_key", "content", "mtime", "ctype")
       back.select(
@@ -2287,35 +2270,25 @@ object QueriesProc {
       val table = "projects/proj/datasets/ds/tables/events_stream"
       val srv = new graft.conn.BigQueryWrite.MiniBqStorage(Map(table -> fields)).start()
       val port = srv.port
-      val inDir = QueriesCore.timeSplitEventsDir(s, dir)
-      val schema = s.read.parquet(inDir.resolve("0_events.parquet").toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+      val stream = Run.readSplits(s, QueriesCore.timeSplitEventsDir(s, dir))
         .filter(col("value").isNotNull && col("event_type").isNotNull &&
           col("event_id") % 5 === 1)
         .select(to_json(struct(col("event_id"), col("event_type"), col("value"),
           (col("value") > 100.0).as("big"))).as("j"))
-      val ckpt = java.nio.file.Files.createTempDirectory("sbq_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         _: Long) =>
-          batch.toDF().repartition(Tables.fanout(s))
-            .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-              if (it.nonEmpty) {
-                val c = new graft.conn.BigQueryWrite.Client("127.0.0.1", port)
-                try {
-                  val schema2 = c.getWriteStream(table)
-                  c.appendJsonRows(table, schema2, it.map(_.getString(0)), batchRows = 500)
-                  ()
-                } finally c.close()
-              }
-            }
+      // the reader has already spread each one-file batch over the
+      // scheduler: one AppendRows stream per partition
+      Run.run("stream_out_bq_write", stream, Run.Sink.Batches { (batch, _) =>
+        batch.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
+          if (it.nonEmpty) {
+            val c = new graft.conn.BigQueryWrite.Client("127.0.0.1", port)
+            try {
+              val schema2 = c.getWriteStream(table)
+              c.appendJsonRows(table, schema2, it.map(_.getString(0)), batchRows = 500)
+              ()
+            } finally c.close()
+          }
         }
-        .option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      })
       val out = srv.rows(table).map(r => (r("event_id").asInstanceOf[Long],
         r("event_type").asInstanceOf[String], r("value").asInstanceOf[Double],
         r("big").asInstanceOf[Boolean]))
@@ -2754,7 +2727,7 @@ object QueriesProc {
       // drain-complete signal, no timeout heuristics anywhere — and the
       // driver re-checks the drained total against the produced count
       srv.terminate("events")
-      val spool = java.nio.file.Files.createTempDirectory("pulsar-spool").toString
+      val spool = TempDir("pulsar-spool").toString
       val nCons = Tables.connFanout(s, 8)
       // NOTE: this drain assumes NO task retries (local fixture: the
       // broker advances the shared-subscription cursor on delivery, acks

@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.Json
+import graft.core.{Json, TempDir}
 import graft.ml.Dedup
+import graft.streaming.Run
 
 /** State-store retention probe for streaming span dedup (SCALING.md).
   *
@@ -38,10 +39,10 @@ object StateProbe {
     val provider = args.lift(4).getOrElse("mem")
     val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // timeout-eviction happens in NO-DATA batches, whose progress events
+    // timeout-eviction happens in NO-DATA batches, whose progress updates
     // are throttled to every 10 s by default — longer than the probe's
     // 6 s linger, so eviction batches could go entirely unreported.
-    // Report them promptly; the listener below then counts every one.
+    // Report them promptly; the progress fold below then counts every one.
     spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "200")
     if (provider == "rocksdb") {
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -57,18 +58,11 @@ object StateProbe {
         "org.apache.spark.sql.execution.streaming.state.RocksDB",
         org.apache.logging.log4j.Level.ERROR)
     }
-    val pm = new ProbeMetrics(spark) // listener-accumulated, final-batch-polled
-    // per-batch durationMs decomposition (r19 verdict #3): addBatch vs
-    // state commit vs offset bookkeeping, printed as PROGRESS lines so the
-    // stream_dup_spans cost has an attributable breakdown, not a guess
-    val progress = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        progress.add(e.progress.json)
-    })
+    // the query's progress buffer keeps every batch (default: the last
+    // 100, which a 10 ms trigger burns in a second). ProgressReporter
+    // adds each batch's progress before posting its event, so once the
+    // query has stopped the buffer holds its final batch too.
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", Int.MaxValue.toString)
     import spark.implicits._
 
     val w = 15
@@ -76,14 +70,10 @@ object StateProbe {
     // the SAME planted corpus the stream_dup_spans gate streams (docs ∪
     // truncated twins) so the singleton/viral state mix is the gate's
     val docs = QueriesLlm.plantedCorpus(spark, docsDir)
-    val inDir = QueriesCore.writeSplitDir("stateprobe_in",
+    val inDir = Run.writeSplitDir("stateprobe_in",
       (0 until nSplits).map(i =>
         (docs.filter(pmod(col("doc_id"), lit(nSplits)) === i), f"$i%02d_docs.parquet")))
-    val schema = spark.read.parquet(inDir.resolve("00_docs.parquet").toString).schema
-
-    val occStream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-      .repartition(core.Tables.fanout(spark))
+    val occStream = Run.readSplits(spark, inDir)
       .select(col("doc_id"), Dedup.tokens(col("text")).as("_t"))
       .filter(size(col("_t")) >= w)
       .select(col("doc_id"), posexplode(Dedup.windowDigests(col("_t"), w)).as(Seq("pos", "h")))
@@ -91,44 +81,39 @@ object StateProbe {
     val horizon = if (horizonMs > 0) Some(horizonMs) else None
     val dupOcc = graft.streaming.StreamDedup.dupOccurrences(occStream, horizon)
 
-    val ckpt = java.nio.file.Files.createTempDirectory("stateprobe_ckpt").toFile
-    ckpt.deleteOnExit()
     // noop sink: the memory sink accumulates every emitted occurrence on
     // the DRIVER — at 100× that is tens of millions of rows and the sink
     // itself becomes the bottleneck being mismeasured; emitted counts
     // come from the progress stream instead
-    val writer = dupOcc.writeStream.format("noop").queryName("stateprobe_sink")
-      .outputMode("append").option("checkpointLocation", ckpt.getPath)
-
+    val sink = Run.Sink.Files("noop")
     val t0 = System.nanoTime()
     val q =
       if (horizon.isDefined) {
         // deployment shape: paced trigger; timeouts fire in no-data batches
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10L))
-          .start()
-        pm.bind(q0) // pin the session-wide listener to this query (r15 advice)
+        val q0 = Run.start("stateprobe", dupOcc, sink,
+          org.apache.spark.sql.streaming.Trigger.ProcessingTime(10L),
+          TempDir("stateprobe_ckpt").toString)
         // drain the input, then LINGER so the horizon actually elapses for
         // the last batches' singletons (drainAndStop would stop at the
         // first empty batch, before any timeout fires)
-        QueriesLlm.drainAndStop(q0, stopAfterDrain = false)
+        Run.drainAndStop(q0, stopAfterDrain = false)
         Thread.sleep(lingerMs)
         q0.stop(); q0.awaitTermination()
         q0
-      } else {
-        val q0 = writer
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        pm.bind(q0) // pin the session-wide listener to this query (r15 advice)
-        q0.awaitTermination()
-        q0
-      }
+      } else Run.run("stateprobe", dupOcc, sink)
     val wall = (System.nanoTime() - t0) / 1e9
 
-    pm.finish(q)
-    // PROGRESS lines first: the result record is the last stdout line
-    progress.forEach(j => println(s"PROGRESS $j"))
-    println(f"""{"stateprobe":${Json.quote(docsDir)},"splits":$nSplits,"horizon_ms":$horizonMs,"provider":${Json.quote(provider)},"rows_total":${pm.stateRows},"rows_removed":${pm.removed.get()},"state_bytes":${pm.stateBytes},"emitted":${pm.emitted.get()},"wall":$wall%.3f}""")
+    // per-batch durationMs decomposition (addBatch vs state commit vs
+    // offset bookkeeping) as PROGRESS lines, so the stream_dup_spans cost
+    // has an attributable breakdown; they print first because the result
+    // record is the last stdout line
+    val progress = q.recentProgress
+    progress.foreach(p => println(s"PROGRESS ${p.json}"))
+    val stateOps = progress.map(p => Option(p.stateOperators).toSeq.flatten)
+    val last = stateOps.reverseIterator.find(_.nonEmpty).flatMap(_.lastOption)
+    val removed = stateOps.flatten.map(_.numRowsRemoved).sum
+    val emitted = progress.flatMap(p => Option(p.sink)).map(_.numOutputRows).filter(_ > 0).sum
+    println(f"""{"stateprobe":${Json.quote(docsDir)},"splits":$nSplits,"horizon_ms":$horizonMs,"provider":${Json.quote(provider)},"rows_total":${last.map(_.numRowsTotal).getOrElse(0L)},"rows_removed":$removed,"state_bytes":${last.map(_.memoryUsedBytes).getOrElse(0L)},"emitted":$emitted,"wall":$wall%.3f}""")
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.Run
 import org.apache.spark.sql.functions._
 
 /** r19 optimization-round decomposition probe for the streaming
@@ -7,10 +8,10 @@ import org.apache.spark.sql.functions._
   * Times, in one JVM over the gate's own cached fixture:
   *   1. batch decode only      — fixture scan + fused decode UDF, noop-style
   *   2. decode + block explode — catches duplicated UDF evaluation
-  *   3. the full streaming twin (the gate body verbatim), with a listener
-  *      printing each micro-batch's durationMs map (triggerExecution /
-  *      addBatch / stateCommit...) so the fixed streaming premium is
-  *      attributable instead of guessed.
+  *   3. the full streaming twin (the gate body verbatim), printing each
+  *      micro-batch's durationMs map (triggerExecution / addBatch /
+  *      stateCommit...) from the query's progress so the fixed streaming
+  *      premium is attributable instead of guessed.
   *
   * Usage: runMain graft.StreamCostProbe <sfDir> <vhash|ahash|dhash>
   *
@@ -48,36 +49,19 @@ object StreamCostProbe {
         .toDF("id", "s", "b", "k").agg(max("k"), max("s")).collect()
     }).min
 
-    // the full streaming twin (gate body inlined so the progress listener
-    // sits on the query's own session), with per-batch progress
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", core.Tables.fanout(ss).toString)
-    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        events.add(e.progress.json)
-    }
-    ss.streams.addListener(listener)
-    var si = 0
+    // the full streaming twin (the gate body on its own session), with
+    // each run's per-batch progress folded from the stopped query
+    val ss = Run.session(spark, core.Tables.fanout(spark))
+    val progress = Vector.newBuilder[String]
     val wStream = (1 to 2).map(_ => wall {
       val pairs = QueriesLlm.fingerprintPairStream(ss, inDir, fp, sig,
         evictBucketAfterMs = Some(3600L * 1000))
-      val ckpt = java.nio.file.Files.createTempDirectory("scp_ckpt").toFile
-      ckpt.deleteOnExit()
-      si += 1
-      val q = pairs.writeStream.format("memory").queryName(s"scp_sink_$si")
-        .outputMode("append").option("checkpointLocation", ckpt.getPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L)).start()
-      QueriesLlm.drainAndStop(q,
-        expectBatches = Some(QueriesLlm.splitCount(inDir, QueriesLlm.splitWidth(inDir))))
-      ss.table(s"scp_sink_$si").agg(count(lit(1))).collect()
+      val q = Run.run("scp", pairs, Run.Sink.Memory(), paced = Some(inDir))
+      ss.table(q.name).agg(count(lit(1))).collect()
+      progress ++= q.recentProgress.map(_.json)
     }).min
-    ss.streams.removeListener(listener)
 
-    events.forEach(j => println(s"PROGRESS $j"))
+    progress.result().foreach(j => println(s"PROGRESS $j"))
     println(s"""{"streamcostprobe":"$mode","decode_wall":$wDecode,"explode_wall":$wExplode,"stream_wall":$wStream}""")
     spark.stop()
   }

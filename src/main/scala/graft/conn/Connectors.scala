@@ -284,12 +284,9 @@ object Outputs {
 
   /** Start a streaming query writing through a foreachBatch router with a
     * checkpoint — the at-least-once/exactly-once seam (SURVEY §2.8:
-    * Transaction/acks → checkpointing). */
+    * Transaction/acks → checkpointing), on [[graft.streaming.Run.start]]. */
   def start(df: DataFrame, router: (DataFrame, Long) => Unit, checkpoint: String,
             trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(router)
-      .start()
+    graft.streaming.Run.start("outputs", df, graft.streaming.Run.Sink.Batches(router),
+      trigger, checkpoint)
 }

@@ -501,6 +501,10 @@ object Jaeger {
   /** UDP agent fixture: decodes compact emitBatch datagrams. */
   final class MiniJaegerAgent {
     private val sock = new DatagramSocket(new InetSocketAddress("127.0.0.1", 0))
+    // room for a whole split batch (several ~65 KB datagrams): at the
+    // default receive buffer a loaded host drops one before this
+    // thread drains the socket
+    sock.setReceiveBufferSize(4 << 20)
     private val buf = new java.util.concurrent.ConcurrentLinkedQueue[(String, Otlp.Span)]()
     @volatile private var running = true
     def address: String = s"127.0.0.1:${sock.getLocalPort}"

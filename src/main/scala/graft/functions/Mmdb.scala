@@ -351,8 +351,8 @@ object Mmdb {
     * Written once per JVM to the temp dir; at cluster scale the file would
     * ship via SparkContext.addFile (local[…] shares the filesystem). */
   lazy val cityFixturePath: String = {
-    val f = java.nio.file.Files.createTempFile("graft_geoip_city", ".mmdb")
-    f.toFile.deleteOnExit()
+    val f = graft.core.TempDir.deleteTreeOnExit(
+      java.nio.file.Files.createTempFile("graft_geoip_city", ".mmdb"))
     val w = new Writer(ipVersion = 4, recordSize = 32)
     def rec(city: String, iso: String, asn: Long, lat: Double): Map[String, Any] = Map(
       "city" -> Map("names" -> Map("en" -> city)),

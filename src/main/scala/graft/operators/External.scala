@@ -149,7 +149,8 @@ object External {
     *  1. Ingestion throttling — the scale-correct form for "slow the
     *     pipeline down": `maxOffsetsPerTrigger`/`maxFilesPerTrigger` on
     *     the source + a `ProcessingTime` trigger. See
-    *     Sources.kafkaReader/fileStream and Outputs.start.
+    *     Sources.kafkaReader/fileStream, and graft.streaming.Run.start
+    *     (which Outputs.start calls) for the trigger.
     *  2. A token bucket for client-side API caps inside
     *     `perPartitionLookup` — state is per partition, so divide the
     *     global budget by concurrent partitions (executors × cores /

@@ -43,9 +43,14 @@ object Subprocess {
         val p = new ProcessBuilder(cmd: _*).start()
         val out = new java.io.ByteArrayOutputStream()
         val errB = new java.io.ByteArrayOutputStream()
+        // a child may exit without reading its stdin (the pipe then breaks
+        // mid-write or at the closing flush): its exit code and stderr
+        // decide the row, so the writer thread drops that error
         val writer = new Thread(() => {
-          try { p.getOutputStream.write(content.getBytes("UTF-8")) }
-          finally p.getOutputStream.close()
+          try {
+            try p.getOutputStream.write(content.getBytes("UTF-8"))
+            finally p.getOutputStream.close()
+          } catch { case _: java.io.IOException => () }
         })
         writer.start()
         p.getInputStream.transferTo(out)

@@ -1,7 +1,8 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{Tables, TempDir}
 import graft.ml.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.streaming.Run
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
@@ -399,7 +400,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("materialized IVF index: partition-pruned probe matches the in-memory path") {
-    val dir = java.nio.file.Files.createTempDirectory("mlspec_ivf").toString
+    val dir = TempDir("mlspec_ivf").toString
     val queries = emb.filter(col("vec_id") < 8)
     Similarity.ivfWriteIndex(emb, "vec_id", "embedding", 64, dir,
       nCells = 16, iters = 4, trainMod = 2)
@@ -478,7 +479,7 @@ class MlSpec extends SparkSpec {
     // while the scan prunes to the probed `_cell=` partitions
     val queries = emb.filter(col("vec_id") < 8)
     for (cells <- Seq(16, 64)) { // flat-tagged and hier-tagged layouts
-      val dir = java.nio.file.Files.createTempDirectory(s"mlspec_ivfq$cells").toString
+      val dir = TempDir(s"mlspec_ivfq$cells").toString
       Similarity.ivfWriteIndexQ(emb, "vec_id", "embedding", 64, dir,
         nCells = cells, iters = 4, trainMod = 2)
       val indexed = Similarity.ivfTopKIndexedQ(spark, dir, queries,
@@ -1249,8 +1250,7 @@ class MlSpec extends SparkSpec {
     implicit val sq = ss.sqlContext
     val in = MemoryStream[(Long, Long, Int, Long)]
     val pairs = graft.streaming.StreamPhash.candidatePairs(in.toDS(), maxHamming = 7, blocks = 8)
-    val ckpt = java.nio.file.Files.createTempDirectory("sph_spec_ckpt").toFile
-    ckpt.deleteOnExit()
+    val ckpt = TempDir("sph_spec_ckpt").toFile
     val q = pairs.writeStream.format("memory").queryName("sph_spec_sink")
       .outputMode("append").option("checkpointLocation", ckpt.getPath).start()
     // sig A and sig B: identical prints (ALL 8 blocks match — the
@@ -1355,14 +1355,21 @@ class MlSpec extends SparkSpec {
 
   test("splitCount counts batches under the consumer's own maxFilesPerTrigger") {
     val part = spark.range(8).toDF("id")
-    val inDir = QueriesCore.writeSplitDir("split_count",
+    val sharded = Run.writeSplitDir("split_count",
       Seq(part -> "0_a.parquet", part -> "1_b.parquet"), filesPerPart = 2)
-    assert(new java.io.File(inDir.toString).listFiles()
+    assert(new java.io.File(sharded.toString).listFiles()
       .count(_.getName.endsWith(".parquet")) == 4)
-    // one file per micro-batch: four batches, where the two-file `0_`
-    // split alone would suggest two and stop the drain halfway
-    assert(QueriesLlm.splitCount(inDir, perTrigger = 1) == 4)
-    assert(QueriesLlm.splitCount(inDir, QueriesLlm.splitWidth(inDir)) == 2)
+    // the same four files one per split: four batches, where the two-file
+    // `0_` split of the sharded fixture would suggest two
+    val single = Run.writeSplitDir("split_count1", Seq(part -> "0_a.parquet",
+      part -> "1_b.parquet", part -> "2_c.parquet", part -> "3_d.parquet"))
+    // splitCount and the reader take the per-trigger width from one rule:
+    // the stream yields exactly splitCount data batches
+    def dataBatches(inDir: java.nio.file.Path): Int =
+      Run.run("split_count", Run.readSplits(spark.newSession(), inDir),
+        Run.Sink.Files("noop")).recentProgress.count(_.numInputRows > 0)
+    assert(Run.splitCount(single) == 4 && dataBatches(single) == 4)
+    assert(Run.splitCount(sharded) == 2 && dataBatches(sharded) == 2)
   }
 
   test("StreamPhash: cold buckets age out past the horizon; same-batch pairing survives") {
@@ -1384,7 +1391,7 @@ class MlSpec extends SparkSpec {
     def occFile(rows: Seq[(Long, Long, Int, Long)]) =
       rows.toDF("id", "sig", "blk", "key")
     def key(sig: Long) = sig & 0xFFL
-    val inDir = QueriesCore.writeSplitDir("sph_evict", Seq(
+    val inDir = Run.writeSplitDir("sph_evict", Seq(
       (occFile(Seq((1L, sigA, 0, key(sigA)))), "0_occ.parquet"),
       (occFile(Seq((100L, 0x7070707070707070L, 0, 0x70L))), "1_occ.parquet"),
       (occFile(Seq((101L, 0x6060606060606060L, 0, 0x60L))), "2_occ.parquet"),
@@ -1398,8 +1405,7 @@ class MlSpec extends SparkSpec {
         .parquet(inDir.toString)
         .toDF("_1", "_2", "_3", "_4").as[(Long, Long, Int, Long)]
       val sink = s"sph_evict_${evict.isDefined}"
-      val ckpt = java.nio.file.Files.createTempDirectory("sph_evict_ckpt").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir("sph_evict_ckpt").toFile
       val writer = graft.streaming.StreamPhash
         .candidatePairs(occ, maxHamming = 7, blocks = 8, evictBucketAfterMs = evict)
         .writeStream.format("memory").queryName(sink)
@@ -1408,7 +1414,7 @@ class MlSpec extends SparkSpec {
         if (evict.isDefined) {
           val q0 = writer
             .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(20L)).start()
-          QueriesLlm.drainAndStop(q0)
+          Run.drainAndStop(q0)
           q0
         } else {
           val q0 = writer
@@ -1444,7 +1450,7 @@ class MlSpec extends SparkSpec {
     val sigA = 0x1122334455667788L
     def occFile(rows: Seq[(Long, Long, Int, Long)]) =
       rows.toDF("id", "sig", "blk", "key")
-    val inDir = QueriesCore.writeSplitDir("sph_sat", Seq(
+    val inDir = Run.writeSplitDir("sph_sat", Seq(
       (occFile(Seq((1L, sigA, 0, sigA & 0xFFL))), "0_occ.parquet"),
       (occFile(Seq((2L, sigA, 0, sigA & 0xFFL))), "1_occ.parquet"),
       (occFile(Seq((3L, sigA, 0, sigA & 0xFFL))), "2_occ.parquet")))
@@ -1455,8 +1461,7 @@ class MlSpec extends SparkSpec {
       val occ = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir.toString)
         .toDF("_1", "_2", "_3", "_4").as[(Long, Long, Int, Long)]
-      val ckpt = java.nio.file.Files.createTempDirectory("sph_sat_ckpt").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir("sph_sat_ckpt").toFile
       val q = graft.streaming.StreamPhash
         .candidatePairs(occ, maxHamming = 7, blocks = 8, maxBucketSize = 1)
         .writeStream.format("memory").queryName("sph_sat_sink")
@@ -1496,7 +1501,7 @@ class MlSpec extends SparkSpec {
     val e0 = Seq(1.0, 0.0, 0.0, 0.0)
     def vecFile(rows: Seq[(Long, Int, Double, Seq[Double])]) =
       rows.toDF("id", "cell", "ccos", "vec")
-    val inDir = QueriesCore.writeSplitDir("ssd_evict", Seq(
+    val inDir = Run.writeSplitDir("ssd_evict", Seq(
       (vecFile(Seq((1L, 0, 1.0, e0))), "0_vec.parquet"),
       (vecFile(Seq((100L, 1, 1.0, Seq(0.0, 1.0, 0.0, 0.0)))), "1_vec.parquet"),
       (vecFile(Seq((101L, 2, 1.0, Seq(0.0, 0.0, 1.0, 0.0)))), "2_vec.parquet"),
@@ -1509,8 +1514,7 @@ class MlSpec extends SparkSpec {
         .parquet(inDir.toString)
         .toDF("_1", "_2", "_3", "_4").as[(Long, Int, Double, Seq[Double])]
       val sink = s"ssd_evict_${evict.isDefined}"
-      val ckpt = java.nio.file.Files.createTempDirectory("ssd_evict_ckpt").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir("ssd_evict_ckpt").toFile
       val writer = graft.streaming.StreamSemDedup
         .keepDecisions(rows, threshold = 0.95, evictCellAfterMs = evict)
         .writeStream.format("memory").queryName(sink)
@@ -1519,7 +1523,7 @@ class MlSpec extends SparkSpec {
         if (evict.isDefined) {
           val q0 = writer
             .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(20L)).start()
-          QueriesLlm.drainAndStop(q0)
+          Run.drainAndStop(q0)
           q0
         } else {
           val q0 = writer
@@ -1946,7 +1950,7 @@ class MlSpec extends SparkSpec {
     import spark.implicits._
     def occFile(rows: Seq[(Long, Int, Long)]) =
       rows.toDF("doc_id", "pos", "h")
-    val inDir = QueriesCore.writeSplitDir("sds_evict", Seq(
+    val inDir = Run.writeSplitDir("sds_evict", Seq(
       (occFile(Seq((0L, 0, 42L), (1L, 0, 11L), (2L, 0, 11L))), "0_occ.parquet"),
       (occFile(Seq((100L, 0, 777L))), "1_occ.parquet"),
       (occFile(Seq((101L, 0, 888L))), "2_occ.parquet"),
@@ -1959,12 +1963,11 @@ class MlSpec extends SparkSpec {
         .parquet(inDir.toString)
         .toDF("_1", "_2", "_3").as[(Long, Int, Long)]
       val sink = s"sds_evict_${evict.isDefined}"
-      val ckpt = java.nio.file.Files.createTempDirectory("sds_evict_ckpt").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir("sds_evict_ckpt").toFile
       // paced continuous trigger + drained-input stop for the eviction
       // run: under ProcessingTimeTimeout the engine schedules no-data
       // batches forever, so neither AvailableNow nor processAllAvailable
-      // ever returns (see QueriesLlm.drainAndStop); the pacing also
+      // ever returns (see Run.drainAndStop); the pacing also
       // guarantees the 1 ms horizon elapses between micro-batches
       val writer = graft.streaming.StreamDedup.dupOccurrences(occ, evict)
         .writeStream.format("memory").queryName(sink)
@@ -1972,7 +1975,7 @@ class MlSpec extends SparkSpec {
       if (evict.isDefined) {
         val q = writer
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(20L)).start()
-        QueriesLlm.drainAndStop(q)
+        Run.drainAndStop(q)
         val removed = q.recentProgress
           .flatMap(p => Option(p.stateOperators).toSeq.flatten)
           .map(_.numRowsRemoved).sum
@@ -2179,8 +2182,7 @@ class MlSpec extends SparkSpec {
     implicit val sq = ss.sqlContext
     val in = MemoryStream[(Long, Int, Double, Seq[Double])]
     val decided = graft.streaming.StreamSemDedup.keepDecisions(in.toDS(), threshold = 0.95)
-    val ckpt = java.nio.file.Files.createTempDirectory("ssdspec_ckpt").toFile
-    ckpt.deleteOnExit()
+    val ckpt = TempDir("ssdspec_ckpt").toFile
     val q = decided.writeStream.format("memory").queryName("ssd_spec_sink")
       .outputMode("append").option("checkpointLocation", ckpt.getPath).start()
     in.addData((1L, 0, 0.9, at(0)))                          // A, batch 1
@@ -2218,8 +2220,7 @@ class MlSpec extends SparkSpec {
       val in = MemoryStream[(Long, Int, Long, Seq[Long])]
       val decided = graft.streaming.StreamSemDedup.keepDecisionsQ(
         in.toDS(), threshold = 100L, evictCellAfterMs = evict)
-      val ckpt = java.nio.file.Files.createTempDirectory(s"evict_ckpt$n").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir(s"evict_ckpt$n").toFile
       val sink = s"evict_fire_sink$n"
       // NOT processAllAvailable: with ProcessingTimeTimeout the engine
       // keeps scheduling timeout-check batches, so `noNewData` never
@@ -2269,8 +2270,7 @@ class MlSpec extends SparkSpec {
       val in = MemoryStream[(Long, Long, Int, Long)] // (id, sig, block, key)
       val pairs = graft.streaming.StreamPhash.candidatePairs(
         in.toDS(), maxHamming = 3, blocks = 4, evictBucketAfterMs = evict)
-      val ckpt = java.nio.file.Files.createTempDirectory(s"evictp_ckpt$n").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir(s"evictp_ckpt$n").toFile
       val sink = s"evictp_fire_sink$n"
       // poll-the-sink pattern (see the semantic-cell twin above): pair
       // emission has no fixed row count per input, so poll for QUIESCE —
@@ -2336,8 +2336,7 @@ class MlSpec extends SparkSpec {
       val in = MemoryStream[(Long, Int, Long)] // (doc_id, pos, digest)
       val dups = graft.streaming.StreamDedup.dupOccurrences(
         in.toDS(), evictSingletonsAfterMs = evict)
-      val ckpt = java.nio.file.Files.createTempDirectory(s"evictd_ckpt$n").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir(s"evictd_ckpt$n").toFile
       val sink = s"evictd_fire_sink$n"
       val q = dups.writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt.getPath)
@@ -2410,7 +2409,7 @@ class MlSpec extends SparkSpec {
     val fix = Seq((0L, t0), (1L, t1)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
       .withColumn("n_chars", length(col("text")))
-    val fixDir = java.nio.file.Files.createTempDirectory("mlspec_keepbest").toString
+    val fixDir = TempDir("mlspec_keepbest").toString
     fix.write.mode("overwrite").parquet(s"$fixDir/documents.parquet")
     val kept = QueriesLlm.queries("llm_dedup_keep_best")(spark, fixDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
@@ -2589,7 +2588,7 @@ class MlSpec extends SparkSpec {
       Seq((3L, 4L)),
       Seq((11L, 12L), (20L, 21L)),
       Seq((21L, 22L), (4L, 20L))) // bridges {1..4} with {20,21,22}
-    val inDir = QueriesCore.writeSplitDir("cadence_in",
+    val inDir = Run.writeSplitDir("cadence_in",
       batches.zipWithIndex.map { case (b, i) =>
         (b.toDF("id_a", "id_b"), s"${i}_pairs.parquet") })
     val expected = Set(
@@ -2726,7 +2725,7 @@ class MlSpec extends SparkSpec {
     val e0 = Seq(1048576L, 0L, 0L, 0L)
     def vecFile(rows: Seq[(Long, Int, Long, Seq[Long])]) =
       rows.toDF("id", "cell", "prio", "vec")
-    val inDir = QueriesCore.writeSplitDir("ssdq_evict", Seq(
+    val inDir = Run.writeSplitDir("ssdq_evict", Seq(
       (vecFile(Seq((1L, 0, 100L, e0))), "0_vec.parquet"),
       (vecFile(Seq((100L, 1, 100L, Seq(0L, 1048576L, 0L, 0L)))), "1_vec.parquet"),
       (vecFile(Seq((101L, 2, 100L, Seq(0L, 0L, 1048576L, 0L)))), "2_vec.parquet"),
@@ -2739,8 +2738,7 @@ class MlSpec extends SparkSpec {
         .parquet(inDir.toString)
         .toDF("_1", "_2", "_3", "_4").as[(Long, Int, Long, Seq[Long])]
       val sink = s"ssdq_evict_${evict.isDefined}"
-      val ckpt = java.nio.file.Files.createTempDirectory("ssdq_evict_ckpt").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir("ssdq_evict_ckpt").toFile
       val writer = graft.streaming.StreamSemDedup
         .keepDecisionsQ(rows, threshold = 4000000000L, evictCellAfterMs = evict)
         .writeStream.format("memory").queryName(sink)
@@ -2749,7 +2747,7 @@ class MlSpec extends SparkSpec {
         if (evict.isDefined) {
           val q0 = writer
             .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(20L)).start()
-          QueriesLlm.drainAndStop(q0)
+          Run.drainAndStop(q0)
           q0
         } else {
           val q0 = writer
@@ -2975,7 +2973,7 @@ class MlSpec extends SparkSpec {
     // micro-batches; the deploy default (sample-staged measured sizing
     // via candidatePairsAuto's `sample`) keeps full recall where the
     // uniform meter pick loses storage-capped pairs
-    val inDir = QueriesCore.writeSplitDir("satgeo_in", Seq(
+    val inDir = Run.writeSplitDir("satgeo_in", Seq(
       (prints.filter(col("media_id") < off).toDF("id", "fp"), "0_sigs.parquet"),
       (prints.filter(col("media_id") >= off).toDF("id", "fp"), "1_sigs.parquet")))
     def runStream(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
@@ -2984,8 +2982,7 @@ class MlSpec extends SparkSpec {
       val schema = ss.read.parquet(inDir.resolve("0_sigs.parquet").toString).schema
       val sigs = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir.toString)
-      val ckpt = java.nio.file.Files.createTempDirectory(s"satgeo_$tag").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir(s"satgeo_$tag").toFile
       val sink = s"satgeo_$tag"
       val q = mk(sigs).writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt.getPath)
@@ -3023,7 +3020,7 @@ class MlSpec extends SparkSpec {
       val pos = rnd.shuffle((0 until 64).toList).take(rnd.nextInt(8))
       Seq((i.toLong, fp), (100000L + i, pos.foldLeft(fp)((a, p) => a ^ (1L << p))))
     }
-    val inDir = QueriesCore.writeSplitDir("sautob_in", Seq(
+    val inDir = Run.writeSplitDir("sautob_in", Seq(
       (rows.filter(_._1 < 100000L).toDF("id", "fp"), "0_sigs.parquet"),
       (rows.filter(_._1 >= 100000L).toDF("id", "fp"), "1_sigs.parquet")))
     def runStream(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
@@ -3032,8 +3029,7 @@ class MlSpec extends SparkSpec {
       val schema = ss.read.parquet(inDir.resolve("0_sigs.parquet").toString).schema
       val sigs = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir.toString)
-      val ckpt = java.nio.file.Files.createTempDirectory(s"sautob_$tag").toFile
-      ckpt.deleteOnExit()
+      val ckpt = TempDir(s"sautob_$tag").toFile
       val sink = s"sautob_$tag"
       val q = mk(sigs).writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt.getPath)

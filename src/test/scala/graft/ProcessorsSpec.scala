@@ -232,6 +232,22 @@ class ProcessorsSpec extends SparkSpec {
     assert(bad.select(Msg.ContentCol).as[String].collect().sorted.head == """{"n":1}""")
   }
 
+  test("command: a child that exits without reading its stdin fails the row, not a thread") {
+    import graft.operators.Subprocess
+    // more than the 64 KiB pipe buffer, so the write cannot finish
+    // before the child exits and the pipe breaks
+    val env = Msg.envelope(Seq("x" * (256 * 1024)).toDF("s"))
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((_, e) => { uncaught.add(e); () })
+    val errs =
+      try Subprocess.command(env, Seq("sh", "-c", "exit 3"))
+        .select(Msg.ErrorCol).as[String].collect().toSeq
+      finally Thread.setDefaultUncaughtExceptionHandler(prev)
+    assert(errs == Seq("command exited with code 3"))
+    assert(uncaught.isEmpty, s"uncaught on a writer thread: ${uncaught.peek()}")
+  }
+
   test("batch policy: general assign matches window fast paths on single triggers") {
     import graft.operators.BatchPolicy
     val df = Seq(
