@@ -14,8 +14,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    reads it one logical split per micro-batch, and [[splitCount]]
   *    counts those batches from the SAME per-trigger width, so the
   *    reader's `maxFilesPerTrigger` and the drain rule cannot disagree;
-  *  - the checkpoint, split-input and staging dirs, all on
-  *    [[graft.core.TempDir]]'s single tree-deleting exit hook;
+  *  - the checkpoint and split-input dirs, all on [[graft.core.TempDir]]'s
+  *    single tree-deleting exit hook (a split's staging dir lives inside
+  *    it and goes as soon as its files have moved);
   *  - the sink ([[Sink]]), started under a unique query name;
   *  - the trigger-and-stop rule ([[run]]).
   *
