@@ -682,24 +682,26 @@ object QueriesLlm {
       val n = edges.count()
       // THE MERGE-AXIS FORK, applied to resolution (bpeMerges'
       // convention): below the limit the edge list is tiny relative to
-      // the cluster — a driver-side path-halving union-find labels it
-      // in milliseconds, where the distributed loop pays 4+ rounds of
-      // scheduler fixed cost. 2M edges = 32 MB collected; both paths
-      // produce THE min-label set (union-by-min root == component
-      // minimum; MlSpec pins equality on seeded random graphs).
+      // the cluster — the driver-side union-find kernel labels it in
+      // milliseconds, where the distributed operator still schedules its
+      // contraction shuffle, label aggregate and edge test as jobs
+      // (stream_phash_resolve at sf0.1, 4 cores, same JVM: 1.57 s with
+      // the fork, 1.93 s without). 2M edges = 32 MB collected; both paths
+      // produce THE min-label set (MlSpec pins equality on seeded random
+      // graphs).
       val next =
         if (n <= localEdgeLimit) {
-          val labeled = graft.ml.Dedup.localMinLabel(
-            edges.select(col("id_a"), col("id_b")).as[(Long, Long)].collect())
-          ss.createDataset(labeled.toSeq).toDF("node", "label")
+          val e = edges.select(col("id_a"), col("id_b")).as[(Long, Long)].collect()
+          val (ids, labels) = graft.ml.Dedup.localMinLabel(e.map(_._1), e.map(_._2))
+          ss.createDataset(ids.toSeq.zip(labels.toSeq)).toDF("node", "label")
             .repartition(1) // state is compact by construction
         } else {
           val nodes = edges.select(col("id_a").as("node"))
             .unionByName(edges.select(col("id_b").as("node"))).distinct()
-          // rounds = 4 (reach 4), not the default 6 (reach 16): the
-          // prior state is min-label STARS (depth 1), so only the new
-          // edges' own pair chains add diameter; CC's 3-round
-          // escalation still covers a pathological long-chain group
+          // rounds = 4, not the default 6, per fallback batch: the prior
+          // state is min-label STARS (depth 1), so only the new edges'
+          // own pair chains add diameter, and a pathological long-chain
+          // group just runs another batch
           Dedup.connectedComponents(nodes, edges, rounds = 4)
         }
       val vdir = stateRoot.resolve(s"v$tag").toString

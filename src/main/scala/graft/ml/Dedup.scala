@@ -116,19 +116,22 @@ object Dedup {
     val as = hashParams(numHashes, seed).map(_._1).toArray
     val bs = hashParams(numHashes, seed).map(_._2).toArray
     udf { (hs: Array[Long]) =>
-      val out = Array.fill(numHashes)(Long.MaxValue)
-      var i = 0
-      while (i < hs.length) {
-        val hp = ((hs(i) % P) + P) % P
-        var j = 0
-        while (j < numHashes) {
-          val v = (hp * as(j) + bs(j)) % P
-          if (v < out(j)) out(j) = v
-          j += 1
+      if (hs == null) null // a null text has no shingles and no signature
+      else {
+        val out = Array.fill(numHashes)(Long.MaxValue)
+        var i = 0
+        while (i < hs.length) {
+          val hp = ((hs(i) % P) + P) % P
+          var j = 0
+          while (j < numHashes) {
+            val v = (hp * as(j) + bs(j)) % P
+            if (v < out(j)) out(j) = v
+            j += 1
+          }
+          i += 1
         }
-        i += 1
+        out
       }
-      out
     }
   }
 
@@ -162,14 +165,15 @@ object Dedup {
     // a long job. At cluster scale this materialization is the standard
     // "signature table" stage (intermediate parquet).
     val withSig = df.select(col(idCol).as("_id"), col(textCol).as("_text"))
-      .withColumn("_sh", shingleHashes(col("_text"), shingleN))
+      .withColumn("_sh", sort_array(shingleHashes(col("_text"), shingleN)))
       .withColumn("_sig", minhashSigUdf(numHashes, seed)(col("_sh")))
       .select("_id", "_sh", "_sig")
       .localCheckpoint(false)
 
     // Band rows are SLIM (band, 8-byte key, id): the 32x explode must not
-    // carry the ~KB shingle arrays through the shuffle.
-    val banded = withSig.select(col("_id"),
+    // carry the ~KB shingle arrays through the shuffle. A null text has no
+    // signature and so no band rows: it stays a singleton.
+    val banded = withSig.filter(col("_sig").isNotNull).select(col("_id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         i => hash(slice(col("_sig"), i * rowsPerBand + 1, lit(rowsPerBand))))).as(Seq("_band", "_bkey")))
 
@@ -179,11 +183,25 @@ object Dedup {
     val shA = withSig.select(col("_id").as("id_a"), col("_sh").as("_sh_a"))
     val shB = withSig.select(col("_id").as("id_b"), col("_sh").as("_sh_b"))
     candidates.join(shA, "id_a").join(shB, "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("_sh_a"), col("_sh_b"))).cast(DoubleType) /
-          size(array_union(col("_sh_a"), col("_sh_b"))).cast(DoubleType))
+      .withColumn("jaccard", sortedJaccard(col("_sh_a"), col("_sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+  }
+
+  /** Jaccard of two ascending distinct long sets in one linear merge:
+    * |A∩B| / (|A|+|B|−|A∩B|). The same double as
+    * `size(array_intersect) / size(array_union)`, without the two hash-set
+    * builds per pair; two empty sets give NaN. */
+  private[graft] val sortedJaccard = udf { (a: Array[Long], b: Array[Long]) =>
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (b(j) < a(i)) j += 1
+      else { inter += 1; i += 1; j += 1 }
+    }
+    inter.toDouble / (a.length + b.length - inter).toDouble
   }
 
   /** Exact n-gram Jaccard similarity between two text columns (verification
@@ -517,44 +535,49 @@ object Dedup {
       .select("id_a", "id_b", "cosine")
   }
 
-  /** Driver-side min-label connected components over a COLLECTED edge
-    * list — the below-the-fork twin of [[connectedComponents]] (the
-    * bpeMerges merge-axis convention: when the data is small, paying
-    * the scheduler per round is the whole cost; a path-halving
-    * union-find labels millions of edges in milliseconds). Same
-    * contract: label = MIN node id in the component; only nodes that
-    * appear in an edge are returned (the caller supplies singletons).
-    * Equality with the distributed loop is spec-pinned on seeded random
-    * graphs (MlSpec). */
-  def localMinLabel(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x0: Long): Long = {
+  /** Min-label connected components of an edge list `(a(k), b(k))` — the
+    * one union-find kernel, run on the driver and inside every edge
+    * partition of [[connectedComponents]]. Path halving, union by min:
+    * every tree's root is its component's minimum at all times. Works on
+    * primitive arrays only (about 44 B per edge and node, where boxed
+    * hash maps cost about 100 B per node).
+    *
+    * @return (nodes, labels): every endpoint once, ascending, and the
+    *         minimum node of its component */
+  def localMinLabel(a: Array[Long], b: Array[Long]): (Array[Long], Array[Long]) = {
+    require(a.length == b.length, "localMinLabel: endpoint arrays differ in length")
+    // endpoints sorted and deduplicated: index order IS id order, so
+    // union by min index is union by min id
+    val ids = new Array[Long](2 * a.length)
+    System.arraycopy(a, 0, ids, 0, a.length)
+    System.arraycopy(b, 0, ids, a.length, b.length)
+    java.util.Arrays.sort(ids)
+    var m = 0
+    var i = 0
+    while (i < ids.length) {
+      if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+      i += 1
+    }
+    val parent = new Array[Int](m)
+    i = 0
+    while (i < m) { parent(i) = i; i += 1 }
+    def find(x0: Int): Int = {
       var x = x0
-      var p = parent.getOrDefault(x, x)
-      while (p != x) { // path halving
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp)
-        x = gp
-        p = parent.getOrDefault(x, x)
-      }
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    edges.foreach { case (a, b) =>
-      val ra = find(a)
-      val rb = find(b)
-      // union-by-MIN: the smaller root adopts the larger, so every
-      // tree's root is its component's minimum at all times
-      if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+    def index(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, m, v)
+    i = 0
+    while (i < a.length) {
+      val ra = find(index(a(i)))
+      val rb = find(index(b(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
     }
-    // membership = every endpoint ever seen; union-by-min means the
-    // root IS the component minimum
-    val nodes = new java.util.HashSet[Long]()
-    edges.foreach { case (a, b) => nodes.add(a); nodes.add(b) }
-    val out = new Array[(Long, Long)](nodes.size)
-    val it = nodes.iterator()
-    var i = 0
-    while (it.hasNext) { val n = it.next(); out(i) = (n, find(n)); i += 1 }
-    out
+    val labels = new Array[Long](m)
+    i = 0
+    while (i < m) { labels(i) = ids(find(i)); i += 1 }
+    (java.util.Arrays.copyOf(ids, m), labels)
   }
 
   /** Connected components over a near-dup pair graph — the RESOLUTION
@@ -562,132 +585,122 @@ object Dedup {
     * exact) say "a duplicates b"; this turns the pair set into clusters
     * so one canonical document per cluster survives.
     *
-    * Pure DataFrame min-label propagation with PATH DOUBLING
-    * ("hash-to-min" family): each round a node takes the min of its own
-    * label, its neighbors' labels, and its label's label. Doubling makes
-    * convergence O(log diameter) rounds instead of O(diameter) — the
-    * difference between 40 shuffles and 6 on a chain-shaped component.
-    * Each round is two shuffle joins + one groupBy, all keyed on node
-    * id; `localCheckpoint` truncates lineage so the plan doesn't grow
-    * with iterations (the classic iterative-DataFrame trap), and each
-    * round's superseded label frame is RELEASED after the next fixpoint
-    * check materializes its successor — without that, every round's
-    * blocks stay resident until the session GCs the plans (r12 advice).
+    * Contraction first: the edges, normalised to (least, greatest), are
+    * repartitioned on the smaller endpoint with no fixed partition count,
+    * so AQE sizes the partitions, and each partition labels its own edges
+    * with [[localMinLabel]]. The minimum of those local labels per node
+    * seeds the labels. Every label is then a member of the node's own
+    * component and no greater than the node, which makes one EDGE TEST
+    * valid at any point: when no edge joins two different labels, each
+    * component carries one label, and that label is its minimum. A small
+    * edge set coalesces into one partition, contracts completely and
+    * returns after the one test. Otherwise the graph crossed partitions,
+    * and min-label rounds with PATH DOUBLING ("hash-to-min" family)
+    * finish the job from the seeded labels: each round a node takes the
+    * min of its own label, its neighbors' labels and its label's label.
+    * They run in batches of `rounds`, with the edge test after each batch
+    * as the only convergence check. Each round is two shuffle joins plus
+    * one groupBy, all keyed on node id; `localCheckpoint` truncates
+    * lineage so the plan doesn't grow with iterations, and a batch's
+    * superseded label frames are RELEASED once the edge test has
+    * materialized their successor. Shuffle volume is O(|E|) per round
+    * and the rounds are O(log d); nothing is collected to the driver.
     * Cluster caveat: localCheckpoint blocks are not recomputable, so an
-    * executor loss mid-loop fails the job; at real cluster scale prefer
-    * `spark.sql.adaptive`-friendly reliable checkpoints (checkpoint dir
-    * on the DFS) for multi-hour runs — the loop structure is identical.
-    * Nothing is collected to the driver; the loop's only driver-side
-    * state is the convergence counter. At 100 TB this is the standard
-    * GraphX-free CC: shuffle volume per round is O(|E|), rounds are
-    * O(log d).
+    * executor loss mid-loop fails the job; multi-hour runs at cluster
+    * scale want reliable checkpoints on the DFS, in the same loop.
+    *
+    * [[lastConvergedRounds]] counts the rounds run after contraction:
+    * 0 when contraction alone resolved the graph.
     *
     * @param nodes one column `node` (long ids)
     * @param edges columns `id_a`,`id_b` (undirected pairs, either order)
-    * @return (node, label) where label = min node id in the component
+    * @param rounds min-label rounds per batch when contraction leaves
+    *        edges across labels
+    * @return (node, label) where label = min node id in the component,
+    *         for every node and every edge endpoint
     */
-  // diagnostics: how many rounds/escalations the LAST
-  // connectedComponents call took to converge (read by CcRoundsProbe
-  // and, through graft.BenchAccess, by perfbench's corpus_dedup layer)
+  // diagnostics: the rounds the LAST connectedComponents call ran after
+  // contraction (read by CcRoundsProbe and, through graft.BenchAccess,
+  // by perfbench's corpus_dedup layer)
   @volatile private[graft] var lastConvergedRounds: Int = 0
-  @volatile private[graft] var lastEscalations: Int = 0
 
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           rounds: Int = 6): DataFrame = {
-    import org.apache.spark.sql.graftshim.FlatCheckpoint
-    val sym = FlatCheckpoint.capStats(
-      edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .localCheckpoint(false)) // computed once, re-joined every round
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    var prev = labels
-    // Batched round count, NO per-round driver actions: each round is a
-    // LAZY localCheckpoint (truncates lineage so plans stay flat — the
-    // hop self-join would otherwise double plan size per round), and the
-    // whole cascade materializes inside the fixpoint-check job below.
-    // Per-round convergence counts would cost one scheduled job per
-    // round — at small per-round data the job overhead, not the shuffle,
-    // dominates. Doubling reach after r rounds is 2^(r-1) and the LAST
-    // round must be a no-op for the fixpoint check, so the first batch
-    // covers component diameter 2^(rounds-2) = 16. If the graph hasn't
-    // converged (a longer chain in the data — a DATA SHAPE, not a bug),
-    // escalate 3 rounds per re-check (reach ×8 each batch): the common
-    // case still pays exactly one check, and there is no diameter cliff.
-    var i = 0
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.graftshim.{CheckpointRelease, FlatCheckpoint}
+    require(rounds >= 1, s"connectedComponents: rounds must be >= 1, got $rounds")
+    // A lazy checkpoint's first reads can run as concurrent jobs (the
+    // edge test reads the labels twice). The first job to finish
+    // truncates the RDD's lineage, and with it the last strong reference
+    // to the origin plan's SQL metrics: once GC collects them, the other
+    // job's tasks report to accumulators that no longer exist and the
+    // scheduler logs "attempted to access non-existent accumulator".
+    // Holding every origin frame until the last edge test keeps them.
+    // FlatCheckpoint CLAMPS each checkpoint's carried origin stats: in
+    // the round loop the captured sizeInBytes DOUBLES IN BIT LENGTH per
+    // round, and a slow-converging graph reaches BigInteger overflow
+    // inside Catalyst planning around round 30 (measured on a random
+    // long-chain graph). Clamping (not dropping) keeps small sizes exact,
+    // so broadcast decisions are unchanged.
+    val origins = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def checkpoint(df: DataFrame): DataFrame = {
+      origins += df
+      FlatCheckpoint.capStats(df.localCheckpoint(false))
+    }
+    val norm = checkpoint( // read by contraction, every edge test and every round
+      edges.select(least(col("id_a"), col("id_b")).cast(LongType).as("src"),
+        greatest(col("id_a"), col("id_b")).cast(LongType).as("dst")))
+    val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val contracted = norm.repartition(col("src")).as(pair).mapPartitions { it =>
+      val a = new scala.collection.mutable.ArrayBuilder.ofLong
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { case (x, y) => a += x; b += y }
+      val (ids, labels) = localMinLabel(a.result(), b.result())
+      ids.iterator.zip(labels.iterator)
+    }(pair).toDF("node", "label")
+    var labels = checkpoint(
+      nodes.select(col("node"), col("node").as("label")).unionByName(contracted)
+        .groupBy("node").agg(min("label").as("label")))
     val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def badEdges(): Long = {
+      // a FULL count, deliberately not limit(1): the edge test is also
+      // the job that materializes EVERY partition of the label checkpoint
+      // (a limit(1) job leaves the rest lazy, and releasing the frames
+      // they read would strand them: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+      val bad = norm
+        .join(labels.select(col("node").as("src"), col("label").as("_ls")), "src")
+        .join(labels.select(col("node").as("dst"), col("label").as("_ld")), "dst")
+        .filter(col("_ls") =!= col("_ld"))
+        .count()
+      retired.foreach(CheckpointRelease.unpersist)
+      retired.clear()
+      bad
+    }
+    lazy val sym = norm.unionByName(norm.select(col("dst").as("src"), col("src").as("dst")))
+    var i = 0
     def runRound(): Unit = {
       i += 1
       val viaEdge = sym.join(labels, sym("dst") === labels("node"))
         .select(sym("src").as("node"), labels("label"))
-      val base = labels.unionByName(viaEdge)
-      val withHop =
-        if (i == 1) base // labels are identity in round 1: hop is a no-op
-        else base.unionByName(labels.as("x")
-          .join(labels.as("p"), col("x.label") === col("p.node"))
-          .select(col("x.node").as("node"), col("p.label").as("label")))
-      // superseded once the NEXT fixpoint check materializes. prev only
-      // becomes one of OUR checkpoints after round 2's reassignment —
-      // in rounds 1-2 it is still the caller's nodes projection, whose
-      // plan may contain the CALLER's checkpoints (never ours to release)
-      if (i >= 3) retired += prev
-      prev = labels
-      // FlatCheckpoint: CLAMP the checkpoint's carried origin stats —
-      // in this join loop the captured sizeInBytes DOUBLES IN BIT
-      // LENGTH per round (each round multiplies the previous round's
-      // stats at its joins), and a slow-converging graph reaches
-      // BigInteger overflow inside Catalyst planning around round 30
-      // (measured on a random long-chain graph). Clamping (not dropping)
-      // keeps small sizes exact, so broadcast decisions are unchanged.
-      labels = FlatCheckpoint.capStats(
-        withHop.groupBy("node").agg(min("label").as("label"))
-          .localCheckpoint(false))
+      val hop = labels.as("x").join(labels.as("p"), col("x.label") === col("p.node"))
+        .select(col("x.node").as("node"), col("p.label").as("label"))
+      retired += labels
+      labels = checkpoint(
+        labels.unionByName(viaEdge).unionByName(hop)
+          .groupBy("node").agg(min("label").as("label")))
     }
-    def changed(): Long = {
-      // a FULL count, deliberately not limit(1): the fixpoint check is
-      // also the job that materializes EVERY partition of the label
-      // checkpoints (a limit(1) job computes only the partitions it
-      // touches, leaving the rest lazy — releasing upstream blocks would
-      // then strand them: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next read)
-      val ch = labels.withColumnRenamed("label", "_l2")
-        .join(prev, "node").filter(col("_l2") =!= col("label"))
-        .count()
-      // the count materialized labels (and transitively every earlier
-      // round, fully): older rounds' checkpoint blocks are unreachable —
-      // release them instead of waiting for the ContextCleaner's GC cycle
-      retired.foreach(org.apache.spark.sql.graftshim.CheckpointRelease.unpersist)
-      retired.clear()
-      ch
-    }
-    // EARLY EXIT inside the first batch (r19 verdict #5): the fixpoint
-    // check costs well under a round (one |V|⋈|V| join + count vs two
-    // joins + a groupBy over |V|+|E|), so on the star-dominated resolve
-    // graphs the gates actually run — digest/fingerprint twin clusters of
-    // depth 1-2, converged by round 3 (CC_ROUNDS receipt, r20) — the
-    // second half of a 6-round batch is pure dead work. Run the batch in
-    // two halves with a check between: converged graphs skip the second
-    // half outright; a graph that genuinely needs the full reach pays one
-    // extra count job. Output is unchanged either way — ch == 0 means the
-    // last round was a no-op, which under monotone min-label propagation
-    // IS the fixpoint (the same invariant the escalation loop relies on).
-    val firstHalf = math.min(3, rounds)
-    (1 to firstHalf).foreach(_ => runRound())
     val maxRounds = 40 // reach 2^39 — beyond any real component diameter
-    var ch = changed()
-    if (ch > 0 && rounds > firstHalf) {
-      (firstHalf + 1 to rounds).foreach(_ => runRound())
-      ch = changed()
+    var bad = badEdges()
+    while (bad > 0 && i < maxRounds) {
+      (1 to math.min(rounds, maxRounds - i)).foreach(_ => runRound())
+      bad = badEdges()
     }
-    while (ch > 0 && i < maxRounds) {
-      (1 to math.min(3, maxRounds - i)).foreach(_ => runRound())
-      ch = changed()
-      lastEscalations += 1
-    }
+    origins.clear()
     lastConvergedRounds = i
-    require(ch == 0, s"connectedComponents not converged after $i rounds")
-    // sym and the last prev are dead once the caller's reads hit the
-    // final labels checkpoint; labels itself stays live for the caller
-    org.apache.spark.sql.graftshim.CheckpointRelease.unpersist(prev)
-    org.apache.spark.sql.graftshim.CheckpointRelease.unpersist(sym)
+    require(bad == 0, s"connectedComponents not converged after $i rounds")
+    // the edges are dead once the caller's reads hit the final labels
+    // checkpoint; labels itself stays live for the caller
+    CheckpointRelease.unpersist(norm)
     labels
   }
 

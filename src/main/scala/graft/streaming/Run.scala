@@ -24,6 +24,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * ([[session]]), never of the caller's. */
 object Run {
 
+  private val timeoutMs = 300000L
+
   /** Where a stream's rows go. */
   sealed trait Sink
   object Sink {
@@ -191,7 +193,6 @@ object Run {
     * need a timeout to actually FIRE keep the progress-based rule. */
   def drainAndStop(q: StreamingQuery, stopAfterDrain: Boolean = true,
                    expectBatches: Option[Int] = None): Unit = {
-    val timeoutMs = 300000L
     val t0 = System.nanoTime()
     def lastLogOffset: Option[Long] = for {
       p <- q.recentProgress.lastOption
@@ -218,9 +219,11 @@ object Run {
         s"drainAndStop: query ${q.name} not drained after $timeoutMs ms")
       Thread.sleep(25)
     }
-    if (stopAfterDrain) {
-      q.stop()
-      q.awaitTermination()
-    }
+    if (stopAfterDrain) stop(q)
   }
+
+  /** Stop a continuously-triggered query between triggers, never inside
+    * one: `q.stop()` would interrupt a batch that may be committing state
+    * (see [[org.apache.spark.sql.graftshim.GracefulStop]]). */
+  def stop(q: StreamingQuery): Unit = org.apache.spark.sql.graftshim.GracefulStop(q, timeoutMs)
 }

@@ -190,6 +190,48 @@ class MlSpec extends SparkSpec {
     assert(err < 0.08, s"minhash estimator bias too high: $err")
   }
 
+  test("minhashLshPairs: null, empty and 2-token docs stay singletons beside a real duplicate pair") {
+    // a null text has no shingles: it gets no signature and no band rows
+    // instead of failing the whole job inside the signature UDF
+    val text = (1 to 40).map(i => s"word$i").mkString(" ")
+    val docs = Seq((1L, text), (2L, text.replace("word20", "other")),
+      (3L, null.asInstanceOf[String]), (4L, ""), (5L, "two tokens")).toDF("doc_id", "text")
+    val got = Dedup.minhashLshPairs(docs, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got.map(r => (r._1, r._2)).toSeq == Seq((1L, 2L)), s"pairs ${got.toSeq}")
+    // the edit changes 3 of each doc's 38 3-grams: 35 shared of 41
+    assert(got.head._3 == 35.0 / 41.0, s"jaccard ${got.head._3}")
+  }
+
+  test("sorted-merge Jaccard == size(array_intersect)/size(array_union), bit for bit; the pairs plan builds no hash sets") {
+    val rnd = new scala.util.Random(20261019L)
+    def randomSet(n: Int, range: Long): Seq[Long] =
+      Seq.fill(n)(rnd.nextLong() % range).distinct.sorted
+    val shared = randomSet(50, 1000L)
+    val cases: Seq[(Seq[Long], Seq[Long])] = Seq(
+      (Seq(1L, 3L, 5L), Seq(2L, 4L, 6L)),                  // disjoint
+      (shared, shared),                                     // identical
+      (Seq(7L), Seq(7L)), (Seq(7L), Seq(8L)),               // single elements
+      (Seq.empty[Long], Seq(Long.MinValue, 0L, Long.MaxValue))) ++ // one side empty
+      (1 to 200).map(_ => (randomSet(1 + rnd.nextInt(60), 80L),
+        randomSet(1 + rnd.nextInt(60), 80L)))               // overlapping, negatives included
+    val df = cases.toDF("a", "b")
+      .select(Dedup.sortedJaccard(col("a"), col("b")).as("merge"),
+        (size(array_intersect(col("a"), col("b"))).cast("double") /
+          size(array_union(col("a"), col("b"))).cast("double")).as("sets"))
+    df.as[(Double, Double)].collect().zip(cases).foreach { case ((m, h), c) =>
+      assert(java.lang.Double.doubleToRawLongBits(m) == java.lang.Double.doubleToRawLongBits(h),
+        s"merge $m != sets $h on $c")
+    }
+    // two empty sets: 0/0 in the kernel, NaN
+    val empty = Seq((Seq.empty[Long], Seq.empty[Long])).toDF("a", "b")
+      .select(Dedup.sortedJaccard(col("a"), col("b"))).as[Double].collect().head
+    assert(empty.isNaN, s"empty sets gave $empty")
+    val plan = Dedup.minhashLshPairs(QueriesLlm.plantedCorpus(spark, sf), "doc_id", "text")
+      .queryExecution.optimizedPlan.toString
+    Seq("array_intersect", "array_union").foreach(f => assert(!plan.contains(f), s"$f in the pairs plan"))
+  }
+
   test("simhash: near-dup texts have small hamming distance, unrelated large") {
     val df = Seq(
       ("a", "the quick brown fox jumps over the lazy dog in the morning sun"),
@@ -958,34 +1000,82 @@ class MlSpec extends SparkSpec {
     assert(zs(1L) == "tiny" && zs(3L) == "balloons")
   }
 
+  /** A session whose edge partitions stay apart: with AQE coalescing off,
+    * connectedComponents' contraction sees the shuffle width (4) of edge
+    * partitions, so a graph that crosses them reaches the seeded rounds. */
+  private def splitEdgeSession() = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    ss
+  }
+
+  /** The seeded random graph of the kernel-equality specs: long chains, one
+    * big star, a cycle and singleton-free noise. */
+  private lazy val ccGraph: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(1234567L)
+    (
+      (0 until 300).map(i => (i * 7L, i * 7L + 7))           // long chains
+        ++ (0 until 200).map(i => (10000L, 10000L + i + 1))  // one big star
+        ++ (0 until 100).map(i => (20000L + i, 20000L + (i + 1) % 100)) // a cycle
+        ++ (0 until 500).map(_ => { val a = rnd.nextInt(5000).toLong
+             val b = rnd.nextInt(5000).toLong; (math.min(a, b), math.max(a, b)) })
+      ).filter { case (a, b) => a != b }
+  }
+
+  private def kernelLabels(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val (ids, labels) = Dedup.localMinLabel(edges.map(_._1).toArray, edges.map(_._2).toArray)
+    ids.toSeq.zip(labels.toSeq)
+  }
+
+  /** connectedComponents over the graph's own endpoints, on session `ss`. */
+  private def ccLabels(ss: org.apache.spark.sql.SparkSession, edges: Seq[(Long, Long)],
+                       rounds: Int = 6): Seq[(Long, Long)] = {
+    val edf = ss.createDataFrame(edges).toDF("id_a", "id_b")
+    val nodes = edf.select(col("id_a").as("node"))
+      .unionByName(edf.select(col("id_b").as("node"))).distinct()
+    Dedup.connectedComponents(nodes, edf, rounds)
+      .as[(Long, Long)].collect().toSeq.sorted
+  }
+
   test("connectedComponents: chain, triangle, isolated node; min id wins; converges in log rounds") {
-    import spark.implicits._
     // chain 1-2-3-4-5-6-7-8 (diameter 7: pure neighbor-min would need
-    // 7+1 rounds; path doubling reaches distance 2^(r-1), so round 4
-    // resolves it and round 5 is the no-op the fixpoint check needs),
-    // triangle 10-11-12 with a redundant edge, isolated node 20
-    val edges = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L),
-      (10L, 11L), (11L, 12L), (12L, 10L)
-    ).toDF("id_a", "id_b")
-    val nodes = ((1L to 8L) ++ (10L to 12L) ++ Seq(20L)).toDF("node")
-    val got = graft.ml.Dedup.connectedComponents(nodes, edges, rounds = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (1L to 8L).foreach(n => assert(got(n) == 1L, s"chain node $n"))
-    (10L to 12L).foreach(n => assert(got(n) == 10L, s"triangle node $n"))
-    assert(got(20L) == 20L, "isolated node is its own cluster")
-    assert(got.size == 12)
+    // 7+1 rounds; path doubling reaches distance 2^(r-1)), triangle
+    // 10-11-12 with a redundant edge, isolated node 20. On the default
+    // session the edges coalesce into one partition and contraction
+    // alone labels them; with the partitions kept apart the chain
+    // crosses them and the seeded rounds finish the job.
+    for (ss <- Seq(spark, splitEdgeSession())) {
+      val edges = ss.createDataFrame(Seq(
+        (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L),
+        (10L, 11L), (11L, 12L), (12L, 10L))).toDF("id_a", "id_b")
+      val nodes = ss.createDataFrame(((1L to 8L) ++ (10L to 12L) ++ Seq(20L)).map(Tuple1(_)))
+        .toDF("node")
+      val got = graft.ml.Dedup.connectedComponents(nodes, edges, rounds = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (1L to 8L).foreach(n => assert(got(n) == 1L, s"chain node $n"))
+      (10L to 12L).foreach(n => assert(got(n) == 10L, s"triangle node $n"))
+      assert(got(20L) == 20L, "isolated node is its own cluster")
+      assert(got.size == 12)
+    }
   }
 
   test("connectedComponents: escalation converges a chain longer than the first batch's reach") {
-    import spark.implicits._
-    // rounds=3: first batch reaches diameter 2 (last round is the no-op);
-    // a diameter-7 chain forces the 3-round escalation path
-    val edges = (1L to 7L).map(n => (n, n + 1)).toDF("id_a", "id_b")
-    val nodes = (1L to 8L).toDF("node")
-    val got = graft.ml.Dedup.connectedComponents(nodes, edges, rounds = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (1L to 8L).foreach(n => assert(got(n) == 1L, s"chain node $n"))
+    // rounds = 1: each fallback batch is one round and one edge test, so
+    // a 64-node chain split over the edge partitions needs several
+    // batches before no edge joins two labels
+    val chain = (1L to 63L).map(n => (n, n + 1))
+    val got = ccLabels(splitEdgeSession(), chain, rounds = 1)
+    assert(got == (1L to 64L).map(_ -> 1L))
+    assert(Dedup.lastConvergedRounds >= 2,
+      s"the chain took ${Dedup.lastConvergedRounds} rounds: no second batch ran")
+  }
+
+  test("connectedComponents over several edge partitions: seeded rounds reach localMinLabel's labels") {
+    val got = ccLabels(splitEdgeSession(), ccGraph)
+    assert(Dedup.lastConvergedRounds > 0,
+      "the graph crosses the edge partitions, so contraction alone cannot resolve it")
+    assert(got == kernelLabels(ccGraph).sorted,
+      s"diverged: cc ${got.take(3)}... kernel ${kernelLabels(ccGraph).sorted.take(3)}...")
   }
 
   test("dupSpans: merges overlapping windows to maximal spans; unique text and short docs excluded") {
@@ -1265,7 +1355,7 @@ class MlSpec extends SparkSpec {
     q.processAllAvailable()
     in.addData(occ(2L, sigA) ++ occ(3L, sigC): _*) // cross-batch AND same-batch matches
     q.processAllAvailable()
-    q.stop()
+    Run.stop(q)
     val out = ss.table("sph_spec_sink")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     assert(out == Seq((1L, 2L, 0), (1L, 3L, 1), (2L, 3L, 1)),
@@ -2189,7 +2279,7 @@ class MlSpec extends SparkSpec {
     q.processAllAvailable()
     in.addData((3L, 0, 0.7, at(2 * th)), (2L, 0, 0.8, at(th))) // C, B out of order: batch 2 sorts by priority
     q.processAllAvailable()
-    q.stop()
+    Run.stop(q)
     val out = ss.table("ssd_spec_sink")
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(out == Map(1L -> 1L, 2L -> 0L, 3L -> 0L),
@@ -2244,7 +2334,7 @@ class MlSpec extends SparkSpec {
       await(2)
       in.addData((3L, 0, 8L, Seq(1L, 0L, 0L, 0L))) // near-dup of id 1 (d²=1 ≤ 100)
       await(3)
-      q.stop()
+      Run.stop(q)
       ss.table(sink).collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     }
     val evicted = run(Some(300L))
@@ -2305,7 +2395,7 @@ class MlSpec extends SparkSpec {
       awaitInput(2)
       in.addData((2L, sigB, 1, (sigB >>> 16) & 0xFFFFL))
       awaitInput(3)
-      q.stop()
+      Run.stop(q)
       ss.table(sink).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     val evicted = run(Some(300L))
@@ -2358,7 +2448,7 @@ class MlSpec extends SparkSpec {
       awaitInput(2)
       in.addData((2L, 1, 42L)) // the would-be duplicate
       awaitInput(3)
-      q.stop()
+      Run.stop(q)
       ss.table(sink).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     }
     val evicted = run(Some(300L))
@@ -2552,25 +2642,14 @@ class MlSpec extends SparkSpec {
 
   test("localMinLabel == connectedComponents on seeded random graphs (the resolve fork)") {
     // the resolution fork's equality pin (the bpeMerges local==distributed
-    // convention): chains, stars, cycles and singleton-free noise from a
-    // seeded generator — the driver-side union-find must produce the
-    // exact min-label set the distributed loop does
-    val rnd = new scala.util.Random(1234567L)
-    val edges = (
-      (0 until 300).map(i => (i * 7L, i * 7L + 7))           // long chains
-        ++ (0 until 200).map(i => (10000L, 10000L + i + 1))  // one big star
-        ++ (0 until 100).map(i => (20000L + i, 20000L + (i + 1) % 100)) // a cycle
-        ++ (0 until 500).map(_ => { val a = rnd.nextInt(5000).toLong
-             val b = rnd.nextInt(5000).toLong; (math.min(a, b), math.max(a, b)) })
-      ).filter { case (a, b) => a != b }
-    val local = graft.ml.Dedup.localMinLabel(edges.toArray).toSeq.sorted
-    val edf = edges.toDF("id_a", "id_b")
-    val nodes = edf.select(col("id_a").as("node"))
-      .unionByName(edf.select(col("id_b").as("node"))).distinct()
-    val dist = graft.ml.Dedup.connectedComponents(nodes, edf)
-      .as[(Long, Long)].collect().toSeq.sorted
-    assert(local == dist,
-      s"fork diverged: local ${local.take(3)}... dist ${dist.take(3)}...")
+    // convention): the driver kernel and the distributed operator produce
+    // the exact same min-label set. On the default session AQE coalesces
+    // the edges into one partition, which contraction labels completely.
+    val got = ccLabels(spark, ccGraph)
+    assert(Dedup.lastConvergedRounds == 0,
+      s"one coalesced partition ran ${Dedup.lastConvergedRounds} rounds")
+    assert(got == kernelLabels(ccGraph).sorted,
+      s"diverged: cc ${got.take(3)}... kernel ${kernelLabels(ccGraph).sorted.take(3)}...")
   }
 
   test("runIncrementalResolve: cadence is invisible, incl. the trailing partial group") {

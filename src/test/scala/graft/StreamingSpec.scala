@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Windows
+import graft.streaming.{Run, Windows}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -40,7 +40,7 @@ class StreamingSpec extends SparkSpec {
         .select("start", "n", "total").as[(Timestamp, Long, Double)].collect().toSet
       assert(rows.contains((ts("2024-01-01 00:00:00"), 2L, 3.0)), s"got $rows")
       assert(!rows.exists(_._3 == 103.0), "late row leaked into a closed window")
-    } finally q.stop()
+    } finally Run.stop(q)
   }
 
   test("streaming dedupe within watermark (processor_dedupe streaming flavor)") {
@@ -56,7 +56,7 @@ class StreamingSpec extends SparkSpec {
         (ts("2024-01-01 00:02:00"), "k2"))
       q.processAllAvailable()
       assert(spark.table("dd_out").count() == 2)
-    } finally q.stop()
+    } finally Run.stop(q)
   }
 
   test("stateful running counter via Stateful.runningCount (bloblang count()/counter())") {
@@ -72,7 +72,7 @@ class StreamingSpec extends SparkSpec {
       val last = spark.table("cnt_out").groupBy("key").agg(max("n").as("n"))
         .as[(String, Long)].collect().toMap
       assert(last == Map("a" -> 3L, "b" -> 1L))
-    } finally q.stop()
+    } finally Run.stop(q)
   }
 
   test("ttlLastValue: writes emit values, idle keys expire with tombstones") {
@@ -100,7 +100,7 @@ class StreamingSpec extends SparkSpec {
       waitFor(rows().exists(r => r._3 && r._2 == null))
       val writes = rows().filter(!_._3).map(r => (r._1, r._2)).toSet
       assert(Set(("k1", "v1"), ("k1", "v2"), ("k2", "x")).subsetOf(writes))
-    } finally q.stop()
+    } finally Run.stop(q)
   }
 
   test("dedupeWithinWatermark library op") {
@@ -114,7 +114,7 @@ class StreamingSpec extends SparkSpec {
       input.addData((ts("2024-01-01 00:00:00"), "k1"), (ts("2024-01-01 00:01:00"), "k1"))
       q.processAllAvailable()
       assert(spark.table("ddw_out").count() == 1)
-    } finally q.stop()
+    } finally Run.stop(q)
   }
 
   test("generate-style rate source feeds the mapping pipeline") {
@@ -126,7 +126,7 @@ class StreamingSpec extends SparkSpec {
       Thread.sleep(1200)
       q.processAllAvailable()
       assert(spark.table("rate_out").count() > 0)
-    } finally q.stop()
+    } finally Run.stop(q)
   }
 
   test("foreachBatch broker fan-out: one batch lands in N sinks with routing") {
@@ -144,6 +144,6 @@ class StreamingSpec extends SparkSpec {
     try {
       input.addData(1, 2, 3, 4); q.processAllAvailable()
       assert(sinkA.toSet == Set(2, 4) && sinkB.toSet == Set(1, 3))
-    } finally q.stop()
+    } finally Run.stop(q)
   }
 }
