@@ -189,34 +189,45 @@ object Run {
     * DATA batch commits (its endOffset logOffset == n-1) — no trailing
     * no-data batch needs to run or be waited for. Every hasTimedOut
     * branch in the repo's stateful ops emits nothing (eviction only
-    * removes state), so stopping there is output-identical. Specs that
+    * removes state), so stopping there is output-identical. The query is
+    * marked TERMINATED as soon as that last data batch is planned, so it
+    * commits and the engine starts no no-data batch after it. Specs that
     * need a timeout to actually FIRE keep the progress-based rule. */
   def drainAndStop(q: StreamingQuery, stopAfterDrain: Boolean = true,
                    expectBatches: Option[Int] = None): Unit = {
+    import org.apache.spark.sql.graftshim.GracefulStop
     val t0 = System.nanoTime()
+    def logOffset(e: String): Long =
+      "\"?logOffset\"?\\s*:\\s*(\\d+)".r.findFirstMatchIn(e) match {
+        case Some(m) => m.group(1).toLong
+        // fail fast: an endOffset whose format the regex can't read
+        // (non-file source, serialization change) would otherwise leave
+        // the drain rule spinning to a silent timeout failure
+        case None => q.stop(); throw new IllegalStateException(
+          s"drainAndStop: cannot parse logOffset from endOffset '$e' of query " +
+            s"${q.name} — expectBatches only supports the file source's offset format")
+      }
     def lastLogOffset: Option[Long] = for {
       p <- q.recentProgress.lastOption
       s <- p.sources.headOption
       e <- Option(s.endOffset)
-    } yield "\"?logOffset\"?\\s*:\\s*(\\d+)".r.findFirstMatchIn(e) match {
-      case Some(m) => m.group(1).toLong
-      // fail fast: an endOffset whose format the regex can't read
-      // (non-file source, serialization change) would otherwise leave
-      // the drain rule spinning to a silent timeout failure
-      case None => q.stop(); throw new IllegalStateException(
-        s"drainAndStop: cannot parse logOffset from endOffset '$e' of query " +
-          s"${q.name} — expectBatches only supports the file source's offset format")
-    }
+    } yield logOffset(e)
     def drained: Boolean = expectBatches match {
       case Some(n) => lastLogOffset.exists(_ >= n - 1L)
       case None =>
         val ps = q.recentProgress
         ps.exists(_.numInputRows > 0) && ps.nonEmpty && ps.last.numInputRows == 0
     }
+    var marked = false
     while (!drained) {
       if (q.exception.isDefined) { q.stop(); throw q.exception.get }
       require((System.nanoTime() - t0) / 1e6 < timeoutMs,
         s"drainAndStop: query ${q.name} not drained after $timeoutMs ms")
+      for (n <- expectBatches if stopAfterDrain && !marked)
+        if (GracefulStop.plannedEndOffsets(q).headOption.exists(logOffset(_) >= n - 1L)) {
+          GracefulStop.markTerminated(q)
+          marked = true
+        }
       Thread.sleep(25)
     }
     if (stopAfterDrain) stop(q)

@@ -23,18 +23,35 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object GracefulStop {
   private val stateField = classOf[StreamExecution].getMethod("state")
 
+  private def exec(q: StreamingQuery): Option[StreamExecution] = q match {
+    case w: StreamingQueryWrapper => Some(w.streamingQuery)
+    case _ => None
+  }
+
+  /** Mark `q` TERMINATED and return at once: the trigger that is running
+    * finishes and commits, and the loop starts no other. */
+  def markTerminated(q: StreamingQuery): Unit =
+    exec(q).foreach(e => stateField.invoke(e).asInstanceOf[AtomicReference[AnyRef]].set(TERMINATED))
+
+  /** The end offsets (offset JSON, one per source) of the batch `q` runs
+    * now or ran last. A trigger plans its batch only after it has checked
+    * that the query is active, so a batch seen here runs to its commit
+    * even when the query is marked TERMINATED from now on. */
+  def plannedEndOffsets(q: StreamingQuery): Seq[String] =
+    exec(q).toSeq.flatMap { e =>
+      Option(e.getLatestExecutionContext()).flatMap(c => Option(c.endOffsets)).toSeq
+        .flatMap(_.values.map(_.json))
+    }
+
   def apply(q: StreamingQuery, timeoutMs: Long): Unit = {
-    q match {
-      case w: StreamingQueryWrapper =>
-        val exec = w.streamingQuery
-        stateField.invoke(exec).asInstanceOf[AtomicReference[AnyRef]].set(TERMINATED)
-        val deadline = System.nanoTime() + timeoutMs * 1000000L
-        var idleReads = 0
-        while (exec.queryExecutionThread.isAlive && idleReads < 2 && System.nanoTime() < deadline) {
-          idleReads = if (q.status.isTriggerActive) 0 else idleReads + 1
-          Thread.sleep(1)
-        }
-      case _ =>
+    markTerminated(q)
+    exec(q).foreach { e =>
+      val deadline = System.nanoTime() + timeoutMs * 1000000L
+      var idleReads = 0
+      while (e.queryExecutionThread.isAlive && idleReads < 2 && System.nanoTime() < deadline) {
+        idleReads = if (q.status.isTriggerActive) 0 else idleReads + 1
+        Thread.sleep(1)
+      }
     }
     q.stop()
     q.awaitTermination()
