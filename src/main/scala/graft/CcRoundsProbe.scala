@@ -4,7 +4,7 @@ package graft
   * query (default: the connectedComponents consumers) and reports how
   * many min-label rounds the LAST CC call inside it ran after contraction
   * ([[graft.ml.Dedup.lastConvergedRounds]], 0 when contraction alone
-  * resolved the graph) plus the wall.
+  * resolved the graph; null when the query ran no CC call) plus the wall.
   *
   * Usage: runMain graft.CcRoundsProbe <sfDir> [q1,q2,...]
   */
@@ -19,6 +19,7 @@ object CcRoundsProbe {
 
     def runOne(name: String): (Double, Int) = {
       Bench.cleanState(spark)
+      graft.ml.Dedup.lastConvergedRounds = -1
       val t0 = System.nanoTime()
       Bench.forceEval(spark, name, sfDir)
       val wall = (System.nanoTime() - t0) / 1e9
@@ -29,7 +30,8 @@ object CcRoundsProbe {
     val rows = names.map { n =>
       val rs = (1 to 3).map(_ => runOne(n))
       val best = rs.minBy(_._1)
-      s""""$n":{"wall":${f"${best._1}%.3f"},"cc_rounds":${best._2}}"""
+      val rounds = if (best._2 < 0) "null" else best._2.toString
+      s""""$n":{"wall":${f"${best._1}%.3f"},"cc_rounds":$rounds}"""
     }
     println(rows.mkString("{\"ccroundsprobe\":{", ",", s"},\"sf\":${graft.core.Json.quote(sfDir)}}"))
     spark.stop()

@@ -7,6 +7,7 @@ import graft.streaming.Run
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types._
 
 /** LLM-training-data pipeline operators (north star; BASELINE.json):
@@ -677,8 +678,8 @@ object QueriesLlm {
       import ss.implicits._
       val prev = Option(current.get()).map(p => ss.read.parquet(p))
       val stateEdges = prev.map(_.select(col("node").as("id_a"), col("label").as("id_b")))
-      val edges = stateEdges.fold(newEdges)(newEdges.unionByName(_))
-        .localCheckpoint(false) // counted once, then labeled by ONE consumer
+      // counted once, then labeled by ONE consumer
+      val edges = Checkpoint.lazily(stateEdges.fold(newEdges)(newEdges.unionByName(_)))
       val n = edges.count()
       // THE MERGE-AXIS FORK, applied to resolution (bpeMerges'
       // convention): below the limit the edge list is tiny relative to
@@ -710,8 +711,7 @@ object QueriesLlm {
       // the merged edge checkpoint is fully consumed (count + label +
       // state write all materialized) — release its blocks here or they
       // accumulate one per compaction for the life of the stream
-      // (r16 advice; the CheckpointRelease discipline)
-      edges.unpersist()
+      Checkpoint.release(edges)
     }
     Run.run("stream_resolve", pairs, Run.Sink.Batches { (batch, bid) =>
       val b = batch.select("id_a", "id_b")
@@ -821,8 +821,7 @@ object QueriesLlm {
     * doubling, O(log d) shuffle rounds). */
   private def resolvedClusters(s: SparkSession, dir: String): DataFrame = {
     val corpus = plantedCorpus(s, dir)
-    val dig = corpus.select(col("doc_id"), md5(col("text").cast(BinaryType)).as("_d"))
-      .localCheckpoint(false)
+    val dig = Checkpoint.lazily(corpus.select(col("doc_id"), md5(col("text").cast(BinaryType)).as("_d")))
     val digMin = dig.groupBy("_d").agg(min("doc_id").as("_m"))
     val starEdges = dig.join(digMin, "_d")
       .filter(col("doc_id") =!= col("_m"))
@@ -1158,14 +1157,13 @@ object QueriesLlm {
       // 100 TB a second full-corpus shuffle. No repartition ahead of the
       // shingle stage anymore: the checkpoint already reads back at full
       // scheduler width, hash-balanced by the digest exchange.
-      val survivors = corpus
+      val survivors = Checkpoint.lazily(corpus
         .groupBy(md5(col("text").cast(BinaryType)).as("_d"))
         .agg(min(struct(col("doc_id"), col("text"))).as("_w"))
         .select(col("_w.doc_id").as("doc_id"), col("_w.text").as("text"))
         .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")).cast(LongType))
         .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-        .filter(col("quality") >= 1.0 && col("n_tokens").between(20, 1000))
-        .localCheckpoint(false)
+        .filter(col("quality") >= 1.0 && col("n_tokens").between(20, 1000)))
       val contaminated = Dedup.decontaminate(
           survivors, evalSet, "doc_id", "text", n = 5)
         .select("doc_id")
@@ -1198,10 +1196,9 @@ object QueriesLlm {
       // subtree EVERY micro-batch — without this the decontamination
       // scan+shingle pass (the query's heaviest stage) runs once per
       // trigger instead of once
-      val contaminated = Dedup.decontaminate(
+      val contaminated = Checkpoint.lazily(Dedup.decontaminate(
           plantedCorpus(ss, dir).repartition(Tables.fanout(ss)), evalSet, "doc_id", "text", n = 5)
-        .select(col("doc_id"), lit(1).as("_c"))
-        .localCheckpoint(false)
+        .select(col("doc_id"), lit(1).as("_c")))
       // Keep-first depends on batch MEMBERSHIP, not intra-batch order
       // (the state fn takes minBy over each batch's rows), so the reader's
       // round-robin exchange cannot change the result.
@@ -1479,10 +1476,9 @@ object QueriesLlm {
       val sh = array_distinct(when(size(th) < n,
           array(mdLong(array_join(transform(th, _.cast(StringType)), ","))))
         .otherwise(combined))
-      val withSig = plantedCorpus(s, dir).repartition(Tables.fanout(s))
+      val withSig = Checkpoint.lazily(plantedCorpus(s, dir).repartition(Tables.fanout(s))
         .select(col("doc_id").as("_id"), sh.as("_sh"))
-        .withColumn("_sig", Dedup.minhashSigUdf(bands * rpb, 42L)(col("_sh")))
-        .localCheckpoint(false)
+        .withColumn("_sig", Dedup.minhashSigUdf(bands * rpb, 42L)(col("_sh"))))
       val banded = withSig.select(col("_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           i => mdLong(array_join(transform(

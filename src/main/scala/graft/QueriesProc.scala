@@ -5,6 +5,7 @@ import graft.streaming.Run
 import graft.operators.{Caches, Grok, Processors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types._
 
 /** Oracle-checked queries for processors, cache/state family, format
@@ -1491,7 +1492,7 @@ object QueriesProc {
       val root = new graft.conn.Spanner.Client("127.0.0.1", port)
       val tokens = root.initialTokens("OrderStream")
       root.close()
-      val out = s.sparkContext.parallelize(tokens, tokens.size).flatMap { token =>
+      val out = Checkpoint.now(s.sparkContext.parallelize(tokens, tokens.size).flatMap { token =>
         val c = new graft.conn.Spanner.Client("127.0.0.1", port)
         try c.readPartition("OrderStream", token).map { ch =>
           val nv = ch.newValues
@@ -1499,7 +1500,7 @@ object QueriesProc {
           (nv("okey") match { case l: Long => l; case x => x.toString.toLong },
             nv("priority").asInstanceOf[String], total, ch.modType)
         } finally c.close()
-      }.toDF("o_orderkey", "priority", "o_totalprice", "mod_type").localCheckpoint()
+      }.toDF("o_orderkey", "priority", "o_totalprice", "mod_type"))
       srv.stop()
       out
     }),
@@ -1532,7 +1533,7 @@ object QueriesProc {
       val lister = new graft.conn.S2.Client(endpoint, "graft-s2-token")
       val streams = lister.listStreams("seg/")
       lister.close()
-      val out = s.sparkContext.parallelize(streams, streams.size).flatMap { stream =>
+      val out = Checkpoint.now(s.sparkContext.parallelize(streams, streams.size).flatMap { stream =>
         val c = new graft.conn.S2.Client(endpoint, "graft-s2-token")
         try c.readAll(stream, pageSize = 200).map { r =>
           (r.body, stream.stripPrefix("seg/"))
@@ -1540,7 +1541,7 @@ object QueriesProc {
       }.toDF("line", "c_mktsegment").select(
         split(col("line"), "\\|").getItem(0).cast(LongType).as("c_custkey"),
         split(col("line"), "\\|").getItem(1).as("c_name"),
-        col("c_mktsegment")).localCheckpoint()
+        col("c_mktsegment")))
       srv.stop()
       out
     }),
@@ -1584,14 +1585,13 @@ object QueriesProc {
         s"snowpipe load incomplete: $report")
       require(report.map(_.rowsInserted).sum == expected,
         s"snowpipe loaded ${report.map(_.rowsInserted).sum}/$expected rows")
-      val out = graft.conn.S3.input(s, s3e, "stage", prefix = "load/")
+      val out = Checkpoint.now(graft.conn.S3.input(s, s3e, "stage", prefix = "load/")
         .toDF("s3_key", "content", "lm", "ct")
         .select(explode(split(col("content"), "\n")).as("line"))
         .filter(col("line") =!= "")
         .select(
           split(col("line"), "\\|").getItem(0).cast(LongType).as("o_orderkey"),
-          split(col("line"), "\\|").getItem(1).cast(DoubleType).as("o_totalprice"))
-        .localCheckpoint()
+          split(col("line"), "\\|").getItem(1).cast(DoubleType).as("o_totalprice")))
       sp.stop(); s3.stop()
       out
     }),
@@ -1625,7 +1625,7 @@ object QueriesProc {
         }
       }
       val pks = rows.select(col("o_orderpriority")).distinct().as[String].collect().toSeq
-      val out = s.sparkContext.parallelize(pks, pks.size).flatMap { pk =>
+      val out = Checkpoint.now(s.sparkContext.parallelize(pks, pks.size).flatMap { pk =>
         val c = new graft.conn.Cosmos.Client(endpoint)
         try c.query("orders", pk,
           "SELECT c.okey, c.total FROM orders AS c WHERE c.total > @min",
@@ -1634,7 +1634,7 @@ object QueriesProc {
           val total = d("total") match { case l: Long => l.toDouble; case x => x.asInstanceOf[Double] }
           (d("okey").asInstanceOf[Long], pk, total)
         } finally c.close()
-      }.toDF("o_orderkey", "priority", "o_totalprice").localCheckpoint()
+      }.toDF("o_orderkey", "priority", "o_totalprice"))
       srv.stop()
       out
     }),
@@ -1807,13 +1807,13 @@ object QueriesProc {
       }
       val segments = rows.select(col("c_mktsegment")).distinct()
         .as[String].collect().toSeq // 5 partition keys
-      val out = s.sparkContext.parallelize(segments, segments.size).flatMap { seg =>
+      val out = Checkpoint.now(s.sparkContext.parallelize(segments, segments.size).flatMap { seg =>
         val c = new graft.conn.Azure.TableClient(endpoint, graft.conn.Azure.testAccount)
         try c.query("custs", filter = Some(s"PartitionKey eq '$seg'"), top = 500).map { e =>
           (e("RowKey").asInstanceOf[String].toLong, seg,
             e("name").asInstanceOf[String], e("flagged").asInstanceOf[Boolean])
         } finally c.close()
-      }.toDF("c_custkey", "c_mktsegment", "c_name", "flagged").localCheckpoint()
+      }.toDF("c_custkey", "c_mktsegment", "c_name", "flagged"))
       srv.stop()
       out
     }),
@@ -2418,13 +2418,13 @@ object QueriesProc {
       }
       // read-back through the DISTRIBUTED sliced input: one Spark task
       // per slice, bounded search_after pages — no driver-side
-      // index-sized search call (the public sliced-scroll shape)
-      val out = graft.conn.Elastic.input(s, endpoint, "events", slices = 8, pageSize = 500)
+      // index-sized search call (the public sliced-scroll shape);
+      // materialized before the fixture stops
+      val out = Checkpoint.now(graft.conn.Elastic.input(s, endpoint, "events", slices = 8, pageSize = 500)
         .select(
           get_json_object(col("_source"), "$.event_id").cast(LongType).as("event_id"),
           get_json_object(col("_source"), "$.event_type").as("event_type"),
-          coalesce(get_json_object(col("_source"), "$.flagged").cast("boolean"), lit(false)).as("flagged"))
-        .localCheckpoint() // materialize before the fixture stops
+          coalesce(get_json_object(col("_source"), "$.flagged").cast("boolean"), lit(false)).as("flagged")))
       srv.stop()
       out
     }),
@@ -2583,11 +2583,11 @@ object QueriesProc {
       }(_.close()).count() // seed before lookups
       val li = t(s, dir, "lineitem").filter(col("l_linenumber") === 3 && col("l_partkey") % 2 === 1)
         .select(col("l_orderkey").cast(LongType), col("l_partkey").cast(LongType))
-      val out = graft.operators.External.perPartitionLookup[graft.conn.NatsKv.Cache, (Long, String)](li)(
+      val out = Checkpoint.now(graft.operators.External.perPartitionLookup[graft.conn.NatsKv.Cache, (Long, String)](li)(
         () => new graft.conn.NatsKv.Cache(url, "parts")) { (c, row) =>
         (row.getLong(0), c.get(s"p_${row.getLong(1)}")
           .map(new String(_, "UTF-8")).orNull)
-      }(_.close()).toDF("l_orderkey", "part_name").localCheckpoint()
+      }(_.close()).toDF("l_orderkey", "part_name"))
       js.stop(); nats.stop()
       out
     }),

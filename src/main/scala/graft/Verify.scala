@@ -25,13 +25,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Reclaim per-query lazily-cleaned state (Bench does the same):
-      // localCheckpoint blocks and streaming state-store providers are
-      // otherwise only released when GC collects their weak refs, so a
-      // 230+-query run accumulates blocks for the session's lifetime.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      org.apache.spark.sql.graftshim.StateStoreReset.unloadAll()
+      // a 280-query run would otherwise hold every query's blocks and
+      // state stores until GC collects them
+      Bench.cleanState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -5,6 +5,7 @@ import graft.core.{Msg, Processor}
 import graft.operators.{Jq, Processors, Subprocess}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
@@ -379,8 +380,7 @@ object PipelineConfig {
         Processor("branch") { df =>
           // id evaluated once on a checkpointed frame (stable under AQE
           // re-planning — same contract as Processors.branch)
-          val idd = df.withColumn("_bid", monotonically_increasing_id())
-            .localCheckpoint(false)
+          val idd = Checkpoint.lazily(df.withColumn("_bid", monotonically_increasing_id()))
           val request = idd.withColumn(Msg.ContentCol, reqUdf(col(Msg.ContentCol)))
             .filter(col(Msg.ContentCol).isNotNull)
           val childOut = Processor.chain(children.toSeq)(request)

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types.LongType
 
 /** Byte-pair-encoding merge-table training ("Neural Machine Translation
@@ -621,13 +622,10 @@ object Bpe {
     // alphanumerics) into two malformed surrogate halves, while the
     // DuckDB oracle's RE2 '.' splits per codepoint — symbolization must
     // match or the learned merges diverge off-ASCII.
-    var words = wordFreq
-      .map { case (w, f) => (sym(w), f) }
-      .localCheckpoint(false)
+    var words = Checkpoint.lazily(wordFreq.map { case (w, f) => (sym(w), f) })
     // the predecessor checkpoint still feeding `words`' (lazy) lineage:
-    // releasable only AFTER an action materializes `words` — unpersisting
-    // a lazy localCheckpoint's parent first would strand the child
-    // (truncated lineage, dropped blocks: the CheckpointRelease hazard)
+    // releasable only AFTER an action materializes `words` — releasing
+    // a lazy checkpoint's parent first would strand the child
     var prev: org.apache.spark.sql.Dataset[(Seq[String], Long)] = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     var rank = 0
@@ -649,21 +647,20 @@ object Bpe {
       // the first iteration's action materialized `words`: the corpus
       // aggregation cache is no longer part of any live lineage
       if (rank == 0) wordFreq.unpersist()
-      if (prev != null) { prev.unpersist(); prev = null }
+      if (prev != null) { Checkpoint.release(prev); prev = null }
       if (top.isEmpty) done = true
       else {
         val (a, b, cnt) = top(0)
         rank += 1
         merges += ((rank.toLong, a, b, a + b, cnt))
-        val next = words
-          .map { case (syms, f) => (applyMerge(syms, a, b), f) }
-          .localCheckpoint(false) // flat lineage per iteration
+        val next = Checkpoint.lazily( // flat lineage per iteration
+          words.map { case (syms, f) => (applyMerge(syms, a, b), f) })
         prev = words
         words = next
       }
     }
-    if (prev != null) prev.unpersist()
-    words.unpersist()
+    if (prev != null) Checkpoint.release(prev)
+    Checkpoint.release(words)
     wordFreq.unpersist() // no-op if already released in the loop
     merges.toSeq.toDF("rank", "left", "right", "merged", "freq")
       .select(col("rank").cast(LongType).as("rank"), col("left"), col("right"),

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types._
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -157,18 +158,14 @@ object Dedup {
                       shingleN: Int = 3, seed: Long = 42L,
                       maxBucketSize: Int = 1000): DataFrame = {
     val numHashes = bands * rowsPerBand
-    // Signatures computed ONCE and materialized via localCheckpoint: the
-    // self-join would otherwise recompute the whole shingle+minhash lineage
-    // for both sides. localCheckpoint (MEMORY_AND_DISK) instead of persist:
-    // the blocks are released automatically by the ContextCleaner when the
-    // plan is garbage-collected — no unpersist bookkeeping, no leak across
-    // a long job. At cluster scale this materialization is the standard
+    // Signatures computed ONCE and materialized: the self-join would
+    // otherwise recompute the whole shingle+minhash lineage for both
+    // sides. At cluster scale this materialization is the standard
     // "signature table" stage (intermediate parquet).
-    val withSig = df.select(col(idCol).as("_id"), col(textCol).as("_text"))
+    val withSig = Checkpoint.lazily(df.select(col(idCol).as("_id"), col(textCol).as("_text"))
       .withColumn("_sh", sort_array(shingleHashes(col("_text"), shingleN)))
       .withColumn("_sig", minhashSigUdf(numHashes, seed)(col("_sh")))
-      .select("_id", "_sh", "_sig")
-      .localCheckpoint(false)
+      .select("_id", "_sh", "_sig"))
 
     // Band rows are SLIM (band, 8-byte key, id): the 32x explode must not
     // carry the ~KB shingle arrays through the shuffle. A null text has no
@@ -246,7 +243,7 @@ object Dedup {
     * the join probe consume them without recomputing upstream signatures. */
   private[graft] def boundedBucketPairs(df: DataFrame, idCol: String,
                                      bucketKeys: Seq[String], maxBucketSize: Int): DataFrame = {
-    val in = df.localCheckpoint(false)
+    val in = Checkpoint.lazily(df)
     val small = in.groupBy(bucketKeys.map(col): _*)
       .agg(count(lit(1)).as("_bsz")).filter(col("_bsz") <= maxBucketSize)
       .select(bucketKeys.map(col): _*)
@@ -423,8 +420,8 @@ object Dedup {
                              maxHamming: Int = 3, maxBucketSize: Int = 1000,
                              nHint: Option[Long] = None,
                              measured: Boolean = true): DataFrame = {
-    val sigs = sigs0.select(col(idCol).as("_id"), col(sigCol).as("_sim"))
-      .localCheckpoint(false) // 16-byte rows; counted once, banded once
+    // 16-byte rows; counted once, banded once
+    val sigs = Checkpoint.lazily(sigs0.select(col(idCol).as("_id"), col(sigCol).as("_sim")))
     val blocks =
       if (measured) chooseBlocksMeasured(sigs, maxHamming, maxBucketSize,
         scaleTo = nHint)
@@ -441,10 +438,10 @@ object Dedup {
     // back per candidate. Crucially this lets the Hamming filter run
     // BEFORE pair dedup: the candidate set shrinks from O(bucket²) to the
     // few true near-dups, and dropDuplicates shuffles almost nothing.
-    val blocked = sigs.select(col("_id"), col("_sim"),
+    // consumed by the size agg AND the join probe
+    val blocked = Checkpoint.lazily(sigs.select(col("_id"), col("_sim"),
       posexplode(array((0 until blocks).map(i =>
-        shiftright(col("_sim"), i * bits).bitwiseAND(lit(mask))): _*)).as(Seq("_blk", "_key")))
-      .localCheckpoint(false) // consumed by the size agg AND the join probe
+        shiftright(col("_sim"), i * bits).bitwiseAND(lit(mask))): _*)).as(Seq("_blk", "_key"))))
     // bucket sizes via groupBy+count+join-back, not a window count — same
     // skew rationale as boundedBucketPairs (partial agg absorbs a hot
     // block key map-side; a window would funnel it into one task)
@@ -519,8 +516,7 @@ object Dedup {
                      threshold: Double = 0.95, planesPerTable: Int = 12,
                      tables: Int = 4, seed: Long = 42L,
                      maxBucketSize: Int = 1000): DataFrame = {
-    val vecs = df.select(col(idCol).as("_id"), col(vecCol).as("_v"))
-      .localCheckpoint(false)
+    val vecs = Checkpoint.lazily(df.select(col(idCol).as("_id"), col(vecCol).as("_v")))
     val sigExprs = (0 until tables).map { t =>
       Similarity.hyperplaneSignature(col("_v"), dim, planesPerTable, seed + t)
     }
@@ -627,27 +623,8 @@ object Dedup {
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           rounds: Int = 6): DataFrame = {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.graftshim.{CheckpointRelease, FlatCheckpoint}
     require(rounds >= 1, s"connectedComponents: rounds must be >= 1, got $rounds")
-    // A lazy checkpoint's first reads can run as concurrent jobs (the
-    // edge test reads the labels twice). The first job to finish
-    // truncates the RDD's lineage, and with it the last strong reference
-    // to the origin plan's SQL metrics: once GC collects them, the other
-    // job's tasks report to accumulators that no longer exist and the
-    // scheduler logs "attempted to access non-existent accumulator".
-    // Holding every origin frame until the last edge test keeps them.
-    // FlatCheckpoint CLAMPS each checkpoint's carried origin stats: in
-    // the round loop the captured sizeInBytes DOUBLES IN BIT LENGTH per
-    // round, and a slow-converging graph reaches BigInteger overflow
-    // inside Catalyst planning around round 30 (measured on a random
-    // long-chain graph). Clamping (not dropping) keeps small sizes exact,
-    // so broadcast decisions are unchanged.
-    val origins = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def checkpoint(df: DataFrame): DataFrame = {
-      origins += df
-      FlatCheckpoint.capStats(df.localCheckpoint(false))
-    }
-    val norm = checkpoint( // read by contraction, every edge test and every round
+    val norm = Checkpoint.lazily( // read by contraction, every edge test and every round
       edges.select(least(col("id_a"), col("id_b")).cast(LongType).as("src"),
         greatest(col("id_a"), col("id_b")).cast(LongType).as("dst")))
     val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
@@ -658,7 +635,7 @@ object Dedup {
       val (ids, labels) = localMinLabel(a.result(), b.result())
       ids.iterator.zip(labels.iterator)
     }(pair).toDF("node", "label")
-    var labels = checkpoint(
+    var labels = Checkpoint.lazily(
       nodes.select(col("node"), col("node").as("label")).unionByName(contracted)
         .groupBy("node").agg(min("label").as("label")))
     val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -672,7 +649,7 @@ object Dedup {
         .join(labels.select(col("node").as("dst"), col("label").as("_ld")), "dst")
         .filter(col("_ls") =!= col("_ld"))
         .count()
-      retired.foreach(CheckpointRelease.unpersist)
+      retired.foreach(Checkpoint.release)
       retired.clear()
       bad
     }
@@ -685,7 +662,7 @@ object Dedup {
       val hop = labels.as("x").join(labels.as("p"), col("x.label") === col("p.node"))
         .select(col("x.node").as("node"), col("p.label").as("label"))
       retired += labels
-      labels = checkpoint(
+      labels = Checkpoint.lazily(
         labels.unionByName(viaEdge).unionByName(hop)
           .groupBy("node").agg(min("label").as("label")))
     }
@@ -695,12 +672,11 @@ object Dedup {
       (1 to math.min(rounds, maxRounds - i)).foreach(_ => runRound())
       bad = badEdges()
     }
-    origins.clear()
     lastConvergedRounds = i
     require(bad == 0, s"connectedComponents not converged after $i rounds")
     // the edges are dead once the caller's reads hit the final labels
     // checkpoint; labels itself stays live for the caller
-    CheckpointRelease.unpersist(norm)
+    Checkpoint.release(norm)
     labels
   }
 
@@ -771,9 +747,8 @@ object Dedup {
     * must not recompute per consumer. At cluster scale this is the
     * intermediate "window table" a span-dedup pipeline would persist. */
   private def winOccurrences(base: DataFrame, w: Int): DataFrame =
-    base.select(col("doc_id"),
-        posexplode(windowDigests(col("_t"), w)).as(Seq("pos", "h")))
-      .localCheckpoint(false)
+    Checkpoint.lazily(base.select(col("doc_id"),
+        posexplode(windowDigests(col("_t"), w)).as(Seq("pos", "h"))))
 
   /** Occurrences of duplicated windows (corpus-wide count ≥ 2); when
     * `withCanon`, also the canonical occurrence _first = min (doc_id,

@@ -4,6 +4,7 @@ import graft.functions.Blob
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -77,9 +78,8 @@ object Similarity {
                    hierAssignFrom: Int = hierAssignThreshold): Array[Array[Double]] = {
     val base0 = corpus.select(col(corpusId).as("_id"),
       normalized(col(corpusVec)).as("_nv"))
-    val base = (if (trainMod > 1)
+    val base = Checkpoint.now(if (trainMod > 1) // scanned once; reused every iteration
       base0.filter(pmod(xxhash64(col("_id")), lit(trainMod)) === 0) else base0)
-      .localCheckpoint() // scanned once; reused every iteration
     var cents = base.orderBy(xxhash64(col("_id")), col("_id")).limit(nCells)
       .select("_nv").collect().map(_.getSeq[Double](0).toArray)
     for (_ <- 0 until iters) {
@@ -98,7 +98,7 @@ object Similarity {
         means.get(c).map(unitNorm).getOrElse(cents(c)) // empty cell keeps its centroid
       }.toArray
     }
-    base.unpersist() // fully consumed: retire the checkpoint's blocks
+    Checkpoint.release(base) // fully consumed
     cents
   }
 
@@ -443,10 +443,9 @@ object Similarity {
     val ccos = centroidCos(cents)
     // assignment + priority computed once; both the pair probe and the
     // verification join consume it (the LSH families' signature-table stage)
-    val vecs = corpus.select(col(idCol).as("_id"), normalized(col(vecCol)).as("_nv"))
+    val vecs = Checkpoint.lazily(corpus.select(col(idCol).as("_id"), normalized(col(vecCol)).as("_nv"))
       .withColumn("_cell", assign(col("_nv")))
-      .withColumn("_ccos", ccos(col("_cell"), col("_nv")))
-      .localCheckpoint(false)
+      .withColumn("_ccos", ccos(col("_cell"), col("_nv"))))
     // Each id sits in exactly ONE cell — candidate pairs are unique by
     // construction, so the boundedBucketPairs form (pair ids →
     // dropDuplicates → two vector join-backs) paid three shuffles of
@@ -515,9 +514,8 @@ object Similarity {
     val hk = TextAnalysis.md5Long60(col(corpusId).cast(StringType))
     val base0 = corpus.select(col(corpusId).as("_id"),
       quantizeVec(col(corpusVec), scale).as("_qv"), hk.as("_hk"))
-    val base = (if (trainMod > 1)
+    val base = Checkpoint.now(if (trainMod > 1) // scanned once; reused every iteration
       base0.filter(pmod(col("_hk"), lit(trainMod)) === 0) else base0)
-      .localCheckpoint() // scanned once; reused every iteration
     var cents = base.orderBy(col("_hk"), col("_id")).limit(nCells)
       .select("_qv").collect().map(_.getSeq[Long](0).toArray)
     for (_ <- 0 until iters) {
@@ -536,7 +534,7 @@ object Similarity {
           .getOrElse(cents(c)) // empty cell keeps its centroid
       }.toArray
     }
-    base.unpersist()
+    Checkpoint.release(base)
     cents
   }
 
@@ -718,11 +716,10 @@ object Similarity {
     val assign = if (cents.length >= hierAssignFrom) assignCellHierQ(cents)
                  else assignCellQ(cents)
     val prio = cellPriorityQ(cents)
-    val vecs = corpus.select(col(idCol).as("_id"),
+    val vecs = Checkpoint.lazily(corpus.select(col(idCol).as("_id"),
         quantizeVec(col(vecCol), scale).as("_qv"))
       .withColumn("_cell", assign(col("_qv")))
-      .withColumn("_prio", prio(col("_cell"), col("_qv")))
-      .localCheckpoint(false)
+      .withColumn("_prio", prio(col("_cell"), col("_qv"))))
     // Each id sits in exactly ONE cell, so candidate pairs are unique by
     // construction — no pair dedup exists to pay for. Carry (vector,
     // priority) THROUGH the cell self-join and verify INSIDE it (the

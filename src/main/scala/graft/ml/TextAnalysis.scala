@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -334,8 +335,7 @@ object TextAnalysis {
     // join build — three full passes counting the probe side. Same fix
     // as dsirLogRatio; the occurrence stream itself stays recomputed
     // (string tokens: materializing it costs more than re-tokenizing).
-    val vocab = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+    val vocab = Checkpoint.lazily(toks.groupBy("tok").agg(count(lit(1)).as("tf")))
     val total = vocab.agg(sum("tf")).first().getLong(0)
     toks.join(vocab, "tok")
       .groupBy(idCol)
@@ -369,11 +369,9 @@ object TextAnalysis {
     // sized (Zipf-bounded, far smaller than the token stream); pinning
     // it trades that for one materialization. Same fix as the hashed
     // variant, where the table is bucket-bounded outright.
-    val corpusTf = corpusToks.groupBy("tok").agg(count(lit(1)).as("_cf"))
-      .localCheckpoint(false)
-    val targetTf = target.select(explode(Dedup.tokens(col(textCol))).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("_tft"))
-      .localCheckpoint(false)
+    val corpusTf = Checkpoint.lazily(corpusToks.groupBy("tok").agg(count(lit(1)).as("_cf")))
+    val targetTf = Checkpoint.lazily(target.select(explode(Dedup.tokens(col(textCol))).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("_tft")))
     val Array(cTot, v) = corpusTf.agg(sum("_cf"), count(lit(1))).first() match {
       case r => Array(r.getLong(0), r.getLong(1))
     }
@@ -422,19 +420,16 @@ object TextAnalysis {
     // (one MessageDigest pass per doc) instead of interpreted string
     // shingles + a per-occurrence md5/substring/conv chain — same bucket
     // values by construction, spec-pinned against the Column reference.
-    val corpusB = corpus.select(col(idCol),
-        explode(dsirFeatBuckets(buckets)(Dedup.tokens(col(textCol)))).as("_b"))
-      .localCheckpoint(false)
+    val corpusB = Checkpoint.lazily(corpus.select(col(idCol),
+        explode(dsirFeatBuckets(buckets)(Dedup.tokens(col(textCol)))).as("_b")))
     val targetB = target.select(
       explode(dsirFeatBuckets(buckets)(Dedup.tokens(col(textCol)))).as("_b"))
     // bounded at `buckets` rows by construction → broadcast is safe at
     // ANY corpus scale (unlike a vocabulary table, which grows with data).
     // localCheckpoint the TINY aggregated tables too: the scalar-total
     // action and the broadcast build must not re-run their aggregation
-    val corpusBf = corpusB.groupBy("_b").agg(count(lit(1)).as("_cf"))
-      .localCheckpoint(false)
-    val targetBf = targetB.groupBy("_b").agg(count(lit(1)).as("_tft"))
-      .localCheckpoint(false)
+    val corpusBf = Checkpoint.lazily(corpusB.groupBy("_b").agg(count(lit(1)).as("_cf")))
+    val targetBf = Checkpoint.lazily(targetB.groupBy("_b").agg(count(lit(1)).as("_tft")))
     val cTot = corpusBf.agg(sum("_cf")).first().getLong(0)
     val tTot = targetBf.agg(coalesce(sum("_tft"), lit(0L))).first().getLong(0)
     corpusB.join(broadcast(corpusBf), "_b")
@@ -480,11 +475,9 @@ object TextAnalysis {
     // streaming twin (frozen model, new docs) keeps the split
     // lmModelHashed/lmScoreWith path. Materialization is 4 longs +
     // id/occurrence — the dsirLogRatioHashed space-for-pass trade.
-    val occ = lmBigramBuckets(corpus, idCol, textCol, buckets)
-      .localCheckpoint(false)
+    val occ = Checkpoint.lazily(lmBigramBuckets(corpus, idCol, textCol, buckets))
     val (uniBf, uTot) = lmUnigramTable(corpus, textCol, buckets)
-    val biBf = occ.groupBy(col("_bb").as("_b")).agg(count(lit(1)).as("_bc"))
-      .localCheckpoint(false)
+    val biBf = Checkpoint.lazily(occ.groupBy(col("_bb").as("_b")).agg(count(lit(1)).as("_bc")))
     lmScoreOcc(LmModel(uniBf, biBf, uTot, buckets), occ, idCol, lambda)
   }
 
@@ -496,10 +489,9 @@ object TextAnalysis {
   private def lmUnigramTable(corpus: org.apache.spark.sql.DataFrame,
                              textCol: String, buckets: Int)
       : (org.apache.spark.sql.DataFrame, Long) = {
-    val uniBf = corpus
+    val uniBf = Checkpoint.lazily(corpus
       .select(explode(tokenBuckets(buckets)(Dedup.tokens(col(textCol)))).as("_b"))
-      .groupBy("_b").agg(count(lit(1)).as("_uc"))
-      .localCheckpoint(false)
+      .groupBy("_b").agg(count(lit(1)).as("_uc")))
     (uniBf, uniBf.agg(sum("_uc")).first().getLong(0))
   }
 
@@ -614,9 +606,8 @@ object TextAnalysis {
   def lmModelHashed(corpus: org.apache.spark.sql.DataFrame, textCol: String,
                     buckets: Int = 10000): LmModel = {
     val (uniBf, uTot) = lmUnigramTable(corpus, textCol, buckets)
-    val biBf = lmBigramBuckets(corpus, corpus.columns.head, textCol, buckets)
-      .groupBy(col("_bb").as("_b")).agg(count(lit(1)).as("_bc"))
-      .localCheckpoint(false)
+    val biBf = Checkpoint.lazily(lmBigramBuckets(corpus, corpus.columns.head, textCol, buckets)
+      .groupBy(col("_bb").as("_b")).agg(count(lit(1)).as("_bc")))
     LmModel(uniBf, biBf, uTot, buckets)
   }
 

@@ -4,6 +4,7 @@ import graft.core.{Msg, Processor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types._
 
 /** Processor catalog (SURVEY §2.4) re-expressed as lazy DataFrame
@@ -101,7 +102,7 @@ object Processors {
     */
   def switch(cases: Seq[(Column, Processor)], default: Processor = Processor.noop): Processor =
     Processor("switch") { df =>
-      val src = df.withColumn(SwitchTag, caseTag(cases.map(_._1))).localCheckpoint(false)
+      val src = Checkpoint.lazily(df.withColumn(SwitchTag, caseTag(cases.map(_._1))))
       (cases.map(_._2) :+ default).zipWithIndex.map { case (proc, i) =>
         proc(src.filter(col(SwitchTag) === i).drop(SwitchTag))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -123,8 +124,7 @@ object Processors {
       // input is scanned once instead of twice. broadcastResult defaults to
       // false: unconditional broadcast of an unbounded child result is a
       // driver-OOM hazard; opt in only for provably small results.
-      val withId = df.withColumn("_branch_id", monotonically_increasing_id())
-        .localCheckpoint(false)
+      val withId = Checkpoint.lazily(df.withColumn("_branch_id", monotonically_increasing_id()))
       val req = requestMap(withId.select((df.columns.map(col) :+ col("_branch_id")): _*))
       val res = child(req).select((resultCols.map(col) :+ col("_branch_id")): _*)
       val rhs = if (broadcastResult) broadcast(res) else res
@@ -188,9 +188,8 @@ object Processors {
     val ranged = numPartitions
       .map(n => df.repartitionByRange(n, (key +: order): _*))
       .getOrElse(df.repartitionByRange((key +: order): _*))
-    val local = ranged
-      .withColumn("_rwg_pid", org.apache.spark.sql.functions.spark_partition_id())
-      .localCheckpoint(false)
+    val local = Checkpoint.lazily(ranged
+      .withColumn("_rwg_pid", org.apache.spark.sql.functions.spark_partition_id()))
       .withColumn("_rwg_lrn", row_number().over(
         Window.partitionBy(key, col("_rwg_pid")).orderBy(order: _*)))
     val counts = local.groupBy(col("_rwg_pid").as("_rwg_pid2"), key.as("_rwg_k"))
@@ -248,7 +247,7 @@ object Processors {
       // materialize the tagged frame once (lazy localCheckpoint): each
       // group's sub-plan reads the checkpoint instead of re-scanning the
       // input N times — same single-scan contract as `branch`
-      val tagged = df.withColumn("_gb", caseTag(cases.map(_._1))).localCheckpoint(false)
+      val tagged = Checkpoint.lazily(df.withColumn("_gb", caseTag(cases.map(_._1))))
       cases.zipWithIndex.map { case ((_, proc), i) =>
         proc(tagged.filter(col("_gb") === i).drop("_gb"))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -352,7 +351,7 @@ object Processors {
       var df = df0
       var i = 0
       while (i < maxIters && continue(df)) {
-        df = child(df).localCheckpoint(true)
+        df = Checkpoint.now(child(df))
         i += 1
       }
       df

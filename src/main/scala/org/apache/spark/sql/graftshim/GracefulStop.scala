@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * and only then does `stop()` interrupt, cutting the sleep short. After
   * `timeoutMs` it interrupts regardless. Lives in the org.apache.spark.sql
   * tree for access to the private[sql] query classes (the
-  * CheckpointRelease pattern); the state field is protected, so it is
+  * Checkpoint pattern); the state field is protected, so it is
   * read through its public bytecode accessor.
   */
 object GracefulStop {

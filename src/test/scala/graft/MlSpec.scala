@@ -5,6 +5,7 @@ import graft.ml.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.Run
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Checkpoint
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 class MlSpec extends SparkSpec {
@@ -564,8 +565,7 @@ class MlSpec extends SparkSpec {
 
   test("llm_minhash_pairs: precision exact, recall >= 0.9 vs all-pairs Jaccard at the gate SF") {
     val corpus = QueriesLlm.plantedCorpus(spark, gateSf)
-    val sh = corpus.select(col("doc_id"), Dedup.shingleHashes(col("text")).as("sh"))
-      .localCheckpoint(false)
+    val sh = Checkpoint.lazily(corpus.select(col("doc_id"), Dedup.shingleHashes(col("text")).as("sh")))
     // exact ALL-pairs Jaccard (≈500k pairs at sf0.01) — the ground truth
     val exact = sh.alias("a").join(sh.alias("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
@@ -598,8 +598,7 @@ class MlSpec extends SparkSpec {
 
   test("llm_simhash_pairs: gate output EQUALS exact all-pairs Hamming at the gate SF") {
     val corpus = QueriesLlm.plantedCorpus(spark, gateSf)
-    val sigs = corpus.select(col("doc_id").as("id"), Dedup.simhash(col("text")).as("s"))
-      .localCheckpoint(false)
+    val sigs = Checkpoint.lazily(corpus.select(col("doc_id").as("id"), Dedup.simhash(col("text")).as("s")))
     val truth = sigs.alias("a").join(sigs.alias("b"), col("a.id") < col("b.id"))
       .withColumn("h", bit_count(col("a.s").bitwiseXOR(col("b.s"))))
       .filter(col("h") <= 7)
@@ -616,8 +615,8 @@ class MlSpec extends SparkSpec {
     val perturbed = embG.select((col("vec_id") + 100000L).as("vec_id"),
       transform(col("embedding"), (x, i) =>
         when(i === 0, x * 1.05f + 0.01f).otherwise(x)).as("embedding"))
-    val all = embG.unionByName(perturbed)
-      .select(col("vec_id"), col("embedding")).localCheckpoint(false)
+    val all = Checkpoint.lazily(embG.unionByName(perturbed)
+      .select(col("vec_id"), col("embedding")))
     val exact = all.alias("a").join(all.alias("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
         graft.functions.Blob.cosineSimilarity(col("a.embedding"), col("b.embedding")).as("c"))
@@ -645,7 +644,7 @@ class MlSpec extends SparkSpec {
     val perturbed = embG.select((col("vec_id") + 100000L).as("vec_id"),
       transform(col("embedding"), (x, i) =>
         when(i === 0, x * 1.05f + 0.01f).otherwise(x)).as("embedding"))
-    val all = embG.unionByName(perturbed).localCheckpoint(false)
+    val all = Checkpoint.lazily(embG.unionByName(perturbed))
     val nodes = all.select(col("vec_id").as("node"))
     val exactPairs = all.alias("a").join(all.alias("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
@@ -3029,8 +3028,8 @@ class MlSpec extends SparkSpec {
     val media = ids.select(col("media_id"), mk(col("media_id")).as("data"))
       .unionByName(ids.select((col("media_id") + off).as("media_id"),
         mkTwin(col("media_id")).as("data")))
-    val prints = Multimodal.dhashBmp(media, "media_id", "data")
-      .localCheckpoint(false) // decoded once; consumed by chooser + both pair runs
+    // decoded once; consumed by chooser + both pair runs
+    val prints = Checkpoint.lazily(Multimodal.dhashBmp(media, "media_id", "data"))
     val uniformBlocks = Dedup.chooseBlocks(2L * nDocs, 7, cap)
     val measuredBlocks = Dedup.chooseBlocksMeasured(
       prints.select(col("media_id").as("_id"), col("dhash").as("_sim")), 7, cap)
@@ -3130,14 +3129,12 @@ class MlSpec extends SparkSpec {
     assert(picks == Seq(8, 4), s"hints did not change the streamed geometry: $picks")
   }
 
-  test("FlatCheckpoint.capStats: small sizes exact, carried stats clamped (the CC cliff guard)") {
-    import org.apache.spark.sql.graftshim.FlatCheckpoint
+  test("Checkpoint clamp: small sizes exact, carried stats clamped (the CC cliff guard)") {
     // small frame: the clamp must NOT disturb exact carried stats
     // (broadcast decisions depend on them)
     val small = (0 until 100).map(i => (i.toLong, i.toLong)).toDF("a", "b")
-      .localCheckpoint(false)
     val smallStats = small.queryExecution.optimizedPlan.stats.sizeInBytes
-    val capped = FlatCheckpoint.capStats(small)
+    val capped = Checkpoint.lazily(small)
     assert(capped.queryExecution.optimizedPlan.stats.sizeInBytes == smallStats,
       "clamp disturbed an in-range carried size")
     // a self-join LOOP over clamped checkpoints must keep sizeInBytes
@@ -3145,10 +3142,9 @@ class MlSpec extends SparkSpec {
     // dies in Catalyst BigInteger math around round 30 — SCALING r16 §6)
     var df = capped
     (1 to 12).foreach { _ =>
-      df = FlatCheckpoint.capStats(
+      df = Checkpoint.lazily(
         df.as("x").join(df.as("y"), col("x.a") === col("y.a"))
-          .select(col("x.a").as("a"), col("y.b").as("b"))
-          .localCheckpoint(false))
+          .select(col("x.a").as("a"), col("y.b").as("b")))
     }
     val bits = df.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
     assert(bits <= 63, s"clamped loop stats grew to $bits bits")

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards for the one streaming run path: a query starts only in
-  * `streaming/Run.scala`, and every temp dir goes through
-  * `core/TempDir.scala`, whose single exit hook deletes whole trees. */
+  * `streaming/Run.scala`, every temp dir goes through
+  * `core/TempDir.scala`, whose single exit hook deletes whole trees, and
+  * every local checkpoint goes through `graftshim/Checkpoint.scala`. */
 class RunGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private def sources: Vector[Path] = {
@@ -43,6 +44,11 @@ class RunGuardSpec extends AnyFunSuite {
   test("src/main makes temp dirs only through core.TempDir, and never deleteOnExit") {
     val found = hits("createTempDirectory", "core/TempDir.scala") ++
       hits("deleteOnExit()", "core/TempDir.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("src/main takes local checkpoints only through graftshim.Checkpoint") {
+    val found = hits(".localCheckpoint(", "graftshim/Checkpoint.scala")
     assert(found.isEmpty, found.mkString("\n"))
   }
 
