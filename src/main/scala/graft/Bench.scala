@@ -41,7 +41,7 @@ object Bench {
     // earlier queries' blocks in flight when the next timing started
     // (observed: cosine_topk 1.1 s isolated vs 3.4 s after minhash).
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+      .foreach(org.apache.spark.sql.graftshim.Checkpoint.dropBlocks(_, blocking = true))
     // streaming runs leave their state-store providers (and their
     // in-memory version maps) loaded after query.stop(); across
     // repeated runs that heap pressure bleeds into whatever query

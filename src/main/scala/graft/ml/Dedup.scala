@@ -1,20 +1,27 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.CollationSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Checkpoint
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Scale design: exact dedup is one hash-partitioned shuffle on a digest
   * (never on the full text — at 100 TB you shuffle 32-byte keys, not
   * documents). Near-dup (MinHash/SimHash) follows the standard
-  * shingle → signature → band-bucket-join shape: candidates come from a
+  * shingle → signature → band-bucket shape: candidates come from a
   * shuffle on small band keys, and the expensive Jaccard verification runs
-  * only on candidate pairs. Everything up to the band join is per-row
-  * Column math inside whole-stage codegen — no UDFs in the wide path.
+  * only on candidate pairs. Everything up to the band shuffle is per-row
+  * work that stays in its partition.
   *
   * Reference anchors: `dedupe` processor (internal/impl/pure/
   * processor_dedupe.go:20-31) is the exact-key flavor; near-dup extends it
@@ -65,32 +72,21 @@ object Dedup {
     * through the same catalyst XXH64 kernel; equality with the Column
     * form (chained `zip_with(xxhash64)`, kept in MlSpec) is spec-pinned
     * so the rule cannot drift. */
-  private def chainedXxhash(th: Column, w: Int): Column = {
-    val f = (hs: Array[Long]) => {
-      if (hs == null) null
-      else {
-        val m = hs.length - (w - 1)
-        if (m <= 0) Array.empty[Long]
-        else {
-          val out = new Array[Long](m)
-          var j = 0
-          while (j < m) {
-            var h = hs(j)
-            var k = 1
-            while (k < w) {
-              h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(
-                hs(j + k),
-                org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(h, 42L))
-              k += 1
-            }
-            out(j) = h
-            j += 1
-          }
-          out
-        }
-      }
+  private def chainedXxhash(th: Column, w: Int): Column =
+    udf((hs: Array[Long]) => if (hs == null) null else windowHashes(hs, w)).apply(th)
+
+  /** The w-wide window digests of `hs` (empty when it is shorter than w). */
+  private def windowHashes(hs: Array[Long], w: Int): Array[Long] = {
+    val out = new Array[Long](math.max(hs.length - (w - 1), 0))
+    var j = 0
+    while (j < out.length) {
+      var h = hs(j)
+      var k = 1
+      while (k < w) { h = XXH64.hashLong(hs(j + k), XXH64.hashLong(h, 42L)); k += 1 }
+      out(j) = h
+      j += 1
     }
-    udf(f).apply(th)
+    out
   }
 
   // Mersenne prime 2^31-1: universal-hash family h_j(x) = (a_j*x' + b_j) mod p
@@ -102,6 +98,46 @@ object Dedup {
   private[graft] def hashParams(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(numHashes)((math.abs(rnd.nextLong()) % (P - 1) + 1, math.abs(rnd.nextLong()) % P))
+  }
+
+  /** `x % P` for `x >= 0` without a division: 2^31 ≡ 1 (mod P), so the
+    * high and low 31 bits add up to the same residue. Two folds bring any
+    * non-negative Long below P + 4, one subtraction below P. */
+  private[graft] def modP(x: Long): Long = {
+    val y = (x & P) + (x >>> 31)
+    val z = (y & P) + (y >>> 31)
+    if (z >= P) z - P else z
+  }
+
+  /** `a` sorted ascending in place, then its distinct values. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var d = 0
+    var i = 0
+    while (i < a.length) {
+      if (d == 0 || a(i) != a(d - 1)) { a(d) = a(i); d += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(a, d)
+  }
+
+  /** The MinHash min-fold over shingle hashes `hs`: for each (a_j, b_j),
+    * the least (a_j·(h mod P) + b_j) mod P over h in `hs`. */
+  private def minhashOf(hs: Array[Long], as: Array[Long], bs: Array[Long]): Array[Long] = {
+    val out = Array.fill(as.length)(Long.MaxValue)
+    var i = 0
+    while (i < hs.length) {
+      val r = hs(i) % P
+      val hp = if (r < 0) r + P else r
+      var j = 0
+      while (j < as.length) {
+        val v = modP(hp * as(j) + bs(j))
+        if (v < out(j)) out(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    out
   }
 
   /** MinHash signature UDF: one O(shingles × numHashes) tight JVM loop per
@@ -116,30 +152,117 @@ object Dedup {
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val as = hashParams(numHashes, seed).map(_._1).toArray
     val bs = hashParams(numHashes, seed).map(_._2).toArray
-    udf { (hs: Array[Long]) =>
-      if (hs == null) null // a null text has no shingles and no signature
-      else {
-        val out = Array.fill(numHashes)(Long.MaxValue)
-        var i = 0
-        while (i < hs.length) {
-          val hp = ((hs(i) % P) + P) % P
-          var j = 0
-          while (j < numHashes) {
-            val v = (hp * as(j) + bs(j)) % P
-            if (v < out(j)) out(j) = v
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-    }
+    // a null text has no shingles and no signature
+    udf((hs: Array[Long]) => if (hs == null) null else minhashOf(hs, as, bs))
   }
 
   /** MinHash signature: array<long> of length `numHashes`. */
   def minhashSignature(text: Column, numHashes: Int = 64, shingleN: Int = 3,
                        seed: Long = 42L): Column =
     minhashSigUdf(numHashes, seed)(shingleHashes(text, shingleN))
+
+  /** One document's LSH row: its sorted distinct shingle hashes and its
+    * band keys. */
+  private[graft] case class LshRow(sh: Array[Long], bands: Array[Int])
+
+  /** The fused per-document MinHash LSH kernel: from a text's UTF-8 bytes
+    * to the same shingle set, signature and band keys as the Column chain
+    * `sort_array(shingleHashes)` → [[minhashSigUdf]] → `hash(slice(sig))`
+    * per band, in one pass with no token strings.
+    *
+    * An ASCII text is lowercased and tokenized on its bytes (a token is a
+    * maximal [a-z0-9] run, which is what `[^\p{L}\p{N}]+` leaves of ASCII)
+    * and each token's byte range is hashed in place with the XXH64 kernel
+    * `xxhash64` uses. A text with any non-ASCII byte takes Spark's own
+    * `lower` (CollationSupport, with the session's ICU case-mapping
+    * setting) and the same regex split, so case mappings and code-point
+    * classes cannot drift. Shingles replay `xxhash64(array)` and
+    * [[chainedXxhash]] exactly; a band key replays Murmur3 (`hash`, seed
+    * 42) over the band's signature slice. */
+  private[graft] final class LshKernel(numHashes: Int, rowsPerBand: Int, shingleN: Int,
+                                       seed: Long, icuLower: Boolean) extends Serializable {
+    private val as = hashParams(numHashes, seed).map(_._1).toArray
+    private val bs = hashParams(numHashes, seed).map(_._2).toArray
+
+    /** XXH64 (seed 42) of every token of `text`, in order. */
+    def tokenHashes(text: Array[Byte]): Array[Long] = {
+      var i = 0
+      while (i < text.length && text(i) >= 0) i += 1
+      if (i < text.length) unicodeTokenHashes(text)
+      else {
+        val low = new Array[Byte](text.length)
+        val out = new Array[Long]((text.length + 1) / 2)
+        var n = 0
+        i = 0
+        while (i < text.length) {
+          while (i < text.length && !LshKernel.isAlnum(text(i))) i += 1
+          val s = i
+          while (i < text.length && LshKernel.isAlnum(text(i))) {
+            val c = text(i)
+            low(i) = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+            i += 1
+          }
+          if (i > s) {
+            out(n) = XXH64.hashUnsafeBytes(low, Platform.BYTE_ARRAY_OFFSET + s, i - s, 42L)
+            n += 1
+          }
+        }
+        java.util.Arrays.copyOf(out, n)
+      }
+    }
+
+    private def unicodeTokenHashes(text: Array[Byte]): Array[Long] = {
+      val u = UTF8String.fromBytes(text)
+      val low = if (icuLower) CollationSupport.Lower.execBinaryICU(u) else CollationSupport.Lower.execBinary(u)
+      LshKernel.separators.split(low.toString, -1).filter(_.nonEmpty).map { t =>
+        val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+      }
+    }
+
+    /** Sorted distinct shingle hashes of token hashes `th`. */
+    def shingles(th: Array[Long]): Array[Long] =
+      if (th.length < shingleN) {
+        var h = 42L
+        th.foreach(t => h = XXH64.hashLong(t, h))
+        Array(h)
+      } else sortedDistinct(windowHashes(th, shingleN))
+
+    def signature(sh: Array[Long]): Array[Long] = minhashOf(sh, as, bs)
+
+    def bandKeys(sig: Array[Long]): Array[Int] = {
+      val out = new Array[Int](numHashes / rowsPerBand)
+      var b = 0
+      while (b < out.length) {
+        var h = 42
+        var k = b * rowsPerBand
+        while (k < (b + 1) * rowsPerBand) { h = Murmur3_x86_32.hashLong(sig(k), h); k += 1 }
+        out(b) = h
+        b += 1
+      }
+      out
+    }
+
+    def apply(text: Array[Byte]): LshRow =
+      if (text == null) null // no shingles, no signature, no band rows
+      else {
+        val sh = shingles(tokenHashes(text))
+        LshRow(sh, bandKeys(signature(sh)))
+      }
+  }
+
+  private[graft] object LshKernel {
+    val separators: java.util.regex.Pattern = java.util.regex.Pattern.compile("[^\\p{L}\\p{N}]+")
+
+    def isAlnum(c: Byte): Boolean =
+      (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || (c >= 'A' && c <= 'Z')
+
+    /** The kernel with the active session's case-mapping setting, the one
+      * `lower` reads. */
+    def apply(numHashes: Int, rowsPerBand: Int, shingleN: Int, seed: Long): LshKernel =
+      new LshKernel(numHashes, rowsPerBand, shingleN, seed,
+        SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED))
+  }
 
   /** MinHash + LSH near-duplicate PAIRS.
     *
@@ -148,37 +271,33 @@ object Dedup {
     * verified with exact Jaccard over shingle sets. Output:
     * (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     *
-    * Shuffle profile at scale: explode to `bands` rows/doc of (band_key,
-    * id, sig-slice) → hash shuffle on band_key (tiny rows) → per-bucket
-    * pair generation → second small shuffle to dedup pairs → join back to
-    * docs only for candidates.
+    * One pass per document: the fused [[LshKernel]] turns the text into
+    * its sorted shingle set and its band keys (the signature never leaves
+    * the kernel), and that row is materialized once as the "signature
+    * table" that both the buckets and the verification read. The band
+    * rows are slim (band, 4-byte key, id), and [[boundedBucketPairs]]
+    * turns them into candidate pairs in one aggregate, so a hot bucket
+    * costs bounded memory and never a quadratic join. The candidates join
+    * back to the shingle table on id_a, then id_b, for the exact Jaccard.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.6, bands: Int = 16, rowsPerBand: Int = 4,
                       shingleN: Int = 3, seed: Long = 42L,
                       maxBucketSize: Int = 1000): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // Signatures computed ONCE and materialized: the self-join would
-    // otherwise recompute the whole shingle+minhash lineage for both
-    // sides. At cluster scale this materialization is the standard
-    // "signature table" stage (intermediate parquet).
-    val withSig = Checkpoint.lazily(df.select(col(idCol).as("_id"), col(textCol).as("_text"))
-      .withColumn("_sh", sort_array(shingleHashes(col("_text"), shingleN)))
-      .withColumn("_sig", minhashSigUdf(numHashes, seed)(col("_sh")))
-      .select("_id", "_sh", "_sig"))
+    val kernel = LshKernel(bands * rowsPerBand, rowsPerBand, shingleN, seed)
+    // the struct stays whole in the checkpoint: a projection of its fields
+    // above the UDF could be inlined into one kernel call per field
+    val withSig = Checkpoint.lazily(df.select(col(idCol).as("_id"),
+      udf((t: Array[Byte]) => kernel(t)).withName("minhash_lsh_kernel")(
+        col(textCol).cast(StringType).cast(BinaryType)).as("_k")))
 
-    // Band rows are SLIM (band, 8-byte key, id): the 32x explode must not
-    // carry the ~KB shingle arrays through the shuffle. A null text has no
-    // signature and so no band rows: it stays a singleton.
-    val banded = withSig.filter(col("_sig").isNotNull).select(col("_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        i => hash(slice(col("_sig"), i * rowsPerBand + 1, lit(rowsPerBand))))).as(Seq("_band", "_bkey")))
+    // A null text has no band rows (posexplode of null): it stays a singleton.
+    val banded = withSig.select(col("_id"), posexplode(col("_k.bands")).as(Seq("_band", "_bkey")))
 
     val candidates = boundedBucketPairs(banded, "_id", Seq("_band", "_bkey"), maxBucketSize)
 
-    // Verification joins the (small) candidate set back to the shingle table.
-    val shA = withSig.select(col("_id").as("id_a"), col("_sh").as("_sh_a"))
-    val shB = withSig.select(col("_id").as("id_b"), col("_sh").as("_sh_b"))
+    val shA = withSig.select(col("_id").as("id_a"), col("_k.sh").as("_sh_a"))
+    val shB = withSig.select(col("_id").as("id_b"), col("_k.sh").as("_sh_b"))
     candidates.join(shA, "id_a").join(shB, "id_b")
       .withColumn("jaccard", sortedJaccard(col("_sh_a"), col("_sh_b")))
       .filter(col("jaccard") >= threshold)
@@ -230,29 +349,89 @@ object Dedup {
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Pigeonhole-sound pair generation from exact-match buckets with a skew
-    * guard: buckets larger than `maxBucketSize` are dropped from candidate
-    * generation (a degenerate key — e.g. near-empty docs all hashing alike —
-    * otherwise goes quadratic in one task; its members still pair via their
-    * other bands/blocks). Bucket sizes come from groupBy+count, NOT a
-    * window count: a window hash-exchanges every row of one key into ONE
-    * task, so the degenerate bucket this guard exists to drop would itself
-    * become a straggler just to be counted. Partial aggregation absorbs
-    * the hot key map-side, and the join back is AQE-skew-splittable (and
-    * drops the hot key's rows before the quadratic pair join). The slim
-    * band rows are localCheckpoint'ed once — both the size aggregate and
-    * the join probe consume them without recomputing upstream signatures. */
+    * guard: buckets of more than `maxBucketSize` rows are dropped from
+    * candidate generation (a degenerate key — e.g. near-empty docs all
+    * hashing alike — otherwise goes quadratic in one task; its members
+    * still pair via their other bands/blocks). Output: the distinct
+    * (id_a, id_b), id_a < id_b, of ids sharing a kept bucket.
+    *
+    * One `groupBy(bucket)` with the [[BoundedIds]] collector does it, and
+    * the pairs are emitted per bucket. The collector aggregates partially,
+    * so a hot key is absorbed map-side, and once a bucket passes the cap it
+    * keeps only its row count: a hot key's memory stays bounded on both the
+    * map and the reduce side, where a window count would funnel all its
+    * rows into one task and a self-join would build its square. Integral
+    * ids only; any other id type takes the same rule as a size aggregate,
+    * a join back and a self-join. */
   private[graft] def boundedBucketPairs(df: DataFrame, idCol: String,
                                      bucketKeys: Seq[String], maxBucketSize: Int): DataFrame = {
-    val in = Checkpoint.lazily(df)
-    val small = in.groupBy(bucketKeys.map(col): _*)
-      .agg(count(lit(1)).as("_bsz")).filter(col("_bsz") <= maxBucketSize)
-      .select(bucketKeys.map(col): _*)
-    val bounded = in.join(small, bucketKeys)
-    bounded.select(bucketKeys.map(col) :+ col(idCol).as("id_a"): _*)
-      .join(bounded.select(bucketKeys.map(col) :+ col(idCol).as("id_b"): _*), bucketKeys)
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    val keyed = df.filter(bucketKeys.map(col(_).isNotNull).reduce(_ && _))
+    val idType = df.schema(idCol).dataType
+    val pairs = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        // the ids come sorted and distinct: each pairs with those after it
+        keyed.groupBy(bucketKeys.map(col): _*)
+          .agg(udaf(new BoundedIds(maxBucketSize), Encoders.LONG)(col(idCol).cast(LongType)).as("_ids"))
+          .select(col("_ids"), posexplode(col("_ids")).as(Seq("_i", "id_a")))
+          .select(col("id_a"), explode(slice(col("_ids"), col("_i") + 2,
+            size(col("_ids")) - col("_i") - 1)).as("id_b"))
+          .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"))
+      case _ =>
+        val small = keyed.groupBy(bucketKeys.map(col): _*)
+          .agg(count(lit(1)).as("_bsz")).filter(col("_bsz") <= maxBucketSize)
+          .select(bucketKeys.map(col): _*)
+        val bounded = keyed.join(small, bucketKeys)
+        bounded.select(bucketKeys.map(col) :+ col(idCol).as("id_a"): _*)
+          .join(bounded.select(bucketKeys.map(col) :+ col(idCol).as("id_b"): _*), bucketKeys)
+          .filter(col("id_a") < col("id_b"))
+          .select("id_a", "id_b")
+    }
+    pairs.dropDuplicates("id_a", "id_b")
+  }
+
+  /** The ids of one bucket while it holds at most `max` rows: `n` counts
+    * the rows seen (a null id too), `ids(0 until len)` holds the non-null
+    * ids, and once `n` passes `max` the ids are dropped for good. */
+  private[graft] case class IdBuf(var n: Long, var ids: Array[Long], var len: Int)
+
+  /** The bounded id collector of [[boundedBucketPairs]]. No buffer ever
+    * holds more than `max` ids, in an update or in a merge of two partial
+    * buffers. The result is the bucket's sorted distinct ids, or empty
+    * for a bucket of more than `max` rows. */
+  private[graft] final class BoundedIds(max: Int)
+      extends org.apache.spark.sql.expressions.Aggregator[java.lang.Long, IdBuf, Array[Long]] {
+    def zero: IdBuf = IdBuf(0L, Array.emptyLongArray, 0)
+
+    /** Room for `count` more ids; `b.n <= max` bounds the growth. */
+    private def grow(b: IdBuf, count: Int): Unit =
+      if (b.len + count > b.ids.length)
+        b.ids = java.util.Arrays.copyOf(b.ids, math.min(max, math.max(b.len + count, 2 * b.ids.length)))
+
+    private def overflow(b: IdBuf): IdBuf = {
+      if (b.n > max) { b.ids = Array.emptyLongArray; b.len = 0 }
+      b
+    }
+
+    def reduce(b: IdBuf, id: java.lang.Long): IdBuf = {
+      b.n += 1
+      if (b.n <= max && id != null) { grow(b, 1); b.ids(b.len) = id; b.len += 1 }
+      overflow(b)
+    }
+
+    def merge(b1: IdBuf, b2: IdBuf): IdBuf = {
+      b1.n += b2.n
+      if (b1.n <= max) {
+        grow(b1, b2.len)
+        System.arraycopy(b2.ids, 0, b1.ids, b1.len, b2.len)
+        b1.len += b2.len
+      }
+      overflow(b1)
+    }
+
+    def finish(b: IdBuf): Array[Long] = sortedDistinct(java.util.Arrays.copyOf(b.ids, b.len))
+
+    def bufferEncoder: Encoder[IdBuf] = Encoders.product[IdBuf]
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   /** SimHash near-dup pairs: block on `b` sub-keys of 64/b bits each (any
@@ -588,11 +767,20 @@ object Dedup {
     * seeds the labels. Every label is then a member of the node's own
     * component and no greater than the node, which makes one EDGE TEST
     * valid at any point: when no edge joins two different labels, each
-    * component carries one label, and that label is its minimum. A small
-    * edge set coalesces into one partition, contracts completely and
-    * returns after the one test. Otherwise the graph crossed partitions,
-    * and min-label rounds with PATH DOUBLING ("hash-to-min" family)
-    * finish the job from the seeded labels: each round a node takes the
+    * component carries one label, and that label is its minimum.
+    *
+    * The seed aggregate also carries the least and the greatest of each
+    * node's local labels, and when they agree at every node the
+    * contraction has resolved every component with no edge test at all:
+    * the local components of one component glue together at shared
+    * nodes, agreement gives all of them one label, and that label is the
+    * minimum of a subset holding the component's minimum (each local
+    * label is the minimum of its local component). One full count of the
+    * disagreeing nodes both decides that and materializes the seed. A
+    * small edge set coalesces into one partition and always agrees.
+    * Otherwise the edge test runs on the seeded labels, and while it finds
+    * edges across labels, min-label rounds with PATH DOUBLING ("hash-to-
+    * min" family) finish the job: each round a node takes the
     * min of its own label, its neighbors' labels and its label's label.
     * They run in batches of `rounds`, with the edge test after each batch
     * as the only convergence check. Each round is two shuffle joins plus
@@ -634,10 +822,13 @@ object Dedup {
       it.foreach { case (x, y) => a += x; b += y }
       val (ids, labels) = localMinLabel(a.result(), b.result())
       ids.iterator.zip(labels.iterator)
-    }(pair).toDF("node", "label")
-    var labels = Checkpoint.lazily(
-      nodes.select(col("node"), col("node").as("label")).unionByName(contracted)
-        .groupBy("node").agg(min("label").as("label")))
+    }(pair).toDF("node", "_c")
+    // _lo/_hi: the least and greatest of a node's contracted labels
+    val seed = Checkpoint.lazily(
+      nodes.select(col("node"), col("node").as("label"), lit(null).cast(LongType).as("_c"))
+        .unionByName(contracted.select(col("node"), col("_c").as("label"), col("_c")))
+        .groupBy("node").agg(min("label").as("label"), min("_c").as("_lo"), max("_c").as("_hi")))
+    var labels = seed.select("node", "label")
     val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def badEdges(): Long = {
       // a FULL count, deliberately not limit(1): the edge test is also
@@ -667,7 +858,10 @@ object Dedup {
           .groupBy("node").agg(min("label").as("label")))
     }
     val maxRounds = 40 // reach 2^39 — beyond any real component diameter
-    var bad = badEdges()
+    // a FULL count, like the edge test's: it materializes every partition
+    // of the seed checkpoint
+    val disagreeing = seed.filter(col("_lo") =!= col("_hi")).count()
+    var bad = if (disagreeing == 0) 0L else badEdges()
     while (bad > 0 && i < maxRounds) {
       (1 to math.min(rounds, maxRounds - i)).foreach(_ => runRound())
       bad = badEdges()

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import java.util.{Collections, WeakHashMap}
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.{Dataset => ApiDataset}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
@@ -32,7 +32,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    The origin constraints are carried unchanged.
   *  - RELEASE: `Dataset.unpersist()` does nothing for a checkpoint (it only
   *    uncaches the CacheManager entry, and a checkpoint has none), so the
-  *    blocks stay until GC collects the RDD. [[release]] removes them.
+  *    blocks stay until GC collects the RDD. [[release]] removes them
+  *    through [[dropBlocks]].
   *    Only release a frame that nothing reads again: a local checkpoint
   *    has no recomputable lineage, so a released frame that IS read again
   *    fails rather than recomputes.
@@ -59,8 +60,18 @@ object Checkpoint {
     * no-op, as it is for a plan with no checkpoint. */
   def release(ds: ApiDataset[_]): Unit = rdds(ds).foreach { rdd =>
     pins.remove(rdd)
-    rdd.unpersist(blocking = false)
+    dropBlocks(rdd, blocking = false)
   }
+
+  /** Remove `rdd`'s blocks. `RDD.unpersist` warns, for every local
+    * checkpoint, that its lineage cannot be recomputed; a release means
+    * exactly that, so a checkpoint's blocks go through
+    * `SparkContext.unpersistRDD`, the same removal without the warning.
+    * Any other RDD takes `RDD.unpersist`. */
+  def dropBlocks(rdd: RDD[_], blocking: Boolean): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking)
+    else rdd.unpersist(blocking)
 
   private def rdds(ds: ApiDataset[_]): Seq[RDD[_]] =
     ds.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }

@@ -27,6 +27,50 @@ class MlSpec extends SparkSpec {
     windows.reduce((a, b) => zip_with(a, b, (x, y) => xxhash64(x, y)))
   }
 
+  /** The `%` MinHash UDF the fused kernel's Mersenne reduction replaced. */
+  private def minhashSigModRef(numHashes: Int, seed: Long = 42L) = {
+    val as = Dedup.hashParams(numHashes, seed).map(_._1).toArray
+    val bs = Dedup.hashParams(numHashes, seed).map(_._2).toArray
+    val P = 2147483647L
+    udf { (hs: Array[Long]) =>
+      if (hs == null) null
+      else {
+        val out = Array.fill(numHashes)(Long.MaxValue)
+        hs.foreach { h =>
+          val hp = ((h % P) + P) % P
+          as.indices.foreach { j => val v = (hp * as(j) + bs(j)) % P; if (v < out(j)) out(j) = v }
+        }
+        out
+      }
+    }
+  }
+
+  /** The Column chain the fused LSH kernel replaced: the sorted distinct
+    * shingle hashes, the `%` signature and the `hash(slice)` band keys. */
+  private def lshChainCols(text: Column, bands: Int, rpb: Int, n: Int): Seq[Column] = {
+    val th = transform(Dedup.tokens(text), t => xxhash64(t))
+    val sh = sort_array(array_distinct(
+      when(size(th) < n, array(xxhash64(th))).otherwise(chainedXxhashCols(th, n))))
+    val sig = minhashSigModRef(bands * rpb)(sh)
+    // a null signature had its band rows filtered out
+    Seq(sh, sig, when(sig.isNotNull, transform(sequence(lit(0), lit(bands - 1)),
+      i => hash(slice(sig, i * rpb + 1, lit(rpb))))))
+  }
+
+  /** The join form of Dedup.boundedBucketPairs the bucket aggregate replaced. */
+  private def bucketPairsJoinRef(df: org.apache.spark.sql.DataFrame, idCol: String,
+                                 keys: Seq[String], max: Int): org.apache.spark.sql.DataFrame = {
+    val small = df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_bsz")).filter(col("_bsz") <= max)
+      .select(keys.map(col): _*)
+    val bounded = df.join(small, keys)
+    bounded.select(keys.map(col) :+ col(idCol).as("id_a"): _*)
+      .join(bounded.select(keys.map(col) :+ col(idCol).as("id_b"): _*), keys)
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
+  }
+
   private def lmBucketOf(g: Column, buckets: Int): Column =
     pmod(conv(substring(md5(g.cast(StringType).cast(BinaryType)), 1, 8), 16, 10)
       .cast(LongType), lit(buckets.toLong))
@@ -231,6 +275,112 @@ class MlSpec extends SparkSpec {
     val plan = Dedup.minhashLshPairs(QueriesLlm.plantedCorpus(spark, sf), "doc_id", "text")
       .queryExecution.optimizedPlan.toString
     Seq("array_intersect", "array_union").foreach(f => assert(!plan.contains(f), s"$f in the pairs plan"))
+  }
+
+  /** Texts beyond the ASCII fast path, and the short-text edge cases. */
+  private val lshEdgeTexts: Seq[String] = Seq(null, "", "   ", "\t\n", "one", "two words",
+    "  Lead, trailing!  ", "x1 2y Z3 0099 ab-cd_ef",
+    "İstanbul İZMİR ısparta IŞIK ışık İ", "ΣΊΣΥΦΟΣ σίσυφος ΟΔΟΣ ΟΔΟΣ. Σ",
+    "Straße STRASSE ß ẞ groß", "cafe\u0301 café nai\u0308ve naïve \u0301x",
+    "中文分词 测试 日本語のテキスト 한국어 텍스트", "emoji 😀 test 👍🏽 ok 😀😀 a😀b",
+    "digits ٠١٢٣ ٤٥٦ ۷۸۹ 123 ²³ ½", "ｆｕｌｌｗｉｄｔｈ ＡＢＣ １２３ abc",
+    "non\u00a0breaking\u00a0space here\u2003em\u2009thin",
+    "ASCII words then one é and more ASCII words after it")
+
+  test("fused LSH kernel: shingle set, signature and band keys equal the Column chain bit for bit") {
+    val corpus = QueriesLlm.plantedCorpus(spark, sf).select("text")
+      .unionByName(lshEdgeTexts.toDF("text"))
+    for ((bands, rpb, n) <- Seq((16, 4, 3), (32, 4, 3), (8, 2, 5))) {
+      val k = Dedup.LshKernel(bands * rpb, rpb, n, 42L)
+      // the three stages one by one, and whether the production entry
+      // point (apply) gives the same row
+      val fused = udf { (t: Array[Byte]) =>
+        if (t == null) null
+        else {
+          val sh = k.shingles(k.tokenHashes(t))
+          val sig = k.signature(sh)
+          val row = k(t)
+          (sh, sig, k.bandKeys(sig), row.sh.sameElements(sh) && row.bands.sameElements(k.bandKeys(sig)))
+        }
+      }
+      val both = corpus.select(col("text"), fused(col("text").cast(BinaryType)).as("f"))
+      assert(both.filter(!col("f._4")).count() == 0L, "apply differs from its stages")
+      val cmp = both
+        .select(Seq(col("text"), col("f._1").as("sh"), col("f._2").as("sig"), col("f._3").as("keys")) ++
+          lshChainCols(col("text"), bands, rpb, n).zip(Seq("sh_r", "sig_r", "keys_r")).map {
+            case (c, a) => c.as(a) }: _*)
+      val diff = cmp.filter(!(col("sh") <=> col("sh_r")) || !(col("sig") <=> col("sig_r")) ||
+        !(col("keys") <=> col("keys_r"))).select("text").as[String].collect()
+      assert(diff.isEmpty, s"bands=$bands rpb=$rpb n=$n: ${diff.length} texts differ, e.g. ${diff.take(3).toSeq}")
+      assert(both.count() > lshEdgeTexts.size)
+    }
+  }
+
+  test("Mersenne reduction equals % at the boundaries; the signature UDF equals the % form") {
+    val P = 2147483647L
+    val params = Dedup.hashParams(64, 42L)
+    val reachable = (P - 1) * params.map(_._1).max + params.map(_._2).max
+    val rnd = new scala.util.Random(31L)
+    val xs = Seq(0L, 1L, P - 1, P, P + 1, 2 * P - 1, 2 * P, 1L << 31, 1L << 32, 1L << 62,
+      (P - 1) * (P - 1) + (P - 1), reachable, Long.MaxValue) ++
+      Seq.fill(10000)(rnd.nextLong() & Long.MaxValue) ++ Seq.fill(10000)(rnd.nextLong() & ((1L << 62) - 1))
+    xs.foreach(x => assert(Dedup.modP(x) == x % P, s"modP($x) = ${Dedup.modP(x)}, % gives ${x % P}"))
+    // shingle hashes whose residues are 0 and P - 1, so a_j·hp + b_j reaches
+    // its largest value, beside the extremes and random values
+    val hs = Seq(Seq(P), Seq(2 * P - 1, P - 1, -1L), Seq(0L, -P, Long.MinValue, Long.MaxValue),
+      Seq(-2 * P + 1, 3 * P, P * P), Seq.fill(300)(rnd.nextLong()), Seq.empty[Long])
+    val df = hs.toDF("hs").select(Dedup.minhashSigUdf(64)(col("hs")).as("m"),
+      minhashSigModRef(64)(col("hs")).as("r"))
+    assert(df.filter(!(col("m") <=> col("r"))).count() == 0L)
+  }
+
+  test("bounded bucket aggregate: pairs equal the join form; a bucket of exactly the cap is kept, one more is dropped") {
+    val max = 5
+    val rnd = new scala.util.Random(77L)
+    // band 0: one bucket per size 1..max+2; band 1: a bucket holding one
+    // id three times; band 2: seeded random buckets of every size
+    val sized = (1 to max + 2).flatMap(sz => (0 until sz).map(i => (0, sz.toLong, sz * 100L + i)))
+    val dups = Seq((1, 9L, 7L), (1, 9L, 7L), (1, 9L, 7L), (1, 9L, 8L))
+    val random = Seq.fill(400)((2, rnd.nextInt(120).toLong, 10000L + rnd.nextInt(300)))
+    val bands = (sized ++ dups ++ random).toDF("_band", "_bkey", "_id")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toSet
+    val got = pairs(Dedup.boundedBucketPairs(bands, "_id", Seq("_band", "_bkey"), max))
+    assert(got == pairs(bucketPairsJoinRef(bands, "_id", Seq("_band", "_bkey"), max)))
+    // the bucket of exactly max rows pairs; the one of max + 1 does not
+    assert(got.contains((500L, 504L)) && !got.exists(_._1 / 100 == max + 1))
+    assert(got.contains((7L, 8L)) && !got.contains((7L, 7L)))
+    assert(!got.exists(_._1 == 100L), "a singleton bucket paired")
+    // other id types keep their type; non-integral ids take the join form
+    val ints = bands.select(col("_band"), col("_bkey"), col("_id").cast("int").as("_id"))
+    val intPairs = Dedup.boundedBucketPairs(ints, "_id", Seq("_band", "_bkey"), max)
+    assert(intPairs.schema.map(_.dataType) == Seq(org.apache.spark.sql.types.IntegerType,
+      org.apache.spark.sql.types.IntegerType))
+    assert(intPairs.as[(Int, Int)].collect().map { case (a, b) => (a.toLong, b.toLong) }.toSet == got)
+    val strs = bands.select(col("_band"), col("_bkey"), format_string("%05d", col("_id")).as("_id"))
+    assert(Dedup.boundedBucketPairs(strs, "_id", Seq("_band", "_bkey"), max).as[(String, String)]
+      .collect().map { case (a, b) => (a.toLong, b.toLong) }.toSet == got)
+  }
+
+  test("bounded id collector: no buffer holds more than the cap plus one ids through any merge") {
+    val rnd = new scala.util.Random(5L)
+    for (max <- Seq(1, 3, 8, 50); _ <- 0 until 40) {
+      val agg = new Dedup.BoundedIds(max)
+      val ids = Seq.fill(rnd.nextInt(3 * max + 2))(
+        if (rnd.nextInt(10) == 0) null else java.lang.Long.valueOf(rnd.nextInt(2 * max + 1).toLong))
+      def held(b: Dedup.IdBuf): Dedup.IdBuf = {
+        assert(b.len <= max + 1 && b.ids.length <= max + 1, s"max=$max holds ${b.len} (capacity ${b.ids.length})")
+        b
+      }
+      // partial buffers of random extent, merged in random order
+      var parts = ids.grouped(1 + rnd.nextInt(max + 1)).map(_.foldLeft(agg.zero)((b, id) => held(agg.reduce(b, id)))).toVector
+      while (parts.size > 1) {
+        val i = rnd.nextInt(parts.size - 1)
+        parts = parts.patch(i, Seq(held(agg.merge(parts(i), parts(i + 1)))), 2)
+      }
+      val out = agg.finish(parts.headOption.getOrElse(agg.zero))
+      val expect = if (ids.size > max) Seq.empty[Long] else ids.filter(_ != null).map(_.longValue).distinct.sorted
+      assert(out.toSeq == expect, s"max=$max ids=$ids")
+    }
   }
 
   test("simhash: near-dup texts have small hamming distance, unrelated large") {
@@ -1075,6 +1225,67 @@ class MlSpec extends SparkSpec {
       "the graph crosses the edge partitions, so contraction alone cannot resolve it")
     assert(got == kernelLabels(ccGraph).sorted,
       s"diverged: cc ${got.take(3)}... kernel ${kernelLabels(ccGraph).sorted.take(3)}...")
+  }
+
+  /** The optimized plans of the `count` actions session `ss` runs in
+    * `body`. A `tail` marker action follows the body: the listener bus
+    * delivers in order, so once the marker arrives every count has. */
+  private def countPlans(ss: org.apache.spark.sql.SparkSession)(body: => Unit)
+      : Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ss.listenerManager.register(listener)
+    try {
+      body
+      ss.range(1).tail(1)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.toArray.exists(_.asInstanceOf[(String, QueryExecution)]._1 == "tail") &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    } finally ss.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.collect { case ("count", qe) => qe.optimizedPlan }
+  }
+
+  private def hasJoin(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    p.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join])
+
+  test("connectedComponents: local labels that disagree fall back to the edge test, which finds min-seeded labels converged") {
+    val ss = splitEdgeSession()
+    // x < y < z with x and y in different edge partitions: x's partition
+    // holds (x, y) and (x, z) and labels y and z with x, y's partition
+    // holds (y, z) and labels z with y; the min seeds x everywhere
+    val part = ss.range(1, 40).toDF("src").repartition(col("src"))
+      .select(col("src"), spark_partition_id().as("p")).as[(Long, Int)].collect().toMap
+    val x = 1L
+    val y = (2L until 39L).find(part(_) != part(x)).get
+    val z = y + 1
+    assert(part(y) != part(x))
+    val edges = Seq((x, y), (x, z), (y, z))
+    var got = Seq.empty[(Long, Long)]
+    val counts = countPlans(ss) { got = ccLabels(ss, edges) }
+    assert(got == Seq(x -> x, y -> x, z -> x))
+    assert(Dedup.lastConvergedRounds == 0)
+    assert(counts.exists(hasJoin), "no edge test ran on disagreeing local labels")
+    // a graph that coalesces into one partition agrees: no edge test
+    val single = spark.newSession()
+    val agreed = countPlans(single) { got = ccLabels(single, edges) }
+    assert(got == Seq(x -> x, y -> x, z -> x) && Dedup.lastConvergedRounds == 0)
+    assert(agreed.nonEmpty && !agreed.exists(hasJoin), "the edge test ran on agreeing local labels")
+  }
+
+  test("connectedComponents on seeded random graphs equals localMinLabel on both sessions") {
+    for (seed <- Seq(11L, 12L, 13L)) {
+      val rnd = new scala.util.Random(seed)
+      val nodes = 50 + rnd.nextInt(400)
+      val edges = Seq.fill(nodes * (1 + rnd.nextInt(2)) / 2)((rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+        .filter { case (a, b) => a != b }
+      for (ss <- Seq(spark, splitEdgeSession()))
+        assert(ccLabels(ss, edges) == kernelLabels(edges).sorted, s"seed $seed")
+    }
   }
 
   test("dupSpans: merges overlapping windows to maximal spans; unique text and short docs excluded") {

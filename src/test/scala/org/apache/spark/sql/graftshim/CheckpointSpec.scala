@@ -62,6 +62,53 @@ class CheckpointSpec extends graft.SparkSpec {
     assert(ref.get == null, "the origin outlived its checkpoint")
   }
 
+  /** The messages Spark's loggers emit at WARN and above during `body`,
+    * whatever the session's log level. */
+  private def warnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("checkpoint-spec", null, null, true, Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = new LoggerConfig("org.apache.spark", Level.WARN, false)
+    logger.addAppender(app, Level.WARN, null)
+    ctx.getConfiguration.addLogger("org.apache.spark", logger)
+    ctx.updateLoggers()
+    try body
+    finally {
+      ctx.getConfiguration.removeLogger("org.apache.spark")
+      ctx.updateLoggers()
+      app.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    lines.asScala.toSeq
+  }
+
+  test("release drops a materialized checkpoint's blocks without the lineage warning; other RDDs unpersist") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val cp = Checkpoint.lazily(spark.range(0, 100, 1, 2).toDF("id"))
+    val rdd = cp.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.head
+    assert(cp.count() == 100 && persisted.contains(rdd.id))
+    // the capture sees the warning Spark logs for every unpersisted checkpoint
+    val direct = warnings(spark.range(0, 10, 1, 1).rdd.localCheckpoint().unpersist())
+    assert(direct.count(_.contains("was locally checkpointed")) == 1, direct)
+    val logged = warnings(Checkpoint.release(cp))
+    assert(!persisted.contains(rdd.id), s"RDD ${rdd.id} still persisted after release")
+    assert(!logged.exists(_.contains("was locally checkpointed")), logged)
+    val cached = spark.sparkContext.parallelize(1 to 10).cache()
+    assert(cached.count() == 10 && persisted.contains(cached.id))
+    Checkpoint.dropBlocks(cached, blocking = true)
+    assert(!persisted.contains(cached.id) &&
+      cached.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("release removes the checkpoint's RDD; ivfCentroids and bpeMerges release what they take") {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val cp = Checkpoint.now(spark.range(0, 100, 1, 2).toDF("id"))
